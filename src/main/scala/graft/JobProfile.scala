@@ -18,6 +18,10 @@ import scala.collection.mutable
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      println("usage: runMain graft.JobProfile <q1,q2,...> [sfDir]")
+      return
+    }
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -55,10 +59,12 @@ object JobProfile {
       val n = df.count()
       val t1 = System.nanoTime()
       Thread.sleep(500) // listener drain
-      println(f"== $name rows=$n total=${(t1 - t0) / 1e9}%.3fs " +
-        f"construct=${(tc - t0) / 1e9}%.3fs action=${(t1 - tc) / 1e9}%.3fs " +
-        f"jobs=${lines.size}")
-      lines.synchronized(lines.foreach(println))
+      lines.synchronized {
+        println(f"== $name rows=$n total=${(t1 - t0) / 1e9}%.3fs " +
+          f"construct=${(tc - t0) / 1e9}%.3fs action=${(t1 - tc) / 1e9}%.3fs " +
+          f"jobs=${lines.size}")
+        lines.foreach(println)
+      }
     }
     spark.stop()
   }

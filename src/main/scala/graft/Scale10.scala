@@ -1387,7 +1387,7 @@ object Scale10 {
         .flatMap { case (q, ts) => ts.map(q -> _) }.toDF("query_id", "term")
       t(s"inv_index_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(invDir), true)
-        Search.writeInvertedIndex(docs, invDir)
+        Search.writeInvertedIndexBucketed(docs, invDir)
         spark.read.parquet(s"$invDir/postings").count()
       }
       t(s"bm25_serve_${mult}x")(
@@ -1397,7 +1397,7 @@ object Scale10 {
       t(s"inv_index_append_day_${mult}x") {
         val day = Tables.documents(spark, d)
           .withColumn("doc_id", col("doc_id") + 900000000L)
-        Search.appendInvertedIndex(day, invDir)
+        Search.appendInvertedIndexBucketed(day, invDir)
         day.count()
       }
       t(s"bm25_serve_after_append_${mult}x")(
@@ -1473,14 +1473,8 @@ object Scale10 {
       val zdocs = zipfDocs(spark, nDocs, docLen = 120, vocab = 10000)
         .localCheckpoint()
       t(s"zipf_docs_${mult}x")(zdocs.count())
-      val invDir = s"/tmp/scale_zipfinv_$mult"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      t(s"zipf_inv_write_${mult}x") {
-        fs.delete(new org.apache.hadoop.fs.Path(invDir), true)
-        Search.writeInvertedIndex(zdocs, invDir)
-        spark.read.parquet(s"$invDir/postings").count()
-      }
       // head + torso + tail terms: the head term's list is long, the
       // tail terms' lists are tiny — total probed volume is dominated
       // by the one head list, a small corpus fraction
@@ -1489,13 +1483,9 @@ object Scale10 {
         2L -> Seq("w3", "w800", "w7000"),
         3L -> Seq("w10", "w300", "w9000"))
         .flatMap { case (q, ts) => ts.map(q -> _) }.toDF("query_id", "term")
-      t(s"zipf_bm25_serve_${mult}x")(
-        Search.bm25ServeBatch(spark, invDir, zQueries).count())
-      t(s"zipf_bm25_fullscan_${mult}x")(
-        spark.read.parquet(s"$invDir/postings").count())
-      // the vocabulary-independent bucketed layout: 1024 dirs instead
-      // of one per term — write cost must drop to ~bucket-count file
-      // churn while serve stays probed-bucket-bound
+      // the vocabulary-independent bucketed layout: 1024 dirs at any
+      // vocabulary — write cost is ~bucket-count file churn while
+      // serve stays probed-bucket-bound
       val invBDir = s"/tmp/scale_zipfinvb_$mult"
       t(s"zipf_invb_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(invBDir), true)
@@ -1503,7 +1493,7 @@ object Scale10 {
         spark.read.parquet(s"$invBDir/postings").count()
       }
       t(s"zipf_bm25b_serve_${mult}x")(
-        Search.bm25ServeBatchBucketed(spark, invBDir, zQueries).count())
+        Search.bm25ServeBatch(spark, invBDir, zQueries).count())
       // LM gate discrimination: train the bigram model on the NATURAL
       // corpus only (the production train/score artifact split), score
       // natural + 1% planted gibberish with the held-out add-α scorer

@@ -791,7 +791,7 @@ object StreamScale {
 
     // ---- streamingBm25TopK: pruned lexical serving ------------------
     // same scorecard as the ANN rows: the per-batch probe reads only
-    // the batch's term partitions, so a mult× corpus must cost far
+    // the batch's term buckets, so a mult× corpus must cost far
     // less than mult× per batch (probed posting lists grow with the
     // corpus; the unprobed vocabulary never enters the scan)
     locally {
@@ -822,8 +822,10 @@ object StreamScale {
           f"qps=${nq / sec}%.1f topkRows=$emitted")
         sec
       }
-      graft.operators.Search.writeInvertedIndex(docs1, "/tmp/streamscale_inv1")
-      graft.operators.Search.writeInvertedIndex(docsN, s"/tmp/streamscale_inv$mult")
+      graft.operators.Search
+        .writeInvertedIndexBucketed(docs1, "/tmp/streamscale_inv1")
+      graft.operators.Search
+        .writeInvertedIndexBucketed(docsN, s"/tmp/streamscale_inv$mult")
       val s1 = serve("/tmp/streamscale_inv1", "corpus1x")
       val sN = serve(s"/tmp/streamscale_inv$mult", s"corpus${mult}x")
       println(f"SCALE stream_bm25_${mult}x_vs_1x slowdown=${sN / s1}%.2f " +
@@ -832,7 +834,6 @@ object StreamScale {
 
     // ---- streamingBm25TopK over the ZIPF bucketed layout ------------
     // the realistic-vocabulary form of the row above: 10k Zipf terms,
-    // bucketed postings (bm25ServeBatch dispatches on the meta table),
     // query terms spanning head/torso/tail — streamed serving must
     // stay sublinear in the corpus exactly like the batch serve rows
     locally {

@@ -1745,15 +1745,9 @@ object Dedup {
         map.filter(col("_cb").isin(carryBuckets: _*))
           .select(col("node"), col("cluster_id"), col("_cb"))
           .localCheckpoint()) // materialize before overwriting read paths
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(conf)
-    s.conf.set(conf, "dynamic")
-    try writeFrame.repartition(col("_cb"))
-      .write.mode("overwrite").partitionBy("_cb").parquet(dir)
-    finally prev match {
-      case Some(v) => s.conf.set(conf, v)
-      case None => s.conf.unset(conf)
-    }
+    writeFrame.repartition(col("_cb"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_cb").parquet(dir)
     // a touched bucket whose every row relabeled into other buckets is
     // absent from `out` — dynamic overwrite leaves its stale directory
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -1832,15 +1826,9 @@ object Dedup {
         map.filter(col("_cb").isin(carryBuckets: _*))
           .select(col("node"), col("cluster_id"), col("_cb"))
           .localCheckpoint())
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(conf)
-    s.conf.set(conf, "dynamic")
-    try writeFrame.repartition(col("_cb"))
-      .write.mode("overwrite").partitionBy("_cb").parquet(dir)
-    finally prev match {
-      case Some(v) => s.conf.set(conf, v)
-      case None => s.conf.unset(conf)
-    }
+    writeFrame.repartition(col("_cb"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("_cb").parquet(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     touchedBuckets.filterNot(outBuckets).foreach { b =>

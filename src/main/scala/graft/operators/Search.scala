@@ -22,10 +22,10 @@ import org.apache.spark.sql.types.DecimalType
   * [[graft.functions.TopK.TopKAggregator]] (map-side partial top-k —
   * k rows per query per partition cross the shuffle, not the
   * candidate lists). The production path is the artifact split:
-  * [[writeInvertedIndex]] once, then [[bm25ServeBatch]] reads ONLY
-  * the probed term partitions (pushed-down `term IN (...)`) — the
-  * lexical analog of the IVF bucket-pruned probe
-  * ([[Similarity.annIvfServeBatch]]).
+  * [[writeInvertedIndexBucketed]] once, then [[bm25ServeBatch]] reads
+  * ONLY the probed terms' hash-bucket partitions (pushed-down
+  * `token IN (...)`) — the lexical analog of the IVF bucket-pruned
+  * probe ([[Similarity.annIvfServeBatch]]).
   *
   * Cross-engine determinism (the [[graft.Util]] discipline): with
   * k1 = 1.2 and b = 0.75, the per-term weight
@@ -111,7 +111,7 @@ object Search {
   /** bm25_topk — the oracle-gated inline query: stats are derived
     * from the corpus in-plan (the lineage recomputes the token pass
     * per aggregate — acceptable for the gate query; production uses
-    * [[writeInvertedIndex]] + [[bm25ServeBatch]], the artifact split,
+    * [[writeInvertedIndexBucketed]] + [[bm25ServeBatch]], the artifact split,
     * exactly like ngram_lm's model split). The two corpus scalars
     * (N, S) are a bounded driver artifact (one 2-value collect, the
     * centroid precedent). */
@@ -134,77 +134,88 @@ object Search {
 
   // ---- inverted-index artifact + pruned serving ------------------------
 
-  /** Write the inverted index as THREE tables under `dir`:
+  /** Parquet row-group size of the bucketed postings (the skipping
+    * granule inside a probed bucket), and the per-file target of the
+    * index compactions. */
+  private val PostingsRowGroupBytes = 8L << 20
+  private val CompactTargetBytes = 128L << 20
+
+  /** The hash bucket of the `token` column — the ONE assignment every
+    * writer, append, fold and serve replays (serve derives its probed
+    * buckets through this same Spark hash; a driver-side
+    * reimplementation could drift). */
+  private def tokenBucket(nBuckets: Int): Column =
+    pmod(xxhash64(col("token")), lit(nBuckets)).cast("int")
+
+  /** The layout's stored bucket count — the one-row `meta` contract
+    * that keeps writer, append and serve on the same `n_buckets`. */
+  private def storedBuckets(s: SparkSession, dir: String): Int = {
+    import s.implicits._
+    s.read.parquet(s"$dir/meta").as[Int].head()
+  }
+
+  /** For each of `tables` under `dir`, the `tb=` directories the probed
+    * `terms` hash into that EXIST — pruning at the LISTING level, not
+    * just the scan (a root read lists every bucket before the filter
+    * prunes any). A missing directory holds no probed term. */
+  private def probedBucketDirs(s: SparkSession, dir: String,
+                               terms: Seq[String],
+                               tables: String*): Seq[Seq[String]] = {
+    import s.implicits._
+    val nBuckets = storedBuckets(s, dir)
+    val buckets = terms.toDF("token").select(tokenBucket(nBuckets))
+      .as[Int].collect().distinct.sorted
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    tables.map(t => buckets.toSeq.map(b => s"$dir/$t/tb=$b")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p))))
+  }
+
+  /** (token, doc_id, tf, dl, tb) posting rows, clustered by bucket and
+    * token-sorted within each file so parquet row-group statistics
+    * skip non-probed terms inside a probed bucket — shared by the
+    * writer and the append. */
+  private def postingRows(tf: DataFrame, dl: DataFrame,
+                          nBuckets: Int): DataFrame =
+    tf.join(dl, "doc_id")
+      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
+      .withColumn("tb", tokenBucket(nBuckets))
+      .repartition(col("tb"))
+      .sortWithinPartitions(col("tb"), col("token"), col("doc_id"))
+
+  /** Write the inverted index as FOUR tables under `dir`:
     *
-    *   - `postings/token=.../` — `(doc_id, tf, dl)` partitioned BY
-    *     TERM, so a query batch's scan is pruned to its terms'
-    *     partition directories (the lexical analog of
-    *     [[Similarity.writeIvfPartitioned]]'s bucket layout),
-    *   - `df` — the vocabulary-sized `(token, df)` table,
-    *   - `stats` — the 1-row corpus scalars (n_docs, s_tok).
+    *   - `postings/tb=.../` — `(token, doc_id, tf, dl)` partitioned by
+    *     a HASH BUCKET of the token (`nBuckets` directories total,
+    *     vocabulary-independent — a per-term directory layout would
+    *     cost millions of directories at a real corpus vocabulary),
+    *     so a query batch's scan is pruned to its terms' buckets (the
+    *     lexical analog of [[Similarity.writeIvfPartitioned]]),
+    *   - `df/tb=.../` — `(token, df)`, bucketed like the postings: a
+    *     flat vocabulary-sized table would be scanned whole on every
+    *     serve; bucketed, serve reads only the probed df buckets and
+    *     appends merge only the touched ones,
+    *   - `stats` — the 1-row corpus scalars (n_docs, s_tok),
+    *   - `meta` — `n_buckets`, replayed by append and serve.
     *
     * df/stats live OUTSIDE the posting rows (not denormalized) so the
     * index is incrementally maintainable: appending a batch of NEW
-    * docs ([[appendInvertedIndex]]) appends postings in place and
-    * ADDS the batch's df/stats deltas — exact, because a new doc
+    * docs ([[appendInvertedIndexBucketed]]) appends postings in place
+    * and ADDS the batch's df/stats deltas — exact, because a new doc
     * contributes to each count once. A denormalized df would go stale
     * corpus-wide on every append. */
-  def writeInvertedIndex(docs: DataFrame, dir: String): Unit = {
-    val tf = termFreqs(docs).localCheckpoint()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-      // cluster by token before the partitioned write: without this,
-      // every task writes a file into every token directory it holds a
-      // row for — tasks × vocabulary files (measured 180s vs 20s on a
-      // 10k-term Zipf vocabulary); clustered, each term directory gets
-      // one file
-      .repartition(col("token"))
-      .write.mode("overwrite").partitionBy("token").parquet(s"$dir/postings")
-    // no coalesce(1): df is corpus-vocabulary-sized (same reasoning as
-    // the append path); small files fold in at compaction
-    tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$dir/df")
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-  }
-
-  // ---- bucketed postings: the vocabulary-independent layout --------------
-
-  /** The per-term partitioning above keeps pruning exact but costs one
-    * DIRECTORY per vocabulary term — at a real corpus vocabulary
-    * (millions of terms) that is millions of directories, past what
-    * object-store listings and driver partition discovery tolerate.
-    * This is the production alternative: postings partition by a HASH
-    * BUCKET of the token (`tb`, `nBuckets` directories total,
-    * vocabulary-independent), rows sorted by token within each file so
-    * parquet row-group statistics skip non-probed terms inside a
-    * probed bucket. A query batch probes ≤ |distinct terms| bucket
-    * directories (listed directly, like [[bm25ServeBatch]]) and pushes
-    * `token IN (...)` into the scan. `nBuckets` travels with the
-    * layout in a `meta` table — serve derives buckets with the SAME
-    * hash, so the two can never disagree. */
   def writeInvertedIndexBucketed(docs: DataFrame, dir: String,
-                                 nBuckets: Int = 1024,
-                                 rowGroupBytes: Long = 8L << 20): Unit = {
+                                 nBuckets: Int = 1024): Unit = {
     val s = docs.sparkSession
     import s.implicits._
     val tf = termFreqs(docs).localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("tb"), col("token"), col("doc_id"))
+    postingRows(tf, dl, nBuckets)
       .write.mode("overwrite").partitionBy("tb")
-      .option("parquet.block.size", rowGroupBytes)
+      .option("parquet.block.size", PostingsRowGroupBytes)
       .parquet(s"$dir/postings")
-    // df is BUCKETED like the postings: a flat vocabulary-sized table
-    // would be scanned whole on every serve (O(vocab) per batch at a
-    // millions-term vocabulary); bucketed, serve reads only the probed
-    // df buckets, and appends merge only the touched ones
     tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
+      .withColumn("tb", tokenBucket(nBuckets))
       .repartition(col("tb"))
       .write.mode("overwrite").partitionBy("tb").parquet(s"$dir/df")
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok"))
@@ -213,47 +224,41 @@ object Search {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Daily maintenance for the bucketed layout — the
-    * [[appendInvertedIndex]] twin: batch postings append inside the
-    * existing bucket directories (assignment replayed from the stored
-    * `n_buckets`, so writer and append can never disagree), df/stats
-    * merge the batch's exact deltas. */
+  /** Daily index maintenance: fold a batch of NEW docs into the
+    * standing index — postings append INSIDE the existing bucket
+    * directories (pruned probes see the new docs with no index
+    * rewrite, the [[Similarity.appendIvfPartitioned]] shape), and the
+    * df/stats tables merge the batch's exact deltas (both are
+    * materialized via localCheckpoint BEFORE their overwrite — Spark
+    * refuses a lazy overwrite-while-reading plan). Docs must be new
+    * (append-only corpus, the dedup_incremental posture): re-appended
+    * doc_ids would double-count df. Spec'd: append-then-serve ≡
+    * one-shot index of the union. */
   def appendInvertedIndexBucketed(batch: DataFrame, dir: String): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    val nBuckets = s.read.parquet(s"$dir/meta")
-      .as[Int].head() // one-row layout contract
+    val nBuckets = storedBuckets(s, dir)
     val tf = termFreqs(batch).localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("tb"), col("token"), col("doc_id"))
+    postingRows(tf, dl, nBuckets)
       .write.mode("append").partitionBy("tb").parquet(s"$dir/postings")
     // df merge touches only the buckets the batch's tokens hash into —
     // read those partitions, fold the deltas, dynamic-overwrite them
     // (the scd2SinkBatch discipline); untouched df buckets keep their
     // files byte-identical
     val deltas = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
+      .withColumn("tb", tokenBucket(nBuckets))
     val affected = deltas.select(col("tb")).distinct()
       .as[Int].collect().toSeq // bounded by nBuckets
-    val mergedDf = s.read.parquet(s"$dir/df")
+    s.read.parquet(s"$dir/df")
       .filter(col("tb").isin(affected: _*))
       .unionByName(deltas)
       .groupBy(col("token"), col("tb")).agg(sum(col("df")).as("df"))
       .select(col("token"), col("df"), col("tb"))
       .localCheckpoint() // materialize before overwriting read partitions
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(conf)
-    s.conf.set(conf, "dynamic")
-    try mergedDf.repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$dir/df")
-    finally prev match {
-      case Some(v) => s.conf.set(conf, v)
-      case None => s.conf.unset(conf)
-    }
+      .repartition(col("tb"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("tb").parquet(s"$dir/df")
     val mergedStats = s.read.parquet(s"$dir/stats")
       .unionByName(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok")))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_tok")).as("s_tok"))
@@ -261,43 +266,31 @@ object Search {
     mergedStats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  /** Serve a query batch against the bucketed layout — result-
-    * identical to [[bm25ServeBatch]] over the same corpus (spec'd):
-    * probed terms → probed buckets (same stored hash), only those
-    * bucket directories are LISTED and read — for the postings AND
-    * the df lookup — and the `token IN` filter pushes into the scan
-    * where the within-file token sort lets row-group stats skip
-    * non-probed terms. */
-  def bm25ServeBatchBucketed(s: SparkSession, dir: String,
-                             queries: DataFrame,
-                             k: Int = DefaultK): DataFrame = {
+  /** Serve ONE batch of term queries against the stored index: the
+    * batch's distinct terms (bounded by the batch) map to their
+    * buckets through the stored hash, only those bucket directories
+    * are LISTED and read — for the postings AND the df lookup — and
+    * the `token IN` filter pushes into the scan, where the within-file
+    * token sort lets row-group stats skip non-probed terms. Per-batch
+    * cost tracks the probed posting lists, never the corpus or the
+    * vocabulary. Result-identical to [[bm25TopK]] over the same corpus
+    * and queries (spec'd). */
+  def bm25ServeBatch(s: SparkSession, dir: String, queries: DataFrame,
+                     k: Int = DefaultK): DataFrame = {
     import s.implicits._
-    val nBuckets = s.read.parquet(s"$dir/meta").as[Int].head()
+    def empty = Seq.empty[(Long, Long, Double, Int)]
+      .toDF("query_id", "doc_id", "bm25", "rank")
     val terms = queries.select(col("term")).distinct()
       .as[String].collect().sorted // bounded by the query batch
-    if (terms.isEmpty)
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("query_id", "doc_id", "bm25", "rank")
-    // bucket assignment replayed through the same Spark hash the
-    // writer used (driver-side reimplementation could drift)
-    val buckets = terms.toSeq.toDF("token")
-      .select(pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-      .as[Int].collect().distinct.sorted
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bucketDirs = buckets.map(b => s"$dir/postings/tb=$b")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (bucketDirs.isEmpty)
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("query_id", "doc_id", "bm25", "rank")
-    val dfDirs = buckets.map(b => s"$dir/df/tb=$b")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (dfDirs.isEmpty) // postings/df dirs are written together
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("query_id", "doc_id", "bm25", "rank")
+    if (terms.isEmpty) return empty
+    val Seq(postDirs, dfDirs) =
+      probedBucketDirs(s, dir, terms.toSeq, "postings", "df")
+    // every term OOV: empty result, ranked schema (postings and df
+    // buckets are written together)
+    if (postDirs.isEmpty || dfDirs.isEmpty) return empty
     val post = minusDocTombstones(s, dir,
         s.read.option("basePath", s"$dir/postings")
-          .parquet(bucketDirs: _*)
+          .parquet(postDirs: _*)
           .filter(col("token").isin(terms: _*)))
       .join(broadcast(s.read.option("basePath", s"$dir/df")
         .parquet(dfDirs: _*)
@@ -308,21 +301,26 @@ object Search {
     scoreAndRank(queries, post, nDocs, sTok, k)
   }
 
-  /** [[compactInvertedIndex]] for the bucketed layout: same rewrite,
-    * bucket partitioning and the within-file token sort preserved;
-    * the df table keeps its bucket partitioning too. */
-  def compactInvertedIndexBucketed(s: SparkSession, dir: String,
-                                   targetBytes: Long = 128L << 20): Unit = {
+  /** Periodic maintenance for the inverted index: daily
+    * [[appendInvertedIndexBucketed]] runs accrete one small file per
+    * touched bucket — re-collapse the postings in place, keeping the
+    * bucket partitioning and the within-file token sort so pruned
+    * probes keep pruning; the df table keeps its bucket partitioning
+    * too. stats is a single row rewritten whole each append and needs
+    * no maintenance. A pending tombstone log FOLDS here (see
+    * [[deleteFromInvertedIndex]]). Serve-identical (spec'd). */
+  def compactInvertedIndexBucketed(s: SparkSession, dir: String): Unit = {
     val hadTombstones = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
       .getFileSystem(s.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(docTombstonePath(dir)))
-    graft.sources.Compact.compactInPlace(s, s"$dir/postings", targetBytes,
+    graft.sources.Compact.compactInPlace(s, s"$dir/postings",
+      CompactTargetBytes,
       partitionCols = Seq("tb"),
       sortCols = Seq("tb", "token", "doc_id"),
       transform = df => minusDocTombstones(s, dir, df))
-    if (hadTombstones) foldIndexTombstones(s, dir, bucketed = true)
+    if (hadTombstones) foldIndexTombstones(s, dir)
     else {
-      graft.sources.Compact.compactInPlace(s, s"$dir/df", targetBytes,
+      graft.sources.Compact.compactInPlace(s, s"$dir/df", CompactTargetBytes,
         partitionCols = Seq("tb"))
       ()
     }
@@ -330,7 +328,7 @@ object Search {
 
   // ---- deletion support (doc tombstones over the stored index) -----------
 
-  /** DELETE documents from a stored inverted index (either layout) —
+  /** DELETE documents from a stored inverted or positional index —
     * the lexical twin of [[Similarity.deleteFromLayout]]: doc_ids
     * append to a `_tombstones` log under the index (underscore =
     * invisible to every table scan; posting files stay immutable
@@ -338,9 +336,9 @@ object Search {
     * postings — a deleted doc can never be returned — while df/stats
     * keep counting it until compaction (the Lucene deleted-docs
     * discipline: survivor scores use the stale corpus stats, and the
-    * compaction fold restores exactness). Both compaction paths FOLD
-    * the log: postings rewritten without the docs, df and stats
-    * RECOMPUTED from the surviving postings, log cleared. */
+    * compaction fold restores exactness). Compaction FOLDS the log:
+    * postings rewritten without the docs, df and stats RECOMPUTED
+    * from the surviving postings, log cleared. */
   def deleteFromInvertedIndex(s: SparkSession, dir: String,
                               docIds: DataFrame): Unit =
     docIds.select(col("doc_id")).distinct()
@@ -359,134 +357,23 @@ object Search {
   }
 
   /** Recompute df + stats from the (already tombstone-folded)
-    * postings and clear the log — the shared tail of both compaction
-    * folds. df/stats derive exactly: df = postings per token, stats
-    * from the per-doc (doc_id, dl) distinct view. */
-  private def foldIndexTombstones(s: SparkSession, dir: String,
-                                  bucketed: Boolean): Unit = {
-    import s.implicits._
+    * postings and clear the log — the tail of the compaction fold.
+    * df/stats derive exactly: df = postings per token, stats from the
+    * per-doc (doc_id, dl) distinct view. */
+  private def foldIndexTombstones(s: SparkSession, dir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val post = s.read.parquet(s"$dir/postings")
-    val newDf0 = post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    if (bucketed) {
-      val nBuckets = s.read.parquet(s"$dir/meta").as[Int].head()
-      newDf0
-        .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-        .repartition(col("tb"))
-        .localCheckpoint() // materialize before overwriting the df path
-        .write.mode("overwrite").partitionBy("tb").parquet(s"$dir/df")
-    } else {
-      newDf0.localCheckpoint()
-        .write.mode("overwrite").parquet(s"$dir/df")
-    }
+    post.groupBy(col("token")).agg(count(lit(1)).as("df"))
+      .withColumn("tb", tokenBucket(storedBuckets(s, dir)))
+      .repartition(col("tb"))
+      .localCheckpoint() // materialize before overwriting the df path
+      .write.mode("overwrite").partitionBy("tb").parquet(s"$dir/df")
     post.select(col("doc_id"), col("dl")).distinct()
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok"))
       .localCheckpoint()
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     fs.delete(new org.apache.hadoop.fs.Path(docTombstonePath(dir)), true)
-  }
-
-  /** Daily index maintenance: fold a batch of NEW docs into the
-    * standing index — postings append INSIDE the existing term
-    * partition directories (pruned probes see the new docs with no
-    * index rewrite, the [[Similarity.appendIvfPartitioned]] shape),
-    * and the df/stats tables merge the batch's exact deltas (both are
-    * materialized via localCheckpoint BEFORE their overwrite — Spark
-    * refuses a lazy overwrite-while-reading plan). Docs must be new
-    * (append-only corpus, the dedup_incremental posture): re-appended
-    * doc_ids would double-count df. Spec'd: append-then-serve ≡
-    * one-shot index of the union. */
-  def appendInvertedIndex(batch: DataFrame, dir: String): Unit = {
-    val s = batch.sparkSession
-    val tf = termFreqs(batch).localCheckpoint()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tf.join(dl, "doc_id")
-      .select(col("token"), col("doc_id"), col("tf"), col("dl"))
-      .repartition(col("token")) // one file per touched term directory
-      .write.mode("append").partitionBy("token").parquet(s"$dir/postings")
-    val mergedDf = s.read.parquet(s"$dir/df")
-      .unionByName(tf.groupBy(col("token")).agg(count(lit(1)).as("df")))
-      .groupBy(col("token")).agg(sum(col("df")).as("df"))
-      .localCheckpoint()
-    // no coalesce(1): the df table is corpus-vocabulary-sized — a
-    // single-task write serializes the merge at scale. Small files
-    // from repeated appends are compactIndex's job, not this path's.
-    mergedDf.write.mode("overwrite").parquet(s"$dir/df")
-    val mergedStats = s.read.parquet(s"$dir/stats")
-      .unionByName(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok")))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_tok")).as("s_tok"))
-      .localCheckpoint()
-    mergedStats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-  }
-
-  /** Periodic maintenance for the inverted-index artifact: daily
-    * [[appendInvertedIndex]] runs accrete one small file per touched
-    * term partition (and a multi-file df merge) — re-collapse both in
-    * place, keeping the token partitioning so pruned probes keep
-    * pruning. stats is a single row rewritten whole each append and
-    * needs no maintenance. Serve-identical (spec'd in SearchSpec). */
-  def compactInvertedIndex(s: SparkSession, dir: String,
-                           targetBytes: Long = 128L << 20): Unit = {
-    val hadTombstones = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(docTombstonePath(dir)))
-    graft.sources.Compact.compactInPlace(s, s"$dir/postings", targetBytes,
-      partitionCols = Seq("token"),
-      // partition-value type inference would rewrite an all-numeric
-      // vocabulary's token dirs as ints — pin the key to string
-      transform = df => minusDocTombstones(s, dir,
-        df.withColumn("token", col("token").cast("string"))))
-    if (hadTombstones) foldIndexTombstones(s, dir, bucketed = false)
-    else {
-      graft.sources.Compact.compactInPlace(s, s"$dir/df", targetBytes)
-      ()
-    }
-  }
-
-  /** Serve ONE batch of term queries against the stored index: the
-    * batch's distinct terms (bounded by the batch) prune the postings
-    * scan via pushed-down `token IN (...)` (and the df lookup the
-    * same way) — per-batch cost tracks the probed posting lists,
-    * never the corpus. Result-identical to [[bm25TopK]] over the same
-    * corpus and queries (spec'd). */
-  def bm25ServeBatch(s: SparkSession, dir: String, queries: DataFrame,
-                     k: Int = DefaultK): DataFrame = {
-    import s.implicits._
-    // layout dispatch: a bucketed index carries its meta table — every
-    // serving entry point (hybrid, streaming) then works against
-    // either layout transparently
-    if (new org.apache.hadoop.fs.Path(s"$dir/meta").getFileSystem(
-          s.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$dir/meta")))
-      return bm25ServeBatchBucketed(s, dir, queries, k)
-    val terms = queries.select(col("term")).distinct()
-      .as[String].collect().sorted // bounded by the query batch
-    // Prune at the LISTING level, not just the scan: a plain read of
-    // the postings root lists EVERY term partition before the filter
-    // prunes any (measured 19s of pure directory listing on a 10k-term
-    // Zipf vocabulary — O(vocab) per query batch, the real bottleneck
-    // at a corpus-scale vocabulary). Addressing the probed term
-    // directories directly makes serve O(probed terms); basePath keeps
-    // the token partition column. Missing directories = OOV terms,
-    // dropped here exactly as the filter would.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val esc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .escapePathName _
-    val termDirs = terms.map(t => s"$dir/postings/token=${esc(t)}")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    if (termDirs.isEmpty) // every term OOV: empty result, ranked schema
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("query_id", "doc_id", "bm25", "rank")
-    val post = minusDocTombstones(s, dir,
-        s.read.option("basePath", s"$dir/postings")
-          .parquet(termDirs: _*))
-      .join(broadcast(s.read.parquet(s"$dir/df")
-        .filter(col("token").isin(terms: _*))), "token")
-    val Array(nDocs, sTok) = s.read.parquet(s"$dir/stats")
-      .as[(Long, Long)].collect().flatMap(t => Array(t._1, t._2))
-    scoreAndRank(queries, post, nDocs, sTok, k)
   }
 
   // ---- hybrid retrieval: reciprocal-rank fusion ------------------------
@@ -577,7 +464,7 @@ object Search {
   }
 
   /** Serve ONE batch of hybrid queries against the STORED layouts:
-    * the index-served lexical list ([[bm25ServeBatch]], term-pruned)
+    * the index-served lexical list ([[bm25ServeBatch]], bucket-pruned)
     * fused with the IVF-served semantic list
     * ([[Similarity.annIvfServeBatch]], bucket-pruned). Both probes
     * read only what the batch touches, so hybrid serving inherits
@@ -840,19 +727,18 @@ object Search {
         t.toLowerCase.split("\\s+").iterator.filter(_.nonEmpty).zipWithIndex
           .map { case (tok, p) => (tok, id, p.toLong) } }
       .toDF("token", "doc_id", "pos")
-      .withColumn("tb", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
+      .withColumn("tb", tokenBucket(nBuckets))
       .repartition(col("tb"))
       .sortWithinPartitions(col("tb"), col("token"), col("doc_id"), col("pos"))
   }
 
   def writePositionalIndex(docs: DataFrame, dir: String,
-                           nBuckets: Int = 1024,
-                           rowGroupBytes: Long = 8L << 20): Unit = {
+                           nBuckets: Int = 1024): Unit = {
     val s = docs.sparkSession
     import s.implicits._
     positionRows(docs, nBuckets)
       .write.mode("overwrite").partitionBy("tb")
-      .option("parquet.block.size", rowGroupBytes)
+      .option("parquet.block.size", PostingsRowGroupBytes)
       .parquet(s"$dir/postings")
     Seq(nBuckets).toDF("n_buckets")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
@@ -865,14 +751,10 @@ object Search {
     * assignment replayed from the stored `n_buckets`. Docs must be
     * NEW (the append-only corpus contract). Spec'd: append-then-serve
     * ≡ one-shot index of the union. */
-  def appendPositionalIndex(batch: DataFrame, dir: String): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val nBuckets = s.read.parquet(s"$dir/meta").as[Int].head()
-    positionRows(batch, nBuckets)
+  def appendPositionalIndex(batch: DataFrame, dir: String): Unit =
+    positionRows(batch, storedBuckets(batch.sparkSession, dir))
       .write.mode("append").partitionBy("tb")
       .parquet(s"$dir/postings")
-  }
 
   /** Compaction for the positional layout: small files fold, the
     * within-file token sort (row-group skipping) is re-established,
@@ -881,12 +763,12 @@ object Search {
     * a retestable delete can never resurrect (the
     * [[compactInvertedIndexBucketed]] discipline, minus the df/stats
     * recompute this layout does not carry). */
-  def compactPositionalIndex(s: SparkSession, dir: String,
-                             targetBytes: Long = 128L << 20): Unit = {
+  def compactPositionalIndex(s: SparkSession, dir: String): Unit = {
     val tp = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
     val fs = tp.getFileSystem(s.sparkContext.hadoopConfiguration)
     val had = fs.exists(tp)
-    graft.sources.Compact.compactInPlace(s, s"$dir/postings", targetBytes,
+    graft.sources.Compact.compactInPlace(s, s"$dir/postings",
+      CompactTargetBytes,
       partitionCols = Seq("tb"),
       sortCols = Seq("tb", "token", "doc_id", "pos"),
       transform = df => minusDocTombstones(s, dir, df))
@@ -910,14 +792,7 @@ object Search {
       .toDF("query_id", "doc_id", "n_matches", "first_pos")
     val terms = phrases.flatMap(_._2).distinct.sorted
     if (terms.isEmpty) return empty
-    val nBuckets = s.read.parquet(s"$dir/meta").as[Int].head()
-    val buckets = terms.toDF("token")
-      .select(pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-      .as[Int].collect().distinct.sorted
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val bucketDirs = buckets.map(b => s"$dir/postings/tb=$b")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    val Seq(bucketDirs) = probedBucketDirs(s, dir, terms, "postings")
     if (bucketDirs.isEmpty) return empty
     val post = minusDocTombstones(s, dir,
       s.read.option("basePath", s"$dir/postings").parquet(bucketDirs: _*)

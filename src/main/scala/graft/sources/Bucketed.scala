@@ -148,26 +148,18 @@ object Bucketed {
   /** Backfill/repair: rewrite ONLY the day partitions present in
     * `df` inside a standing [[writeDayPartitioned]] layout — the
     * idempotent reprocess-one-day maintenance job. Overwrite mode
-    * with `partitionOverwriteMode=dynamic` (scoped to this write,
-    * conf restored after) replaces exactly the partitions the frame
-    * touches: every OTHER day directory is left byte-identical
-    * (spec'd), so a backfill of 2020-03-07 never rewrites the decade
-    * around it — static overwrite would truncate the whole table,
-    * append would double-count the day. Rerunning the same backfill
+    * with the `partitionOverwriteMode=dynamic` write option (scoped to
+    * this write; no session conf is touched) replaces exactly the
+    * partitions the frame touches: every OTHER day directory is left
+    * byte-identical (spec'd), so a backfill of 2020-03-07 never
+    * rewrites the decade around it — static overwrite would truncate
+    * the whole table, append would double-count the day. Rerunning the same backfill
     * converges (idempotent, spec'd). */
   def backfillDays(df: DataFrame, path: String, tsCol: String): Unit = {
     import org.apache.spark.sql.functions._
-    val s = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try df.withColumn("day", to_date(col(tsCol)))
-      .write.mode("overwrite")
+    df.withColumn("day", to_date(col(tsCol)))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("day")
       .parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 }

@@ -1442,7 +1442,7 @@ object EventStream {
   case class QueryTerms(query_id: Long, terms: Seq[String])
 
   /** Streaming lexical search: arriving term queries probe a STANDING
-    * inverted index ([[graft.operators.Search.writeInvertedIndex]]'s
+    * inverted index ([[graft.operators.Search.writeInvertedIndexBucketed]]'s
     * layout) — the lexical twin of [[streamingAnnIvfTopK]], built the
     * same way: the probe runs INSIDE `foreachBatch` as a batch plan,
     * the batch's distinct terms prune the postings scan via a
@@ -1541,14 +1541,8 @@ object EventStream {
         .scd2Apply(slice, batch, key, attr, ts, tie)
         .withColumn("_kb", kb)
         .localCheckpoint() // materialize before overwriting read paths
-      val conf = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf, "dynamic")
-      try out.write.mode("overwrite").partitionBy("_kb").parquet(dir)
-      finally prev match {
-        case Some(v) => s.conf.set(conf, v)
-        case None => s.conf.unset(conf)
-      }
+      out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_kb").parquet(dir)
     }
     ()
   }
@@ -1633,15 +1627,9 @@ object EventStream {
         .unionByName(incoming)
         .withColumn("_kb", cdcBucket(keys, buckets))
         .localCheckpoint() // materialize before overwriting read paths
-      val conf = "spark.sql.sources.partitionOverwriteMode"
-      val prev = s.conf.getOption(conf)
-      s.conf.set(conf, "dynamic")
-      try out.repartition(col("_kb"))
-        .write.mode("overwrite").partitionBy("_kb").parquet(dir)
-      finally prev match {
-        case Some(v) => s.conf.set(conf, v)
-        case None => s.conf.unset(conf)
-      }
+      out.repartition(col("_kb"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_kb").parquet(dir)
       // a bucket whose every row a delete-only batch removed is absent
       // from `out` — dynamic overwrite leaves its stale directory
       val written = out.select(col("_kb")).distinct()
@@ -1661,7 +1649,7 @@ object EventStream {
                          embedding: Array[Float])
 
   /** Streaming HYBRID search: each arriving query carries a term set
-    * and an embedding; per micro-batch the term-pruned lexical probe
+    * and an embedding; per micro-batch the bucket-pruned lexical probe
     * and the bucket-pruned IVF probe both run as batch plans and fuse
     * via RRF ([[graft.operators.Search.hybridServeBatch]]) — the
     * serving stack a retrieval pipeline actually runs, inheriting

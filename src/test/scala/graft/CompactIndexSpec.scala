@@ -245,8 +245,9 @@ class CompactIndexSpec extends SparkSpec {
   test("inverted index: compaction keeps token pruning and bm25 results") {
     val dir = java.nio.file.Files.createTempDirectory("invcompact").toString
     val all = Tables.documents(spark, sf)
-    Search.writeInvertedIndex(all.filter(col("doc_id") % 3 =!= 0), dir)
-    (1 to 2).foreach(i => Search.appendInvertedIndex(
+    Search.writeInvertedIndexBucketed(all.filter(col("doc_id") % 3 =!= 0), dir,
+      nBuckets = 64)
+    (1 to 2).foreach(i => Search.appendInvertedIndexBucketed(
       all.filter(col("doc_id") % 3 === 0 && col("doc_id") % 2 === i % 2), dir))
     val queries = {
       import spark.implicits._
@@ -257,8 +258,10 @@ class CompactIndexSpec extends SparkSpec {
     val served = Search.bm25ServeBatch(spark, dir, queries)
       .collect().map(_.toSeq)
     val before = parquetFiles(s"$dir/postings")
-    Search.compactInvertedIndex(spark, dir)
+    Search.compactInvertedIndexBucketed(spark, dir)
     assert(parquetFiles(s"$dir/postings") < before)
+    assert(new java.io.File(s"$dir/postings").listFiles()
+      .exists(_.getName.startsWith("tb=")))
     val after = Search.bm25ServeBatch(spark, dir, queries)
       .collect().map(_.toSeq)
     assert(after.nonEmpty && after.toSeq == served.toSeq)

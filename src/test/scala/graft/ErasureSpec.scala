@@ -222,9 +222,9 @@ class ErasureSpec extends SparkSpec {
     }
     locally {
       val dir = tmp("er-inv")
-      Search.writeInvertedIndex(docs, dir)
+      Search.writeInvertedIndexBucketed(docs, dir)
       Search.deleteFromInvertedIndex(spark, dir, victimsDf("doc_id"))
-      Search.compactInvertedIndex(spark, dir)
+      Search.compactInvertedIndexBucketed(spark, dir)
       assertClean("inverted_index", s"$dir/postings", Seq("doc_id"))
       assert(tombstonesGone(dir), "inverted-index tombstone log not cleared")
     }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Lexical retrieval (BM25) — the index-served and streaming paths
   * must answer exactly like the inline oracle-gated query, and the
-  * served probe must be partition-pruned to the query's terms. */
+  * served probe must be pruned to the buckets the query's terms hash
+  * into. */
 class SearchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,7 +17,8 @@ class SearchSpec extends SparkSpec {
 
   private lazy val indexDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("invidx").toString
-    Search.writeInvertedIndex(Tables.documents(spark, sf), dir)
+    Search.writeInvertedIndexBucketed(Tables.documents(spark, sf), dir,
+      nBuckets = 64)
     dir
   }
 
@@ -97,10 +99,11 @@ class SearchSpec extends SparkSpec {
     assert(served.toSeq == inline.toSeq) // identical rows AND order
   }
 
-  test("BM25 serve reads ONLY the probed term partitions") {
+  test("BM25 serve reads ONLY the probed buckets, for postings and df") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val q = Seq((1L, "hash"), (1L, "dup")).toDF("query_id", "term")
+    val terms = Seq("hash", "dup")
+    val q = terms.map(1L -> _).toDF("query_id", "term")
     val topk = Search.bm25ServeBatch(spark, indexDir, q)
     topk.collect()
     def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
@@ -112,16 +115,27 @@ class SearchSpec extends SparkSpec {
       case f: FileSourceScanExec => Seq(f)
       case other => (other.children ++ other.subqueries).flatMap(scans)
     }
-    val postScans = scans(topk.queryExecution.executedPlan)
-      .filter(_.metadata.get("Location").exists(_.contains("postings")))
-    assert(postScans.nonEmpty, "no postings scan in the executed plan")
-    val partsRead = postScans.flatMap(_.metrics.get("numPartitions"))
-      .map(_.value).sum
-    val totalTerms = new java.io.File(s"$indexDir/postings").listFiles()
-      .count(_.getName.startsWith("token="))
-    assert(partsRead == 2, s"scan read $partsRead term partitions, probed 2")
-    assert(partsRead < totalTerms,
-      s"scan read all $totalTerms term partitions — no pruning")
+    // the layout contract, replayed independently of the serve path
+    val probed = terms.toDF("token")
+      .select(pmod(xxhash64(col("token")), lit(64)).cast("int"))
+      .as[Int].collect().distinct.length
+    val plan = topk.queryExecution.executedPlan
+    Seq("postings", "df").foreach { table =>
+      val tableScans = scans(plan)
+        .filter(_.metadata.get("Location")
+          .exists(_.contains(s"$indexDir/$table")))
+      assert(tableScans.nonEmpty, s"no $table scan in the executed plan")
+      val partsRead = tableScans.flatMap(_.metrics.get("numPartitions"))
+        .map(_.value).sum
+      val tbDirs = new java.io.File(s"$indexDir/$table").listFiles()
+        .count(_.getName.startsWith("tb="))
+      // vocabulary-independent directory count: at most nBuckets dirs
+      assert(tbDirs <= 64, s"$tbDirs $table bucket dirs for nBuckets=64")
+      assert(partsRead == probed,
+        s"$table scan read $partsRead buckets, probed $probed")
+      assert(partsRead < tbDirs,
+        s"$table scan read all $tbDirs buckets — no pruning")
+    }
   }
 
   test("out-of-vocabulary terms contribute nothing and never fail") {
@@ -129,49 +143,10 @@ class SearchSpec extends SparkSpec {
     assert(Search.bm25ServeBatch(spark, indexDir, q).count() == 0)
   }
 
-  test("bucketed postings layout: serve-identical, bucket-listed, appendable") {
-    val dir = java.nio.file.Files.createTempDirectory("invbucket").toString
-    val docs = Tables.documents(spark, sf)
-    Search.writeInvertedIndexBucketed(docs, dir, nBuckets = 64)
-    // vocabulary-independent directory count: at most nBuckets dirs
-    val tbDirs = new java.io.File(s"$dir/postings").listFiles()
-      .count(_.getName.startsWith("tb="))
-    assert(tbDirs <= 64, s"$tbDirs bucket dirs for nBuckets=64")
-    // result-identical to the per-term layout serve AND the inline query
-    val inline = Search.bm25TopK(spark, sf).collect().map(_.toSeq)
-    val served = Search.bm25ServeBatchBucketed(spark, dir, queriesDf)
-      .collect().map(_.toSeq)
-    assert(served.nonEmpty && served.toSeq == inline.toSeq)
-    // OOV-only batches answer empty, never fail
-    val oov = Seq((9L, "warehouse"), (9L, "zzz")).toDF("query_id", "term")
-    assert(Search.bm25ServeBatchBucketed(spark, dir, oov).count() == 0)
-    // append parity: grown bucketed index == one-shot bucketed index
-    val base = docs.filter(col("doc_id") % 3 =!= 0)
-    val batch = docs.filter(col("doc_id") % 3 === 0)
-    val grown = java.nio.file.Files.createTempDirectory("invbgrow").toString
-    Search.writeInvertedIndexBucketed(base, grown, nBuckets = 64)
-    Search.appendInvertedIndexBucketed(batch, grown)
-    val g = Search.bm25ServeBatchBucketed(spark, grown, queriesDf)
-      .collect().map(_.toSeq)
-    assert(g.toSeq == inline.toSeq)
-    // compaction keeps bucket partitioning and serve results
-    Search.compactInvertedIndexBucketed(spark, grown)
-    assert(new java.io.File(s"$grown/postings").listFiles()
-      .exists(_.getName.startsWith("tb=")))
-    val after = Search.bm25ServeBatchBucketed(spark, grown, queriesDf)
-      .collect().map(_.toSeq)
-    assert(after.toSeq == inline.toSeq)
-    // the generic entry point dispatches on the meta table, so the
-    // hybrid/streaming serving paths work against either layout
-    val dispatched = Search.bm25ServeBatch(spark, dir, queriesDf)
-      .collect().map(_.toSeq)
-    assert(dispatched.toSeq == inline.toSeq)
-  }
-
   test("index deletes: tombstoned docs vanish; compaction folds df/stats exactly") {
     val docs = Tables.documents(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("invdel").toString
-    Search.writeInvertedIndex(docs, dir)
+    Search.writeInvertedIndexBucketed(docs, dir, nBuckets = 32)
     val before = Search.bm25ServeBatch(spark, dir, queriesDf)
       .collect().map(_.toSeq)
     // delete three currently-served docs
@@ -183,13 +158,13 @@ class SearchSpec extends SparkSpec {
       !after.map(_(1).asInstanceOf[Long]).exists(victims.contains))
     // compaction folds: serve now equals a FRESH index of the
     // surviving corpus exactly (df/stats recomputed, not stale)
-    Search.compactInvertedIndex(spark, dir)
+    Search.compactInvertedIndexBucketed(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_tombstones")))
     val ref = java.nio.file.Files.createTempDirectory("invdelref").toString
-    Search.writeInvertedIndex(
-      docs.filter(!col("doc_id").isin(victims: _*)), ref)
+    Search.writeInvertedIndexBucketed(
+      docs.filter(!col("doc_id").isin(victims: _*)), ref, nBuckets = 32)
     val folded = Search.bm25ServeBatch(spark, dir, queriesDf)
       .collect().map(_.toSeq)
     val fresh = Search.bm25ServeBatch(spark, ref, queriesDf)
@@ -198,35 +173,15 @@ class SearchSpec extends SparkSpec {
       s"folded index differs from fresh index of survivors")
   }
 
-  test("bucketed index deletes fold through compaction the same way") {
-    val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("invdelb").toString
-    Search.writeInvertedIndexBucketed(docs, dir, nBuckets = 32)
-    val before = Search.bm25ServeBatchBucketed(spark, dir, queriesDf)
-      .collect().map(_.toSeq)
-    val victims = before.map(_(1).asInstanceOf[Long]).distinct.take(2)
-    Search.deleteFromInvertedIndex(spark, dir, victims.toSeq.toDF("doc_id"))
-    assert(!Search.bm25ServeBatchBucketed(spark, dir, queriesDf)
-      .collect().map(_.getAs[Long]("doc_id")).exists(victims.contains))
-    Search.compactInvertedIndexBucketed(spark, dir)
-    val ref = java.nio.file.Files.createTempDirectory("invdelbref").toString
-    Search.writeInvertedIndexBucketed(
-      docs.filter(!col("doc_id").isin(victims: _*)), ref, nBuckets = 32)
-    assert(Search.bm25ServeBatchBucketed(spark, dir, queriesDf)
-      .collect().map(_.toSeq).toSeq ==
-      Search.bm25ServeBatchBucketed(spark, ref, queriesDf)
-        .collect().map(_.toSeq).toSeq)
-  }
-
   test("appended index serves exactly like a one-shot index of the union") {
     val docs = Tables.documents(spark, sf)
     val base = docs.filter(col("doc_id") % 3 =!= 0)
     val batch = docs.filter(col("doc_id") % 3 === 0)
     val grown = java.nio.file.Files.createTempDirectory("invgrow").toString
     val oneShot = java.nio.file.Files.createTempDirectory("invone").toString
-    Search.writeInvertedIndex(base, grown)
-    Search.appendInvertedIndex(batch, grown)
-    Search.writeInvertedIndex(docs, oneShot)
+    Search.writeInvertedIndexBucketed(base, grown, nBuckets = 64)
+    Search.appendInvertedIndexBucketed(batch, grown)
+    Search.writeInvertedIndexBucketed(docs, oneShot, nBuckets = 64)
     val g = Search.bm25ServeBatch(spark, grown, queriesDf)
       .collect().map(_.toSeq)
     val o = Search.bm25ServeBatch(spark, oneShot, queriesDf)
