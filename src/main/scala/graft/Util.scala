@@ -15,18 +15,54 @@ import org.apache.spark.sql.types._
   * double (IEEE-deterministic for identical operand trees) and snapped
   * to the decimal grid they mathematically live on (<= 4 or 6 dp), so
   * no rounding ambiguity can arise at .5 boundaries.
+  *
+  * The recipe runs on a 64-bit kernel, bit-identical to Spark's cast:
+  * [[graft.functions.DoubleToUnscaled]] turns each double into the
+  * unscaled `Long` of `cast(x AS DECIMAL(18, s))`. Its fast path is
+  * y = x·10^s rounded to nearest, taken only when |y| < 2^52 and y sits
+  * at least 4 ulp(y) away from a half-integer: the shortest decimal
+  * Spark's cast reads (within 1 ulp of x) and y are then within
+  * 2.5 ulp(y) of each other, so both round to the same integer. NaN,
+  * ±Inf, overflow and near-ties fall back to Spark's `Cast`, so nulls
+  * and ANSI errors are today's. A sum splits each unscaled value as
+  * u = h·10^9 + l into two plain `long` sums (no BigDecimal buffer):
+  * exact while a group holds at most ~10^10 rows, the headroom Spark's
+  * own `DecimalAggregates` assumes. The read-out recombines them
+  * exactly and casts to `DECIMAL(28, s)`, the type and overflow rule of
+  * `sum(cast(x AS DECIMAL(18, s)))`.
+  *
+  * Use [[sumDec]] (or `sum2/4/6`), never `sum(dec2(x))`: the latter
+  * puts a BigDecimal add back on every row.
   */
 object Util {
-  def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
-  def dec4(c: Column): Column = c.cast(DecimalType(18, 4))
-  def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
+  import graft.functions.{DoubleToUnscaled, UnscaledSum}
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+  import org.apache.spark.sql.catalyst.expressions.{Expression, IntegralDivide, Literal, MakeDecimal, Remainder}
+
+  private def unscaled(c: Column, s: Int): Expression = DoubleToUnscaled(expression(c), s)
+
+  /** `cast(c AS DECIMAL(18, s))` of a double column, via the kernel. */
+  private def dec(c: Column, s: Int): Column = column(MakeDecimal(unscaled(c, s), 18, s))
+  def dec2(c: Column): Column = dec(c, 2)
+  def dec4(c: Column): Column = dec(c, 4)
+  def dec6(c: Column): Column = dec(c, 6)
   def dbl(c: Column): Column = c.cast(DoubleType)
 
+  /** Exact `sum(cast(c AS DECIMAL(18, s)))` of a double column, as the
+    * same `DECIMAL(28, s)` value (null for no non-null input). */
+  def sumDec(c: Column, s: Int): Column = {
+    val u = unscaled(c, s)
+    val split = Literal(UnscaledSum.Split)
+    val hi = sum(column(IntegralDivide(u, split)))
+    val lo = sum(column(Remainder(u, split)))
+    column(UnscaledSum(expression(hi), expression(lo), s)).cast(DecimalType(28, s))
+  }
+
   /** Exact sum of a 2-dp double column, returned as double. */
-  def sum2(c: Column): Column = dbl(sum(dec2(c)))
+  def sum2(c: Column): Column = dbl(sumDec(c, 2))
   /** Exact sum of a derived expr that lives on the 1e-4 grid. */
-  def sum4(c: Column): Column = dbl(sum(dec4(c)))
-  def sum6(c: Column): Column = dbl(sum(dec6(c)))
+  def sum4(c: Column): Column = dbl(sumDec(c, 4))
+  def sum6(c: Column): Column = dbl(sumDec(c, 6))
   /** avg as exact-sum / count — reproducible double division. */
   def avg2(c: Column): Column = sum2(c) / count(lit(1))
 

@@ -64,7 +64,7 @@ object Relational {
   def q4CandidatePool(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d)
     val topSpenders = o.groupBy(col("o_custkey"))
-      .agg(sum(dec2(col("o_totalprice"))).as("spend"))
+      .agg(sumDec(col("o_totalprice"), 2).as("spend"))
       .orderBy(col("spend").desc, col("o_custkey"))
       .limit(50).select(col("o_custkey").as("custkey"))
     val mostActive = o.groupBy(col("o_custkey"))
@@ -95,9 +95,9 @@ object Relational {
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(
-        dbl(sum(when(col("l_discount") >= 0.05, dec2(col("l_quantity"))))).as("qty_disc"),
+        sum2(when(col("l_discount") >= 0.05, col("l_quantity"))).as("qty_disc"),
         count(when(col("l_discount") >= 0.05, lit(1))).as("n_disc"),
-        dbl(sum(when(col("l_discount") < 0.05, dec2(col("l_quantity"))))).as("qty_full"),
+        sum2(when(col("l_discount") < 0.05, col("l_quantity"))).as("qty_full"),
         count(when(col("l_discount") < 0.05, lit(1))).as("n_full"))
       .withColumn("avg_disc_qty", col("qty_disc") / col("n_disc"))
       .withColumn("avg_full_qty", col("qty_full") / col("n_full"))
@@ -157,13 +157,17 @@ object Relational {
     * first-class as the DataFrame API). Exact-decimal average both
     * sides. */
   def q22AboveAvg(s: SparkSession, d: String): DataFrame = {
-    Tables.part(s, d).createOrReplaceTempView("part_v")
-    s.sql("""
-      SELECT p_partkey, p_brand, p_retailprice FROM part_v p
+    // a per-call view: the session's temp views are shared by every
+    // concurrent caller, and the analysed plan no longer needs it
+    val view = s"part_v_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    Tables.part(s, d).createOrReplaceTempView(view)
+    try s.sql(s"""
+      SELECT p_partkey, p_brand, p_retailprice FROM $view p
       WHERE p_retailprice > (
         SELECT CAST(SUM(CAST(p2.p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
-        FROM part_v p2 WHERE p2.p_brand = p.p_brand)
+        FROM $view p2 WHERE p2.p_brand = p.p_brand)
       ORDER BY p_partkey""")
+    finally s.catalog.dropTempView(view)
   }
 
   /** q13: semi/anti join — entities lacking downstream data

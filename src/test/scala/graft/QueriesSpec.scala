@@ -52,6 +52,42 @@ class QueriesSpec extends SparkSpec {
     assert(scores.sameElements(scores.sorted.reverse))
   }
 
+  test("q22 on two tables at once: each call reads its own part table, no temp view is left") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+    val alt = java.nio.file.Files.createTempDirectory("q22-alt").toString
+    Tables.part(spark, sf)
+      .withColumn("p_retailprice", when(col("p_partkey") % 3 === 0, col("p_retailprice") * 3)
+        .otherwise(col("p_retailprice")))
+      .write.parquet(s"$alt/part.parquet")
+    val q22 = SparkEntry.queries("q22_above_avg")
+    val run = (d: String) => q22(spark, d).collect().map(_.toString).toSeq
+    val want = Map(sf -> run(sf), alt -> run(alt))
+    assert(want(sf) != want(alt), "the altered prices must change q22's answer")
+    val pool = Executors.newFixedThreadPool(2)
+    try for (_ <- 1 to 4) {
+      val barrier = new CyclicBarrier(2)
+      val runs = Seq(sf, alt).map(d => d -> pool.submit(new Callable[Seq[String]] {
+        def call(): Seq[String] = { barrier.await(); run(d) }
+      }))
+      runs.foreach { case (d, f) => assert(f.get() == want(d), s"q22 on $d read another call's table") }
+    } finally pool.shutdown()
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(!views.exists(_.startsWith("part_v")), s"q22 left temp views: ${views.mkString(", ")}")
+  }
+
+  test("q20 reads its three percentiles off one buffer, as rounded doubles") {
+    val df = SparkEntry.queries("q20_percentiles")(spark, sf)
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("event_type" -> "string", "n" -> "bigint", "p50" -> "double",
+        "p90" -> "double", "p99" -> "double"))
+    val percentiles = df.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect {
+          case p: org.apache.spark.sql.catalyst.expressions.aggregate.Percentile => p })
+    }.flatten
+    assert(percentiles.size == 1, s"expected one percentile aggregate, got ${percentiles.size}")
+  }
+
   test("entry() flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
