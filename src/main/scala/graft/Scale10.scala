@@ -408,15 +408,16 @@ object Scale10 {
       val dir = s"/tmp/scale_knncls_$mult/layout"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      lazy val centsC = operators.Similarity.ivfCentroids(spark, d, 32 * mult)
+      lazy val codecC = operators.Similarity.LabeledCodec(
+        operators.Similarity.ivfCentroids(spark, d, 32 * mult))
       t(s"knncls_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(
           new java.io.File(dir).getParent), true)
-        functions.Classify.writeIvfLabeled(emb, centsC, dir)
+        operators.Similarity.writeLayout(codecC, emb, dir)
         spark.read.parquet(dir).count()
       }
       t(s"knncls_serve_${mult}x") {
-        functions.Classify.classifyKnnServeBatch(spark, dir, centsC,
+        functions.Classify.classifyKnnServeBatch(spark, dir, codecC,
           Tables.embeddings(spark, d).filter(col("vec_id") < 2000)
             .select(col("vec_id").as("query_id"), col("embedding"))).count()
       }
@@ -525,20 +526,20 @@ object Scale10 {
       val ivfDir = s"/tmp/scale_ivfdrift_$mult"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      val cents = Similarity.ivfCentroids(spark, d)
+      val codec = Similarity.FloatCodec(Similarity.ivfCentroids(spark, d))
       t(s"ivf_drift_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(ivfDir), true)
-        Similarity.writeIvfPartitionedOn(emb, cents, ivfDir)
+        Similarity.writeLayout(codec, emb, ivfDir)
         spark.read.parquet(ivfDir).count()
       }
       t(s"ivf_drift_stats_${mult}x") {
-        val st = Similarity.ivfLayoutStats(spark, ivfDir, cents)
+        val st = Similarity.ivfLayoutStats(spark, ivfDir, codec)
         println(f"SCALE ivf_drift_stats_${mult}x detail: n=${st.nVectors} " +
-          f"skew=${st.occSkew}%.2f meanDist=${st.meanAssignDist}%.4f")
+          f"skew=${st.occSkew}%.2f meanDist=${st.drift}%.4f")
         st.nVectors
       }
       t(s"ivf_drift_retrain_${mult}x") {
-        Similarity.retrainIvfPartitioned(spark, ivfDir)
+        Similarity.retrainLayout(spark, ivfDir, codec)
         spark.read.parquet(ivfDir).count()
       }
     }
@@ -689,13 +690,13 @@ object Scale10 {
       val wm = operators.Similarity.whitenModel(spark, d)
       t(s"white_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(wdir), true)
-        operators.Similarity.writeIvfWhitePartitionedOn(emb, wm, wdir)
+        operators.Similarity.writeLayout(wm, emb, wdir)
         spark.read.parquet(wdir).count()
       }
       t(s"white_stats_${mult}x")(
-        operators.Similarity.whiteLayoutStats(spark, wdir).nVectors)
+        operators.Similarity.ivfLayoutStats(spark, wdir, wm).nVectors)
       t(s"white_retrain_${mult}x") {
-        operators.Similarity.retrainIvfWhitePartitioned(spark, wdir, emb)
+        operators.Similarity.retrainLayout(spark, wdir, wm, Some(emb))
         spark.read.parquet(wdir).count()
       }
     }
@@ -706,17 +707,20 @@ object Scale10 {
       val qdir = s"/tmp/scale_sq8_$mult/idx"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      val qc = operators.Similarity.ivfCentroids(spark, d)
+      lazy val qc = {
+        val (mns, mxs) = operators.Similarity.sq8Grid(emb)
+        operators.Similarity.Sq8Codec(
+          operators.Similarity.ivfCentroids(spark, d), mns, mxs)
+      }
       t(s"sq8_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(qdir), true)
-        val (mns, mxs) = operators.Similarity.sq8Grid(emb)
-        operators.Similarity.writeIvfSq8PartitionedOn(emb, qc, mns, mxs, qdir)
+        operators.Similarity.writeLayout(qc, emb, qdir)
         spark.read.parquet(qdir).count()
       }
       t(s"sq8_stats_${mult}x")(
-        operators.Similarity.sq8LayoutStats(spark, qdir).nVectors)
+        operators.Similarity.ivfLayoutStats(spark, qdir, qc).nVectors)
       t(s"sq8_retrain_${mult}x") {
-        operators.Similarity.retrainIvfSq8Partitioned(spark, qdir, emb)
+        operators.Similarity.retrainLayout(spark, qdir, qc, Some(emb))
         spark.read.parquet(qdir).count()
       }
     }
@@ -1193,16 +1197,16 @@ object Scale10 {
       val dir = s"/tmp/scale_ivfpq_$mult"
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      lazy val cents = operators.Similarity.ivfCentroids(spark, d)
-      lazy val books = operators.Similarity.pqResidualCodebooks(spark, d)
+      lazy val pq = operators.Similarity.PqCodec(
+        operators.Similarity.ivfCentroids(spark, d),
+        operators.Similarity.pqResidualCodebooks(spark, d))
       t(s"annivfpq_write_${mult}x") {
         fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        operators.Similarity.encodeIvfPq(emb, cents, books)
-          .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+        operators.Similarity.writeLayout(pq, emb, dir)
         spark.read.parquet(dir).count()
       }
       t(s"annivfpq_serve_${mult}x")(
-        operators.Similarity.annIvfPqServeBatch(spark, dir, cents, books,
+        operators.Similarity.annIvfPqServeBatch(spark, dir, pq,
           Tables.embeddings(spark, d).filter(col("vec_id") < 10)
             .select(col("vec_id").as("query_id"), col("embedding")),
           emb).count())
@@ -1217,25 +1221,24 @@ object Scale10 {
       lazy val embAll = emb.unionByName(day(1)).unionByName(day(2))
       for (i <- 1 to 2)
         t(s"annivfpq_append_day${i}_${mult}x") {
-          operators.Similarity.appendIvfPqPartitioned(day(i), cents, books, dir)
+          operators.Similarity.appendLayout(pq, day(i), dir)
           day(i).count()
         }
       t(s"annivfpq_serve_appended_${mult}x")(
-        operators.Similarity.annIvfPqServeBatch(spark, dir, cents, books,
+        operators.Similarity.annIvfPqServeBatch(spark, dir, pq,
           Tables.embeddings(spark, d).filter(col("vec_id") < 10)
             .select(col("vec_id").as("query_id"), col("embedding")),
           embAll).count())
       t(s"annivfpq_compact_${mult}x")(
-        operators.Similarity.compactIvfPqPartitioned(spark, dir).filesOut.toLong)
+        operators.Similarity.compactIvfPartitioned(spark, dir).filesOut.toLong)
       t(s"annivfpq_stats_${mult}x") {
-        val st = operators.Similarity.ivfPqLayoutStats(spark, dir, cents,
-          books, embAll)
+        val st = operators.Similarity.ivfLayoutStats(spark, dir, pq, Some(embAll))
         println(f"SCALE annivfpq_stats_${mult}x detail: n=${st.nVectors} " +
-          f"skew=${st.occSkew}%.2f quantErr=${st.meanQuantErr}%.6f")
+          f"skew=${st.occSkew}%.2f quantErr=${st.drift}%.6f")
         st.nVectors
       }
       t(s"annivfpq_retrain_${mult}x") {
-        operators.Similarity.retrainIvfPqPartitioned(spark, dir, embAll)
+        operators.Similarity.retrainLayout(spark, dir, pq, Some(embAll))
         spark.read.parquet(dir).count()
       }
     }

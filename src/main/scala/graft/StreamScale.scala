@@ -356,7 +356,7 @@ object StreamScale {
         s"final=$nFinal expected=$snapRows")
     }
 
-    // ---- streamingAnnIvf: pruned probe of a standing IVF corpus ----
+    // ---- serveEachBatch: pruned probes of standing stored layouts ----
     // streaming kNN classification over the stored labeled layout:
     // the same 1×-vs-mult× scorecard as stream_ann_ivf below — the
     // vote rides the pruned probe, so per-batch cost must track
@@ -368,7 +368,8 @@ object StreamScale {
       val d = "/root/testdata/sf0.1"
       import org.apache.spark.sql.functions.{col, lit}
       val emb1 = graft.Tables.embeddings(spark, d)
-      val cents = graft.operators.Similarity.ivfCentroids(spark, d)
+      val labeled = graft.operators.Similarity.LabeledCodec(
+        graft.operators.Similarity.ivfCentroids(spark, d))
       val embN = (0 until mult).map { i =>
         emb1.withColumn("vec_id", col("vec_id") + lit(i * 1000000L))
       }.reduce(_ unionByName _)
@@ -378,7 +379,9 @@ object StreamScale {
       def serveCls(dir: String, tag: String): Double = {
         val input = MemoryStream[EventStream.QueryVec]
         var emitted = 0L
-        val q = EventStream.streamingClassifyKnn(input.toDS(), dir, cents) {
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.functions.Classify.classifyKnnServeBatch(b.sparkSession, dir,
+            labeled, b.toDF("query_id", "embedding"))) {
           preds => emitted += preds.count()
         }
         val t0 = System.nanoTime()
@@ -397,10 +400,10 @@ object StreamScale {
           f"qps=${nq / sec}%.1f preds=$emitted")
         sec
       }
-      graft.functions.Classify.writeIvfLabeled(
-        emb1, cents, "/tmp/streamscale_knncls1")
-      graft.functions.Classify.writeIvfLabeled(
-        embN, cents, s"/tmp/streamscale_knncls$mult")
+      graft.operators.Similarity.writeLayout(
+        labeled, emb1, "/tmp/streamscale_knncls1")
+      graft.operators.Similarity.writeLayout(
+        labeled, embN, s"/tmp/streamscale_knncls$mult")
       val s1 = serveCls("/tmp/streamscale_knncls1", "corpus1x")
       val sN = serveCls(s"/tmp/streamscale_knncls$mult", s"corpus${mult}x")
       println(f"SCALE stream_classify_knn_${mult}x_vs_1x slowdown=${sN / s1}%.2f " +
@@ -412,8 +415,9 @@ object StreamScale {
       locally {
         val input = MemoryStream[EventStream.QueryVec]
         var emitted = 0L
-        val q = EventStream.streamingClassifyCentroid(
-          input.toDS(), s"/tmp/streamscale_cent$mult/cent") {
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.functions.Classify.classifyCentroidServeBatch(b.sparkSession,
+            s"/tmp/streamscale_cent$mult/cent", b.toDF("vec_id", "embedding"))) {
           preds => emitted += preds.count()
         }
         val t0 = System.nanoTime()
@@ -447,8 +451,9 @@ object StreamScale {
         val nd = math.min(mult * 100L, qDocs.length.toLong).toInt
         val input = MemoryStream[EventStream.DocText]
         var emitted = 0L
-        val q = EventStream.streamingQualityNb(
-          input.toDS(), s"/tmp/streamscale_qual$mult/quality") {
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.functions.Classify.qualityNbServeBatch(b.sparkSession,
+            s"/tmp/streamscale_qual$mult/quality", b.toDF("doc_id", "text"))) {
           scores => emitted += scores.count()
         }
         val t0 = System.nanoTime()
@@ -517,7 +522,9 @@ object StreamScale {
           EventStream.NextRequest(800L + i, i % 50))
         val input = MemoryStream[EventStream.NextRequest]
         var emitted = 0L
-        val q = EventStream.streamingMarkovNext(input.toDS(), mkDir) {
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.operators.Recommend.markovNextServeBatch(b.sparkSession, mkDir,
+            b.toDF("user_id", "item"), 5)) {
           recs => emitted += recs.count()
         }
         val t0 = System.nanoTime()
@@ -620,7 +627,9 @@ object StreamScale {
       def serve(ivfDir: String, tag: String): Double = {
         val input = MemoryStream[EventStream.QueryVec]
         var emitted = 0L
-        val q = EventStream.streamingAnnIvfTopK(input.toDS(), ivfDir, cents) {
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.operators.Similarity.annIvfServeBatch(b.sparkSession, ivfDir,
+            cents, b.toDF("query_id", "embedding"))) {
           topk => emitted += topk.count()
         }
         val t0 = System.nanoTime()
@@ -639,10 +648,10 @@ object StreamScale {
           f"qps=${nq / sec}%.1f topkRows=$emitted")
         sec
       }
-      graft.operators.Similarity.writeIvfPartitionedOn(
-        emb1, cents, "/tmp/streamscale_ivf1")
-      graft.operators.Similarity.writeIvfPartitionedOn(
-        embN, cents, s"/tmp/streamscale_ivf$mult")
+      graft.operators.Similarity.writeLayout(
+        graft.operators.Similarity.FloatCodec(cents), emb1, "/tmp/streamscale_ivf1")
+      graft.operators.Similarity.writeLayout(
+        graft.operators.Similarity.FloatCodec(cents), embN, s"/tmp/streamscale_ivf$mult")
       val s1 = serve("/tmp/streamscale_ivf1", "corpus1x")
       val sN = serve(s"/tmp/streamscale_ivf$mult", s"corpus${mult}x")
       println(f"SCALE stream_ann_ivf_${mult}x_vs_1x slowdown=${sN / s1}%.2f " +
@@ -657,7 +666,9 @@ object StreamScale {
         def whiteServe(dir: String, tag: String): Double = {
           val input = MemoryStream[EventStream.QueryVec]
           var emitted = 0L
-          val q = EventStream.streamingAnnIvfWhiteTopK(input.toDS(), dir, wm) {
+          val q = EventStream.serveEachBatch(input.toDS())(b =>
+            graft.operators.Similarity.annIvfWhiteServeBatch(b.sparkSession,
+              dir, wm, b.toDF("query_id", "embedding"))) {
             topk => emitted += topk.count()
           }
           val t0 = System.nanoTime()
@@ -676,10 +687,8 @@ object StreamScale {
             f"time=$sec%.1fs qps=${nq / sec}%.1f topkRows=$emitted")
           sec
         }
-        graft.operators.Similarity.writeIvfWhitePartitionedOn(
-          emb1, wm, "/tmp/streamscale_white1")
-        graft.operators.Similarity.writeIvfWhitePartitionedOn(
-          embN, wm, s"/tmp/streamscale_white$mult")
+        graft.operators.Similarity.writeLayout(wm, emb1, "/tmp/streamscale_white1")
+        graft.operators.Similarity.writeLayout(wm, embN, s"/tmp/streamscale_white$mult")
         val w1 = whiteServe("/tmp/streamscale_white1", "corpus1x")
         val wN = whiteServe(s"/tmp/streamscale_white$mult", s"corpus${mult}x")
         println(f"SCALE stream_ann_ivf_white_${mult}x_vs_1x " +
@@ -694,7 +703,9 @@ object StreamScale {
         def walkServe(dir: String, tag: String): Double = {
           val input = MemoryStream[EventStream.QueryVec]
           var emitted = 0L
-          val q = EventStream.streamingGraphWalkTopK(input.toDS(), dir) {
+          val q = EventStream.serveEachBatch(input.toDS())(b =>
+            graft.operators.Similarity.annGraphWalkServeBatch(b.sparkSession,
+              dir, b.toDF("query_id", "embedding"))) {
             topk => emitted += topk.count()
           }
           val t0 = System.nanoTime()
@@ -727,13 +738,19 @@ object StreamScale {
       // over 1-byte/dim stored codes (partition-pruned scan + per-row
       // dequantize + asymmetric rerank)
       val sq8Dir = "/tmp/streamscale_ivfsq8"
-      val (sqCents, mns, mxs) = graft.operators.Similarity
-        .writeIvfSq8Partitioned(spark, d, sq8Dir)
+      val sq8 = locally {
+        val (mns, mxs) = graft.operators.Similarity.sq8Grid(emb1)
+        graft.operators.Similarity.writeLayout(
+          graft.operators.Similarity.Sq8Codec(cents, mns, mxs), emb1, sq8Dir)
+      }
       locally {
         val input = MemoryStream[EventStream.QueryVec]
         var emitted = 0L
-        val q = EventStream.streamingAnnIvfSq8TopK(input.toDS(), sq8Dir,
-          sqCents, mns, mxs) { topk => emitted += topk.count() }
+        val q = EventStream.serveEachBatch(input.toDS())(b =>
+          graft.operators.Similarity.annIvfSq8ServeBatch(b.sparkSession,
+            sq8Dir, sq8, b.toDF("query_id", "embedding"))) {
+          topk => emitted += topk.count()
+        }
         val t0 = System.nanoTime()
         (0 until 10).foreach { b =>
           val rows = (0 until nq / 10).map { j =>
@@ -761,8 +778,12 @@ object StreamScale {
         def serveF(dir: String, tag: String): Double = {
           val input = MemoryStream[EventStream.QueryVecLabeled]
           var emitted = 0L
-          val q = EventStream.streamingAnnIvfFilteredTopK(input.toDS(),
-            dir, cents) { topk => emitted += topk.count() }
+          val q = EventStream.serveEachBatch(input.toDS())(b =>
+            graft.operators.Similarity.annIvfFilteredServeBatch(b.sparkSession,
+              dir, graft.operators.Similarity.LabeledCodec(cents),
+              b.toDF("query_id", "embedding", "label"))) {
+            topk => emitted += topk.count()
+          }
           val t0 = System.nanoTime()
           (0 until 10).foreach { b =>
             val rows = (0 until nq / 10).map { j =>
@@ -778,10 +799,10 @@ object StreamScale {
             f"time=$sec%.1fs qps=${nq / sec}%.1f topkRows=$emitted")
           sec
         }
-        graft.operators.Similarity.writeIvfFilteredPartitionedOn(
-          emb1, cents, "/tmp/streamscale_ivff1")
-        graft.operators.Similarity.writeIvfFilteredPartitionedOn(
-          embN, cents, s"/tmp/streamscale_ivff$mult")
+        graft.operators.Similarity.writeLayout(
+          graft.operators.Similarity.LabeledCodec(cents), emb1, "/tmp/streamscale_ivff1")
+        graft.operators.Similarity.writeLayout(
+          graft.operators.Similarity.LabeledCodec(cents), embN, s"/tmp/streamscale_ivff$mult")
         val f1 = serveF("/tmp/streamscale_ivff1", "corpus1x")
         val fN = serveF(s"/tmp/streamscale_ivff$mult", s"corpus${mult}x")
         println(f"SCALE stream_ann_ivf_filtered_${mult}x_vs_1x " +

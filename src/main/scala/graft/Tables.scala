@@ -39,7 +39,7 @@ object Tables {
 
   /** (name, length, mtime) of every leaf file under `path`, or None
     * when it cannot be listed (the plain read then reports why). */
-  private def version(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+  private[graft] def version(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
     scala.util.Try {
       val p = new Path(path)
       val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)

@@ -947,43 +947,13 @@ object Classify {
     scoreAgainstCentroids(collectCentroids(s.read.parquet(s"$dir/sums")),
       test)
 
-  // ---- stored labeled layout + pruned kNN-classification serving ---------
-
-  /** Write the LABELED IVF layout the kNN classifier serves from:
-    * (vec_id, label, embedding) rows partitioned by assigned bucket —
-    * the [[graft.operators.Similarity.writeIvfPartitioned]] layout
-    * with the label carried through the write, so serving never pays
-    * a corpus-linear label join (the label rides the pruned scan).
-    * The generic layout-by-convention verbs apply unchanged:
-    * [[graft.operators.Similarity.deleteFromLayout]] tombstones by
-    * vec_id and every serve here subtracts pending tombstones. */
-  def writeIvfLabeled(train: DataFrame, cents: Array[Array[Double]],
-                      dir: String): Unit =
-    labeledAssign(train, cents)
-      .repartition(col("bucket")) // cluster before partitionBy (r10/r12
-      .write.mode("overwrite")    // rule: else every task writes into
-      .partitionBy("bucket").parquet(dir) // every bucket directory)
-
-  /** Append a labeled batch into the standing layout — same trained
-    * centroids, rows land inside existing bucket directories (the
-    * appendIvfPartitioned daily-maintenance shape). */
-  def appendIvfLabeled(batch: DataFrame, cents: Array[Array[Double]],
-                       dir: String): Unit =
-    labeledAssign(batch, cents)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-
-  private def labeledAssign(emb: DataFrame,
-                            cents: Array[Array[Double]]): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .map { case (id, l, v) =>
-        (id, l, graft.operators.Similarity.nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "label", "bucket", "embedding")
-  }
+  // ---- pruned kNN-classification serving over the labeled layout ---------
+  //
+  // Both serves read the stored LABELED layout
+  // ([[graft.operators.Similarity.LabeledCodec]]): (vec_id, bucket,
+  // embedding, label) rows, so the label rides the pruned scan and
+  // serving never pays a corpus-linear label join. Every layout verb of
+  // the one lifecycle applies (append, delete, compact, retrain).
 
   /** Default probe width for the kNN-classification serve: wider
     * than the raw ANN IvfNprobe=16 because the VOTE is more fragile
@@ -1008,12 +978,12 @@ object Classify {
     * ids are an independent id space from corpus vec_ids (the r12
     * serving rule). */
   def classifyKnnServeBatch(s: SparkSession, dir: String,
-                            cents: Array[Array[Double]],
+                            codec: graft.operators.Similarity.LabeledCodec,
                             queries: DataFrame, k: Int = 5,
                             nprobe: Int = ClsNprobe,
                             excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
+    val bc = s.sparkContext.broadcast(codec.cents)
     val probes = queries.select(col("query_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .flatMap { case (id, v) =>
@@ -1021,11 +991,8 @@ object Classify {
         graft.operators.Similarity.topCentroids(bc.value, v, nprobe)
           .iterator.map(b => (id, b, q)) }
       .toDF("query_id", "bucket", "qc")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = graft.operators.Similarity.minusTombstones(s, dir,
-        s.read.parquet(dir)
-          .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
+    val corpus = graft.operators.Similarity.probedScan(s, dir,
+        graft.operators.Similarity.probedBucketsOf(probes))
       .select(col("vec_id").as("neighbor_id"), col("label"),
         col("bucket"), col("embedding"))
       .as[(Long, Int, Int, Array[Float])]
@@ -1048,12 +1015,12 @@ object Classify {
     * bit-identical to the in-query miner over the same corpus
     * (spec'd — the classifyKnnServeBatch discipline). */
   def mineHardNegativesServeBatch(s: SparkSession, dir: String,
-                                  cents: Array[Array[Double]],
+                                  codec: graft.operators.Similarity.LabeledCodec,
                                   queries: DataFrame, k: Int = 5,
                                   nprobe: Int = ClsNprobe): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val bc = s.sparkContext.broadcast(cents)
+    val bc = s.sparkContext.broadcast(codec.cents)
     val probes = queries.select(col("query_id"), col("label"),
         col("embedding"))
       .as[(Long, Int, Array[Float])]
@@ -1062,11 +1029,8 @@ object Classify {
         graft.operators.Similarity.topCentroids(bc.value, v, nprobe)
           .iterator.map(b => (id, l, b, q)) }
       .toDF("query_id", "qlabel", "bucket", "qc")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = graft.operators.Similarity.minusTombstones(s, dir,
-        s.read.parquet(dir)
-          .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
+    val corpus = graft.operators.Similarity.probedScan(s, dir,
+        graft.operators.Similarity.probedBucketsOf(probes))
       .select(col("vec_id").as("neighbor_id"), col("label"),
         col("bucket"), col("embedding"))
       .as[(Long, Int, Int, Array[Float])]

@@ -191,48 +191,43 @@ object Similarity {
   private[graft] val IvfNlist = 32
   private[graft] val IvfNprobe = 16
 
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), Array[Array[Double]]]
+  /** Every artifact trained from a data dir's embeddings (centroids,
+    * codebooks, PCA basis, whitening) is memoized here under (dir,
+    * params, file version). The version is `Tables`' leaf-file listing
+    * of `embeddings.parquet`, so a rewritten table retrains instead of
+    * reusing stale artifacts. Training is deterministic, so the memo
+    * changes no result; it keeps one training per (dir, params) and
+    * drops only superseded versions of that same (dir, params). */
+  private val trained =
+    scala.collection.concurrent.TrieMap.empty[(String, Any, Any), Any]
 
-  /** Fingerprint of the embeddings files backing `d` (name, length,
-    * mtime) — keys the centroid cache on the DATA, not just the path,
-    * so a rewritten/regenerated dataset retrains instead of silently
-    * reusing stale centroids within the same JVM. */
-  private def dataFingerprint(s: SparkSession, d: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(path)) "absent"
-    else {
-      val statuses =
-        if (fs.getFileStatus(path).isDirectory) fs.listStatus(path)
-        else Array(fs.getFileStatus(path))
-      statuses.map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-    }
+  private def memo[T](s: SparkSession, d: String, params: Any)(train: => T): T = {
+    val key = (d, params, Tables.version(s, s"$d/embeddings.parquet"))
+    trained.getOrElseUpdate(key, {
+      trained.keySet.filter(k => k._1 == d && k._2 == params && k != key)
+        .foreach(trained.remove)
+      train
+    }).asInstanceOf[T]
   }
 
-  /** Train the IVF coarse quantizer from a bounded, deterministic
-    * sample of the corpus (first 2048 vectors by id). Shared by the
-    * query and its oracle so both see bit-identical centroids —
-    * which also makes it cacheable: one training per (dir, nlist,
-    * data-fingerprint) per JVM instead of one per query/oracle/spec
-    * call, and a dataset rewrite invalidates the entry. */
+  /** The bounded, deterministic training sample every trainer uses:
+    * the first 2048 vectors of `vectors` by id. Its size is
+    * independent of corpus size, so the collect is O(1) at any scale. */
+  private[graft] def trainingSample(vectors: DataFrame): Array[Array[Float]] = {
+    val s = vectors.sparkSession
+    import s.implicits._
+    vectors.orderBy("vec_id").limit(2048)
+      .select("embedding").as[Array[Float]].collect()
+  }
+
+  /** Train the IVF coarse quantizer on [[trainingSample]] of `d`'s
+    * corpus. Shared by the query and its oracle, so both see
+    * bit-identical centroids; memoized per file version. */
   private[graft] def ivfCentroids(s: SparkSession, d: String,
-                                  nlist: Int = IvfNlist): Array[Array[Double]] = {
-    val key = (d, nlist, dataFingerprint(s, d))
-    centroidCache.getOrElseUpdate(key, {
-      // a rewritten dataset supersedes its old fingerprints — drop
-      // them so a long-lived JVM holds one live entry per (dir, nlist)
-      centroidCache.keySet
-        .filter(k => k._1 == d && k._2 == nlist && k != key)
-        .foreach(centroidCache.remove)
-      import s.implicits._
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
-      trainCentroids(sample, nlist, iters = 10)
-    })
-  }
+                                  nlist: Int = IvfNlist): Array[Array[Double]] =
+    memo(s, d, ("ivf", nlist)) {
+      trainCentroids(trainingSample(Tables.embeddings(s, d)), nlist, iters = 10)
+    }
 
   /** IVF ANN: corpus bucketed by nearest centroid (write-side
     * partitioning at scale), queries probe their `nprobe` nearest
@@ -464,51 +459,152 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Write the corpus partitioned by IVF bucket — the write-side
-    * layout that turns a query's nprobe probe into PARTITION PRUNING:
-    * the scan reads only the probed bucket directories and never
-    * touches the rest of the corpus (ScaleTechniquesSpec asserts the
-    * PartitionFilters). At 100 TB this is the difference between
-    * scanning nprobe/nlist of the corpus and all of it. */
-  def writeIvfPartitioned(s: SparkSession, d: String, dir: String,
-                          nlist: Int = IvfNlist): Array[Array[Double]] = {
-    val cents = ivfCentroids(s, d, nlist)
-    writeIvfPartitionedOn(Tables.embeddings(s, d), cents, dir)
-    cents
+  // ---- stored IVF layouts: one lifecycle, one codec per layout -----------
+
+  /** The trained artifact of a stored, bucket-partitioned IVF layout —
+    * and everything that differs between layouts. A layout row is
+    * `(vec_id, bucket, payload)`, partitioned by `bucket`, so a probe
+    * is PARTITION PRUNING: the scan reads only the probed bucket
+    * directories (ScaleTechniquesSpec asserts the PartitionFilters).
+    * The codec says how a vector becomes a row and which drift axis
+    * (with its tolerance) watches it; the lifecycle written once below
+    * owns the rest: [[writeLayout]], [[appendLayout]],
+    * [[deleteFromLayout]], [[compactIvfPartitioned]],
+    * [[ivfLayoutStats]], [[ivfDrifted]], [[retrainLayout]] and the
+    * probed scan every serve reads through. Five codecs:
+    * [[FloatCodec]], [[LabeledCodec]], [[Sq8Codec]], [[PqCodec]] and
+    * [[WhitenModel]]. */
+  sealed trait IvfCodec extends Serializable {
+    /** The codec type [[retrainLayout]] returns. */
+    type Self <: IvfCodec
+    /** Number of coarse buckets. */
+    def nlist: Int
+    /** Drift tolerance: the axis may grow to `driftTol`× its baseline. */
+    def driftTol: Double
+    /** Rows keep the full-precision embedding, so live vectors come
+      * from the layout itself; code layouts need the corpus beside it. */
+    private[graft] def storesVectors: Boolean
+    /** Layout rows `(vec_id, bucket, payload)` of a `(vec_id,
+      * embedding)` frame (plus `label` for [[LabeledCodec]]). */
+    private[graft] def rows(emb: DataFrame): DataFrame
+    /** The drift axis over the live layout rows; `vectors` are the
+      * live full-precision `(vec_id, embedding)` rows. */
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double
+    /** This codec retrained on [[trainingSample]] of the live vectors. */
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame): Self
   }
 
-  /** [[writeIvfPartitioned]] over an arbitrary `(vec_id, embedding)`
-    * frame with pre-trained centroids — the form the scale probes use
-    * to lay out a replicated corpus under the 1× quantizer (centroids
-    * are a property of the data GEOMETRY, so the 1× training serves
-    * the replicated corpus too). */
-  def writeIvfPartitionedOn(emb: DataFrame, cents: Array[Array[Double]],
-                            dir: String): Unit =
-    ivfAssign(emb, cents)
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+  /** Full-precision layout `(vec_id, bucket, embedding)`. Drift axis:
+    * the mean cosine distance of each vector to its assigned centroid
+    * (rises as arrivals drift away from the trained geometry). */
+  case class FloatCodec(cents: Array[Array[Double]]) extends IvfCodec {
+    type Self = FloatCodec
+    def nlist: Int = cents.length
+    def driftTol: Double = 1.2
+    private[graft] def storesVectors = true
+    private[graft] def rows(emb: DataFrame): DataFrame = ivfAssign(emb, cents)
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
+      meanAssignDist(live, cents)
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
+      FloatCodec(trainCentroids(sample, nlist, iters = 10))
+  }
 
-  /** Append a batch of arriving vectors to the standing
-    * bucket-partitioned serving layout — the ANN corpus's daily
-    * maintenance step (the serving-side analog of the dedup index
-    * artifacts [[graft.operators.Dedup.dedupIncrementalStep]]): the
-    * batch assigns against the SAME trained centroids and its rows
-    * land inside the existing bucket directories, so tomorrow's
-    * probes see today's vectors with no corpus rewrite and partition
-    * pruning keeps working unchanged. Quantizer drift is a retrain-
-    * and-rewrite decision (centroids are a property of the data
-    * geometry — stable under arrivals drawn from it); spec'd:
+  /** The float layout with the `label` attribute carried through the
+    * write: `(vec_id, bucket, embedding, label)`. Filtered ANN pushes
+    * its predicate into the pruned scan, and kNN classification and
+    * hard-negative mining read the label from it, never paying a
+    * corpus-linear label join. Rows are clustered by bucket before the
+    * partitioned write (else every task writes into every bucket
+    * directory). Same drift axis as [[FloatCodec]]. */
+  case class LabeledCodec(cents: Array[Array[Double]]) extends IvfCodec {
+    type Self = LabeledCodec
+    def nlist: Int = cents.length
+    def driftTol: Double = 1.2
+    private[graft] def storesVectors = true
+    private[graft] def rows(emb: DataFrame): DataFrame =
+      labeledAssign(emb, cents).repartition(col("bucket"))
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
+      meanAssignDist(live, cents)
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
+      LabeledCodec(trainCentroids(sample, nlist, iters = 10))
+  }
+
+  private def ivfAssign(emb: DataFrame,
+                        cents: Array[Array[Double]]): DataFrame = {
+    val s = emb.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(cents)
+    emb.select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
+      .toDF("vec_id", "bucket", "embedding")
+  }
+
+  private def labeledAssign(emb: DataFrame,
+                            cents: Array[Array[Double]]): DataFrame = {
+    val s = emb.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(cents)
+    emb.select(col("vec_id"), col("embedding"), col("label"))
+      .as[(Long, Array[Float], Int)]
+      .map { case (id, v, lb) => (id, nearestCentroid(bc.value, v), v, lb) }
+      .toDF("vec_id", "bucket", "embedding", "label")
+  }
+
+  private def meanAssignDist(live: DataFrame, cents: Array[Array[Double]]): Double = {
+    val s = live.sparkSession
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(cents)
+    val r = live.select(col("bucket"), col("embedding"))
+      .as[(Int, Array[Float])]
+      .map { case (b, v) =>
+        val c = bc.value(b)
+        var dot = 0.0; var j = 0
+        while (j < v.length) { dot += c(j) * v(j); j += 1 }
+        1.0 - dot // centroids are unit-normalized
+      }
+      .agg(sum(col("value")), count(lit(1))).head()
+    r.getDouble(0) / r.getLong(1)
+  }
+
+  /** The one layout writer: write, append and retrain all land here. */
+  private def writeRows(codec: IvfCodec, emb: DataFrame, dir: String,
+                        mode: String): Unit =
+    codec.rows(emb).write.mode(mode).partitionBy("bucket").parquet(dir)
+
+  /** Write `emb` as `codec`'s layout at `dir`, replacing what is
+    * there; returns the codec serving needs. */
+  def writeLayout[C <: IvfCodec](codec: C, emb: DataFrame, dir: String): C = {
+    writeRows(codec, emb, dir, "overwrite")
+    codec
+  }
+
+  /** Append a batch of arriving vectors to the standing layout — the
+    * daily maintenance step: the batch encodes under the SAME trained
+    * codec and its rows land inside the existing bucket directories,
+    * so tomorrow's probes see today's vectors with no corpus rewrite
+    * and pruning keeps working. Drift is a retrain decision
+    * ([[ivfDrifted]] → [[retrainLayout]]). Spec'd for every codec:
     * append-then-serve ≡ serve over a one-shot layout of the union. */
+  def appendLayout(codec: IvfCodec, batch: DataFrame, dir: String): Unit =
+    writeRows(codec, batch, dir, "append")
+
+  /** The float layout of `d`'s corpus under its trained centroids,
+    * which are returned ([[FloatCodec]] over [[writeLayout]]). */
+  def writeIvfPartitioned(s: SparkSession, d: String, dir: String,
+                          nlist: Int = IvfNlist): Array[Array[Double]] =
+    writeLayout(FloatCodec(ivfCentroids(s, d, nlist)), Tables.embeddings(s, d), dir).cents
+
+  /** [[appendLayout]] on the float layout. */
   def appendIvfPartitioned(batch: DataFrame, cents: Array[Array[Double]],
                            dir: String): Unit =
-    ivfAssign(batch, cents)
-      .write.mode("append").partitionBy("bucket").parquet(dir)
+    appendLayout(FloatCodec(cents), batch, dir)
 
-  /** Periodic maintenance for the bucket-partitioned serving corpus:
-    * each daily [[appendIvfPartitioned]] leaves one more small file
-    * inside every touched bucket directory, and probe latency decays
-    * with the per-bucket file count — re-collapse in place, KEEPING
-    * the bucket partitioning so pruned probes keep pruning
-    * (serve-identical, spec'd). */
+  /** Periodic maintenance for any stored layout: each append leaves
+    * one more small file inside every touched bucket directory, and
+    * probe latency decays with the per-bucket file count — re-collapse
+    * in place, KEEPING the bucket partitioning so pruned probes keep
+    * pruning, and fold the tombstone log (serve-identical, spec'd). */
   def compactIvfPartitioned(s: SparkSession, dir: String,
                             targetBytes: Long = 128L << 20)
       : graft.sources.Compact.CompactReport =
@@ -520,20 +616,15 @@ object Similarity {
 
   private def tombstonePath(dir: String) = s"$dir/_tombstones"
 
-  /** DELETE vectors from a bucket-partitioned serving layout — the
-    * maintenance verb the append/compact/retrain loop lacked: a
-    * delete never rewrites bucket files (they are immutable between
-    * compactions); it appends the ids to a TOMBSTONE log stored
-    * UNDER the layout (`_tombstones` — the underscore keeps it
-    * invisible to every parquet scan of the layout itself). Serving
-    * subtracts the log (a broadcast anti-join: the log is bounded by
-    * deletions since the last compaction), and
-    * [[compactIvfPartitioned]] FOLDS it into the periodic rewrite —
-    * rows dropped physically, log cleared by the same directory swap
-    * (the standard LSM tombstone discipline applied to a vector
-    * index). Works unchanged for the float, SQ8, PQ and
-    * attribute-carrying layouts (all key rows by `vec_id`). Ids are
-    * NEVER reused in this engine (the corpus id discipline), so a
+  /** DELETE vectors from a stored layout: a delete never rewrites
+    * bucket files (they are immutable between compactions); it appends
+    * the ids to a TOMBSTONE log stored UNDER the layout (`_tombstones`
+    * — the underscore keeps it invisible to every parquet scan of the
+    * layout itself). Serving, stats and retrain subtract the log (a
+    * broadcast anti-join: the log is bounded by deletions since the
+    * last compaction), and [[compactIvfPartitioned]] FOLDS it into the
+    * periodic rewrite (the LSM tombstone discipline applied to a
+    * vector index). Ids are NEVER reused in this engine, so a
     * tombstone cannot shadow a later insert. */
   def deleteFromLayout(s: SparkSession, dir: String, ids: DataFrame): Unit =
     ids.select(col("vec_id")).distinct()
@@ -551,62 +642,86 @@ object Similarity {
       Seq("vec_id"), "left_anti")
   }
 
-  // ---- IVF quantizer-drift monitoring ------------------------------------
+  /** The live rows of a layout: every stored row minus the tombstones. */
+  private def liveRows(s: SparkSession, dir: String): DataFrame =
+    minusTombstones(s, dir, s.read.parquet(dir))
 
-  /** One monitoring snapshot of a bucket-partitioned serving layout:
-    * corpus size, bucket-occupancy skew (max bucket count / mean —
-    * 1.0 is perfectly balanced; skew degrades probe cost because a
-    * probe of a hot bucket scans its whole partition), and the mean
-    * cosine distance of each vector to its ASSIGNED centroid (rises
-    * as arrivals drift away from the geometry the quantizer was
-    * trained on). */
-  case class IvfLayoutStats(nVectors: Long, nBuckets: Int,
-                            occSkew: Double, meanAssignDist: Double)
+  /** The live full-precision vectors of a layout: from the layout
+    * itself when its rows keep embeddings, else `emb` (the corpus
+    * serving reranks against) restricted to the live ids. */
+  private def liveVectors(s: SparkSession, dir: String, codec: IvfCodec,
+                          emb: Option[DataFrame]): DataFrame =
+    if (codec.storesVectors) liveRows(s, dir).drop("bucket")
+    else {
+      val full = emb.getOrElse(throw new IllegalArgumentException(
+        s"${codec.getClass.getSimpleName} stores codes only: pass the corpus"))
+      full.select(col("vec_id"), col("embedding"))
+        .join(liveRows(s, dir).select(col("vec_id")), Seq("vec_id"))
+    }
 
-  /** Compute [[IvfLayoutStats]] in one pass over the stored layout —
-    * a few counters per bucket plus one distance sum, so the monitor
-    * costs one pruned-free corpus scan and nothing else. Run at write
-    * time for the baseline snapshot and per maintenance cycle for the
-    * drift check ([[ivfDrifted]]). */
-  def ivfLayoutStats(s: SparkSession, dir: String,
-                     cents: Array[Array[Double]]): IvfLayoutStats = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val perBucket = s.read.parquet(dir)
-      .select(col("bucket"), col("embedding"))
-      .as[(Int, Array[Float])]
-      .map { case (b, v) =>
-        val c = bc.value(b)
-        var dot = 0.0; var j = 0
-        while (j < v.length) { dot += c(j) * v(j); j += 1 }
-        (b, 1L, 1.0 - dot) // centroids are unit-normalized
-      }
-      .toDF("bucket", "n", "dist")
-      .groupBy(col("bucket"))
-      .agg(sum(col("n")).as("n"), sum(col("dist")).as("dist"))
-      .collect()
-    val n = perBucket.map(_.getAs[Long]("n")).sum
-    val maxOcc = perBucket.map(_.getAs[Long]("n")).max.toDouble
-    val meanOcc = n.toDouble / cents.length
-    IvfLayoutStats(n, perBucket.length, maxOcc / meanOcc,
-      perBucket.map(_.getAs[Double]("dist")).sum / n)
+  /** The probed-bucket scan every serve reads its layout through:
+    * `dir` with `bucket IN (probedBuckets)` pushed down (partition
+    * pruning — per-batch cost tracks probes, not corpus size) and an
+    * optional `extra` scan predicate, minus the tombstone log. */
+  private[graft] def probedScan(s: SparkSession, dir: String,
+                                probedBuckets: Seq[Int],
+                                extra: Option[Column] = None): DataFrame = {
+    val inProbed = col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)
+    minusTombstones(s, dir,
+      s.read.parquet(dir).filter(extra.fold(inProbed)(inProbed && _)))
   }
 
-  /** The retrain decision: drift is RELATIVE to the write-time
-    * snapshot — occupancy skew grew past `skewTol`× the baseline, or
-    * mean assignment distance grew past `distTol`× — so a corpus that
-    * was born skewed doesn't page anyone, and a balanced corpus that
-    * drifts does. */
-  def ivfDrifted(current: IvfLayoutStats, baseline: IvfLayoutStats,
-                 skewTol: Double = 1.5, distTol: Double = 1.2): Boolean =
-    current.occSkew > baseline.occSkew * skewTol ||
-      current.meanAssignDist > baseline.meanAssignDist * distTol
+  /** A probe frame's distinct buckets, sorted (bounded by nlist —
+    * driver-safe). */
+  private[graft] def probedBucketsOf(probes: DataFrame): Seq[Int] = {
+    val s = probes.sparkSession
+    import s.implicits._
+    probes.select("bucket").distinct().as[Int].collect().sorted.toSeq
+  }
 
-  /** The retrain-and-migrate rename discipline shared by every layout
-    * retrain (IVF, IVF-PQ, SQ8, whitened): clear stale generations,
-    * `write` the rebuilt layout at `dir + ".retraining"`, stage the
-    * live one aside as `.old` (one pinned-reader grace generation),
-    * swap the rebuilt one in. */
+  // ---- quantizer-drift monitoring and retrain ------------------------------
+
+  /** One monitoring snapshot of a stored layout's LIVE rows: corpus
+    * size, bucket-occupancy skew (max bucket count / mean — 1.0 is
+    * perfectly balanced; a hot bucket makes every probe of it scan
+    * its whole partition), and the codec's drift axis. A drained
+    * layout reads all zeros. */
+  case class IvfLayoutStats(nVectors: Long, nBuckets: Int,
+                            occSkew: Double, drift: Double)
+
+  /** Compute [[IvfLayoutStats]]: one occupancy pass plus the codec's
+    * axis, both over live rows (tombstoned vectors never count). Run
+    * at write time for the baseline, per maintenance cycle for
+    * [[ivfDrifted]]. `emb` is the corpus beside a [[PqCodec]] layout,
+    * whose axis needs full precision. */
+  def ivfLayoutStats(s: SparkSession, dir: String, codec: IvfCodec,
+                     emb: Option[DataFrame] = None): IvfLayoutStats = {
+    val live = liveRows(s, dir)
+    val occ = live.groupBy(col("bucket")).count().collect().map(_.getLong(1))
+    if (occ.isEmpty) IvfLayoutStats(0L, 0, 0.0, 0.0)
+    else {
+      val n = occ.sum
+      IvfLayoutStats(n, occ.length, occ.max / (n.toDouble / codec.nlist),
+        codec.axis(live, liveVectors(s, dir, codec, emb)))
+    }
+  }
+
+  /** Occupancy-skew tolerance shared by every codec. */
+  private[graft] val SkewTol = 1.5
+
+  /** The retrain decision: drift is RELATIVE to the write-time
+    * snapshot — skew grew past [[SkewTol]]× the baseline, or the
+    * codec's axis past its `driftTol`× — so a corpus born skewed
+    * doesn't page anyone, and a balanced corpus that drifts does. */
+  def ivfDrifted(current: IvfLayoutStats, baseline: IvfLayoutStats,
+                 codec: IvfCodec): Boolean =
+    current.occSkew > baseline.occSkew * SkewTol ||
+      current.drift > baseline.drift * codec.driftTol
+
+  /** The two-rename generation swap: clear stale generations, `write`
+    * the rebuilt layout at `dir + ".retraining"`, stage the live one
+    * aside as `.old` (one pinned-reader grace generation), swap the
+    * rebuilt one in. */
   private def swapInRetrained(s: SparkSession, dir: String)
                              (write: String => Unit): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -620,64 +735,30 @@ object Similarity {
       s"could not swap retrained $dir in")
   }
 
-  /** Retrain-and-migrate: re-train the coarse quantizer on the
-    * layout's CURRENT contents (bounded deterministic sample, like
-    * the original training), re-assign every vector, and swap the
-    * rewritten layout in under the same path (the
-    * [[graft.sources.Compact.compactInPlace]] rename discipline, one
-    * `.old` grace generation). Returns the new centroids — serving
-    * must switch to them atomically with the layout (they define the
-    * probe geometry). Exhaustive-probe results are unchanged by
-    * construction (rerank is exact); pruned-probe recall is restored
-    * to the trained-geometry regime (spec'd). */
-  def retrainIvfPartitioned(s: SparkSession, dir: String,
-                            nlist: Int = IvfNlist): Array[Array[Double]] = {
-    import s.implicits._
-    // tombstones fold through EVERY rewrite of the layout (the swap
-    // would otherwise drop the log while keeping the dead rows —
-    // resurrecting deleted vectors); training samples live rows only
-    val live = minusTombstones(s, dir,
-      s.read.parquet(dir).select(col("vec_id"), col("embedding")))
-    val sample = live
-      .orderBy("vec_id").limit(2048)
-      .select("embedding").as[Array[Float]].collect()
-    val cents = trainCentroids(sample, nlist, iters = 10)
-    swapInRetrained(s, dir)(writeIvfPartitionedOn(live, cents, _))
-    cents
+  /** Retrain-and-migrate any layout: retrain the codec on
+    * [[trainingSample]] of the layout's LIVE vectors, re-encode every
+    * live vector through the one writer, and swap the rewritten
+    * layout in under the same path. Tombstones fold (a rewrite must
+    * never resurrect deletes). Returns the new codec — serving must
+    * switch to it atomically with the layout. Spec'd: the layout's
+    * rows equal a fresh write of the survivors under the returned
+    * codec, and exhaustive-probe float serving is unchanged. `emb` is
+    * the corpus beside a code layout ([[Sq8Codec]], [[PqCodec]],
+    * [[WhitenModel]]): codes alone cannot retrain. */
+  def retrainLayout(s: SparkSession, dir: String, codec: IvfCodec,
+                    emb: Option[DataFrame] = None): codec.Self = {
+    val live = liveVectors(s, dir, codec, emb)
+    val next = codec.retrained(trainingSample(live), live)
+    swapInRetrained(s, dir)(writeRows(next, live, _, "overwrite"))
+    next
   }
 
-  private def ivfAssign(emb: DataFrame,
-                        cents: Array[Array[Double]]): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "bucket", "embedding")
-  }
-
-  /** ANN over the bucket-partitioned layout: per query, probe the
-    * nprobe nearest centroid partitions (a pushed-down `bucket IN
-    * (...)` filter) and rerank exactly — identical results to
-    * [[annIvf]] by construction, but the corpus scan is pruned at the
-    * source instead of filtered after a full read. */
-  def annIvfPartitioned(s: SparkSession, dir: String, cents: Array[Array[Double]],
-                        queries: DataFrame, k: Int = 5,
-                        nprobe: Int = IvfNprobe): DataFrame =
-    annIvfServeBatch(s, dir, cents,
-      queries.select(col("vec_id").as("query_id"), col("embedding")),
-      k, nprobe, excludeSelf = true)
-
-  /** Serve ONE batch of queries against the stored bucket-partitioned
-    * layout ([[writeIvfPartitioned]]): fan each query out to its
-    * `nprobe` nearest centroids, collect the batch's probed bucket set
-    * (bounded by nlist — driver-safe), and read the corpus with a
-    * pushed-down `bucket IN (...)` so the scan touches ONLY the probed
-    * partition directories — per-batch cost tracks probes, not corpus
-    * size. This is the per-micro-batch body of the streaming serving
-    * path ([[graft.streaming.EventStream.streamingAnnIvfTopK]]) and
-    * the shared core of [[annIvfPartitioned]].
+  /** Serve ONE batch of queries against the stored float layout
+    * ([[writeIvfPartitioned]]): fan each query out to its `nprobe`
+    * nearest centroids and read the corpus through the probed-bucket
+    * scan — per-batch cost tracks probes, not corpus size. Streams
+    * serve it per micro-batch through
+    * [[graft.streaming.EventStream.serveEachBatch]].
     *
     * `queries` must have `(query_id, embedding)`. `excludeSelf`
     * defaults to FALSE: in the serving form query ids are an
@@ -696,10 +777,7 @@ object Similarity {
       .flatMap { case (id, v) =>
         topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
       .toDF("query_id", "bucket", "qv")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
+    val corpus = probedScan(s, dir, probedBucketsOf(probes))
     val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
     val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
                else cand0
@@ -777,59 +855,30 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Write the corpus bucket-partitioned WITH its filter attributes —
-    * the layout filtered serving scans: same bucket partitioning as
-    * [[writeIvfPartitioned]], every non-embedding column carried so
-    * predicates push down to the pruned scan. */
-  def writeIvfFilteredPartitioned(s: SparkSession, d: String, dir: String,
-                                  nlist: Int = IvfNlist): Array[Array[Double]] = {
-    val cents = ivfCentroids(s, d, nlist)
-    writeIvfFilteredPartitionedOn(Tables.embeddings(s, d), cents, dir)
-    cents
-  }
-
-  /** [[writeIvfFilteredPartitioned]] over an arbitrary
-    * `(vec_id, embedding, label)` frame with pre-trained centroids —
-    * the form the scale probes lay replicated corpora out with. */
-  def writeIvfFilteredPartitionedOn(emb: DataFrame,
-                                    cents: Array[Array[Double]],
-                                    dir: String): Unit = {
-    val s = emb.sparkSession
-    val bc = s.sparkContext.broadcast(cents)
-    import s.implicits._
-    emb.select(col("vec_id"), col("embedding"), col("label"))
-      .as[(Long, Array[Float], Int)]
-      .map { case (id, v, lb) => (id, nearestCentroid(bc.value, v), v, lb) }
-      .toDF("vec_id", "bucket", "embedding", "label")
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-  }
-
-  /** Serve one query batch against the attribute-carrying layout:
-    * probed-bucket partition pruning AND the batch's label set pushed
-    * to the scan (`label IN (...)` lands in PushedFilters — row
-    * groups without matching labels never decompress), then the exact
-    * per-query label-equality filter inside the bucket join. Spec'd
-    * equal to [[annIvfFiltered]] at the same geometry. `queries` must
-    * have `(query_id, embedding, label)`. */
+  /** Serve one query batch against the labeled layout
+    * ([[LabeledCodec]]): probed-bucket partition pruning AND the
+    * batch's label set pushed to the scan (`label IN (...)` lands in
+    * PushedFilters — row groups without matching labels never
+    * decompress), then the exact per-query label-equality filter
+    * inside the bucket join. Spec'd equal to [[annIvfFiltered]] at
+    * the same geometry. `queries` must have `(query_id, embedding,
+    * label)`. */
   def annIvfFilteredServeBatch(s: SparkSession, dir: String,
-                               cents: Array[Array[Double]], queries: DataFrame,
+                               codec: LabeledCodec, queries: DataFrame,
                                k: Int = 5, nprobe: Int = FilteredNprobe,
                                excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
+    val bc = s.sparkContext.broadcast(codec.cents)
     val probes = queries
       .select(col("query_id"), col("embedding"), col("label"))
       .as[(Long, Array[Float], Int)]
       .flatMap { case (id, v, lb) =>
         topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v, lb)) }
       .toDF("query_id", "bucket", "qv", "qlabel")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
     val batchLabels = probes.select("qlabel").distinct()
       .as[Int].collect().sorted // bounded by the batch size — driver-safe
-    val corpus = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*) &&
-        col("label").isin(batchLabels.map(Integer.valueOf): _*)))
+    val corpus = probedScan(s, dir, probedBucketsOf(probes),
+      Some(col("label").isin(batchLabels.map(Integer.valueOf): _*)))
     val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
       .filter(col("label") === col("qlabel"))
     val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
@@ -914,33 +963,29 @@ object Similarity {
       Tables.embeddings(s, d), k)
   }
 
-  /** Serve one query batch against the stored bucket-partitioned IVF
-    * layout ([[writeIvfPartitioned]]) with the prefix shortlist: the
-    * [[annIvfServeBatch]] probed-bucket pruned scan (pushed-down
-    * `bucket IN (...)`), prefix-cosine shortlist per query, full-dim
+  /** Serve one query batch against the stored float layout
+    * ([[writeIvfPartitioned]]) with the prefix shortlist: the
+    * probed-bucket scan, prefix-cosine shortlist per query, full-dim
     * rerank against the SAME pruned layout rows — the layout stores
     * full-precision embeddings, so the prefix view is a free slice at
     * read and the rerank re-reads only probed partitions. Per-batch
     * cost tracks probes × shortlist, never corpus size. Spec'd equal
     * to [[annIvfPrefix]] at the same geometry. */
   def annIvfPrefixServeBatch(s: SparkSession, dir: String,
-                             cents: Array[Array[Double]], queries: DataFrame,
+                             codec: FloatCodec, queries: DataFrame,
                              k: Int = 5, nprobe: Int = IvfNprobe,
                              prefixDims: Int = PrefixDims,
                              cand: Int = PrefixCand,
                              excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
+    val bc = s.sparkContext.broadcast(codec.cents)
     val probes = queries
       .select(col("query_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .flatMap { case (id, v) =>
         topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
       .toDF("query_id", "bucket", "qv")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
+    val corpus = probedScan(s, dir, probedBucketsOf(probes))
     val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
     val candf = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
                 else cand0
@@ -1076,23 +1121,14 @@ object Similarity {
     cents
   }
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, String), Array[Array[Array[Double]]]]
-
   /** Per-subspace PQ codebooks trained on the same bounded 2048-vector
-    * sample as the IVF quantizer; cached per (dir, geometry,
-    * data-fingerprint) so query, oracle, and specs share bit-identical
-    * books. Shape: [m][k][subDim]. */
+    * sample as the IVF quantizer; memoized per file version so query,
+    * oracle, and specs share bit-identical books. Shape:
+    * [m][k][subDim]. */
   private[graft] def pqCodebooks(s: SparkSession, d: String, m: Int = PqM,
-                                 kS: Int = PqK): Array[Array[Array[Double]]] = {
-    val key = (d, m, kS, dataFingerprint(s, d))
-    pqCache.getOrElseUpdate(key, {
-      pqCache.keySet
-        .filter(k0 => k0._1 == d && k0._2 == m && k0._3 == kS && k0 != key)
-        .foreach(pqCache.remove)
-      import s.implicits._
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
+                                 kS: Int = PqK): Array[Array[Array[Double]]] =
+    memo(s, d, ("pq", m, kS)) {
+      val sample = trainingSample(Tables.embeddings(s, d))
       val dim = sample.head.length
       require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
       val sub = dim / m
@@ -1101,8 +1137,7 @@ object Similarity {
           sample.map(v => Array.tabulate(sub)(j => v(mi * sub + j).toDouble)),
           kS, iters = 10)
       }
-    })
-  }
+    }
 
   /** Exact-integer ADC term: dot(q_m, c) snapped to the 1e-9 grid as
     * a long — `floor(x·1e9 + 0.5)` on BOTH engines (never round():
@@ -1228,38 +1263,34 @@ object Similarity {
     pqRerank(pqAdcTopC(coded, books, queryFrame, cand), queryFrame, emb, k)
   }
 
-  private val pqResCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int, String), Array[Array[Array[Double]]]]
-
   /** RESIDUAL PQ codebooks for the IVF×PQ composition: trained on the
     * sample's residuals v − c(bucket(v)) against the IVF coarse
     * quantizer — the FAISS IVF-PQ recipe (coarse centroid carries the
     * location, PQ encodes the remainder, so the codebooks spend their
-    * 4 bits on a much smaller cell). Cached like the others. */
+    * 4 bits on a much smaller cell). Memoized like the others. */
   private[graft] def pqResidualCodebooks(s: SparkSession, d: String,
                                          nlist: Int = IvfNlist, m: Int = PqM,
-                                         kS: Int = PqK): Array[Array[Array[Double]]] = {
-    val key = (d, nlist, m, kS, dataFingerprint(s, d))
-    pqResCache.getOrElseUpdate(key, {
-      pqResCache.keySet.filter(k0 => k0._1 == d && k0 != key)
-        .foreach(pqResCache.remove)
-      import s.implicits._
-      val cents = ivfCentroids(s, d, nlist)
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
-      val dim = sample.head.length
-      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-      val sub = dim / m
-      val residuals = sample.map { v =>
-        val c = cents(nearestCentroid(cents, v))
-        Array.tabulate(dim)(j => v(j) - c(j))
-      }
-      Array.tabulate(m) { mi =>
-        trainPqSubspace(
-          residuals.map(r => java.util.Arrays.copyOfRange(r, mi * sub, (mi + 1) * sub)),
-          kS, iters = 10)
-      }
-    })
+                                         kS: Int = PqK): Array[Array[Array[Double]]] =
+    memo(s, d, ("pqres", nlist, m, kS)) {
+      residualBooks(trainingSample(Tables.embeddings(s, d)),
+        ivfCentroids(s, d, nlist), m, kS)
+    }
+
+  private def residualBooks(sample: Array[Array[Float]],
+                            cents: Array[Array[Double]],
+                            m: Int, kS: Int): Array[Array[Array[Double]]] = {
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+    val sub = dim / m
+    val residuals = sample.map { v =>
+      val c = cents(nearestCentroid(cents, v))
+      Array.tabulate(dim)(j => v(j) - c(j))
+    }
+    Array.tabulate(m) { mi =>
+      trainPqSubspace(
+        residuals.map(r => java.util.Arrays.copyOfRange(r, mi * sub, (mi + 1) * sub)),
+        kS, iters = 10)
+    }
   }
 
   /** ann_ivf_pq: the COMPOSED production vector index (FAISS IVF-PQ):
@@ -1275,28 +1306,29 @@ object Similarity {
   def annIvfPq(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
                nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
                m: Int = PqM, kS: Int = PqK, cand: Int = PqCand): DataFrame = {
-    import s.implicits._
-    val cents = ivfCentroids(s, d, nlist)
-    val books = pqResidualCodebooks(s, d, nlist, m, kS)
-    val bcC = s.sparkContext.broadcast(cents)
-    val bcB = s.sparkContext.broadcast(books)
+    val pq = PqCodec(ivfCentroids(s, d, nlist), pqResidualCodebooks(s, d, nlist, m, kS))
     val emb = Tables.embeddings(s, d)
-    // (id, bucket, residual codes) — one typed encode pass
-    val coded = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val cs = bcC.value; val bks = bcB.value
-        val b = nearestCentroid(cs, v)
-        val sub = v.length / bks.length
-        val codes = Array.tabulate(bks.length) { mi =>
-          nearestL2(bks(mi), Array.tabulate(sub)(j =>
-            v(mi * sub + j) - cs(b)(mi * sub + j)))
-        }
-        (id, b, codes)
-      }
-    // per-query: probed buckets with base nanos + residual LUTs
     val queries = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"))
+    pqRerank(pqIvfTopC(_ => pq.rows(emb), pq,
+        queries.select(col("vec_id").as("query_id"), col("embedding")),
+        nprobe, cand, excludeSelf = true),
+      queries, emb, k)
+  }
+
+  /** The IVF-PQ shortlist: per query (collected — a serve batch is
+    * driver-sized) its probed buckets with base nanos ⟨q, c_bucket⟩
+    * and its residual LUTs; `coded` gives the `(vec_id, bucket,
+    * codes)` rows of the batch's probed buckets; candidate score =
+    * exact BIGINT base + Σ_m LUT[m][code_m]; bounded top-`cand`
+    * `(query_id, neighbor_id)`. */
+  private def pqIvfTopC(coded: Seq[Int] => DataFrame, pq: PqCodec,
+                        queryFrame: DataFrame, nprobe: Int, cand: Int,
+                        excludeSelf: Boolean): DataFrame = {
+    val s = queryFrame.sparkSession
+    import s.implicits._
+    val cents = pq.cents; val books = pq.books
+    val queries = queryFrame
+      .select(col("query_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
       .map { case (qid, qv) =>
         val sub = qv.length / books.length
@@ -1305,46 +1337,60 @@ object Similarity {
           while (j < qv.length) { dot += cents(b)(j) * qv(j); j += 1 }
           b -> math.floor(dot * 1e9 + 0.5).toLong
         }.toMap
-        val lut = Array.tabulate(books.length)(mi =>
-          books(mi).map(c => lutNanos(c, qv, mi * sub)))
-        (qid, probed, lut)
+        (qid, probed, Array.tabulate(books.length)(mi =>
+          books(mi).map(c => lutNanos(c, qv, mi * sub))))
       }
     val bq = s.sparkContext.broadcast(queries)
-    val adc = coded.flatMap { case (id, b, codes) =>
-      bq.value.iterator.collect {
-        case (qid, probed, lut) if qid != id && probed.contains(b) =>
-          var sc = probed(b); var mi = 0
-          while (mi < codes.length) { sc += lut(mi)(codes(mi)); mi += 1 }
-          (qid, id, sc)
-      }
-    }.toDF("query_id", "neighbor_id", "adc")
-    val top = topKPerQuery(adc.select(col("query_id"), col("neighbor_id"),
+    val adc = coded(queries.flatMap(_._2.keys).distinct.sorted.toSeq)
+      .select(col("vec_id"), col("bucket"), col("codes"))
+      .as[(Long, Int, Array[Byte])] // codes land as parquet BINARY
+      .flatMap { case (id, b, codes) =>
+        bq.value.iterator.collect {
+          case (qid, probed, lut)
+              if probed.contains(b) && !(excludeSelf && qid == id) =>
+            var sc = probed(b); var mi = 0
+            while (mi < codes.length) { sc += lut(mi)(codes(mi)); mi += 1 }
+            (qid, id, sc)
+        }
+      }.toDF("query_id", "neighbor_id", "adc")
+    topKPerQuery(adc.select(col("query_id"), col("neighbor_id"),
       col("adc").cast("double").as("cos_sim")), cand, ordered = false)
       .select(col("query_id"), col("neighbor_id"))
-    pqRerank(top, emb.filter(col("vec_id") < nQueries), emb, k)
   }
 
-  /** Persist the composed IVF-PQ layout: bucket-PARTITIONED residual
-    * codes, m bytes per vector — the billion-vector serving index on
-    * disk (probes prune partitions; the scan inside a probed bucket
-    * reads 4 bytes/vector at the default geometry). Returns the
-    * (coarse centroids, residual codebooks) serving artifacts. */
-  def writeIvfPqPartitioned(s: SparkSession, d: String, dir: String,
-                            nlist: Int = IvfNlist, m: Int = PqM,
-                            kS: Int = PqK)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val cents = ivfCentroids(s, d, nlist)
-    val books = pqResidualCodebooks(s, d, nlist, m, kS)
-    encodeIvfPq(Tables.embeddings(s, d), cents, books)
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-    (cents, books)
+  /** The composed IVF-PQ layout `(vec_id, bucket, codes)`:
+    * bucket-partitioned RESIDUAL codes, m bytes per vector — the
+    * billion-vector serving index on disk (the scan inside a probed
+    * bucket reads 4 bytes/vector at the default geometry). The
+    * full-precision corpus stays beside it for the exact rerank.
+    * Drift axis: the mean residual QUANTIZATION error
+    * ‖v − (c_bucket + decode(codes))‖² over a bounded deterministic
+    * sample — the [[PqSampleN]] live rows smallest by
+    * xxhash64(vec_id), a uniform draw across the WHOLE id range, so
+    * newly appended (high-id) vectors are represented. It rises when
+    * arrivals outgrow the codebooks, which degrades ADC ranking long
+    * before results go visibly wrong. */
+  case class PqCodec(cents: Array[Array[Double]],
+                     books: Array[Array[Array[Double]]]) extends IvfCodec {
+    type Self = PqCodec
+    def nlist: Int = cents.length
+    def driftTol: Double = 1.2
+    private[graft] def storesVectors = false
+    private[graft] def rows(emb: DataFrame): DataFrame = pqResidualCodes(emb, cents, books)
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
+      meanQuantErr(live, vectors, cents, books)
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) = {
+      val c = trainCentroids(sample, nlist, iters = 10)
+      PqCodec(c, residualBooks(sample, c, books.length, books.head.length))
+    }
   }
 
-  /** One encode pass: (vec_id, bucket, residual code bytes) for any
-    * corpus frame — shared by the writer and the Scale10 probes. */
-  private[graft] def encodeIvfPq(emb: DataFrame,
-                                 cents: Array[Array[Double]],
-                                 books: Array[Array[Array[Double]]]): DataFrame = {
+  /** Rows in [[PqCodec]]'s quantization-error sample. */
+  private[graft] val PqSampleN = 2048
+
+  private def pqResidualCodes(emb: DataFrame,
+                              cents: Array[Array[Double]],
+                              books: Array[Array[Array[Double]]]): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
     val bcC = s.sparkContext.broadcast(cents)
@@ -1364,153 +1410,16 @@ object Similarity {
       .toDF("vec_id", "bucket", "codes")
   }
 
-  /** Serve against the stored IVF-PQ layout: probed buckets collected
-    * (bounded by nlist), PARTITION-PRUNED scan of the code table,
-    * exact-integer base+ADC, bounded shortlist, exact rerank against
-    * the full-precision corpus — result-identical to the inline
-    * [[annIvfPq]] (spec'd). */
-  def annIvfPqStored(s: SparkSession, dir: String,
-                     cents: Array[Array[Double]],
-                     books: Array[Array[Array[Double]]],
-                     queryFrame: DataFrame, emb: DataFrame, k: Int = 5,
-                     nprobe: Int = IvfNprobe, cand: Int = PqCand,
-                     excludeSelf: Boolean = true): DataFrame =
-    annIvfPqServeBatch(s, dir, cents, books,
-      queryFrame.select(col("vec_id").as("query_id"), col("embedding")),
-      emb, k, nprobe, cand, excludeSelf)
-
-  /** Serve ONE batch of `(query_id, embedding)` queries against the
-    * stored IVF-PQ layout — the per-micro-batch body of
-    * [[graft.streaming.EventStream.streamingAnnIvfPqTopK]] and the
-    * core of [[annIvfPqStored]]. `excludeSelf` is OPT-IN: serving
-    * query ids are an independent id space. */
-  def annIvfPqServeBatch(s: SparkSession, dir: String,
-                         cents: Array[Array[Double]],
-                         books: Array[Array[Array[Double]]],
-                         queryFrame: DataFrame, emb: DataFrame, k: Int = 5,
-                         nprobe: Int = IvfNprobe, cand: Int = PqCand,
-                         excludeSelf: Boolean = false): DataFrame = {
+  private def meanQuantErr(live: DataFrame, vectors: DataFrame,
+                           cents: Array[Array[Double]],
+                           books: Array[Array[Array[Double]]]): Double = {
+    val s = live.sparkSession
     import s.implicits._
-    val queries = queryFrame
-      .select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-      .map { case (qid, qv) =>
-        val sub = qv.length / books.length
-        val probed = topCentroids(cents, qv, nprobe).map { b =>
-          var dot = 0.0; var j = 0
-          while (j < qv.length) { dot += cents(b)(j) * qv(j); j += 1 }
-          b -> math.floor(dot * 1e9 + 0.5).toLong
-        }.toMap
-        (qid, probed, Array.tabulate(books.length)(mi =>
-          books(mi).map(c => lutNanos(c, qv, mi * sub))))
-      }
-    val probedBuckets = queries.flatMap(_._2.keys).distinct.sorted
-    val bq = s.sparkContext.broadcast(queries)
-    val adc = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
-      .select(col("vec_id"), col("bucket"), col("codes"))
-      .as[(Long, Int, Array[Byte])] // codes land as parquet BINARY
-      .flatMap { case (id, b, codes) =>
-        bq.value.iterator.collect {
-          case (qid, probed, lut)
-              if probed.contains(b) && !(excludeSelf && qid == id) =>
-            var sc = probed(b); var mi = 0
-            while (mi < codes.length) { sc += lut(mi)(codes(mi)); mi += 1 }
-            (qid, id, sc)
-        }
-      }.toDF("query_id", "neighbor_id", "adc")
-    val top = topKPerQuery(adc.select(col("query_id"), col("neighbor_id"),
-      col("adc").cast("double").as("cos_sim")), cand, ordered = false)
-      .select(col("query_id"), col("neighbor_id"))
-    pqRerank(top,
-      queryFrame.select(col("query_id").as("vec_id"), col("embedding")),
-      emb, k)
-  }
-
-  // ---- IVF-PQ layout maintenance -----------------------------------------
-
-  /** [[writeIvfPqPartitioned]] over an arbitrary `(vec_id, embedding)`
-    * frame with pre-trained artifacts — the form the maintenance loop
-    * and scale probes use (quantizer and codebooks are properties of
-    * the data GEOMETRY, so 1×-trained artifacts serve a replicated or
-    * split corpus too). */
-  def writeIvfPqPartitionedOn(emb: DataFrame, cents: Array[Array[Double]],
-                              books: Array[Array[Array[Double]]],
-                              dir: String): Unit =
-    encodeIvfPq(emb, cents, books)
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-
-  /** Append a batch of arriving vectors to the stored IVF-PQ code
-    * layout — the daily maintenance step of the compressed serving
-    * tier, the [[appendIvfPartitioned]] twin: the batch encodes
-    * against the SAME coarse centroids + residual codebooks and its
-    * 4-byte/vector code rows land inside the existing bucket
-    * directories, so tomorrow's probes see today's vectors with no
-    * corpus rewrite and partition pruning keeps working unchanged.
-    * Codebook drift is a retrain-and-migrate decision
-    * ([[ivfPqDrifted]] → [[retrainIvfPqPartitioned]]). Spec'd:
-    * append-then-serve ≡ serve over a one-shot layout of the union. */
-  def appendIvfPqPartitioned(batch: DataFrame,
-                             cents: Array[Array[Double]],
-                             books: Array[Array[Array[Double]]],
-                             dir: String): Unit =
-    encodeIvfPq(batch, cents, books)
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-
-  /** Periodic maintenance for the IVF-PQ code layout: each daily
-    * append leaves one more small file per touched bucket directory —
-    * re-collapse in place, KEEPING the bucket partitioning so pruned
-    * probes keep pruning (serve-identical, spec'd). */
-  def compactIvfPqPartitioned(s: SparkSession, dir: String,
-                              targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
-      partitionCols = Seq("bucket"),
-      transform = df => minusTombstones(s, dir, df))
-
-  /** Monitoring snapshot of the stored code layout: corpus size,
-    * bucket-occupancy skew (as [[IvfLayoutStats]]), and the mean
-    * residual QUANTIZATION error ‖v − (c_bucket + decode(codes))‖² —
-    * the quantization-quality analog of meanAssignDist. It rises when
-    * arrivals drift away from the geometry the codebooks were trained
-    * on, which degrades ADC ranking (the shortlist misses true
-    * neighbors) long before results go visibly wrong — exactly the
-    * signal that must page a retrain. */
-  case class IvfPqLayoutStats(nVectors: Long, nBuckets: Int,
-                              occSkew: Double, meanQuantErr: Double)
-
-  /** Compute [[IvfPqLayoutStats]]: occupancy from one column-pruned
-    * pass over the code layout; quantization error over a BOUNDED
-    * deterministic sample joined to the full-precision corpus `emb` —
-    * the layout stores only 4-byte codes, and serving already keeps
-    * the full-precision table beside it for the exact rerank. The
-    * sample is the `sampleN` smallest by xxhash64(vec_id) — a
-    * deterministic uniform draw across the WHOLE id range, so newly
-    * appended (high-id) vectors are represented and the error axis
-    * can actually see drifting arrivals; sampling the lowest ids
-    * (the quantizer-training convention) would freeze the sample at
-    * the original corpus (r11 advice). Still one TakeOrdered — no
-    * global sort materializes. Run at write time for the baseline
-    * snapshot, per maintenance cycle for the drift check
-    * ([[ivfPqDrifted]]). */
-  def ivfPqLayoutStats(s: SparkSession, dir: String,
-                       cents: Array[Array[Double]],
-                       books: Array[Array[Array[Double]]],
-                       emb: DataFrame,
-                       sampleN: Int = 2048): IvfPqLayoutStats = {
-    import s.implicits._
-    val occ = s.read.parquet(dir).groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getAs[Long]("n"))
-    val n = occ.sum
-    val occSkew = occ.max.toDouble / (n.toDouble / cents.length)
     val bcC = s.sparkContext.broadcast(cents)
     val bcB = s.sparkContext.broadcast(books)
-    val sample = s.read.parquet(dir)
-      .select(col("vec_id"), col("bucket"), col("codes"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(sampleN)
-    val errs = sample
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+    val errs = live.select(col("vec_id"), col("bucket"), col("codes"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(PqSampleN)
+      .join(vectors, Seq("vec_id"))
       .select(col("bucket"), col("codes"), col("embedding"))
       .as[(Int, Array[Byte], Array[Float])]
       .map { case (b, codes, v) =>
@@ -1523,63 +1432,28 @@ object Similarity {
           val dlt = v(j) - rec
           err += dlt * dlt; j += 1
         }
-        (1L, err)
+        err
       }
-      .toDF("one", "err")
-      .agg(sum(col("one")).as("cnt"), sum(col("err")).as("err")).head()
-    IvfPqLayoutStats(n, occ.length, occSkew,
-      errs.getAs[Double]("err") / errs.getAs[Long]("cnt"))
+      .agg(sum(col("value")), count(lit(1))).head()
+    errs.getDouble(0) / errs.getLong(1)
   }
 
-  /** The retrain decision for the compressed tier — drift RELATIVE to
-    * the write-time snapshot, like [[ivfDrifted]]: occupancy skew past
-    * `skewTol`× the baseline, or mean residual quantization error past
-    * `errTol`×. A corpus born skewed doesn't page; a balanced corpus
-    * whose arrivals outgrow the codebooks does. */
-  def ivfPqDrifted(current: IvfPqLayoutStats, baseline: IvfPqLayoutStats,
-                   skewTol: Double = 1.5, errTol: Double = 1.2): Boolean =
-    current.occSkew > baseline.occSkew * skewTol ||
-      current.meanQuantErr > baseline.meanQuantErr * errTol
-
-  /** Retrain-and-migrate for the IVF-PQ layout: re-train the coarse
-    * quantizer AND the residual codebooks on the layout's CURRENT
-    * contents (bounded deterministic sample of the code layout's ids,
-    * full precision from `emb` — the table serving reranks against),
-    * re-encode every stored vector, and swap the rewritten layout in
-    * under the same path (the [[retrainIvfPartitioned]] rename
-    * discipline, one `.old` grace generation). Returns the new
-    * (centroids, codebooks) — serving must switch to them atomically
-    * with the layout. Spec'd: exhaustive-probe full-shortlist serving
-    * is unchanged by the migration (rerank is exact), and the
-    * retrained geometry absorbs the drift wave. */
-  def retrainIvfPqPartitioned(s: SparkSession, dir: String, emb: DataFrame,
-                              nlist: Int = IvfNlist, m: Int = PqM,
-                              kS: Int = PqK)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    import s.implicits._
-    // live rows only: the swap folds the tombstone log (see
-    // retrainIvfPartitioned — a rewrite must never resurrect deletes)
-    val full = emb.select(col("vec_id"), col("embedding"))
-      .join(minusTombstones(s, dir,
-        s.read.parquet(dir).select(col("vec_id"))), Seq("vec_id"))
-    val sample = full.orderBy("vec_id").limit(2048)
-      .select("embedding").as[Array[Float]].collect()
-    val cents = trainCentroids(sample, nlist, iters = 10)
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
-    val residuals = sample.map { v =>
-      val c = cents(nearestCentroid(cents, v))
-      Array.tabulate(dim)(j => v(j) - c(j))
-    }
-    val books = Array.tabulate(m) { mi =>
-      trainPqSubspace(
-        residuals.map(r =>
-          java.util.Arrays.copyOfRange(r, mi * sub, (mi + 1) * sub)),
-        kS, iters = 10)
-    }
-    swapInRetrained(s, dir)(writeIvfPqPartitionedOn(full, cents, books, _))
-    (cents, books)
+  /** Serve ONE batch of `(query_id, embedding)` queries against the
+    * stored IVF-PQ layout: probed buckets computed on the driver from
+    * the collected batch, the probed-bucket scan of the code table,
+    * exact-integer base+ADC, bounded shortlist, exact rerank against
+    * the full-precision corpus `emb` — result-identical to the inline
+    * [[annIvfPq]] (spec'd). `excludeSelf` is OPT-IN: serving query
+    * ids are an independent id space. */
+  def annIvfPqServeBatch(s: SparkSession, dir: String, codec: PqCodec,
+                         queryFrame: DataFrame, emb: DataFrame, k: Int = 5,
+                         nprobe: Int = IvfNprobe, cand: Int = PqCand,
+                         excludeSelf: Boolean = false): DataFrame = {
+    val top = pqIvfTopC(probedScan(s, dir, _), codec, queryFrame, nprobe,
+      cand, excludeSelf)
+    pqRerank(top,
+      queryFrame.select(col("query_id").as("vec_id"), col("embedding")),
+      emb, k)
   }
 
   /** DuckDB oracle for [[annIvfPq]]: coarse centroids AND residual
@@ -1811,8 +1685,8 @@ object Similarity {
       // the grid was trained) saturates at the edge code — the
       // standard SQ behavior. Without the clamp the (q − 128).toByte
       // storage step WRAPS out-of-range codes into garbage; with it,
-      // recall degrades gracefully and sq8LayoutStats' saturation
-      // fraction sees exactly how much is clipping.
+      // recall degrades gracefully and the Sq8Codec drift axis (the
+      // saturation fraction) sees exactly how much is clipping.
       when(mx > mn, least(lit(255), greatest(lit(0),
         round((x.cast("double") - mn) * lit(255.0) / (mx - mn))
           .cast("int"))))
@@ -1889,7 +1763,7 @@ object Similarity {
     * IVF+SQ8 shape re-expressed relationally. The corpus lives
     * bucketed by IVF coarse centroid AND stored as 1-byte/dim SQ8
     * codes; a query probes its `nprobe` nearest buckets (at 100 TB a
-    * partition-pruned scan — see [[writeIvfSq8Partitioned]]) and
+    * partition-pruned scan — see [[Sq8Codec]]) and
     * reranks ASYMMETRICALLY: the query keeps full precision, only the
     * corpus side pays quantization error (the FAISS default — better
     * recall than the symmetric form at identical scan cost). Combined
@@ -1939,90 +1813,50 @@ object Similarity {
       round(cos(col("qv"), col("v")), 6).as("cos_sim")), k)
   }
 
-  /** Write the corpus in the composed layout: bucket-partitioned
-    * directories ([[writeIvfPartitioned]]) of SQ8 code rows
-    * ([[writeSq8]]) — the stored form where a probe is a partition-
-    * pruned scan over 1-byte/dim codes. Returns the trained
-    * (centroids, grid) artifacts the probe side needs. */
-  def writeIvfSq8Partitioned(s: SparkSession, d: String, dir: String,
-                             nlist: Int = IvfNlist)
-      : (Array[Array[Double]], Array[Double], Array[Double]) = {
-    val emb = Tables.embeddings(s, d)
-    val cents = ivfCentroids(s, d, nlist)
-    val (mns, mxs) = sq8Grid(emb)
-    writeIvfSq8PartitionedOn(emb, cents, mns, mxs, dir)
-    (cents, mns, mxs)
+  /** The composed IVF×SQ8 layout `(vec_id, bucket, codes)`: the float
+    * layout's bucket partitioning over [[writeSq8]]'s 1-byte/dim code
+    * rows — a probe is a partition-pruned scan over codes. Bucket
+    * assignment runs on the full-precision vector. Arrivals append
+    * under the STANDING grid: out-of-grid coordinates CLAMP to the
+    * edge codes ([[sq8Codes]]' saturation) and recall degrades
+    * gracefully. Drift axis: the SATURATION FRACTION — the share of
+    * stored code entries at 0 or 255, a codes-only readout of grid
+    * staleness. At write time only each dimension's half-step tails
+    * sit on the edge codes (tiny but nonzero, so the relative
+    * tolerance is well-defined); a ×3 drift wave clips a quarter of
+    * its coordinates. Retrain re-derives the grid from the live
+    * full-precision rows (clipped codes lost their true magnitude). */
+  case class Sq8Codec(cents: Array[Array[Double]],
+                      mns: Array[Double], mxs: Array[Double]) extends IvfCodec {
+    type Self = Sq8Codec
+    def nlist: Int = cents.length
+    def driftTol: Double = 3.0
+    private[graft] def storesVectors = false
+    private[graft] def rows(emb: DataFrame): DataFrame = sq8Rows(emb, cents, mns, mxs)
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
+      sq8SatFrac(live)
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) = {
+      val (mn, mx) = sq8Grid(live)
+      Sq8Codec(trainCentroids(sample, nlist, iters = 10), mn, mx)
+    }
   }
 
-  /** [[writeIvfSq8Partitioned]] over an arbitrary embeddings frame
-    * with pre-trained artifacts — the retrain loop's rewrite form. */
-  def writeIvfSq8PartitionedOn(emb: DataFrame, cents: Array[Array[Double]],
-                               mns: Array[Double], mxs: Array[Double],
-                               dir: String): Unit = {
+  private def sq8Rows(emb: DataFrame, cents: Array[Array[Double]],
+                      mns: Array[Double], mxs: Array[Double]): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "bucket", "embedding")
+    ivfAssign(emb, cents)
       .select(col("vec_id"), col("bucket"),
         sq8Codes(col("embedding"), mns, mxs).as("q"))
       .as[(Long, Int, Array[Int])]
       .map { case (id, b, q) => (id, b, q.map(x => (x - 128).toByte)) }
       .toDF("vec_id", "bucket", "codes")
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
   }
 
-  /** Append arrivals to the standing SQ8 layout under the STANDING
-    * grid + quantizer (the appendIvfPartitioned contract — geometry
-    * fixed between retrains): out-of-grid coordinates CLAMP to the
-    * grid edge ([[sq8Codes]]'s saturation), recall degrades
-    * gracefully, and [[sq8LayoutStats]]' saturation fraction measures
-    * exactly how much clipped so [[sq8Drifted]] can page for a
-    * retrain. */
-  def appendIvfSq8Partitioned(batch: DataFrame,
-                              cents: Array[Array[Double]],
-                              mns: Array[Double], mxs: Array[Double],
-                              dir: String): Unit = {
-    val s = batch.sparkSession
+  private def sq8SatFrac(live: DataFrame): Double = {
+    val s = live.sparkSession
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    batch.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "bucket", "embedding")
-      .select(col("vec_id"), col("bucket"),
-        sq8Codes(col("embedding"), mns, mxs).as("q"))
-      .as[(Long, Int, Array[Int])]
-      .map { case (id, b, q) => (id, b, q.map(x => (x - 128).toByte)) }
-      .toDF("vec_id", "bucket", "codes")
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-  }
-
-  /** Monitoring snapshot of the SQ8 code layout — the quantization
-    * tier's staleness signal (the IVF/IVF-PQ/whitened drift
-    * discipline applied to the GRID): corpus size, bucket-occupancy
-    * skew, and the SATURATION FRACTION — the share of stored code
-    * entries at 0 or 255. At write time only each dimension's
-    * half-step tails sit on the edge codes (tiny but nonzero, so the
-    * relative tolerance is well-defined); arrivals whose coordinates
-    * outgrew the trained [mn, mx] grid clamp there, so saturation is
-    * a direct, codes-only readout of grid staleness (the dequantized
-    * error it causes is unbounded — unlike in-grid error, which the
-    * half-step bound caps). Two bounded passes: the bucket-count
-    * aggregate and a shuffle-free mapPartitions code scan. */
-  case class Sq8LayoutStats(nVectors: Long, nBuckets: Int,
-                            occSkew: Double, satFrac: Double)
-
-  def sq8LayoutStats(s: SparkSession, dir: String,
-                     nlist: Int = IvfNlist): Sq8LayoutStats = {
-    import s.implicits._
-    val occ = s.read.parquet(dir).groupBy(col("bucket")).count().collect()
-    if (occ.isEmpty) return Sq8LayoutStats(0L, 0, 0.0, 0.0) // drained index
-    val n = occ.map(_.getAs[Long]("count")).sum
-    val maxOcc = occ.map(_.getAs[Long]("count")).max.toDouble
-    val sat = s.read.parquet(dir).select(col("codes")).as[Array[Byte]]
+    val sat = live.select(col("codes")).as[Array[Byte]]
       .mapPartitions { it =>
         var tot = 0L; var satd = 0L
         it.foreach { cs =>
@@ -2035,96 +1869,34 @@ object Similarity {
         }
         if (tot == 0) Iterator.empty else Iterator.single((tot, satd))
       }.collect()
-    val tot = sat.map(_._1).sum
-    Sq8LayoutStats(n, occ.length, maxOcc / (n.toDouble / nlist),
-      sat.map(_._2).sum.toDouble / math.max(1L, tot))
+    sat.map(_._2).sum.toDouble / math.max(1L, sat.map(_._1).sum)
   }
 
-  /** The SQ8 retrain decision — drift RELATIVE to the write-time
-    * snapshot: occupancy skew past `skewTol`×, or the saturation
-    * fraction past `satTol`× (the grid-staleness axis: a ×3 drift
-    * wave clips a quarter of its coordinates, orders of magnitude
-    * above the write-time edge-tail baseline). */
-  def sq8Drifted(current: Sq8LayoutStats, baseline: Sq8LayoutStats,
-                 skewTol: Double = 1.5, satTol: Double = 3.0): Boolean =
-    current.occSkew > baseline.occSkew * skewTol ||
-      current.satFrac > baseline.satFrac * satTol
-
-  /** Retrain-and-migrate for the SQ8 layout: re-derive the grid
-    * (exact per-dim min/max — the write-time recipe) AND the coarse
-    * quantizer from the layout's CURRENT live rows (full precision
-    * from `emb`, the IVF-PQ pattern — codes alone cannot re-grid:
-    * clipped entries lost their true magnitude), re-code every
-    * stored vector, swap under the same path (one `.old` grace
-    * generation), tombstones fold. Returns the new
-    * (centroids, mns, mxs) — serving switches atomically with the
-    * layout. Spec'd: the swapped-in layout is code-identical to a
-    * fresh one-shot write under the new artifacts (dequantized
-    * values legitimately move with the grid, so serve-invariance is
-    * the wrong invariant — the whitened-retrain precedent). */
-  def retrainIvfSq8Partitioned(s: SparkSession, dir: String,
-                               emb: DataFrame, nlist: Int = IvfNlist)
-      : (Array[Array[Double]], Array[Double], Array[Double]) = {
-    import s.implicits._
-    val full = emb.select(col("vec_id"), col("embedding"))
-      .join(minusTombstones(s, dir,
-        s.read.parquet(dir).select(col("vec_id"))), Seq("vec_id"))
-    val sample = full.orderBy("vec_id").limit(2048)
-      .select("embedding").as[Array[Float]].collect()
-    val cents = trainCentroids(sample, nlist, iters = 10)
-    val (mns, mxs) = sq8Grid(full)
-    swapInRetrained(s, dir)(writeIvfSq8PartitionedOn(full, cents, mns, mxs, _))
-    (cents, mns, mxs)
-  }
-
-  /** ANN over the composed layout: probe the nprobe nearest centroid
-    * PARTITIONS (pushed-down `bucket IN (...)` — the scan never
-    * touches unprobed directories, ScaleTechniquesSpec asserts the
-    * PartitionFilters), dequantize the stored codes, rerank
-    * asymmetrically. Result-identical to [[annIvfSq8]] by
-    * construction (spec'd). */
-  def annIvfSq8Partitioned(s: SparkSession, dir: String,
-                           cents: Array[Array[Double]],
-                           mns: Array[Double], mxs: Array[Double],
-                           queries: DataFrame, k: Int = 5,
-                           nprobe: Int = IvfNprobe): DataFrame =
-    annIvfSq8ServeBatch(s, dir, cents, mns, mxs,
-      queries.select(col("vec_id").as("query_id"), col("embedding")),
-      k, nprobe, excludeSelf = true)
-
-  /** Serve ONE batch of queries against the composed SQ8 stored-code
-    * layout ([[writeIvfSq8Partitioned]]) — the [[annIvfServeBatch]]
-    * shape over 1-byte/dim codes: probed buckets collected (bounded
-    * by nlist), partition-pruned scan, per-row dequantize, asymmetric
-    * rerank. The per-micro-batch body of
-    * [[graft.streaming.EventStream.streamingAnnIvfSq8TopK]] and the
-    * shared core of [[annIvfSq8Partitioned]]. `queries` must have
-    * `(query_id, embedding)`; `excludeSelf` as in
-    * [[annIvfServeBatch]] (serving ids are an independent space). */
-  def annIvfSq8ServeBatch(s: SparkSession, dir: String,
-                          cents: Array[Array[Double]],
-                          mns: Array[Double], mxs: Array[Double],
+  /** Serve ONE batch of queries against the composed SQ8 layout
+    * ([[Sq8Codec]]) — the [[annIvfServeBatch]] shape over 1-byte/dim
+    * codes: the probed-bucket scan, per-row dequantize, asymmetric
+    * rerank. Result-identical to [[annIvfSq8]] at the same geometry
+    * (spec'd). `queries` must have `(query_id, embedding)`;
+    * `excludeSelf` as in [[annIvfServeBatch]]. */
+  def annIvfSq8ServeBatch(s: SparkSession, dir: String, codec: Sq8Codec,
                           queries: DataFrame, k: Int = 5,
                           nprobe: Int = IvfNprobe,
                           excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
+    val bc = s.sparkContext.broadcast(codec.cents)
     val probes = queries
       .select(col("query_id"), col("embedding"))
       .as[(Long, Array[Float])]
       .flatMap { case (id, v) =>
         topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
       .toDF("query_id", "bucket", "qv")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
+    val corpus = probedScan(s, dir, probedBucketsOf(probes))
       .select(col("vec_id"), col("bucket"), col("codes"))
       .as[(Long, Int, Array[Byte])] // codes land as parquet BINARY
       .map { case (id, b, codes) => (id, b, codes.map(x => x.toInt + 128)) }
       .toDF("vec_id", "bucket", "q")
       .select(col("vec_id"), col("bucket"),
-        sq8Dequant(col("q"), mns, mxs).as("v"))
+        sq8Dequant(col("q"), codec.mns, codec.mxs).as("v"))
     val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
     val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
                else cand0
@@ -3677,30 +3449,17 @@ object Similarity {
 
   // ---- emb_pca: embedding-space variance report ---------------------------
 
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (Array[Array[Double]], Array[Double])]
-
   /** Deterministic PCA basis for the corpus embedding space: sample =
-    * the first 2048 vectors by id (the [[ivfCentroids]] discipline —
-    * O(1) at any corpus size, shared bit-identically by the query and
-    * its oracle via literals), mean-centered covariance on the
-    * driver, cyclic Jacobi eigen-decomposition, components sorted by
+    * [[trainingSample]] (the [[ivfCentroids]] discipline — O(1) at
+    * any corpus size, shared bit-identically by the query and its
+    * oracle via literals), mean-centered covariance on the driver,
+    * cyclic Jacobi eigen-decomposition, components sorted by
     * eigenvalue descending and sign-normalized (largest-|coordinate|
     * positive). Returns (components, offsets) with offsets(c) =
     * ⟨sample mean, e_c⟩ so a projection is one dot minus a scalar. */
   private[graft] def pcaBasis(s: SparkSession, d: String)
-      : (Array[Array[Double]], Array[Double]) = {
-    val key = (d, dataFingerprint(s, d))
-    pcaCache.getOrElseUpdate(key, {
-      pcaCache.keySet.filter(k => k._1 == d && k != key)
-        .foreach(pcaCache.remove)
-      import s.implicits._
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
-      pcaBasisOfSample(sample)
-    })
-  }
+      : (Array[Array[Double]], Array[Double]) =
+    memo(s, d, "pca")(pcaBasisOfSample(trainingSample(Tables.embeddings(s, d))))
 
   /** The PCA basis computation on a given bounded sample — the pure
     * core of [[pcaBasis]], reused by the whitened tier's retrain
@@ -3912,10 +3671,6 @@ object Similarity {
 
   // ---- whitened ANN serving tier (ann_ivf_white) ---------------------------
 
-  private val whitenParamCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Double, String),
-      (Array[Array[Double]], Array[Long], Array[Double])]
-
   /** The whitening transform in EXACT travel form — what the query
     * and its oracle share bit-identically: per component the basis
     * row e_c (Double.toString round-trip literals), the projection
@@ -3924,17 +3679,10 @@ object Similarity {
     * as [[pcaBasis]]. */
   private[graft] def whitenParams(s: SparkSession, d: String,
                                   eps: Double = 1e-6)
-      : (Array[Array[Double]], Array[Long], Array[Double]) = {
-    val key = (d, eps, dataFingerprint(s, d))
-    whitenParamCache.getOrElseUpdate(key, {
-      whitenParamCache.keySet.filter(k => k._1 == d && k._2 == eps && k != key)
-        .foreach(whitenParamCache.remove)
-      import s.implicits._
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
-      whitenParamsOfSample(sample, eps)
-    })
-  }
+      : (Array[Array[Double]], Array[Long], Array[Double]) =
+    memo(s, d, ("whiten", eps)) {
+      whitenParamsOfSample(trainingSample(Tables.embeddings(s, d)), eps)
+    }
 
   /** [[whitenParams]] on a given bounded sample — the pure core the
     * retrain loop uses (it samples the layout's CURRENT live rows,
@@ -3980,10 +3728,6 @@ object Similarity {
     out
   }
 
-  private val whiteCentCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String),
-      Array[Array[Long]]]
-
   /** Whitened-space coarse quantizer: spherical k-means retrained on
     * the whitened sample codes (|w6| < 2²⁴ so the Float cast into the
     * shared trainer is lossless), each unit centroid then snapped to
@@ -3993,19 +3737,12 @@ object Similarity {
     * this tier removes even that sensitivity). */
   private[graft] def whiteCentroidsE9(s: SparkSession, d: String,
                                       nlist: Int = IvfNlist)
-      : Array[Array[Long]] = {
-    val key = (d, nlist, dataFingerprint(s, d))
-    whiteCentCache.getOrElseUpdate(key, {
-      whiteCentCache.keySet
-        .filter(k => k._1 == d && k._2 == nlist && k != key)
-        .foreach(whiteCentCache.remove)
-      import s.implicits._
+      : Array[Array[Long]] =
+    memo(s, d, ("whitecent", nlist)) {
       val (comps, offE9, scales) = whitenParams(s, d)
-      val sample = Tables.embeddings(s, d).orderBy("vec_id").limit(2048)
-        .select("embedding").as[Array[Float]].collect()
-      whiteCentroidsOfSample(sample, comps, offE9, scales, nlist)
-    })
-  }
+      whiteCentroidsOfSample(trainingSample(Tables.embeddings(s, d)),
+        comps, offE9, scales, nlist)
+    }
 
   private def whiteCentroidsOfSample(sample: Array[Array[Float]],
                                      comps: Array[Array[Double]],
@@ -4019,8 +3756,8 @@ object Similarity {
   }
 
   /** Train the whole whitening + quantizer bundle from one bounded
-    * sample — what [[retrainIvfWhitePartitioned]] runs against the
-    * layout's current live rows. */
+    * sample — what [[retrainLayout]] runs against the layout's
+    * current live rows. */
   def whitenModelOfSample(sample: Array[Array[Float]],
                           nlist: Int = IvfNlist,
                           eps: Double = 1e-6): WhitenModel = {
@@ -4166,9 +3903,31 @@ object Similarity {
   }
 
   /** The whitening + whitened-quantizer bundle a serving node ships
-    * (all exact-travel literals; one training per corpus). */
+    * (all exact-travel literals; one training per corpus) — and the
+    * codec of the whitened STORED layout `(vec_id, w, n2, bucket)`:
+    * exact integer codes partitioned by the whitened-space bucket. The
+    * raw embeddings never ship: every serve scores on the codes alone.
+    * The dim² coding pass fans out (single-row-group inputs otherwise
+    * code the whole corpus in one task — the r10 rule) and rows are
+    * clustered by bucket before the write. Drift axis: the MAX
+    * per-component variance of the stored whitened coordinates.
+    * Whitening scales every component to unit variance AT TRAINING
+    * TIME, so a healthy layout sits near 1; arrivals whose geometry
+    * outgrew the basis inflate the affected components ∝ the squared
+    * scale factor — computable from the codes alone. */
   case class WhitenModel(comps: Array[Array[Double]], offE9: Array[Long],
                          scales: Array[Double], centsE9: Array[Array[Long]])
+      extends IvfCodec {
+    type Self = WhitenModel
+    def nlist: Int = centsE9.length
+    def driftTol: Double = 1.5
+    private[graft] def storesVectors = false
+    private[graft] def rows(emb: DataFrame): DataFrame = whiteRows(emb, this)
+    private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
+      maxWhiteCompVar(live)
+    private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
+      whitenModelOfSample(sample, nlist)
+  }
 
   def whitenModel(s: SparkSession, d: String,
                   nlist: Int = IvfNlist): WhitenModel = {
@@ -4176,24 +3935,7 @@ object Similarity {
     WhitenModel(c, o, sc, whiteCentroidsE9(s, d, nlist))
   }
 
-  /** Write the whitened STORED serving layout: exact integer codes
-    * (vec_id, w, n2) partitioned by the whitened-space bucket — the
-    * writeIvfPartitioned discipline over [[whitenCode6]] codes. The
-    * raw embeddings never ship: every serve scores on the codes
-    * alone. The layout is vec_id-keyed and bucket-partitioned, so the
-    * standard layout verbs work unchanged ([[deleteFromLayout]]
-    * tombstones, [[compactIvfPartitioned]] folds them). */
-  def writeIvfWhitePartitioned(s: SparkSession, d: String, dir: String,
-                               nlist: Int = IvfNlist): Unit =
-    writeIvfWhitePartitionedOn(Tables.embeddings(s, d),
-      whitenModel(s, d, nlist), dir)
-
-  /** [[writeIvfWhitePartitioned]] over an arbitrary embeddings frame
-    * with a pre-trained model — the retrain loop's rewrite form. The
-    * dim² coding pass fans out (single-row-group inputs otherwise
-    * code the whole corpus in one task — the r10 rule). */
-  def writeIvfWhitePartitionedOn(emb: DataFrame, m: WhitenModel,
-                                 dir: String): Unit = {
+  private def whiteRows(emb: DataFrame, m: WhitenModel): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
     val bc = s.sparkContext.broadcast(m)
@@ -4206,84 +3948,12 @@ object Similarity {
         (id, w, n2, nearestWhiteCentroid(mm.centsE9, w))
       }.toDF("vec_id", "w", "n2", "bucket")
       .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
   }
 
-  /** Append a batch of arriving vectors to the standing whitened
-    * layout — codes under the SAME standing model (the
-    * appendIvfPartitioned contract: geometry is fixed between
-    * retrains; drift → [[whiteDrifted]] → [[retrainIvfWhitePartitioned]]). */
-  def appendIvfWhitePartitioned(batch: DataFrame, m: WhitenModel,
-                                dir: String): Unit = {
-    val s = batch.sparkSession
+  private def maxWhiteCompVar(live: DataFrame): Double = {
+    val s = live.sparkSession
     import s.implicits._
-    val bc = s.sparkContext.broadcast(m)
-    batch.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val mm = bc.value
-        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
-        (id, w, n2, nearestWhiteCentroid(mm.centsE9, w))
-      }.toDF("vec_id", "w", "n2", "bucket")
-      .write.mode("append").partitionBy("bucket").parquet(dir)
-  }
-
-  /** Serve a query batch over the stored whitened layout: queries
-    * whiten + probe map-side, the scan reads ONLY the probed bucket
-    * directories, scoring is [[annIvfWhite]]'s exact integer chain.
-    * Serving contract mirrors [[annIvfServeBatch]]: query ids are an
-    * independent id space (excludeSelf opt-in), tombstones
-    * subtracted. `queries` must have (query_id, embedding). */
-  def annIvfWhiteServeBatch(s: SparkSession, dir: String, m: WhitenModel,
-                            queries: DataFrame, k: Int = 5,
-                            nprobe: Int = WhiteNprobe,
-                            excludeSelf: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(m)
-    val probes = queries.select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val mm = bc.value
-        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
-        topWhiteCentroids(mm.centsE9, w, nprobe).iterator
-          .map(b => (id, b, w, n2))
-      }.toDF("query_id", "bucket", "qw", "qn2")
-    val probedBuckets = probes.select("bucket").distinct()
-      .as[Int].collect().sorted // bounded by nlist — driver-safe
-    val corpus = minusTombstones(s, dir, s.read.parquet(dir)
-      .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)))
-      .select(col("vec_id").as("neighbor_id"), col("w"),
-        col("n2").as("xn2"), col("bucket"))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val cand = if (excludeSelf) cand0.filter(col("neighbor_id") =!= col("query_id"))
-               else cand0
-    whiteTopK(cand, k)
-  }
-
-  /** Monitoring snapshot of the whitened serving layout — the
-    * staleness signal the whitened tier lacked (IVF and IVF-PQ have
-    * had drift monitors + retrain loops since r11/r12; this tier's
-    * basis was trained once with nothing alerting when embedding
-    * drift degrades it): corpus size, bucket-occupancy skew (the IVF
-    * signal), and the MAX per-component variance of the stored
-    * whitened coordinates. Whitening scales every component to unit
-    * variance AT TRAINING TIME (the scree is exact), so a healthy
-    * layout sits at maxCompVar ≈ 1; arrivals whose geometry outgrew
-    * the basis inflate the affected components' variance — the
-    * whitening-specific drift axis, computable from the CODES alone
-    * (no raw-embedding scan). Two bounded passes: the bucket-count
-    * aggregate and a shuffle-free mapPartitions moment scan. */
-  case class WhiteLayoutStats(nVectors: Long, nBuckets: Int,
-                              occSkew: Double, maxCompVar: Double)
-
-  def whiteLayoutStats(s: SparkSession, dir: String,
-                       nlist: Int = IvfNlist): WhiteLayoutStats = {
-    import s.implicits._
-    val occ = s.read.parquet(dir).groupBy(col("bucket")).count().collect()
-    if (occ.isEmpty) return WhiteLayoutStats(0L, 0, 0.0, 0.0) // drained
-    val n = occ.map(_.getAs[Long]("count")).sum
-    val maxOcc = occ.map(_.getAs[Long]("count")).max.toDouble
-    val partials = s.read.parquet(dir).select(col("w"))
+    val partials = live.select(col("w"))
       .as[Array[Long]]
       .mapPartitions { it =>
         var cnt = 0L
@@ -4305,47 +3975,41 @@ object Similarity {
       }.collect()
     val dim = partials.head._2.length
     val tot = partials.map(_._1).sum.toDouble
-    val maxVar = (0 until dim).map { j =>
+    (0 until dim).map { j =>
       val sm = partials.map(_._2(j)).sum
       val s2 = partials.map(_._3(j)).sum
       s2 / tot - (sm / tot) * (sm / tot)
     }.max
-    WhiteLayoutStats(n, occ.length, maxOcc / (n.toDouble / nlist), maxVar)
   }
 
-  /** The whitened tier's retrain decision — drift RELATIVE to the
-    * write-time snapshot (the [[ivfDrifted]] discipline): occupancy
-    * skew past `skewTol`× the baseline, or the max whitened-component
-    * variance past `varTol`× (a basis that still whitens holds every
-    * component near 1; a drift wave inflates its components ∝ the
-    * squared scale factor, so the signal is loud). */
-  def whiteDrifted(current: WhiteLayoutStats, baseline: WhiteLayoutStats,
-                   skewTol: Double = 1.5, varTol: Double = 1.5): Boolean =
-    current.occSkew > baseline.occSkew * skewTol ||
-      current.maxCompVar > baseline.maxCompVar * varTol
-
-  /** Retrain-and-migrate for the whitened layout: re-derive the PCA
-    * basis, whitening scales AND whitened-space quantizer from a
-    * bounded sample of the layout's CURRENT live rows (full precision
-    * from `emb` — the codes store only 1e-6-grid integers), re-code
-    * every stored vector, and swap the rewritten layout in under the
-    * same path (the [[retrainIvfPartitioned]] rename discipline, one
-    * `.old` grace generation). Tombstones fold: training and the
-    * rewrite read live rows only. Returns the new [[WhitenModel]] —
-    * serving must switch to it atomically with the layout (basis,
-    * scales and centroids jointly define the geometry). */
-  def retrainIvfWhitePartitioned(s: SparkSession, dir: String,
-                                 emb: DataFrame,
-                                 nlist: Int = IvfNlist): WhitenModel = {
+  /** Serve a query batch over the stored whitened layout: queries
+    * whiten + probe map-side, the probed-bucket scan reads ONLY the
+    * probed bucket directories, scoring is [[annIvfWhite]]'s exact
+    * integer chain. Serving contract mirrors [[annIvfServeBatch]]:
+    * query ids are an independent id space (excludeSelf opt-in),
+    * tombstones subtracted. `queries` must have (query_id,
+    * embedding). */
+  def annIvfWhiteServeBatch(s: SparkSession, dir: String, m: WhitenModel,
+                            queries: DataFrame, k: Int = 5,
+                            nprobe: Int = WhiteNprobe,
+                            excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val full = emb.select(col("vec_id"), col("embedding"))
-      .join(minusTombstones(s, dir,
-        s.read.parquet(dir).select(col("vec_id"))), Seq("vec_id"))
-    val sample = full.orderBy("vec_id").limit(2048)
-      .select("embedding").as[Array[Float]].collect()
-    val m = whitenModelOfSample(sample, nlist)
-    swapInRetrained(s, dir)(writeIvfWhitePartitionedOn(full, m, _))
-    m
+    val bc = s.sparkContext.broadcast(m)
+    val probes = queries.select(col("query_id"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .flatMap { case (id, v) =>
+        val mm = bc.value
+        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
+        topWhiteCentroids(mm.centsE9, w, nprobe).iterator
+          .map(b => (id, b, w, n2))
+      }.toDF("query_id", "bucket", "qw", "qn2")
+    val corpus = probedScan(s, dir, probedBucketsOf(probes))
+      .select(col("vec_id").as("neighbor_id"), col("w"),
+        col("n2").as("xn2"), col("bucket"))
+    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
+    val cand = if (excludeSelf) cand0.filter(col("neighbor_id") =!= col("query_id"))
+               else cand0
+    whiteTopK(cand, k)
   }
 
   /** Whitened brute force — the ground truth [[annIvfWhite]]'s recall

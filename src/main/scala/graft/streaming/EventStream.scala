@@ -959,160 +959,40 @@ object EventStream {
       }
   }
 
-  // ---- streaming semantic search (stream-static IVF probe) ---------------
+  // ---- streaming serving over stored artifacts --------------------------
 
   case class QueryVec(query_id: Long, embedding: Array[Float])
 
-  /** Streaming semantic search with exact per-query top-k: arriving
-    * query vectors probe a STANDING bucket-partitioned IVF corpus
-    * ([[graft.operators.Similarity.writeIvfPartitioned]]'s layout) —
-    * the serving half of the ANN family
-    * ([[graft.operators.Similarity.annIvf]] is the batch form).
+  /** Serve a stream against any stored artifact: each micro-batch of
+    * `queries` runs `serve` as an ordinary BATCH plan inside
+    * `foreachBatch` and hands the result to `writeBatch`. Every
+    * `*ServeBatch` of the engine (IVF layouts, the kNN graph, the
+    * classifiers, the recommenders, the inverted indexes) is a
+    * stream serve this way, e.g.
+    * `serveEachBatch(qs)(b => Similarity.annIvfServeBatch(b.sparkSession,
+    * dir, cents, b.toDF("query_id", "embedding")))(sink)`.
     *
-    * The probe join runs INSIDE `foreachBatch` (as a batch plan), not
-    * as a stream-static join: the batch's probed bucket set (bounded
-    * by nlist) is collected and the corpus is read with a pushed-down
-    * `bucket IN (...)` — the scan touches only the probed partition
-    * directories, so per-batch cost tracks nprobe×queries, NOT corpus
-    * size ([[graft.operators.Similarity.annIvfServeBatch]] is the
-    * shared body; a stream-static join cannot be pruned this way
-    * because DPP does not run in streaming plans). Completely
-    * STATE-FREE: a query's candidate set is complete within its
-    * arrival micro-batch, so the per-batch bounded top-k
-    * ([[graft.operators.Similarity]]'s TopK aggregator) IS the global
-    * answer for that query — no watermark, no group state.
+    * Why a batch plan per micro-batch and not a stream-static join:
+    * the serve collects the batch's probed buckets (or terms, or
+    * context items) and reads the artifact with a pushed-down
+    * `IN (...)`, so per-batch cost tracks the probes, never the
+    * artifact's size — DPP does not run in streaming plans, so a
+    * stream-static join cannot be pruned this way.
     *
-    * `query_id` and corpus `vec_id` are UNRELATED id spaces;
-    * self-exclusion is opt-in (`excludeSelf`) for benchmark runs that
-    * replay corpus vectors as queries. Parity with the batch
-    * [[graft.operators.Similarity.annIvf]] on a two-batch split is
-    * spec'd in StreamingSpec. */
-  def streamingAnnIvfTopK(queries: Dataset[QueryVec], ivfDir: String,
-                          cents: Array[Array[Double]], k: Int = 5,
-                          nprobe: Int = graft.operators.Similarity.IvfNprobe,
-                          excludeSelf: Boolean = false)(
-                          writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+    * Why it is correct: the serve is STATE-FREE and BATCH-COMPLETE. A
+    * request's whole candidate set is read from the standing artifact
+    * within its arrival micro-batch, so the per-batch answer (a
+    * bounded top-k, a vote, a fused list) IS the global answer for
+    * that request — no watermark, no group state, and any split of
+    * the stream into batches gives the one-shot serve's rows
+    * (StreamingSpec and SearchSpec check two-batch splits). The
+    * artifact is the state, maintained out of band. Request ids are
+    * an independent id space from artifact ids, so serves default to
+    * keeping self-matches. */
+  def serveEachBatch[T](queries: Dataset[T])(serve: Dataset[T] => DataFrame)(
+      writeBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfServeBatch(
-          s, ivfDir, cents, batch.toDF("query_id", "embedding"),
-          k, nprobe, excludeSelf))
-      }
-      .start()
-
-  /** [[streamingAnnIvfTopK]]'s GRAPH-NAVIGATION twin: each
-    * micro-batch beam-walks the stored kNN-graph artifact
-    * ([[graft.operators.Similarity.writeKnnGraph]]) instead of
-    * probing quantizer buckets — the NSW/HNSW serving shape,
-    * state-free per batch (entries/edges/vectors all come from the
-    * artifact; the walk is O(beam·deg·depth) scores per query).
-    * Same independent-id-space default as every serving twin. */
-  def streamingGraphWalkTopK(queries: Dataset[QueryVec], graphDir: String,
-                             k: Int = 5,
-                             beam: Int = graft.operators.Similarity.GraphWalkBeam,
-                             depth: Int = graft.operators.Similarity.GraphWalkDepth,
-                             excludeSelf: Boolean = false)(
-                             writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annGraphWalkServeBatch(
-          s, graphDir, batch.toDF("query_id", "embedding"),
-          k, beam, depth, excludeSelf))
-      }
-      .start()
-
-  /** [[streamingAnnIvfTopK]] over the composed IVF×SQ8 stored-code
-    * layout ([[graft.operators.Similarity.writeIvfSq8Partitioned]]) —
-    * the full production serving stack: state-free micro-batch probe,
-    * partition-pruned scan, 1-byte/dim storage dequantized per row,
-    * asymmetric rerank. Same per-batch-complete top-k argument, same
-    * independent-id-space default. */
-  def streamingAnnIvfSq8TopK(queries: Dataset[QueryVec], ivfSq8Dir: String,
-                             cents: Array[Array[Double]],
-                             mns: Array[Double], mxs: Array[Double],
-                             k: Int = 5,
-                             nprobe: Int = graft.operators.Similarity.IvfNprobe,
-                             excludeSelf: Boolean = false)(
-                             writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfSq8ServeBatch(
-          s, ivfSq8Dir, cents, mns, mxs, batch.toDF("query_id", "embedding"),
-          k, nprobe, excludeSelf))
-      }
-      .start()
-
-  /** Streaming semantic search over the stored WHITENED layout
-    * ([[graft.operators.Similarity.writeIvfWhitePartitioned]]) — the
-    * state-free pruned-serving shape over exact-integer whitened
-    * codes: queries whiten + probe map-side under the shipped
-    * [[graft.operators.Similarity.WhitenModel]], the scan reads only
-    * the probed bucket directories, scoring is the all-integer
-    * cos_e6 chain. Two-batch parity with the batch annIvfWhite is
-    * spec'd; on drift ([[graft.operators.Similarity.whiteDrifted]])
-    * the serving node swaps model + layout together
-    * (retrainIvfWhitePartitioned's contract). */
-  def streamingAnnIvfWhiteTopK(queries: Dataset[QueryVec],
-                               whiteDir: String,
-                               m: graft.operators.Similarity.WhitenModel,
-                               k: Int = 5,
-                               nprobe: Int =
-                                 graft.operators.Similarity.WhiteNprobe,
-                               excludeSelf: Boolean = false)(
-                               writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfWhiteServeBatch(
-          s, whiteDir, m, batch.toDF("query_id", "embedding"),
-          k, nprobe, excludeSelf))
-      }
-      .start()
-
-  /** Streaming classification over the stored NB model
-    * ([[graft.functions.Classify.writeNbModel]]) — the gate-at-ingest
-    * shape: each arriving micro-batch of documents is scored against
-    * the standing model artifact and routed by predicted class.
-    * State-free (the model is the state, maintained out-of-band by
-    * append/forget); per-doc answers are batch-independent, so
-    * two-batch parity with the batch
-    * [[graft.functions.Classify.classifyNbServeBatch]] is exact
-    * (spec'd in StreamingSpec). */
-  def streamingClassifyNb(docs: Dataset[DocText], nbDir: String)(
-      writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[DocText], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.functions.Classify.classifyNbServeBatch(
-          s, nbDir, batch.toDF("doc_id", "text")))
-      }
-      .start()
-
-  /** Streaming quality gate over the stored DISTILLED quality model
-    * ([[graft.functions.Classify.writeQualityModel]]) — the CCNet
-    * loop's production shape: the LM + tertile chain trained the
-    * artifact once; every arriving micro-batch gates on one
-    * token-count join against it. State-free; per-doc answers are
-    * batch-independent, so two-batch parity with the batch
-    * [[graft.functions.Classify.qualityNbServeBatch]] is exact
-    * (spec'd in StreamingSpec). */
-  def streamingQualityNb(docs: Dataset[DocText], qualityDir: String)(
-      writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[DocText], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.functions.Classify.qualityNbServeBatch(
-          s, qualityDir, batch.toDF("doc_id", "text")))
-      }
+      .foreachBatch { (batch: Dataset[T], _: Long) => writeBatch(serve(batch)) }
       .start()
 
   /** One recommendation request: a user id with their interaction
@@ -1225,217 +1105,49 @@ object EventStream {
   }
 
   /** Streaming per-user recommendations over the stored CF model
-    * ([[graft.operators.Recommend.writeCfModel]]) — the
-    * recommendation engine's production serve: each arriving request
-    * carries ITS OWN history snapshot (one row per request, the
-    * serving-request contract — a user's history is request state,
-    * not stream state), explodes to (user, item) votes and joins the
-    * catalog²-bounded model. State-free; per-REQUEST answers are
-    * batch-independent, so two-batch parity with the batch
-    * [[graft.operators.Recommend.recommendForUsers]] is exact
-    * (spec'd in StreamingSpec). */
+    * ([[graft.operators.Recommend.writeCfModel]]): each arriving
+    * request carries ITS OWN history snapshot (one row per request —
+    * a user's history is request state, not stream state), explodes to
+    * (user, item) votes and joins the catalog²-bounded model, per
+    * micro-batch through [[serveEachBatch]]. Two-batch parity with the
+    * batch [[graft.operators.Recommend.recommendForUsers]] is spec'd
+    * in StreamingSpec. */
   def streamingRecommend(reqs: Dataset[RecRequest], cfDir: String,
                          n: Int = 5)(writeBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    reqs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[RecRequest], _: Long) =>
-        val s = batch.sparkSession
-        val history = batch.toDF("user_id", "items")
-          .select(col("user_id"), explode(col("items")).as("item"))
-        writeBatch(graft.operators.Recommend
-          .recommendForUsers(s, cfDir, history, n))
-      }
-      .start()
+    serveEachBatch(reqs) { batch =>
+      graft.operators.Recommend.recommendForUsers(batch.sparkSession, cfDir,
+        batch.toDF("user_id", "items")
+          .select(col("user_id"), explode(col("items")).as("item")), n)
+    }(writeBatch)
 
   /** One next-item request: the user's current context item. */
   case class NextRequest(user_id: Long, item: Long)
-
-  /** Streaming NEXT-ITEM serving over the stored Markov transition
-    * model ([[graft.operators.Recommend.writeMarkovModel]]) — the
-    * session-based recommender's production serve: each arriving
-    * request carries its context item, the micro-batch prunes the
-    * model to its context items and ranks. State-free; per-request
-    * answers are batch-independent, so two-batch parity with the
-    * batch [[graft.operators.Recommend.markovNextServeBatch]] is
-    * exact (spec'd in StreamingSpec). */
-  def streamingMarkovNext(reqs: Dataset[NextRequest], markovDir: String,
-                          k: Int = 5)(writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    reqs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[NextRequest], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Recommend.markovNextServeBatch(
-          s, markovDir, batch.toDF("user_id", "item"), k))
-      }
-      .start()
 
   /** One hybrid recommendation request: the user's interaction
     * history snapshot plus their current context item. */
   case class HybridRequest(user_id: Long, items: Seq[Long], ctx: Long)
 
-  /** Streaming HYBRID serving over BOTH stored recommender models —
-    * the fused production serve: each arriving request explodes its
-    * history for the pruned CF vote list and carries its context
-    * item for the pruned Markov list; the micro-batch fuses the two
-    * via [[graft.operators.Recommend.recommendHybridServeBatch]].
-    * State-free; per-request answers are batch-independent, so
-    * two-batch parity with the batch serve is exact (spec'd in
-    * StreamingSpec). */
+  /** Streaming HYBRID serving over BOTH stored recommender models:
+    * each arriving request explodes its history for the pruned CF
+    * vote list and carries its context item for the pruned Markov
+    * list; each micro-batch fuses the two via
+    * [[graft.operators.Recommend.recommendHybridServeBatch]] through
+    * [[serveEachBatch]]. Two-batch parity with the batch serve is
+    * spec'd in StreamingSpec. */
   def streamingHybridRecommend(reqs: Dataset[HybridRequest], cfDir: String,
                                mkDir: String, k: Int = 5, depth: Int = 10)(
       writeBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    reqs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[HybridRequest], _: Long) =>
-        val s = batch.sparkSession
-        val history = batch.toDF("user_id", "items", "ctx")
-          .select(col("user_id"), explode(col("items")).as("item"))
-        val ctx = batch.toDF("user_id", "items", "ctx")
-          .select(col("user_id"), col("ctx").as("item"))
-        writeBatch(graft.operators.Recommend.recommendHybridServeBatch(
-          s, cfDir, mkDir, history, ctx, k, depth))
-      }
-      .start()
-
-  /** Streaming Rocchio classification over the stored centroid model
-    * ([[graft.functions.Classify.writeCentroidModel]]) — the
-    * embedding-modality twin of [[streamingClassifyNb]]: each
-    * arriving micro-batch of vectors is routed by its nearest class
-    * centroid. State-free (the artifact is the state, maintained
-    * out-of-band by the exact append/forget sum algebra); per-vector
-    * answers are batch-independent, so two-batch parity with the
-    * batch [[graft.functions.Classify.classifyCentroidServeBatch]]
-    * is exact (spec'd in StreamingSpec). */
-  def streamingClassifyCentroid(vecs: Dataset[QueryVec], centDir: String)(
-      writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.functions.Classify.classifyCentroidServeBatch(
-          s, centDir, batch.toDF("vec_id", "embedding")))
-      }
-      .start()
-
-  /** Streaming k-NN classification over the stored LABELED layout
-    * ([[graft.functions.Classify.writeIvfLabeled]]) — the
-    * non-parametric twin: per micro-batch, the probed bucket set
-    * prunes the layout scan, exact-integer cos_e6 candidates, k-NN
-    * majority vote. State-free; per-query answers are
-    * batch-independent, so two-batch parity with the batch
-    * [[graft.functions.Classify.classifyKnnServeBatch]] is exact
-    * (spec'd in StreamingSpec). */
-  def streamingClassifyKnn(vecs: Dataset[QueryVec], layoutDir: String,
-                           cents: Array[Array[Double]], k: Int = 5,
-                           nprobe: Int = graft.functions.Classify.ClsNprobe)(
-                           writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.functions.Classify.classifyKnnServeBatch(
-          s, layoutDir, cents, batch.toDF("query_id", "embedding"),
-          k, nprobe))
-      }
-      .start()
-
-  /** Streaming semantic search over the stored IVF-PQ layout
-    * ([[graft.operators.Similarity.writeIvfPqPartitioned]]) — the
-    * same state-free pruned-serving shape as
-    * [[streamingAnnIvfSq8TopK]], over 4-byte/vector residual codes:
-    * per micro-batch, probed buckets prune the code-table partitions,
-    * exact-integer base+ADC shortlists, and the bounded shortlist
-    * reranks against the full-precision corpus. Two-batch parity with
-    * the batch [[graft.operators.Similarity.annIvfPq]] is spec'd. */
-  def streamingAnnIvfPqTopK(queries: Dataset[QueryVec], ivfPqDir: String,
-                            cents: Array[Array[Double]],
-                            books: Array[Array[Array[Double]]],
-                            fullEmb: DataFrame, k: Int = 5,
-                            nprobe: Int = graft.operators.Similarity.IvfNprobe,
-                            cand: Int = graft.operators.Similarity.PqCand,
-                            excludeSelf: Boolean = false)(
-                            writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfPqServeBatch(
-          s, ivfPqDir, cents, books, batch.toDF("query_id", "embedding"),
-          fullEmb, k, nprobe, cand, excludeSelf))
-      }
-      .start()
-
-  /** Streaming Matryoshka serving (NEW r12): the
-    * [[streamingAnnIvfTopK]] shape over the prefix-shortlist
-    * composition — per micro-batch, probed buckets prune the layout
-    * scan, prefix-cosine shortlist, full-dim rerank against the same
-    * pruned rows ([[graft.operators.Similarity.annIvfPrefixServeBatch]]
-    * is the shared body). Two-batch parity with the batch
-    * [[graft.operators.Similarity.annIvfPrefix]] spec'd. */
-  def streamingAnnIvfPrefixTopK(queries: Dataset[QueryVec], ivfDir: String,
-                                cents: Array[Array[Double]], k: Int = 5,
-                                nprobe: Int = graft.operators.Similarity.IvfNprobe,
-                                excludeSelf: Boolean = false)(
-                                writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVec], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfPrefixServeBatch(
-          s, ivfDir, cents, batch.toDF("query_id", "embedding"),
-          k, nprobe, excludeSelf = excludeSelf))
-      }
-      .start()
+    serveEachBatch(reqs) { batch =>
+      val b = batch.toDF("user_id", "items", "ctx")
+      graft.operators.Recommend.recommendHybridServeBatch(batch.sparkSession,
+        cfDir, mkDir, b.select(col("user_id"), explode(col("items")).as("item")),
+        b.select(col("user_id"), col("ctx").as("item")), k, depth)
+    }(writeBatch)
 
   case class QueryVecLabeled(query_id: Long, embedding: Array[Float],
                              label: Int)
-
-  /** Streaming hard-negative mining off the stored LABELED layout
-    * ([[graft.functions.Classify.writeIvfLabeled]]) — the contrastive
-    * trainer's feed: arriving anchors carry their label; per
-    * micro-batch the probed bucket set prunes the scan, the
-    * cross-label filter applies inside the candidate join, top-k by
-    * (cos_e6 desc, id) per anchor. State-free; two-batch parity with
-    * the batch [[graft.functions.Classify.mineHardNegativesServeBatch]]
-    * is exact (spec'd in StreamingSpec). */
-  def streamingMineHardNegatives(vecs: Dataset[QueryVecLabeled],
-                                 layoutDir: String,
-                                 cents: Array[Array[Double]], k: Int = 5,
-                                 nprobe: Int = graft.functions.Classify.ClsNprobe)(
-                                 writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVecLabeled], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.functions.Classify.mineHardNegativesServeBatch(
-          s, layoutDir, cents,
-          batch.toDF("query_id", "embedding", "label"), k, nprobe))
-      }
-      .start()
-
-  /** Streaming FILTERED vector search (NEW r12): arriving queries
-    * carry their predicate value; per micro-batch, probed buckets AND
-    * the batch's label set prune/push into the attribute-carrying
-    * layout scan, the equality predicate applies inside the bucket
-    * join ([[graft.operators.Similarity.annIvfFilteredServeBatch]]).
-    * Two-batch parity with the batch
-    * [[graft.operators.Similarity.annIvfFiltered]] spec'd. */
-  def streamingAnnIvfFilteredTopK(queries: Dataset[QueryVecLabeled],
-                                  dir: String, cents: Array[Array[Double]],
-                                  k: Int = 5,
-                                  nprobe: Int =
-                                    graft.operators.Similarity.FilteredNprobe,
-                                  excludeSelf: Boolean = false)(
-                                  writeBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryVecLabeled], _: Long) =>
-        val s = batch.sparkSession
-        writeBatch(graft.operators.Similarity.annIvfFilteredServeBatch(
-          s, dir, cents, batch.toDF("query_id", "embedding", "label"),
-          k, nprobe, excludeSelf))
-      }
-      .start()
 
   // ---- streaming lexical search (pruned inverted-index probe) ------------
 
@@ -1443,48 +1155,36 @@ object EventStream {
 
   /** Streaming lexical search: arriving term queries probe a STANDING
     * inverted index ([[graft.operators.Search.writeInvertedIndexBucketed]]'s
-    * layout) — the lexical twin of [[streamingAnnIvfTopK]], built the
-    * same way: the probe runs INSIDE `foreachBatch` as a batch plan,
-    * the batch's distinct terms prune the postings scan via a
-    * pushed-down `token IN (...)`, so per-batch cost tracks the probed
-    * posting lists, never the corpus. STATE-FREE for the same reason
-    * (a query's candidates are complete within its batch — BM25 stats
-    * live in the index, not in stream state). Parity with the batch
-    * [[graft.operators.Search.bm25TopK]] on a two-batch split is
-    * spec'd in SearchSpec. */
+    * layout) through [[serveEachBatch]]: each micro-batch's distinct
+    * terms prune the postings scan via a pushed-down `token IN (...)`,
+    * so per-batch cost tracks the probed posting lists, never the
+    * corpus (BM25 stats live in the index, not in stream state).
+    * Parity with the batch [[graft.operators.Search.bm25TopK]] on a
+    * two-batch split is spec'd in SearchSpec. */
   def streamingBm25TopK(queries: Dataset[QueryTerms], indexDir: String,
                         k: Int = graft.operators.Search.DefaultK)(
                         writeBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryTerms], _: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        val flat = batch.flatMap(q => q.terms.map(q.query_id -> _))
-          .toDF("query_id", "term")
-        writeBatch(graft.operators.Search.bm25ServeBatch(s, indexDir, flat, k))
-      }
-      .start()
+    serveEachBatch(queries) { batch =>
+      val s = batch.sparkSession
+      import s.implicits._
+      graft.operators.Search.bm25ServeBatch(s, indexDir,
+        batch.flatMap(q => q.terms.map(q.query_id -> _)).toDF("query_id", "term"), k)
+    }(writeBatch)
 
   /** Streaming phrase serving over the positional layout — the
     * [[streamingBm25TopK]] twin: each micro-batch of (query_id,
     * phrase terms) probes ONLY its terms' bucket directories via
-    * [[graft.operators.Search.phraseServeBatch]] (a batch plan inside
-    * foreachBatch — stream-static joins cannot partition-prune, the
-    * annIvfServeBatch posture). The query batch is driver-collected
-    * (bounded by the arriving batch, the phrase-set contract).
-    * Two-batch parity with the batch serve is spec'd. */
+    * [[graft.operators.Search.phraseServeBatch]]. The query batch is
+    * driver-collected (bounded by the arriving batch, the phrase-set
+    * contract). Two-batch parity with the batch serve is spec'd. */
   def streamingPhraseSearch(queries: Dataset[QueryTerms], posDir: String)(
                             writeBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryTerms], _: Long) =>
-        val s = batch.sparkSession
-        val phrases = batch.collect()
-          .map(q => q.query_id -> q.terms.toSeq).toSeq
-        writeBatch(graft.operators.Search.phraseServeBatch(s, posDir, phrases))
-      }
-      .start()
+    serveEachBatch(queries) { batch =>
+      graft.operators.Search.phraseServeBatch(batch.sparkSession, posDir,
+        batch.collect().map(q => q.query_id -> q.terms.toSeq).toSeq)
+    }(writeBatch)
 
   /** Streaming SCD-2 sink: maintain a type-2 dimension history as a
     * parquet snapshot updated per micro-batch via
@@ -1651,9 +1351,8 @@ object EventStream {
   /** Streaming HYBRID search: each arriving query carries a term set
     * and an embedding; per micro-batch the bucket-pruned lexical probe
     * and the bucket-pruned IVF probe both run as batch plans and fuse
-    * via RRF ([[graft.operators.Search.hybridServeBatch]]) — the
-    * serving stack a retrieval pipeline actually runs, inheriting
-    * both pruning stories and staying state-free. */
+    * via RRF ([[graft.operators.Search.hybridServeBatch]]) through
+    * [[serveEachBatch]]. */
   def streamingHybridTopK(queries: Dataset[QueryHybrid], invDir: String,
                           ivfDir: String, cents: Array[Array[Double]],
                           k: Int = graft.operators.Search.DefaultK,
@@ -1662,19 +1361,15 @@ object EventStream {
                           weights: Seq[Double] = Nil)(
                           writeBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[QueryHybrid], _: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        val b = batch.localCheckpoint() // two probes, one materialization
-        val terms = b.flatMap(q => q.terms.map(q.query_id -> _))
-          .toDF("query_id", "term")
-        val vecs = b.map(q => (q.query_id, q.embedding))
-          .toDF("query_id", "embedding")
-        writeBatch(graft.operators.Search.hybridServeBatch(
-          s, invDir, ivfDir, cents, terms, vecs, k, depth, nprobe, weights))
-      }
-      .start()
+    serveEachBatch(queries) { batch =>
+      val s = batch.sparkSession
+      import s.implicits._
+      val b = batch.localCheckpoint() // two probes, one materialization
+      graft.operators.Search.hybridServeBatch(s, invDir, ivfDir, cents,
+        b.flatMap(q => q.terms.map(q.query_id -> _)).toDF("query_id", "term"),
+        b.map(q => (q.query_id, q.embedding)).toDF("query_id", "embedding"),
+        k, depth, nprobe, weights)
+    }(writeBatch)
 
   /** Run the tumbling aggregation as a real streaming query into an
     * in-memory sink and return the sink contents (used by specs and

@@ -319,19 +319,19 @@ class ClassifySpec extends SparkSpec {
   test("classify_knn serving: exhaustive == in-query; pruned agreement; tombstones subtract") {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, sf)
-    val cents = Similarity.ivfCentroids(spark, sf)
+    val codec = Similarity.LabeledCodec(Similarity.ivfCentroids(spark, sf))
     val train = emb.filter(col("vec_id") % 5 =!= 0)
     val queries = emb.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("knn-serve").toString + "/layout"
-    Classify.writeIvfLabeled(train, cents, dir)
+    Similarity.writeLayout(codec, train, dir)
     // exhaustive probing meets every (train, query) pair exactly once
     // in the bucket equi-join — bit-identical to the in-query form
-    val exhaustive = Classify.classifyKnnServeBatch(spark, dir, cents,
-      queries, nprobe = cents.length).collect().toSeq
+    val exhaustive = Classify.classifyKnnServeBatch(spark, dir, codec,
+      queries, nprobe = codec.nlist).collect().toSeq
     assert(exhaustive === Classify.classifyKnn(spark, sf).collect().toSeq)
     // pruned default: vote agreement vs exhaustive (recall channel)
-    val pruned = Classify.classifyKnnServeBatch(spark, dir, cents, queries)
+    val pruned = Classify.classifyKnnServeBatch(spark, dir, codec, queries)
       .collect()
     val exMap = exhaustive.map(r => r.getLong(0) -> r.getInt(1)).toMap
     val agree = pruned.count(r => exMap(r.getLong(0)) == r.getInt(1))
@@ -340,9 +340,9 @@ class ClassifySpec extends SparkSpec {
     assert(agree >= 0.8, s"classify_knn serve agreement = $agree")
     // append == one-shot layout (vote-identical at any nprobe)
     val dir2 = java.nio.file.Files.createTempDirectory("knn-app").toString + "/layout"
-    Classify.writeIvfLabeled(train.filter(col("vec_id") < 300), cents, dir2)
-    Classify.appendIvfLabeled(train.filter(col("vec_id") >= 300), cents, dir2)
-    assert(Classify.classifyKnnServeBatch(spark, dir2, cents, queries)
+    Similarity.writeLayout(codec, train.filter(col("vec_id") < 300), dir2)
+    Similarity.appendLayout(codec, train.filter(col("vec_id") >= 300), dir2)
+    assert(Classify.classifyKnnServeBatch(spark, dir2, codec, queries)
       .collect().toSeq === pruned.toSeq)
     // the generic tombstone verb applies by layout convention: serving
     // after deleteFromLayout == serving a fresh layout of the survivors
@@ -351,29 +351,29 @@ class ClassifySpec extends SparkSpec {
       .select(col("vec_id")).as[Long].collect()
     Similarity.deleteFromLayout(spark, dir, victims.toSeq.toDF("vec_id"))
     val dir3 = java.nio.file.Files.createTempDirectory("knn-surv").toString + "/layout"
-    Classify.writeIvfLabeled(train.filter(col("vec_id") >= 100), cents, dir3)
-    assert(Classify.classifyKnnServeBatch(spark, dir, cents, queries)
+    Similarity.writeLayout(codec, train.filter(col("vec_id") >= 100), dir3)
+    assert(Classify.classifyKnnServeBatch(spark, dir, codec, queries)
         .collect().toSeq ===
-      Classify.classifyKnnServeBatch(spark, dir3, cents, queries)
+      Classify.classifyKnnServeBatch(spark, dir3, codec, queries)
         .collect().toSeq)
   }
 
   test("hard-negative serving: exhaustive == in-query; pruned overlap; labels cross") {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, sf)
-    val cents = Similarity.ivfCentroids(spark, sf)
+    val codec = Similarity.LabeledCodec(Similarity.ivfCentroids(spark, sf))
     val queries = emb.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("query_id"), col("label"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("hn-serve")
       .toString + "/layout"
     // the in-query miner's corpus is the WHOLE embeddings table
-    Classify.writeIvfLabeled(emb, cents, dir)
-    val exhaustive = Classify.mineHardNegativesServeBatch(spark, dir, cents,
-      queries, nprobe = cents.length).collect().toSeq
+    Similarity.writeLayout(codec, emb, dir)
+    val exhaustive = Classify.mineHardNegativesServeBatch(spark, dir, codec,
+      queries, nprobe = codec.nlist).collect().toSeq
     assert(exhaustive === Classify.mineHardNegatives(spark, sf)
       .collect().toSeq, "exhaustive serve == in-query miner")
     // pruned default: top-k overlap vs exhaustive per query
-    val pruned = Classify.mineHardNegativesServeBatch(spark, dir, cents,
+    val pruned = Classify.mineHardNegativesServeBatch(spark, dir, codec,
       queries).collect()
     val exSet = exhaustive.map(r => (r.getLong(0), r.getLong(2))).toSet
     val overlap = pruned.count(r =>

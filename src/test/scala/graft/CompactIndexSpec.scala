@@ -177,7 +177,7 @@ class CompactIndexSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf)
     val base = emb.filter(col("vec_id") % 4 =!= 0)
     val cents = Similarity.ivfCentroids(spark, sf)
-    Similarity.writeIvfPartitionedOn(base, cents, dir)
+    Similarity.writeLayout(Similarity.FloatCodec(cents), base, dir)
     (0 to 2).foreach(i => Similarity.appendIvfPartitioned(
       emb.filter(col("vec_id") % 4 === 0 && col("vec_id") % 3 === i),
       cents, dir))
@@ -200,18 +200,19 @@ class CompactIndexSpec extends SparkSpec {
     val appendDir = tmp("ivfpqappend")
     val oneShotDir = tmp("ivfpqoneshot")
     val emb = Tables.embeddings(spark, sf)
-    val cents = Similarity.ivfCentroids(spark, sf)
-    val books = Similarity.pqResidualCodebooks(spark, sf)
+    val pq = Similarity.PqCodec(Similarity.ivfCentroids(spark, sf),
+      Similarity.pqResidualCodebooks(spark, sf))
     // base layout + three daily append waves vs a one-shot layout of
     // the union, encoded under the SAME frozen artifacts
-    Similarity.writeIvfPqPartitionedOn(
-      emb.filter(col("vec_id") % 4 =!= 0), cents, books, appendDir)
-    (0 to 2).foreach(i => Similarity.appendIvfPqPartitioned(
+    Similarity.writeLayout(pq, emb.filter(col("vec_id") % 4 =!= 0), appendDir)
+    (0 to 2).foreach(i => Similarity.appendLayout(pq,
       emb.filter(col("vec_id") % 4 === 0 && col("vec_id") % 3 === i),
-      cents, books, appendDir))
-    Similarity.writeIvfPqPartitionedOn(emb, cents, books, oneShotDir)
-    def serve(dir: String) = Similarity.annIvfPqStored(spark, dir, cents,
-        books, emb.filter(col("vec_id") < 8), emb)
+      appendDir))
+    Similarity.writeLayout(pq, emb, oneShotDir)
+    def queries(f: org.apache.spark.sql.Column) = emb.filter(f)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    def serve(dir: String) = Similarity.annIvfPqServeBatch(spark, dir, pq,
+        queries(col("vec_id") < 8), emb, excludeSelf = true)
       .collect().map(_.toSeq)
     val appended = serve(appendDir)
     assert(appended.nonEmpty && appended.toSeq == serve(oneShotDir).toSeq,
@@ -224,19 +225,19 @@ class CompactIndexSpec extends SparkSpec {
     assert(rows(appendDir) == rows(oneShotDir))
     // compaction: fewer files, bucket partitioning kept, serve identical
     val before = parquetFiles(appendDir)
-    val rep = Similarity.compactIvfPqPartitioned(spark, appendDir)
+    val rep = Similarity.compactIvfPartitioned(spark, appendDir)
     assert(rep.filesOut < before)
     assert(new java.io.File(appendDir).listFiles
       .exists(f => f.isDirectory && f.getName.startsWith("bucket=")))
     assert(serve(appendDir).toSeq == appended.toSeq)
     // the loop keeps running: a post-compaction append still serves
-    Similarity.appendIvfPqPartitioned(
+    Similarity.appendLayout(pq,
       emb.filter(col("vec_id") === 1).withColumn("vec_id",
-        col("vec_id") + 9000L), cents, books, appendDir)
+        col("vec_id") + 9000L), appendDir)
     val embPlus = emb.unionByName(emb.filter(col("vec_id") === 1)
       .withColumn("vec_id", col("vec_id") + 9000L))
-    val postServe = Similarity.annIvfPqStored(spark, appendDir, cents, books,
-        emb.filter(col("vec_id") === 1), embPlus, k = 1)
+    val postServe = Similarity.annIvfPqServeBatch(spark, appendDir, pq,
+        queries(col("vec_id") === 1), embPlus, k = 1, excludeSelf = true)
       .collect()
     // vec 9001 is an exact replica of query vec 1 — it must be the top hit
     assert(postServe.map(r => r.getAs[Long]("neighbor_id")).toSet == Set(9001L))

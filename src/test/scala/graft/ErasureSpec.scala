@@ -213,8 +213,8 @@ class ErasureSpec extends SparkSpec {
   test("ANN layout and inverted/positional indexes: tombstones fold to zero references") {
     locally {
       val dir = tmp("er-ivf")
-      Similarity.writeIvfPartitionedOn(emb, Similarity.ivfCentroids(spark, sf),
-        dir)
+      Similarity.writeLayout(Similarity.FloatCodec(
+        Similarity.ivfCentroids(spark, sf)), emb, dir)
       Similarity.deleteFromLayout(spark, dir, victimsDf("vec_id"))
       Similarity.compactIvfPartitioned(spark, dir)
       assertClean("ivf_layout", dir, Seq("vec_id"))

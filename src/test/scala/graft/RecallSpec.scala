@@ -185,8 +185,9 @@ class RecallSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfdrift").toString + "/c"
     val emb = graft.Tables.embeddings(spark, sf01)
     val cents = Similarity.writeIvfPartitioned(spark, sf01, dir)
-    val baseline = Similarity.ivfLayoutStats(spark, dir, cents)
-    assert(!Similarity.ivfDrifted(baseline, baseline))
+    val codec = Similarity.FloatCodec(cents)
+    val baseline = Similarity.ivfLayoutStats(spark, dir, codec)
+    assert(!Similarity.ivfDrifted(baseline, baseline, codec))
     // a heavily skewed arrival wave: many near-copies of ONE vector
     // pile into one bucket (ids shifted out of the corpus id space)
     val hot = emb.filter(col("vec_id") === 0)
@@ -196,8 +197,8 @@ class RecallSpec extends SparkSpec {
       .crossJoin(spark.range(40).select(col("id").as("_r")))
       .withColumn("vec_id", col("vec_id") + col("_r")).drop("_r")
     Similarity.appendIvfPartitioned(wave, cents, dir)
-    val drifted = Similarity.ivfLayoutStats(spark, dir, cents)
-    assert(Similarity.ivfDrifted(drifted, baseline),
+    val drifted = Similarity.ivfLayoutStats(spark, dir, codec)
+    assert(Similarity.ivfDrifted(drifted, baseline, codec),
       s"skewed wave not flagged: $baseline -> $drifted")
     // retrain-and-migrate: same vectors, re-trained geometry, path
     // stable — exhaustive-probe serving is EXACT before and after
@@ -205,12 +206,13 @@ class RecallSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("embedding"))
     val before = Similarity.annIvfServeBatch(spark, dir, cents, queries,
         nprobe = cents.length).collect().map(_.toSeq)
-    val cents2 = Similarity.retrainIvfPartitioned(spark, dir)
+    val cents2 = Similarity.retrainLayout(spark, dir, codec).cents
     val after = Similarity.annIvfServeBatch(spark, dir, cents2, queries,
         nprobe = cents2.length).collect().map(_.toSeq)
     assert(after.nonEmpty && after.toSeq == before.toSeq)
     // and the retrained geometry absorbs the wave (skew back in range)
-    val restored = Similarity.ivfLayoutStats(spark, dir, cents2)
+    val restored = Similarity.ivfLayoutStats(spark, dir,
+      Similarity.FloatCodec(cents2))
     assert(restored.occSkew < drifted.occSkew,
       s"retrain did not reduce skew: $drifted -> $restored")
   }
@@ -219,12 +221,14 @@ class RecallSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("ivfpqdrift").toString + "/c"
     val emb = graft.Tables.embeddings(spark, sf01)
-    val (cents, books) = Similarity.writeIvfPqPartitioned(spark, sf01, dir)
-    // sampleN covers corpus+wave so the error sample sees every row
-    val baseline = Similarity.ivfPqLayoutStats(spark, dir, cents, books,
-      emb, sampleN = 5000)
-    assert(!Similarity.ivfPqDrifted(baseline, baseline))
-    assert(baseline.meanQuantErr > 0, "residual PQ is lossy by construction")
+    val pq = Similarity.writeLayout(Similarity.PqCodec(
+      Similarity.ivfCentroids(spark, sf01),
+      Similarity.pqResidualCodebooks(spark, sf01)), emb, dir)
+    // the PqSampleN error sample covers corpus+wave: it sees every row
+    assert(Similarity.PqSampleN >= 500 + 240)
+    val baseline = Similarity.ivfLayoutStats(spark, dir, pq, Some(emb))
+    assert(!Similarity.ivfDrifted(baseline, baseline, pq))
+    assert(baseline.drift > 0, "residual PQ is lossy by construction")
     // OUT-OF-GEOMETRY skewed wave: 240 copies of ONE vector scaled ×3 —
     // assignment is scale-invariant so they pile into one bucket
     // (occupancy skews), and their residuals outgrow the codebooks
@@ -237,33 +241,31 @@ class RecallSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + col("_r")).drop("_r")
       .withColumn("embedding",
         transform(col("embedding"), x => (x * lit(3.0)).cast("float")))
-    Similarity.appendIvfPqPartitioned(wave, cents, books, dir)
+    Similarity.appendLayout(pq, wave, dir)
     val embPlus = emb.unionByName(wave)
-    val drifted = Similarity.ivfPqLayoutStats(spark, dir, cents, books,
-      embPlus, sampleN = 5000)
-    assert(Similarity.ivfPqDrifted(drifted, baseline),
+    val drifted = Similarity.ivfLayoutStats(spark, dir, pq, Some(embPlus))
+    assert(Similarity.ivfDrifted(drifted, baseline, pq),
       s"out-of-geometry wave not flagged: $baseline -> $drifted")
-    assert(drifted.meanQuantErr > baseline.meanQuantErr * 1.2,
+    assert(drifted.drift > baseline.drift * 1.2,
       s"quantization-error branch did not trip: $baseline -> $drifted")
     // retrain-and-migrate: same vectors, re-trained artifacts, path
     // stable — exhaustive probes + full shortlist rerank EXACTLY, so
     // serving is identical before and after the migration
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val before = Similarity.annIvfPqServeBatch(spark, dir, cents, books,
-        queries, embPlus, nprobe = cents.length, cand = 100000)
+    val before = Similarity.annIvfPqServeBatch(spark, dir, pq,
+        queries, embPlus, nprobe = pq.nlist, cand = 100000)
       .collect().map(_.toSeq)
-    val (cents2, books2) = Similarity.retrainIvfPqPartitioned(spark, dir, embPlus)
-    val after = Similarity.annIvfPqServeBatch(spark, dir, cents2, books2,
-        queries, embPlus, nprobe = cents2.length, cand = 100000)
+    val pq2 = Similarity.retrainLayout(spark, dir, pq, Some(embPlus))
+    val after = Similarity.annIvfPqServeBatch(spark, dir, pq2,
+        queries, embPlus, nprobe = pq2.nlist, cand = 100000)
       .collect().map(_.toSeq)
     assert(after.nonEmpty && after.toSeq == before.toSeq)
     // the retrained geometry absorbs the wave on both axes
-    val restored = Similarity.ivfPqLayoutStats(spark, dir, cents2, books2,
-      embPlus, sampleN = 5000)
+    val restored = Similarity.ivfLayoutStats(spark, dir, pq2, Some(embPlus))
     assert(restored.occSkew < drifted.occSkew,
       s"retrain did not reduce skew: $drifted -> $restored")
-    assert(restored.meanQuantErr < drifted.meanQuantErr,
+    assert(restored.drift < drifted.drift,
       s"retrain did not reduce quantization error: $drifted -> $restored")
   }
 
@@ -271,12 +273,14 @@ class RecallSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("sq8drift").toString + "/c"
     val emb = graft.Tables.embeddings(spark, sf01)
-    val (cents, mns, mxs) = Similarity.writeIvfSq8Partitioned(spark, sf01, dir)
-    val baseline = Similarity.sq8LayoutStats(spark, dir)
-    assert(!Similarity.sq8Drifted(baseline, baseline))
+    val (mns, mxs) = Similarity.sq8Grid(emb)
+    val sq8 = Similarity.writeLayout(
+      Similarity.Sq8Codec(Similarity.ivfCentroids(spark, sf01), mns, mxs), emb, dir)
+    val baseline = Similarity.ivfLayoutStats(spark, dir, sq8)
+    assert(!Similarity.ivfDrifted(baseline, baseline, sq8))
     // write-time saturation = each dimension's half-step edge tails:
     // nonzero (the per-dim min/max rows land exactly on 0/255) but tiny
-    assert(baseline.satFrac > 0 && baseline.satFrac < 0.05,
+    assert(baseline.drift > 0 && baseline.drift < 0.05,
       s"write-time saturation off: $baseline")
     // the ×3-scaled copy wave: out-of-grid coordinates CLAMP at the
     // edge codes (without sq8Codes' clamp they would wrap through the
@@ -289,36 +293,35 @@ class RecallSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + col("_r")).drop("_r")
       .withColumn("embedding",
         transform(col("embedding"), x => (x * lit(3.0)).cast("float")))
-    Similarity.appendIvfSq8Partitioned(wave, cents, mns, mxs, dir)
-    val drifted = Similarity.sq8LayoutStats(spark, dir)
-    assert(Similarity.sq8Drifted(drifted, baseline),
+    Similarity.appendLayout(sq8, wave, dir)
+    val drifted = Similarity.ivfLayoutStats(spark, dir, sq8)
+    assert(Similarity.ivfDrifted(drifted, baseline, sq8),
       s"out-of-grid wave not flagged: $baseline -> $drifted")
-    assert(drifted.satFrac > baseline.satFrac * 3,
+    assert(drifted.drift > baseline.drift * 3,
       s"saturation branch did not trip: $baseline -> $drifted")
     // clamped codes still serve sanely (every stored code a valid
     // [0,255] grid point — the wave ids are servable, not garbage)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    assert(Similarity.annIvfSq8ServeBatch(spark, dir, cents, mns, mxs,
-      queries, nprobe = cents.length).count() > 0)
+    assert(Similarity.annIvfSq8ServeBatch(spark, dir, sq8,
+      queries, nprobe = sq8.nlist).count() > 0)
     // retrain-and-migrate: grid + quantizer re-derived from live rows,
     // every vector re-coded, path stable. Dequantized values move
     // with the grid, so the invariant is code-identity with a FRESH
     // write under the new artifacts (the whitened-retrain precedent).
     val embPlus = emb.unionByName(wave)
-    val (c2, mn2, mx2) = Similarity.retrainIvfSq8Partitioned(spark, dir,
-      embPlus)
+    val sq2 = Similarity.retrainLayout(spark, dir, sq8, Some(embPlus))
     val fresh = java.nio.file.Files.createTempDirectory("sq8fresh").toString + "/c"
-    Similarity.writeIvfSq8PartitionedOn(embPlus, c2, mn2, mx2, fresh)
-    def serve(p: String) = Similarity.annIvfSq8ServeBatch(spark, p, c2,
-        mn2, mx2, queries, nprobe = c2.length)
+    Similarity.writeLayout(sq2, embPlus, fresh)
+    def serve(p: String) = Similarity.annIvfSq8ServeBatch(spark, p, sq2,
+        queries, nprobe = sq2.nlist)
       .collect().map(_.toSeq).toSeq
     val swapped = serve(dir)
     assert(swapped.nonEmpty && swapped == serve(fresh),
       "retrained swap diverged from a fresh write under the same grid")
     // the retrained grid absorbs the wave: saturation back to tails
-    val restored = Similarity.sq8LayoutStats(spark, dir)
-    assert(restored.satFrac < drifted.satFrac &&
+    val restored = Similarity.ivfLayoutStats(spark, dir, sq2)
+    assert(restored.drift < drifted.drift &&
       restored.occSkew < drifted.occSkew,
       s"retrain did not absorb the wave: $drifted -> $restored")
   }
@@ -327,12 +330,11 @@ class RecallSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("whitedrift").toString + "/c"
     val emb = graft.Tables.embeddings(spark, sf01)
-    Similarity.writeIvfWhitePartitioned(spark, sf01, dir)
-    val m = Similarity.whitenModel(spark, sf01)
-    val baseline = Similarity.whiteLayoutStats(spark, dir)
-    assert(!Similarity.whiteDrifted(baseline, baseline))
+    val m = Similarity.writeLayout(Similarity.whitenModel(spark, sf01), emb, dir)
+    val baseline = Similarity.ivfLayoutStats(spark, dir, m)
+    assert(!Similarity.ivfDrifted(baseline, baseline, m))
     // whitening held at training time: every component near unit var
-    assert(baseline.maxCompVar > 0.5 && baseline.maxCompVar < 1.5,
+    assert(baseline.drift > 0.5 && baseline.drift < 1.5,
       s"write-time whitened variance off unit: $baseline")
     // the ×3-scaled copy wave (the IVF-PQ drift construction): piles
     // into one whitened bucket (skew axis) AND inflates the hot
@@ -345,11 +347,11 @@ class RecallSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + col("_r")).drop("_r")
       .withColumn("embedding",
         transform(col("embedding"), x => (x * lit(3.0)).cast("float")))
-    Similarity.appendIvfWhitePartitioned(wave, m, dir)
-    val drifted = Similarity.whiteLayoutStats(spark, dir)
-    assert(Similarity.whiteDrifted(drifted, baseline),
+    Similarity.appendLayout(m, wave, dir)
+    val drifted = Similarity.ivfLayoutStats(spark, dir, m)
+    assert(Similarity.ivfDrifted(drifted, baseline, m),
       s"out-of-geometry wave not flagged: $baseline -> $drifted")
-    assert(drifted.maxCompVar > baseline.maxCompVar * 1.5,
+    assert(drifted.drift > baseline.drift * 1.5,
       s"whitening-variance branch did not trip: $baseline -> $drifted")
     // retrain-and-migrate: basis+scales+quantizer re-derived from the
     // layout's current live rows, every vector re-coded, path stable.
@@ -357,9 +359,9 @@ class RecallSpec extends SparkSpec {
     // raw IVF), so the invariant is: the swapped-in layout is
     // code-identical to a FRESH one-shot write under the new model.
     val embPlus = emb.unionByName(wave)
-    val m2 = Similarity.retrainIvfWhitePartitioned(spark, dir, embPlus)
+    val m2 = Similarity.retrainLayout(spark, dir, m, Some(embPlus))
     val fresh = java.nio.file.Files.createTempDirectory("whitefresh").toString + "/c"
-    Similarity.writeIvfWhitePartitionedOn(embPlus, m2, fresh)
+    Similarity.writeLayout(m2, embPlus, fresh)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
     def serve(p: String) = Similarity.annIvfWhiteServeBatch(spark, p, m2,
@@ -369,10 +371,10 @@ class RecallSpec extends SparkSpec {
     assert(swapped.nonEmpty && swapped == serve(fresh),
       "retrained swap diverged from a fresh write under the same model")
     // and the retrained geometry absorbs the wave on both axes
-    val restored = Similarity.whiteLayoutStats(spark, dir)
+    val restored = Similarity.ivfLayoutStats(spark, dir, m2)
     assert(restored.occSkew < drifted.occSkew,
       s"retrain did not reduce skew: $drifted -> $restored")
-    assert(restored.maxCompVar < drifted.maxCompVar,
+    assert(restored.drift < drifted.drift,
       s"retrain did not re-whiten: $drifted -> $restored")
   }
 

@@ -220,7 +220,9 @@ class ScaleTechniquesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfpart").toString
     val cents = Similarity.writeIvfPartitioned(spark, sf, dir)
     val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
-    val part = Similarity.annIvfPartitioned(spark, dir, cents, queries)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val part = Similarity.annIvfServeBatch(spark, dir, cents, queries,
+      excludeSelf = true)
     val plan = part.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"probe not pruned at the partitioned scan:\n${plan.take(800)}")
@@ -272,9 +274,10 @@ class ScaleTechniquesSpec extends SparkSpec {
     val cents = Similarity.ivfCentroids(spark, sf)
     val grownDir = java.nio.file.Files.createTempDirectory("ivfgrow").toString
     val oneShotDir = java.nio.file.Files.createTempDirectory("ivfone").toString
-    Similarity.writeIvfPartitionedOn(base, cents, grownDir)
+    Similarity.writeLayout(Similarity.FloatCodec(cents), base, grownDir)
     Similarity.appendIvfPartitioned(batch, cents, grownDir)
-    Similarity.writeIvfPartitionedOn(base.unionByName(batch), cents, oneShotDir)
+    Similarity.writeLayout(Similarity.FloatCodec(cents), base.unionByName(batch),
+      oneShotDir)
     val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding"))
     def rows(dir: String) =
@@ -303,9 +306,14 @@ class ScaleTechniquesSpec extends SparkSpec {
   test("IVF×SQ8 partitioned code layout prunes to probed buckets, matches inline") {
     import graft.operators.Similarity
     val dir = java.nio.file.Files.createTempDirectory("ivfsq8").toString
-    val (cents, mns, mxs) = Similarity.writeIvfSq8Partitioned(spark, sf, dir)
-    val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
-    val part = Similarity.annIvfSq8Partitioned(spark, dir, cents, mns, mxs, queries)
+    val emb = Tables.embeddings(spark, sf)
+    val (mns, mxs) = Similarity.sq8Grid(emb)
+    val sq8 = Similarity.writeLayout(
+      Similarity.Sq8Codec(Similarity.ivfCentroids(spark, sf), mns, mxs), emb, dir)
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val part = Similarity.annIvfSq8ServeBatch(spark, dir, sq8, queries,
+      excludeSelf = true)
     val plan = part.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"probe not pruned at the partitioned code scan:\n${plan.take(800)}")

@@ -90,11 +90,13 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val emb = graft.Tables.embeddings(spark, sf)
     val tmp = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    val (cents, books) =
-      Similarity.writeIvfPqPartitioned(spark, sf, s"$tmp/idx")
+    val pq = Similarity.writeLayout(Similarity.PqCodec(
+      Similarity.ivfCentroids(spark, sf), Similarity.pqResidualCodebooks(spark, sf)),
+      emb, s"$tmp/idx")
     val queries = emb.filter(col("vec_id") < 10)
-    val stored = Similarity.annIvfPqStored(spark, s"$tmp/idx", cents, books,
-      queries, emb)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val stored = Similarity.annIvfPqServeBatch(spark, s"$tmp/idx", pq,
+      queries, emb, excludeSelf = true)
     val inline = Similarity.annIvfPq(spark, sf)
     assert(stored.collect().map(_.toSeq).toSeq ==
       inline.collect().map(_.toSeq).toSeq)
@@ -123,8 +125,8 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.writeIvfPartitioned(spark, sf, s"$tmp/idx")
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val stored = Similarity.annIvfPrefixServeBatch(spark, s"$tmp/idx", cents,
-      queries, excludeSelf = true)
+    val stored = Similarity.annIvfPrefixServeBatch(spark, s"$tmp/idx",
+      Similarity.FloatCodec(cents), queries, excludeSelf = true)
     val inline = Similarity.annIvfPrefix(spark, sf)
     assert(stored.collect().map(_.toSeq).toSeq ==
       inline.collect().map(_.toSeq).toSeq)
@@ -138,10 +140,11 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val emb = graft.Tables.embeddings(spark, sf)
     val tmp = java.nio.file.Files.createTempDirectory("ivffilter").toString
-    val cents = Similarity.writeIvfFilteredPartitioned(spark, sf, s"$tmp/idx")
+    val labeled = Similarity.writeLayout(
+      Similarity.LabeledCodec(Similarity.ivfCentroids(spark, sf)), emb, s"$tmp/idx")
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding"), col("label"))
-    val stored = Similarity.annIvfFilteredServeBatch(spark, s"$tmp/idx", cents,
+    val stored = Similarity.annIvfFilteredServeBatch(spark, s"$tmp/idx", labeled,
       queries, excludeSelf = true)
     val inline = Similarity.annIvfFiltered(spark, sf)
     assert(stored.collect().map(_.toSeq).toSeq ==
@@ -180,8 +183,8 @@ class SimilaritySpec extends SparkSpec {
     assert(after.nonEmpty &&
       !after.map(_(1).asInstanceOf[Long]).exists(victims.contains))
     // delete-then-serve equals serving a layout never containing them
-    Similarity.writeIvfPartitionedOn(
-      emb.filter(!col("vec_id").isin(victims: _*)), cents, s"$tmp/ref")
+    Similarity.writeLayout(Similarity.FloatCodec(cents),
+      emb.filter(!col("vec_id").isin(victims: _*)), s"$tmp/ref")
     assert(after == serve(s"$tmp/ref"))
     // compaction folds the log: rows physically gone, log cleared,
     // serving identical
@@ -198,7 +201,8 @@ class SimilaritySpec extends SparkSpec {
     Similarity.deleteFromLayout(spark, s"$tmp/idx",
       Seq(after.head(1).asInstanceOf[Long]).toDF("vec_id"))
     val afterSecond = serve(s"$tmp/idx")
-    val cents2 = Similarity.retrainIvfPartitioned(spark, s"$tmp/idx")
+    val cents2 = Similarity.retrainLayout(spark, s"$tmp/idx",
+      Similarity.FloatCodec(cents)).cents
     val physIds2 = spark.read.parquet(s"$tmp/idx")
       .select("vec_id").as[Long].collect().toSet
     assert(!physIds2.contains(after.head(1).asInstanceOf[Long]))
@@ -210,8 +214,8 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("ivfwhite").toString
-    Similarity.writeIvfWhitePartitioned(spark, sf, s"$tmp/idx")
-    val m = Similarity.whitenModel(spark, sf)
+    val m = Similarity.writeLayout(Similarity.whitenModel(spark, sf),
+      graft.Tables.embeddings(spark, sf), s"$tmp/idx")
     val queries = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding"))

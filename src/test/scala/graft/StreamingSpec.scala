@@ -357,8 +357,9 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[EventStream.QueryVec]
     // queries here REPLAY corpus vectors (the benchmark form), so
     // self-exclusion is opted in to match the batch annIvf semantics
-    val q = EventStream.streamingAnnIvfTopK(input.toDS(), dir, cents,
-      excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfServeBatch(b.sparkSession, dir, cents,
+        b.toDF("query_id", "embedding"), excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     // a query's candidates are complete within its arrival batch, so
@@ -387,8 +388,9 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingGraphWalkTopK(input.toDS(), dir,
-      excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annGraphWalkServeBatch(b.sparkSession, dir,
+        b.toDF("query_id", "embedding"), excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     // a walk is per-query independent, so the split changes nothing
@@ -417,8 +419,10 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingAnnIvfPrefixTopK(input.toDS(), dir, cents,
-      excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfPrefixServeBatch(b.sparkSession, dir,
+        Similarity.FloatCodec(cents), b.toDF("query_id", "embedding"),
+        excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     input.addData(queries.take(5).toSeq)
@@ -437,15 +441,18 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val dir = java.nio.file.Files.createTempDirectory("ivffiltstream").toString
-    val cents = Similarity.writeIvfFilteredPartitioned(spark, sf, dir)
+    val labeled = Similarity.writeLayout(
+      Similarity.LabeledCodec(Similarity.ivfCentroids(spark, sf)),
+      Tables.embeddings(spark, sf), dir)
     val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"), col("label"))
       .as[(Long, Array[Float], Int)].collect()
       .map { case (id, v, lb) => EventStream.QueryVecLabeled(id, v, lb) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVecLabeled]
-    val q = EventStream.streamingAnnIvfFilteredTopK(input.toDS(), dir, cents,
-      excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfFilteredServeBatch(b.sparkSession, dir, labeled,
+        b.toDF("query_id", "embedding", "label"), excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     input.addData(queries.take(5).toSeq)
@@ -464,15 +471,19 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val dir = java.nio.file.Files.createTempDirectory("ivfsq8stream").toString
-    val (cents, mns, mxs) = Similarity.writeIvfSq8Partitioned(spark, sf, dir)
+    val (mns, mxs) = Similarity.sq8Grid(Tables.embeddings(spark, sf))
+    val sq8 = Similarity.writeLayout(
+      Similarity.Sq8Codec(Similarity.ivfCentroids(spark, sf), mns, mxs),
+      Tables.embeddings(spark, sf), dir)
     val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingAnnIvfSq8TopK(input.toDS(), dir, cents,
-      mns, mxs, excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfSq8ServeBatch(b.sparkSession, dir, sq8,
+        b.toDF("query_id", "embedding"), excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     input.addData(queries.take(5).toSeq)
@@ -491,16 +502,17 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val dir = java.nio.file.Files.createTempDirectory("ivfwhitestream").toString
-    Similarity.writeIvfWhitePartitioned(spark, sf, dir)
-    val m = Similarity.whitenModel(spark, sf)
+    val m = Similarity.writeLayout(Similarity.whitenModel(spark, sf),
+      Tables.embeddings(spark, sf), dir)
     val queries = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingAnnIvfWhiteTopK(input.toDS(), dir, m,
-      excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfWhiteServeBatch(b.sparkSession, dir, m,
+        b.toDF("query_id", "embedding"), excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     input.addData(queries.take(5).toSeq)
@@ -519,16 +531,19 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
     val dir = java.nio.file.Files.createTempDirectory("ivfpqstream").toString
-    val (cents, books) = Similarity.writeIvfPqPartitioned(spark, sf, dir)
     val emb = Tables.embeddings(spark, sf)
+    val pq = Similarity.writeLayout(Similarity.PqCodec(
+      Similarity.ivfCentroids(spark, sf), Similarity.pqResidualCodebooks(spark, sf)),
+      emb, dir)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingAnnIvfPqTopK(input.toDS(), dir, cents,
-      books, emb, excludeSelf = true) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Similarity.annIvfPqServeBatch(b.sparkSession, dir, pq,
+        b.toDF("query_id", "embedding"), emb, excludeSelf = true)) {
       topk => results ++= topk.collect().map(_.toSeq)
     }
     input.addData(queries.take(5).toSeq)
@@ -550,15 +565,17 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("hnstream")
       .toString + "/layout"
     val emb = Tables.embeddings(spark, sf)
-    val cents = Similarity.ivfCentroids(spark, sf)
-    Classify.writeIvfLabeled(emb, cents, dir)
+    val labeled = Similarity.writeLayout(
+      Similarity.LabeledCodec(Similarity.ivfCentroids(spark, sf)), emb, dir)
     val anchors = emb.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id"), col("embedding"), col("label"))
       .as[(Long, Array[Float], Int)].collect()
       .map { case (id, v, l) => EventStream.QueryVecLabeled(id, v, l) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVecLabeled]
-    val q = EventStream.streamingMineHardNegatives(input.toDS(), dir, cents) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Classify.mineHardNegativesServeBatch(b.sparkSession, dir, labeled,
+        b.toDF("query_id", "embedding", "label"))) {
       negs => results ++= negs.collect().map(_.toSeq)
     }
     input.addData(anchors.take(5).toSeq)
@@ -566,7 +583,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(anchors.drop(5).toSeq)
     q.processAllAvailable()
     q.stop()
-    val batch = Classify.mineHardNegativesServeBatch(spark, dir, cents,
+    val batch = Classify.mineHardNegativesServeBatch(spark, dir, labeled,
         emb.filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("label"),
             col("embedding")))
@@ -587,7 +604,8 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, t) => EventStream.DocText(id, t) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.DocText]
-    val q = EventStream.streamingQualityNb(input.toDS(), dir) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Classify.qualityNbServeBatch(b.sparkSession, dir, b.toDF("doc_id", "text"))) {
       scores => results ++= scores.collect().map(_.toSeq)
     }
     // per-doc answers are batch-independent: the split changes nothing
@@ -644,7 +662,8 @@ class StreamingSpec extends SparkSpec {
     val reqs = (0L until 8L).map(i => EventStream.NextRequest(800L + i, i))
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.NextRequest]
-    val q = EventStream.streamingMarkovNext(input.toDS(), dir) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Recommend.markovNextServeBatch(b.sparkSession, dir, b.toDF("user_id", "item"))) {
       recs => results ++= recs.collect().map(_.toSeq)
     }
     input.addData(reqs.take(4)); q.processAllAvailable()
@@ -840,7 +859,8 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, t) => EventStream.DocText(id, t) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.DocText]
-    val q = EventStream.streamingClassifyNb(input.toDS(), dir) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Classify.classifyNbServeBatch(b.sparkSession, dir, b.toDF("doc_id", "text"))) {
       preds => results ++= preds.collect().map(_.toSeq)
     }
     // per-doc answers are batch-independent: the split changes nothing
@@ -867,7 +887,9 @@ class StreamingSpec extends SparkSpec {
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingClassifyCentroid(input.toDS(), dir) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Classify.classifyCentroidServeBatch(b.sparkSession, dir,
+        b.toDF("vec_id", "embedding"))) {
       preds => results ++= preds.collect().map(_.toSeq)
     }
     // per-vector answers are batch-independent: the split changes nothing
@@ -888,15 +910,19 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.Classify
     val dir = java.nio.file.Files.createTempDirectory("knnstream").toString + "/layout"
     val emb = Tables.embeddings(spark, sf)
-    val cents = graft.operators.Similarity.ivfCentroids(spark, sf)
-    Classify.writeIvfLabeled(emb.filter(col("vec_id") % 5 =!= 0), cents, dir)
+    val labeled = graft.operators.Similarity.writeLayout(
+      graft.operators.Similarity.LabeledCodec(
+        graft.operators.Similarity.ivfCentroids(spark, sf)),
+      emb.filter(col("vec_id") % 5 =!= 0), dir)
     val testVecs = emb.filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
       .map { case (id, v) => EventStream.QueryVec(id, v) }
     val results = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
     val input = MemoryStream[EventStream.QueryVec]
-    val q = EventStream.streamingClassifyKnn(input.toDS(), dir, cents) {
+    val q = EventStream.serveEachBatch(input.toDS())(b =>
+      Classify.classifyKnnServeBatch(b.sparkSession, dir, labeled,
+        b.toDF("query_id", "embedding"))) {
       preds => results ++= preds.collect().map(_.toSeq)
     }
     input.addData(testVecs.take(10).toSeq)
@@ -904,7 +930,7 @@ class StreamingSpec extends SparkSpec {
     input.addData(testVecs.drop(10).toSeq)
     q.processAllAvailable()
     q.stop()
-    val batch = Classify.classifyKnnServeBatch(spark, dir, cents,
+    val batch = Classify.classifyKnnServeBatch(spark, dir, labeled,
         emb.filter(col("vec_id") % 5 === 0)
           .select(col("vec_id").as("query_id"), col("embedding")))
       .collect().map(_.toSeq).toSet
