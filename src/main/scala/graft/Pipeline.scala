@@ -40,8 +40,7 @@ object Pipeline {
       qualityFloor = 0.2, contamNgram = 3, contamMinShared = 2,
       embeddings = None, embTau = 0.9, pplCeiling = None)
 
-  /** Same run over an arbitrary documents frame (doc_id, lang, text)
-    * — the entry the Scale10 probe drives with replicated corpora.
+  /** Same run over an arbitrary documents frame (doc_id, lang, text).
     *
     * `embeddings`: when given a (vec_id, embedding) frame aligned
     * with doc_id, stage 1 dedups on EMBEDDING near-duplicates

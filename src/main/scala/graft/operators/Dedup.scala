@@ -1893,9 +1893,8 @@ object Dedup {
   }
 
   /** Candidate pairs from the banding join, BEFORE the hamming filter
-    * — distinct (d1, d2) with the pair's hamming distance. Exposed so
-    * the Scale10 occupancy probe can measure candidate volume per
-    * (maxHamming, numChunks) geometry. */
+    * — distinct (d1, d2) with the pair's hamming distance: the
+    * candidate volume per (maxHamming, numChunks) geometry. */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 3,
                         numChunks: Int = 6): DataFrame =
     bandedHammingCandidates(simhashSignatures(docs), "simhash",
@@ -2359,9 +2358,9 @@ object Dedup {
     embLshDups(Tables.embeddings(s, d))
 
   /** Distinct candidate pairs from the LSH bucket join, BEFORE the
-    * cosine verify — exposed so the Scale10 occupancy probe can
-    * measure candidate volume per (tables, bits) geometry, exactly
-    * like [[simhashCandidates]] does for the simhash bandings. */
+    * cosine verify — the candidate volume per (tables, bits)
+    * geometry, exactly like [[simhashCandidates]] for the simhash
+    * bandings. */
   def embLshCandidates(e: DataFrame,
                        numBits: Int = Similarity.LshBits,
                        numTables: Int = Similarity.LshTables): DataFrame = {

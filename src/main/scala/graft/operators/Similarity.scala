@@ -241,14 +241,6 @@ object Similarity {
       round(cos(col("qv"), col("v")), 6).as("cos_sim")), k)
   }
 
-  /** (query_id, neighbor_id) candidates BEFORE the exact rerank —
-    * exposed so the Scale10 nprobe sweep can measure candidate
-    * fraction (probed corpus share) alongside recall and time. */
-  def annIvfCandidates(s: SparkSession, d: String, nQueries: Int = 10,
-                       nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame =
-    annIvfCandidatesWithVecs(s, d, nQueries, nlist, nprobe)
-      .select(col("query_id"), col("neighbor_id"))
-
   private def annIvfCandidatesWithVecs(s: SparkSession, d: String, nQueries: Int,
                                        nlist: Int, nprobe: Int): DataFrame = {
     import s.implicits._
@@ -1165,8 +1157,7 @@ object Similarity {
     annPqOn(Tables.embeddings(s, d), pqCodebooks(s, d, m, kS),
       Tables.embeddings(s, d).filter(col("vec_id") < nQueries), k, cand)
 
-  /** [[annPq]] against an explicit corpus/codebooks/query frame — the
-    * Scale10 entry point (replicated corpora, reused books). */
+  /** [[annPq]] against an explicit corpus/codebooks/query frame. */
   def annPqOn(emb: DataFrame, books: Array[Array[Array[Double]]],
               queryFrame: DataFrame, k: Int = 5,
               cand: Int = PqCand): DataFrame =
@@ -1781,9 +1772,8 @@ object Similarity {
       nQueries, k, nprobe)
 
   /** [[annIvfSq8]] over an arbitrary embeddings frame with given
-    * centroids — the entry the Scale10 probe drives with replicated
-    * corpora (centroids are a property of the DATA geometry, so the
-    * 1× trained quantizer serves the replicated corpus too). */
+    * centroids (centroids are a property of the DATA geometry, so a
+    * quantizer trained on one corpus serves a replicated one too). */
   def annIvfSq8On(emb: DataFrame, cents: Array[Array[Double]],
                   nQueries: Int = 10, k: Int = 5,
                   nprobe: Int = IvfNprobe): DataFrame = {
@@ -2480,7 +2470,7 @@ object Similarity {
       ordered)
 
   /** [[knnGraph]] over an explicit embedding frame + trained
-    * centroids (the Scale10 probe entry point). `ordered=false` for
+    * centroids. `ordered=false` for
     * interior consumers (loops, CC, artifact writes) that destroy
     * order immediately — see [[topKPerQuery]]. */
   def knnGraphOn(emb: DataFrame, cents: Array[Array[Double]],
@@ -4176,8 +4166,7 @@ object Similarity {
       nQueries, k, deg, beam, depth, nprobe)
   }
 
-  /** [[annGraphWalk]] over an arbitrary embeddings frame — the
-    * Scale10 probe entry. */
+  /** [[annGraphWalk]] over an arbitrary embeddings frame. */
   def annGraphWalkFrom(emb: DataFrame, cents: Array[Array[Double]],
                        nQueries: Int = 10, k: Int = 5,
                        deg: Int = GraphWalkDeg, beam: Int = GraphWalkBeam,

@@ -1216,9 +1216,8 @@ object EventStream {
       }
       .start()
 
-  /** One micro-batch of the SCD-2 sink, exposed so batch callers and
-    * the scale probes can drive the same bounded-write path the
-    * streaming sink runs. */
+  /** One micro-batch of the SCD-2 sink, exposed so batch callers can
+    * drive the same bounded-write path the streaming sink runs. */
   def scd2SinkBatch(batch: DataFrame, dir: String, key: String,
                     attr: String, ts: String, tie: String,
                     buckets: Int = 64): Unit = {
@@ -1297,8 +1296,8 @@ object EventStream {
       }
       .start()
 
-  /** One micro-batch of the CDC sink, exposed so batch callers and
-    * the scale probes drive the same bounded-write path. */
+  /** One micro-batch of the CDC sink, exposed so batch callers drive
+    * the same bounded-write path. */
   def cdcSinkBatch(batch: DataFrame, dir: String, keys: Seq[String],
                    compareCols: Seq[String], buckets: Int = 64): Unit = {
     val s = batch.sparkSession

@@ -140,7 +140,8 @@ class RecallSpec extends SparkSpec {
   }
 
   test("geometryFor codifies the measured joint (bits, τ) choice") {
-    // the Scale10-measured ladder: coarse 4-bit buckets ONLY at the
+    // the ladder measured by the retired Scale10 probe (SURVEY.md §6,
+    // recorded by a retired probe): coarse 4-bit buckets ONLY at the
     // isotropic at-noise threshold; 16-bit output-bound buckets at
     // production τ — never the reverse
     assert(Similarity.geometryFor(0.35) == Similarity.LshGeometry(16, 4))

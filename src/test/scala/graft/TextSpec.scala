@@ -659,6 +659,28 @@ class TextSpec extends SparkSpec {
     }
   }
 
+  test("held-out LM scorer: free-α form at α = 0.25 agrees with the exact-decimal form") {
+    import org.apache.spark.sql.functions.{col, countDistinct, explode}
+    val docs = Tables.documents(spark, sf).filter(col("doc_id") < 200)
+    val bg = TextFunctions.docBigrams(docs).localCheckpoint()
+    val (model, ctx) = TextFunctions.ngramLmModel(
+      bg.filter(col("doc_id") % 50 =!= 0))
+    val vocab = docs.select(explode(TextFunctions.tokens(col("text"))).as("t"))
+      .agg(countDistinct(col("t"))).head.getLong(0)
+    def ppl(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("ppl")).toMap
+    val free = ppl(TextFunctions.ngramLmScoreHeldOut(bg, model, ctx, vocab,
+      alpha = 0.25))
+    val exact = ppl(TextFunctions.ngramLmScoreHeldOutExact(bg, model, ctx, vocab))
+    assert(free.nonEmpty && free.keySet == exact.keySet)
+    free.foreach { case (id, p) =>
+      assert(math.abs(p - exact(id)) <= 1e-4 * exact(id), s"doc $id: $p vs ${exact(id)}")
+    }
+    // unseen bigrams are smoothed, never infinite: held-out docs score
+    // finite perplexities above 1
+    assert(free.values.forall(p => p >= 1.0 && !p.isInfinite))
+  }
+
   test("distilled quality model satisfies the OLS invariants when scoring") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("qmodel").toString
