@@ -446,12 +446,8 @@ object Pipeline {
     val mapDir = s"$stateDir/cluster_map"
     val todaysEdges = batchPairs.unionByName(corpusHitPairs)
     if (todaysEdges.limit(1).count() > 0) {
-      val fs = new org.apache.hadoop.fs.Path(mapDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasMap = fs.exists(new org.apache.hadoop.fs.Path(mapDir)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(mapDir))
-          .exists(_.getPath.getName.startsWith("_cb="))
-      if (hasMap) Dedup.ccIncrementalStep(spark, mapDir, todaysEdges)
+      if (written(spark, Dedup.ClusterMap, mapDir))
+        Dedup.ccIncrementalStep(spark, mapDir, todaysEdges)
       else Dedup.writeClusterIndex(todaysEdges, mapDir)
     }
 
@@ -516,8 +512,6 @@ object Pipeline {
       case Some(g) =>
         val gDir = s"$stateDir/knn_graph"
         val centsDir = s"$stateDir/knn_graph_cents"
-        val fs = new org.apache.hadoop.fs.Path(gDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val emb = g.embeddings.select(col("vec_id"), col("embedding"))
           .localCheckpoint() // materialize before the artifact writes
         // the coarse quantizer is FIXED across appends (the artifact
@@ -525,7 +519,7 @@ object Pipeline {
         // sample, persisted, read back bit-identically (doubles
         // round-trip parquet exactly)
         val cents: Array[Array[Double]] =
-          if (fs.exists(new org.apache.hadoop.fs.Path(centsDir)))
+          if (exists(spark, centsDir))
             spark.read.parquet(centsDir).orderBy("cid")
               .select("c").as[Seq[Double]].collect().map(_.toArray)
           else {
@@ -539,7 +533,7 @@ object Pipeline {
               .write.mode("overwrite").parquet(centsDir)
             cs
           }
-        if (!fs.exists(new org.apache.hadoop.fs.Path(gDir)))
+        if (!exists(spark, gDir))
           Similarity.writeKnnGraph(emb, cents, gDir)
         else Similarity.knnGraphAppendStep(spark, gDir, emb, cents)
         val inDeg = spark.read.parquet(s"$gDir/edges")
@@ -657,9 +651,7 @@ object Pipeline {
     // what [[forgetDocs]] subtracts back out.
     val nbBlock: Seq[DataFrame] = if (!nbGate) Seq.empty else {
       val nbDir = s"$stateDir/nb_model"
-      val nfs = new org.apache.hadoop.fs.Path(nbDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasModel = nfs.exists(new org.apache.hadoop.fs.Path(nbDir))
+      val hasModel = exists(spark, nbDir)
       val shipped = dayRows.limit(1).count() > 0
       val rows =
         if (!hasModel || !shipped) Seq.empty[(String, Long)]
@@ -690,9 +682,7 @@ object Pipeline {
     // there is deliberately no append verb — see writeQualityModel).
     val qualBlock: Seq[DataFrame] = if (!qualityGate) Seq.empty else {
       val qDir = s"$stateDir/quality_model"
-      val qfs = new org.apache.hadoop.fs.Path(qDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val hasModel = qfs.exists(new org.apache.hadoop.fs.Path(qDir))
+      val hasModel = exists(spark, qDir)
       val shipped = dayRows.limit(1).count() > 0
       val rows =
         if (!hasModel || !shipped) Seq.empty[(String, Long)]
@@ -736,13 +726,11 @@ object Pipeline {
     * split column recovered from the directory layout. */
   private def readShardDocs(spark: SparkSession, stateDir: String,
                             days: Seq[String]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val frames = for {
       day <- days
       sp <- Seq("train", "val", "test")
       path = s"$stateDir/days/$day/$sp/shards"
-      if fs.exists(new org.apache.hadoop.fs.Path(path))
+      if exists(spark, path)
     } yield spark.read.json(path).withColumn("split", lit(sp))
     if (frames.nonEmpty) frames.reduce(_ unionByName _)
     else {
@@ -774,43 +762,68 @@ object Pipeline {
         Seq("doc_id"), "left_anti")
   }
 
+  /** The shingle stores of the decontamination stage, maintained like
+    * the dedup indexes: append-only, ids never repeat across days. */
+  private val EvalShingles = Dedup.MaintainedIndex("eval_shingles", "eval_id")
+  private val TrainShingles = Dedup.MaintainedIndex("train_shingles", "train_id")
+
+  /** Every maintained index of the daily state; each lives in the
+    * state subdirectory named after its descriptor. [[forgetDocs]]
+    * erases from all of them and [[compactDailyState]] compacts all
+    * but the cluster map, which needs no compaction. */
+  private val stateIndexes = Seq(Dedup.ChunkIndex, Dedup.LineIndex,
+    Dedup.BandIndex, EvalShingles, TrainShingles, Dedup.ClusterMap)
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Whether a state index has been written: the line index exists
+    * only in states created since it was added, and the cluster map
+    * only once a day produced edges. A map must also hold a bucket
+    * directory — an empty partitioned layout cannot be read back. */
+  private def written(spark: SparkSession, index: Dedup.MaintainedIndex,
+                      dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && (index != Dedup.ClusterMap ||
+      fs.listStatus(p).exists(_.getPath.getName.startsWith("_cb=")))
+  }
+
   case class StateMaintenanceReport(
       chunkIndex: graft.sources.Compact.CompactReport,
+      lineIndex: Option[graft.sources.Compact.CompactReport],
       bandIndex: graft.sources.Compact.CompactReport,
       evalShingles: graft.sources.Compact.CompactReport,
       trainShingles: graft.sources.Compact.CompactReport,
       vacuumedDocs: Long, vacuumedDays: Int)
 
   /** Periodic maintenance for the daily state — the ~monthly pass
-    * every append-maintained artifact here needs (the
-    * [[graft.operators.Dedup.compactBandIndex]] argument: N daily
-    * appends leave N small files whose open cost comes to dominate
-    * the daily probe joins): chunk index re-collapses min-keeper
-    * (semantic fold), band index and both shingle stores re-cluster
-    * file-wise (append rows are already distinct — ids never repeat
-    * across days), and [[vacuumRetractedShards]] folds the recall
-    * list into storage. Day-step results are IDENTICAL across the
-    * pass (spec'd: a post-maintenance day equals the same day
-    * against un-compacted state, and readCuratedDocs is unchanged
-    * by the vacuum). */
+    * every append-maintained artifact here needs (N daily appends
+    * leave N small files whose open cost comes to dominate the daily
+    * probe joins): each state index goes through
+    * [[graft.operators.Dedup.compact]] (the chunk and line indexes
+    * re-collapse min-keeper; band index and both shingle stores
+    * re-cluster file-wise, their append rows already distinct), and
+    * [[vacuumRetractedShards]] folds the recall list into storage.
+    * The line index's report is None for states that predate it.
+    * Day-step results are IDENTICAL across the pass (spec'd: a
+    * post-maintenance day equals the same day against un-compacted
+    * state, and readCuratedDocs is unchanged by the vacuum). */
   def compactDailyState(spark: SparkSession, stateDir: String,
                         targetBytes: Long = 128L << 20)
       : StateMaintenanceReport = {
-    val chunk = Dedup.compactChunkIndex(spark, s"$stateDir/chunk_index",
-      targetBytes)
-    // line index exists since r13 (older states predate it)
-    if (new org.apache.hadoop.fs.Path(s"$stateDir/line_index")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$stateDir/line_index")))
-      Dedup.compactLineIndex(spark, s"$stateDir/line_index", targetBytes)
-    val band = graft.sources.Compact.compactInPlace(spark,
-      s"$stateDir/band_index", targetBytes)
-    val evalSh = graft.sources.Compact.compactInPlace(spark,
-      s"$stateDir/eval_shingles", targetBytes)
-    val trainSh = graft.sources.Compact.compactInPlace(spark,
-      s"$stateDir/train_shingles", targetBytes)
+    val reports = stateIndexes
+      .filter(i => i.bucketForget.isEmpty &&
+        written(spark, i, s"$stateDir/${i.name}"))
+      .map(i => i -> Dedup.compact(spark, i, s"$stateDir/${i.name}",
+        targetBytes))
+      .toMap
     val (docs, days) = vacuumRetractedShards(spark, stateDir)
-    StateMaintenanceReport(chunk, band, evalSh, trainSh, docs, days)
+    StateMaintenanceReport(reports(Dedup.ChunkIndex),
+      reports.get(Dedup.LineIndex), reports(Dedup.BandIndex),
+      reports(EvalShingles), reports(TrainShingles), docs, days)
   }
 
   /** RIGHT-TO-BE-FORGOTTEN across the daily pipeline state — the
@@ -834,17 +847,18 @@ object Pipeline {
     *      owner),
     *   4. both shingle stores — the docs' shingle rows vanish (they
     *      stop contaminating / being recall triggers),
-    *   5. cluster map — [[graft.operators.Dedup.forgetFromClusterIndex]]
-    *      removes the nodes and relabels clusters whose LABEL was a
-    *      forgotten id (labels are doc ids — erasure cannot leave
-    *      one behind).
+    *   5. cluster map — its bounded relabel removes the nodes and
+    *      relabels clusters whose LABEL was a forgotten id (labels
+    *      are doc ids — erasure cannot leave one behind).
     *
-    * Artifact rewrites ride [[graft.sources.Compact.compactInPlace]]
+    * Steps 2-5 are one [[graft.operators.Dedup.forget]] per state
+    * index. The rewrites ride [[graft.sources.Compact.compactInPlace]]
     * (read → anti-join → swap, the maintained-index discipline), so
     * the pass doubles as a compaction. The day loop keeps running
     * against the erased state unchanged (spec'd). Cost is one
     * compact pass over each doc-keyed artifact (corpus-sized scans
-    * of slim long/hash rows — 6.5s against the 10× state, §6) plus
+    * of slim long/hash rows — 6.5s against the 10× state, §6,
+    * recorded by a retired probe) plus
     * the bounded shard/cluster surgery: production BATCHES erasure
     * requests and runs one pass per cycle (erasure SLAs are
     * days-scale), amortizing the artifact rewrites across the batch
@@ -860,10 +874,8 @@ object Pipeline {
     // attribute — the count algebra can only be applied once per row)
     val nbDir = s"$stateDir/nb_model"
     val qualDir = s"$stateDir/quality_model"
-    val nbFs = new org.apache.hadoop.fs.Path(nbDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nbExists = nbFs.exists(new org.apache.hadoop.fs.Path(nbDir))
-    val qualExists = nbFs.exists(new org.apache.hadoop.fs.Path(qualDir))
+    val nbExists = exists(spark, nbDir)
+    val qualExists = exists(spark, qualDir)
     if (nbExists || qualExists) {
       // ONE corpus scan shared by both trained artifacts
       val victimRows = readShardDocs(spark, stateDir,
@@ -884,37 +896,18 @@ object Pipeline {
     forget.withColumn("day", lit("forgotten"))
       .write.mode("append").parquet(s"$stateDir/retractions")
     vacuumRetractedShards(spark, stateDir)
-    // 2-4. doc-keyed artifacts: anti-join rewrites (swap discipline)
-    Dedup.forgetFromBandIndex(spark, s"$stateDir/band_index", forget)
-    Dedup.forgetFromChunkIndex(spark, s"$stateDir/chunk_index", forget)
-    // line index exists since r13 (older states predate it)
-    if (new org.apache.hadoop.fs.Path(s"$stateDir/line_index")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$stateDir/line_index")))
-      Dedup.forgetFromLineIndex(spark, s"$stateDir/line_index", forget)
-    graft.sources.Compact.compactInPlace(spark, s"$stateDir/eval_shingles",
-      transform = _.join(broadcast(forget.select(col("doc_id")
-          .as("eval_id"))), Seq("eval_id"), "left_anti"))
-    graft.sources.Compact.compactInPlace(spark, s"$stateDir/train_shingles",
-      transform = _.join(broadcast(forget.select(col("doc_id")
-          .as("train_id"))), Seq("train_id"), "left_anti"))
-    // 5. maintained kNN graph (present only when the graph gate ran):
+    // 2-5. every written state index (swap discipline; the cluster
+    // map relabels its touched buckets)
+    for (i <- stateIndexes; dir = s"$stateDir/${i.name}"
+         if written(spark, i, dir))
+      Dedup.forget(spark, i, dir, forget)
+    // 6. maintained kNN graph (present only when the graph gate ran):
     // the forgotten docs' vectors leave nodes/probes/edges and every
     // survivor top-k that cited one refills exactly
     val gDir = s"$stateDir/knn_graph"
-    val gfs = new org.apache.hadoop.fs.Path(gDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (gfs.exists(new org.apache.hadoop.fs.Path(gDir)))
+    if (exists(spark, gDir))
       Similarity.forgetFromKnnGraph(spark, gDir,
         forget.select(col("doc_id").as("vec_id")))
-    // 6. cluster map (present only once a day produced edges)
-    val mapDir = s"$stateDir/cluster_map"
-    val fs = new org.apache.hadoop.fs.Path(mapDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(mapDir)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(mapDir))
-          .exists(_.getPath.getName.startsWith("_cb=")))
-      Dedup.forgetFromClusterIndex(spark, mapDir, forget)
   }
 
   /** Fold the recall list into the shard storage: every day/split

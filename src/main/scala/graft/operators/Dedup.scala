@@ -523,79 +523,167 @@ object Dedup {
     * (hash, keeper) how many batch docs/occurrences carry it. Cost
     * tracks the batch — the corpus side is one distinct-hash
     * aggregate, at scale the maintained [[writeLineIndex]] artifact. */
-  def dedupLinesIncremental(corpus: DataFrame, batch: DataFrame): DataFrame = {
-    val cIdx = docLines(corpus)
-      .groupBy(col("h").as("line_hash")).agg(min(col("doc_id")).as("keeper_id"))
-    docLines(batch).withColumnRenamed("h", "line_hash")
-      .join(cIdx, "line_hash")
-      .groupBy(col("line_hash"), col("keeper_id"))
+  def dedupLinesIncremental(corpus: DataFrame, batch: DataFrame): DataFrame =
+    keeperHits(LineIndex, lineParts(batch),
+      keeperRows(LineIndex, lineParts(corpus)))
+      .orderBy(col("line_hash"))
+
+  private def lineParts(docs: DataFrame): DataFrame =
+    docLines(docs).withColumnRenamed("h", "line_hash")
+
+  // ---- Maintained indexes: described once, one forget, one compact ------
+
+  /** One append-maintained dedup index, described once. Erasure,
+    * compaction and the keeper-hash readers all go through the
+    * description, so a new maintained index is a new descriptor in
+    * [[maintainedIndexes]], not new verbs:
+    *
+    *   - `idCol` — the stored column [[forget]] matches: `keeper_id`
+    *     for the keeper-attributed hash indexes, `doc_id` or `vec_id`
+    *     for the per-doc ones, `node` for the cluster map;
+    *   - `hashKey` — set for the keeper-hash indexes (line, chunk,
+    *     span, winnow). Their appends may repeat a hash across
+    *     generations, so readers, [[compact]] and [[forget]] all
+    *     collapse to min(keeper_id) per hash ([[collapse]]); the
+    *     file-level indexes store distinct rows and have no collapse;
+    *   - `bucketForget` — set for the cluster map only. Its writes
+    *     replace the hash-bucket directories they touch, so it never
+    *     accretes files (no compaction), and erasure is its bounded
+    *     relabel instead of an anti-join rewrite. */
+  final case class MaintainedIndex(
+      name: String, idCol: String, hashKey: Option[String] = None,
+      bucketForget: Option[(SparkSession, String, DataFrame) => Unit] = None) {
+    /** The reader's view of stored rows: min(keeper_id) per hash for a
+      * keeper-hash index, the rows as stored otherwise. */
+    def collapse(rows: DataFrame): DataFrame = hashKey.fold(rows)(h =>
+      rows.groupBy(col(h)).agg(min(col("keeper_id")).as("keeper_id")))
+  }
+
+  val LineIndex = MaintainedIndex("line_index", "keeper_id", Some("line_hash"))
+  val ChunkIndex = MaintainedIndex("chunk_index", "keeper_id", Some("chunk_hash"))
+  val SpanIndex = MaintainedIndex("span_index", "keeper_id", Some("span_hash"))
+  val WinnowIndex = MaintainedIndex("winnow_index", "keeper_id", Some("h"))
+  val BandIndex = MaintainedIndex("band_index", "doc_id")
+  val SimhashIndex = MaintainedIndex("simhash_index", "doc_id")
+  val EmbCodeIndex = MaintainedIndex("emb_code_index", "vec_id")
+  val PhashIndex = MaintainedIndex("phash_index", "doc_id")
+  val ClusterMap = MaintainedIndex("cluster_map", "node",
+    bucketForget = Some(forgetClusterBuckets(_, _, _)))
+
+  /** Every maintained dedup index; ErasureSpec and CompactIndexSpec
+    * run their forget and compact cases over exactly this list. */
+  val maintainedIndexes: Seq[MaintainedIndex] = Seq(LineIndex, ChunkIndex,
+    SpanIndex, WinnowIndex, BandIndex, SimhashIndex, EmbCodeIndex,
+    PhashIndex, ClusterMap)
+
+  /** ERASE ids from a maintained index. `ids` holds them in its one
+    * column (doc ids; vector ids for the emb-code index). Stored rows
+    * whose `idCol` is forgotten are rewritten away and a keeper-hash
+    * index re-collapses, so the content fingerprint leaves with its
+    * attributed owner: a copy of erased content re-arrives NOVEL.
+    * Erasure removes the corpus's memory of the content, the
+    * deliberate consequence spec'd for every forget. The emb-code
+    * index stores the vectors themselves, so there the scrub is also
+    * a data deletion. The rewrite is a compaction too. */
+  def forget(s: SparkSession, index: MaintainedIndex, dir: String,
+             ids: DataFrame): Unit = {
+    require(ids.columns.length == 1,
+      s"forget takes one id column, got ${ids.columns.mkString(", ")}")
+    val victims = ids.select(col(ids.columns.head).as(index.idCol)).distinct()
+    index.bucketForget match {
+      case Some(relabel) => relabel(s, dir, victims)
+      case None => rewrite(s, index, dir, DefaultTargetBytes,
+        _.join(broadcast(victims), Seq(index.idCol), "left_anti"))
+    }
+  }
+
+  /** Periodic maintenance for a maintained index: ~30 daily appends
+    * leave ~30 small files whose per-file open cost comes to dominate
+    * the daily probe join. Re-collapse them in place, path-stable, so
+    * the day steps keep addressing the same directory; a keeper-hash
+    * index folds its min(keeper_id) collapse into the rewrite, which
+    * drops superseded rows and is reader-identical (spec'd in
+    * CompactIndexSpec). */
+  def compact(s: SparkSession, index: MaintainedIndex, dir: String,
+              targetBytes: Long = DefaultTargetBytes)
+      : graft.sources.Compact.CompactReport = {
+    require(index.bucketForget.isEmpty, s"${index.name} needs no " +
+      "compaction: each write replaces the bucket directories it touches")
+    rewrite(s, index, dir, targetBytes, identity)
+  }
+
+  private val DefaultTargetBytes = 128L << 20
+
+  /** The one rewrite every forget and compaction rides:
+    * [[graft.sources.Compact.compactInPlace]] (read, drop, collapse,
+    * swap). */
+  private def rewrite(s: SparkSession, index: MaintainedIndex, dir: String,
+                      targetBytes: Long, drop: DataFrame => DataFrame) =
+    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
+      transform = rows => index.collapse(drop(rows)))
+
+  /** The order every maintained-index day step keeps: the batch's
+    * detection is MATERIALIZED against the index before the batch's
+    * own rows append, so tomorrow's batch sees today's. A lazy plan
+    * would re-list the index after the write and report every batch
+    * row as its own duplicate. It is the micro-batch rule of
+    * Structured Streaming: read the state, then commit the output.
+    * Returns the materialized detection. */
+  private[graft] def detectThenAppend(dir: String, detection: DataFrame,
+                                      rows: DataFrame): DataFrame = {
+    val hits = detection.localCheckpoint() // eager: detect strictly before the append
+    rows.write.mode("append").parquet(dir)
+    hits
+  }
+
+  /** A keeper-hash index's rows for a frame decomposed into (doc_id,
+    * <hash key>) parts: one row per distinct hash, keeper = min
+    * doc_id. What the writer persists and a day step appends. */
+  private def keeperRows(index: MaintainedIndex, parts: DataFrame): DataFrame =
+    index.collapse(parts.select(col(index.hashKey.get),
+      col("doc_id").as("keeper_id")))
+
+  /** The detection of the keeper-hash family (line, chunk, span): per
+    * hash of the batch's parts found among `keepers`, its keeper and
+    * the batch docs / occurrences carrying it. */
+  private def keeperHits(index: MaintainedIndex, parts: DataFrame,
+                         keepers: DataFrame): DataFrame = {
+    val key = index.hashKey.get
+    parts.join(keepers, key)
+      .groupBy(col(key), col("keeper_id"))
       .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
         count(lit(1)).as("n_batch_occurrences"))
-      .orderBy(col("line_hash"))
   }
+
+  /** One day of a keeper-hash index loop (line, chunk, span) over the
+    * batch's parts, decomposed ONCE by the caller: [[keeperHits]]
+    * against the maintained index read through its collapse, then
+    * the batch's own keeper rows append. Loop invariant spec'd in
+    * DedupSpec: day-N detection ≡ the one-shot cross-set form of
+    * (corpus ∪ earlier batches, day-N batch). */
+  private def keeperHashStep(s: SparkSession, index: MaintainedIndex,
+                             dir: String, parts: DataFrame): DataFrame =
+    detectThenAppend(dir,
+      keeperHits(index, parts, index.collapse(s.read.parquet(dir))),
+      keeperRows(index, parts))
+      .orderBy(col(index.hashKey.get))
 
   /** Persist the corpus's line index — (line_hash, keeper_id), one row
     * per DISTINCT line (the C4 boilerplate-frequency table; repeated
     * navigation/footer lines collapse to single rows, so the artifact
     * is far smaller than the line stream). Appends from
     * [[dedupLinesIncrementalStep]] may repeat a hash across
-    * generations; readers re-aggregate min(keeper_id) per hash, and
-    * [[compactLineIndex]] folds the collapse into the periodic
-    * rewrite — the [[writeChunkIndex]] discipline verbatim. */
+    * generations; readers collapse through [[LineIndex]] and
+    * [[compact]] folds the collapse into the periodic rewrite. */
   def writeLineIndex(docs: DataFrame, dir: String): Unit =
-    docLines(docs)
-      .groupBy(col("h").as("line_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("overwrite").parquet(dir)
+    keeperRows(LineIndex, lineParts(docs)).write.mode("overwrite").parquet(dir)
 
-  /** One day of the line-dedup production loop: decompose the
-    * arriving batch ONCE, detect its corpus-known lines against the
-    * maintained index, then append the batch's own (hash, keeper)
-    * rows so tomorrow's batch sees today's lines. Detection is
-    * materialized BEFORE the append. Loop invariant spec'd in
-    * DedupSpec: day-N detection ≡ [[dedupLinesIncremental]] of
-    * (corpus ∪ earlier batches, day-N batch). */
+  /** One day of the line-dedup production loop ([[keeperHashStep]]);
+    * day-N detection ≡ [[dedupLinesIncremental]] of (corpus ∪ earlier
+    * batches, day-N batch). */
   def dedupLinesIncrementalStep(s: SparkSession, indexDir: String,
-                                batch: DataFrame): DataFrame = {
-    val bLines = docLines(batch).withColumnRenamed("h", "line_hash")
-      .localCheckpoint()
-    val idx = s.read.parquet(indexDir)
-      .groupBy(col("line_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-    val hits = bLines.join(idx, "line_hash")
-      .groupBy(col("line_hash"), col("keeper_id"))
-      .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
-        count(lit(1)).as("n_batch_occurrences"))
-      .localCheckpoint() // eager: detect strictly before the append
-    bLines.groupBy(col("line_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    hits.orderBy(col("line_hash"))
-  }
-
-  /** Periodic maintenance for the line-index log: min(keeper_id) per
-    * hash folded into the file rewrite, reader-identical, path
-    * stable — the [[compactChunkIndex]] collapse. */
-  def compactLineIndex(s: SparkSession, dir: String,
-                       targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
-      transform = _.groupBy(col("line_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
-
-  /** ERASE docs from the maintained line index — the keeper-attributed
-    * erasure semantics of the pipeline's chunk-index scrub: every
-    * (hash, keeper) row whose keeper is forgotten is rewritten away
-    * (the content fingerprint leaves with its attributed owner; a
-    * copy of erased content re-arrives NOVEL — erasure removes the
-    * corpus's memory of the content, the deliberate consequence
-    * spec'd for every forget verb), surviving generations re-collapse
-    * to min(keeper). Rides [[graft.sources.Compact.compactInPlace]]
-    * (read → anti-join → swap), so the pass doubles as a compaction. */
-  def forgetFromLineIndex(s: SparkSession, dir: String,
-                          ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")
-          .as("keeper_id")).distinct()), Seq("keeper_id"), "left_anti")
-        .groupBy(col("line_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
+                                batch: DataFrame): DataFrame =
+    keeperHashStep(s, LineIndex, indexDir, lineParts(batch).localCheckpoint())
 
   /** The excise form of the daily line loop — C4's removal semantics
     * applied incrementally: DROP from each batch doc every line the
@@ -612,8 +700,7 @@ object Dedup {
   def dedupLinesExciseIncrementalStep(s: SparkSession, indexDir: String,
                                       batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bLines = docLines(batch).withColumnRenamed("h", "line_hash")
-      .localCheckpoint()
+    val bLines = lineParts(batch).localCheckpoint()
     val idx = s.read.parquet(indexDir)
       .select(col("line_hash"), lit(1).as("_corpus_hit")).distinct()
     val rankW = Window.partitionBy(col("line_hash"))
@@ -631,10 +718,8 @@ object Dedup {
               struct(col("idx"), col("line"))))),
             x => x.getField("line")),
           "\n").as("out_text"))
-      .localCheckpoint() // eager: excise strictly before the append
-    bLines.groupBy(col("line_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    out.orderBy(col("doc_id"))
+    detectThenAppend(indexDir, out, keeperRows(LineIndex, bLines))
+      .orderBy(col("doc_id"))
   }
 
   /** One-shot NEW-BATCH vs CORPUS chunk detection — the chunk-granular
@@ -646,77 +731,33 @@ object Dedup {
     * corpus side is one distinct-hash aggregate, at scale a maintained
     * artifact ([[writeChunkIndex]]). */
   def dedupChunksIncremental(corpus: DataFrame, batch: DataFrame,
-                             w: Int = 16, divisor: Int = 64): DataFrame = {
-    val cIdx = chunkCdc(corpus, w, divisor)
-      .groupBy(col("chunk_hash")).agg(min(col("doc_id")).as("keeper_id"))
-    chunkCdc(batch, w, divisor)
-      .join(cIdx, "chunk_hash")
-      .groupBy(col("chunk_hash"), col("keeper_id"))
-      .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
-        count(lit(1)).as("n_batch_occurrences"))
+                             w: Int = 16, divisor: Int = 64): DataFrame =
+    keeperHits(ChunkIndex, chunkCdc(batch, w, divisor),
+      keeperRows(ChunkIndex, chunkCdc(corpus, w, divisor)))
       .orderBy(col("chunk_hash"))
-  }
 
   /** Persist the corpus's chunk index — (chunk_hash, keeper_id), one
     * row per DISTINCT CDC chunk hash (≈ text_bytes/divisor rows,
     * orders of magnitude smaller than the window stream): the
     * write-once artifact of the chunk-store dedup loop, mirroring
     * [[writeSpanIndex]]. Appends from [[dedupChunksIncrementalStep]]
-    * may repeat a hash across generations; readers re-aggregate
-    * min(keeper_id) per hash, and [[compactChunkIndex]] folds the
-    * collapse into the periodic rewrite. */
+    * may repeat a hash across generations; readers collapse through
+    * [[ChunkIndex]] and [[compact]] folds the collapse into the
+    * periodic rewrite. */
   def writeChunkIndex(docs: DataFrame, dir: String, w: Int = 16,
                       divisor: Int = 64): Unit =
-    chunkCdc(docs, w, divisor)
-      .groupBy(col("chunk_hash")).agg(min(col("doc_id")).as("keeper_id"))
+    keeperRows(ChunkIndex, chunkCdc(docs, w, divisor))
       .write.mode("overwrite").parquet(dir)
 
-  /** One day of the chunk-dedup production loop (the CDC analog of
-    * [[dedupSpansIncrementalStep]]): decompose the arriving batch
-    * ONCE, detect its corpus-known chunks against the maintained
-    * index, then append the batch's own (hash, keeper) rows so
-    * tomorrow's batch sees today's chunks. Detection is materialized
-    * BEFORE the append. Loop invariant spec'd in DedupSpec: day-N
+  /** One day of the chunk-dedup production loop ([[keeperHashStep]],
+    * the CDC analog of [[dedupSpansIncrementalStep]]); day-N
     * detection ≡ [[dedupChunksIncremental]] of (corpus ∪ earlier
     * batches, day-N batch). */
   def dedupChunksIncrementalStep(s: SparkSession, indexDir: String,
                                  batch: DataFrame, w: Int = 16,
-                                 divisor: Int = 64): DataFrame = {
-    val bChunks = chunkCdc(batch, w, divisor).localCheckpoint()
-    val idx = s.read.parquet(indexDir)
-      .groupBy(col("chunk_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-    val hits = bChunks.join(idx, "chunk_hash")
-      .groupBy(col("chunk_hash"), col("keeper_id"))
-      .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
-        count(lit(1)).as("n_batch_occurrences"))
-      .localCheckpoint() // eager: detect strictly before the append
-    bChunks.groupBy(col("chunk_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    hits.orderBy(col("chunk_hash"))
-  }
-
-  /** Periodic maintenance for the chunk-index log: same semantic
-    * collapse as [[compactSpanIndex]] — min(keeper_id) per hash folded
-    * into the file rewrite, reader-identical, path stable. */
-  def compactChunkIndex(s: SparkSession, dir: String,
-                        targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
-      transform = _.groupBy(col("chunk_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
-
-  /** ERASE docs from the maintained chunk index — the
-    * keeper-attributed erasure semantics ([[forgetFromLineIndex]] has
-    * the full contract) on the CDC chunk rows; the standalone form of
-    * the scrub [[graft.Pipeline.forgetDocs]] runs over its own chunk
-    * index. */
-  def forgetFromChunkIndex(s: SparkSession, dir: String,
-                           ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")
-          .as("keeper_id")).distinct()), Seq("keeper_id"), "left_anti")
-        .groupBy(col("chunk_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
+                                 divisor: Int = 64): DataFrame =
+    keeperHashStep(s, ChunkIndex, indexDir,
+      chunkCdc(batch, w, divisor).localCheckpoint())
 
   /** The excise form of the daily chunk loop — what an incremental
     * curation pipeline actually runs per day: cut from each batch doc
@@ -762,10 +803,8 @@ object Dedup {
         (id, nc, ne, sb.toString)
       }
       .toDF("doc_id", "n_chunks", "n_excised", "excised_text")
-      .localCheckpoint() // eager: excise strictly before the append
-    bChunks.groupBy(col("chunk_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    out.orderBy(col("doc_id"))
+    detectThenAppend(indexDir, out, keeperRows(ChunkIndex, bChunks))
+      .orderBy(col("doc_id"))
   }
 
   /** dedup_spans_excise: the REMOVAL half of span dedup — the
@@ -967,8 +1006,7 @@ object Dedup {
   def dedupWinnowIncremental(corpus: DataFrame, batch: DataFrame,
                              k: Int = WinnowK, w: Int = WinnowW,
                              minShared: Long = 2): DataFrame = {
-    val cIdx = winnowedFingerprints(corpus, k, w)
-      .groupBy(col("h")).agg(min(col("doc_id")).as("keeper_id"))
+    val cIdx = keeperRows(WinnowIndex, winnowedFingerprints(corpus, k, w))
     winnowedFingerprints(batch, k, w)
       .select(col("doc_id"), col("h")).distinct()
       .join(cIdx, "h")
@@ -981,20 +1019,19 @@ object Dedup {
   /** Persist the corpus's winnow index — (h, keeper_id), one row per
     * DISTINCT fingerprint hash (~2/(w+1) of the span index's rows).
     * Appends from [[dedupWinnowIncrementalStep]] may repeat a hash
-    * across generations; readers re-aggregate min(keeper_id), and
-    * [[compactWinnowIndex]] folds the collapse — the
-    * [[writeLineIndex]] discipline verbatim. */
+    * across generations; readers collapse through [[WinnowIndex]] and
+    * [[compact]] folds the collapse — the [[writeLineIndex]]
+    * discipline verbatim. */
   def writeWinnowIndex(docs: DataFrame, dir: String,
                        k: Int = WinnowK, w: Int = WinnowW): Unit =
-    winnowedFingerprints(docs, k, w)
-      .groupBy(col("h")).agg(min(col("doc_id")).as("keeper_id"))
+    keeperRows(WinnowIndex, winnowedFingerprints(docs, k, w))
       .write.mode("overwrite").parquet(dir)
 
   /** One day of the winnow production loop: fingerprint the arriving
     * batch ONCE, detect its corpus-known fingerprints against the
     * maintained index, then append the batch's own (h, keeper) rows
-    * so tomorrow's batch sees today's docs. Detection materializes
-    * BEFORE the append. Loop invariant spec'd: day-N detection ≡
+    * so tomorrow's batch sees today's docs ([[detectThenAppend]]).
+    * Loop invariant spec'd: day-N detection ≡
     * [[dedupWinnowIncremental]] of (corpus ∪ earlier batches,
     * day-N batch). */
   def dedupWinnowIncrementalStep(s: SparkSession, indexDir: String,
@@ -1004,38 +1041,14 @@ object Dedup {
     val bFp = winnowedFingerprints(batch, k, w)
       .select(col("doc_id"), col("h")).distinct()
       .localCheckpoint()
-    val idx = s.read.parquet(indexDir)
-      .groupBy(col("h")).agg(min(col("keeper_id")).as("keeper_id"))
-    val hits = bFp.join(idx, "h")
-      .groupBy(col("doc_id").as("batch_id"), col("keeper_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .localCheckpoint() // eager: detect strictly before the append
-    bFp.groupBy(col("h")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    hits.orderBy(col("batch_id"), col("keeper_id"))
+    detectThenAppend(indexDir,
+      bFp.join(WinnowIndex.collapse(s.read.parquet(indexDir)), "h")
+        .groupBy(col("doc_id").as("batch_id"), col("keeper_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared),
+      keeperRows(WinnowIndex, bFp))
+      .orderBy(col("batch_id"), col("keeper_id"))
   }
-
-  /** Periodic maintenance for the winnow-index log: min(keeper_id)
-    * per hash folded into the file rewrite, reader-identical. */
-  def compactWinnowIndex(s: SparkSession, dir: String,
-                         targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
-      transform = _.groupBy(col("h"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
-
-  /** ERASE docs from the maintained winnow index —
-    * [[forgetFromLineIndex]]'s keeper-attributed semantics on the
-    * fingerprint rows: forgotten keepers' (h, keeper) rows vanish in
-    * one compact-swap rewrite. */
-  def forgetFromWinnowIndex(s: SparkSession, dir: String,
-                            ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")
-          .as("keeper_id")).distinct()), Seq("keeper_id"), "left_anti")
-        .groupBy(col("h"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
 
   /** dedup_spans_incremental: NEW-BATCH vs STANDING-CORPUS span
     * dedup — the substring-granularity member of the incremental
@@ -1057,77 +1070,31 @@ object Dedup {
   }
 
   def dedupSpansIncremental(corpus: DataFrame, batch: DataFrame,
-                            spanLen: Int = 32): DataFrame = {
-    val cIdx = spansWithOffsets(corpus, spanLen)
-      .groupBy(col("span_hash")).agg(min(col("doc_id")).as("keeper_id"))
-    spansWithOffsets(batch, spanLen)
-      .join(cIdx, "span_hash")
-      .groupBy(col("span_hash"), col("keeper_id"))
-      .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
-        count(lit(1)).as("n_batch_occurrences"))
+                            spanLen: Int = 32): DataFrame =
+    keeperHits(SpanIndex, spansWithOffsets(batch, spanLen),
+      keeperRows(SpanIndex, spansWithOffsets(corpus, spanLen)))
       .orderBy(col("span_hash"))
-  }
 
   /** Persist the corpus's span index — (span_hash, keeper_id), one
     * row per DISTINCT window hash (orders of magnitude smaller than
     * the raw window stream): the write-once artifact
     * [[dedupSpansIncremental]]'s corpus side assumes. Appends from
     * [[dedupSpansIncrementalStep]] may repeat a hash across
-    * generations; readers re-aggregate min(keeper_id) per hash (the
-    * step does), and a periodic [[graft.sources.Compact]] pass
-    * re-collapses the log. */
+    * generations; readers collapse through [[SpanIndex]] (the step
+    * does), and a periodic [[compact]] pass re-collapses the log. */
   def writeSpanIndex(docs: DataFrame, dir: String, spanLen: Int = 32): Unit =
-    spansWithOffsets(docs, spanLen)
-      .groupBy(col("span_hash")).agg(min(col("doc_id")).as("keeper_id"))
+    keeperRows(SpanIndex, spansWithOffsets(docs, spanLen))
       .write.mode("overwrite").parquet(dir)
 
-  /** One day of the span-dedup production loop (the substring analog
-    * of [[dedupIncrementalStep]]): window the arriving batch ONCE,
-    * detect its corpus-known spans against the maintained index, then
-    * append the batch's own (hash, keeper) rows so tomorrow's batch
-    * sees today's spans. Detection is materialized BEFORE the append.
-    * Loop invariant spec'd in DedupSpec: day-N detection ≡
-    * [[dedupSpansIncremental]] of (corpus ∪ earlier batches, day-N
-    * batch). */
+  /** One day of the span-dedup production loop ([[keeperHashStep]],
+    * the substring analog of [[dedupIncrementalStep]]); day-N
+    * detection ≡ [[dedupSpansIncremental]] of (corpus ∪ earlier
+    * batches, day-N batch). */
   def dedupSpansIncrementalStep(s: SparkSession, indexDir: String,
                                 batch: DataFrame,
-                                spanLen: Int = 32): DataFrame = {
-    val bSpans = spansWithOffsets(batch, spanLen).localCheckpoint()
-    val idx = s.read.parquet(indexDir)
-      .groupBy(col("span_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-    val hits = bSpans.join(idx, "span_hash")
-      .groupBy(col("span_hash"), col("keeper_id"))
-      .agg(countDistinct(col("doc_id")).as("n_batch_docs"),
-        count(lit(1)).as("n_batch_occurrences"))
-      .localCheckpoint() // eager: detect strictly before the append
-    bSpans.groupBy(col("span_hash")).agg(min(col("doc_id")).as("keeper_id"))
-      .write.mode("append").parquet(indexDir)
-    hits.orderBy(col("span_hash"))
-  }
-
-  /** Periodic maintenance for the span-index log: appends repeat a
-    * hash across generations, so compaction folds the SEMANTIC
-    * collapse readers already apply — min(keeper_id) per hash — into
-    * the file rewrite. Reader-identical (spec'd), superseded rows
-    * dropped, path stable. */
-  def compactSpanIndex(s: SparkSession, dir: String,
-                       targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes,
-      transform = _.groupBy(col("span_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
-
-  /** ERASE docs from the maintained span index —
-    * [[forgetFromLineIndex]]'s keeper-attributed semantics on the
-    * window-hash rows: forgotten keepers' (span_hash, keeper) rows
-    * vanish in one compact-swap rewrite. */
-  def forgetFromSpanIndex(s: SparkSession, dir: String,
-                          ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")
-          .as("keeper_id")).distinct()), Seq("keeper_id"), "left_anti")
-        .groupBy(col("span_hash"))
-        .agg(min(col("keeper_id")).as("keeper_id")))
+                                spanLen: Int = 32): DataFrame =
+    keeperHashStep(s, SpanIndex, indexDir,
+      spansWithOffsets(batch, spanLen).localCheckpoint())
 
   /** dedup_spans_maximal: VARIABLE-LENGTH repeated-substring dedup —
     * the suffix-array semantics of Lee et al.'s dedup (maximal shared
@@ -1604,11 +1571,9 @@ object Dedup {
   /** One day of the production loop (the cadence of the reference's
     * daily batch runs): band the arriving batch ONCE, detect its
     * near-dups against the maintained index, then append the batch's
-    * bands so tomorrow's batch sees today's docs. Detection is
-    * materialized BEFORE the append (a lazy plan would re-list the
-    * index after the write and report every batch doc as its own
-    * duplicate). Per-day cost tracks the day's batch + the index
-    * scan — the corpus text is never touched again.
+    * bands so tomorrow's batch sees today's docs
+    * ([[detectThenAppend]]). Per-day cost tracks the day's batch + the
+    * index scan — the corpus text is never touched again.
     *
     * Loop invariant (spec'd in DedupSpec): running day-1 then day-2
     * against the maintained artifact yields exactly the one-shot
@@ -1619,37 +1584,15 @@ object Dedup {
   def dedupIncrementalStep(s: SparkSession, indexDir: String,
                            batch: DataFrame): DataFrame = {
     val bands = minhashBands(batch).localCheckpoint()
-    val hits = s.read.parquet(indexDir).as("c")
-      .join(bands.hint("shuffle_hash").as("b"),
-        col("c.band") === col("b.band") && col("c.sig") === col("b.sig"))
-      .select(col("c.doc_id").as("corpus_id"), col("b.doc_id").as("batch_id"))
-      .distinct()
-      .localCheckpoint() // eager: detect strictly before the append
-    bands.write.mode("append").parquet(indexDir)
-    hits.orderBy(col("corpus_id"), col("batch_id"))
+    detectThenAppend(indexDir,
+      s.read.parquet(indexDir).as("c")
+        .join(bands.hint("shuffle_hash").as("b"),
+          col("c.band") === col("b.band") && col("c.sig") === col("b.sig"))
+        .select(col("c.doc_id").as("corpus_id"), col("b.doc_id").as("batch_id"))
+        .distinct(),
+      bands)
+      .orderBy(col("corpus_id"), col("batch_id"))
   }
-
-  /** Periodic maintenance for the band-index artifact: ~30 daily
-    * appends leave ~30 small files whose per-file open cost comes to
-    * dominate the daily probe join — re-collapse them in place
-    * (path-stable, so [[dedupIncrementalStep]] keeps addressing the
-    * same directory; content-identical, spec'd in DedupSpec). */
-  def compactBandIndex(s: SparkSession, dir: String,
-                       targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes)
-
-  /** ERASE docs from the maintained band index — rows of the
-    * forgotten docs rewritten away (their bands must stop matching
-    * future arrivals: a copy of erased content re-arrives NOVEL;
-    * [[forgetFromLineIndex]] has the full contract). The standalone
-    * form of the scrub [[graft.Pipeline.forgetDocs]] runs over its
-    * own band index. */
-  def forgetFromBandIndex(s: SparkSession, dir: String,
-                          ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti"))
 
   /** Maintained CLUSTER-MAP artifact — the incremental form of the CC
     * capstone, closing the loop the maintained band/span/emb/phash
@@ -1685,7 +1628,8 @@ object Dedup {
     * step REPLACES each touched bucket's directory (dynamic partition
     * overwrite of bucket-clustered rows), so file count stays bounded
     * by the bucket count however many days run — spec'd in
-    * CompactIndexSpec alongside the six compaction loops. */
+    * CompactIndexSpec alongside the compaction loops; [[compact]]
+    * refuses [[ClusterMap]]. */
 
   /** One day of incremental clustering: relabel ONLY the clusters the
     * day's edges touch. An existing cluster is represented in the
@@ -1784,9 +1728,12 @@ object Dedup {
       .orderBy(col("cluster_size"))
   }
 
-  /** REMOVE nodes from the maintained cluster map — the erasure half
-    * of the incremental-clustering loop ([[ccIncrementalStep]] adds
-    * edges; this forgets documents): rows of forgotten nodes vanish,
+  /** REMOVE nodes from the maintained cluster map — the
+    * `bucketForget` of [[ClusterMap]], run by [[forget]], and the
+    * erasure half of the incremental-clustering loop
+    * ([[ccIncrementalStep]] adds edges; this forgets documents). The
+    * `victims` frame holds the forgotten ids as `node`. Rows of
+    * forgotten nodes vanish,
     * and clusters whose LABEL was a forgotten doc (cluster_id = min
     * member) relabel their remaining members to the new min — a
     * label IS a doc id, so erasure must not leave it behind. Same
@@ -1795,11 +1742,11 @@ object Dedup {
     * partition overwrite), carry-buckets protect untouched rows
     * where a NEW label hashes outside the touched set, drained
     * buckets are deleted. */
-  def forgetFromClusterIndex(s: SparkSession, dir: String, ids: DataFrame,
-                             buckets: Int = 1024): Unit = {
+  private def forgetClusterBuckets(s: SparkSession, dir: String,
+                                   victims: DataFrame,
+                                   buckets: Int = 1024): Unit = {
     val map = s.read.parquet(dir)
-    val forget = ids.select(col("doc_id").as("node")).distinct()
-      .localCheckpoint()
+    val forget = victims.localCheckpoint()
     val touched = map.join(forget, Seq("node"))
       .select(col("cluster_id")).distinct().localCheckpoint()
     if (touched.limit(1).count() == 0) return
@@ -2010,23 +1957,6 @@ object Dedup {
                             excludeSelf: Boolean = false): DataFrame =
     bandedTopK(s.read.parquet(indexDir), simhashSignatures(batch),
       "simhash", k, maxHamming, numChunks, excludeSelf)
-
-  /** Periodic maintenance for the simhash-signature artifact —
-    * file-level re-collapse of daily appends (content-identical,
-    * path-stable). */
-  def compactSimhashIndex(s: SparkSession, dir: String,
-                          targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes)
-
-  /** ERASE docs from the maintained simhash index — the forgotten
-    * docs' signature rows rewritten away (a copy of erased content
-    * re-arrives NOVEL; [[forgetFromLineIndex]] has the contract). */
-  def forgetFromSimhashIndex(s: SparkSession, dir: String,
-                             ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti"))
 
   /** hamming_topk over the planted corpus: queries = the original
     * docs that own a planted twin (doc_id < 50), so every query has
@@ -2591,9 +2521,7 @@ object Dedup {
     * collisions scored in-join by the native cosine, the batch side
     * replicated over the stored salt groups exactly as in
     * [[dedupEmbIncremental]] — then append the batch's coded rows so
-    * tomorrow's batch sees today's vectors. Detection is materialized
-    * BEFORE the append (a lazy plan would re-list the index after the
-    * write and report every batch vector as its own duplicate).
+    * tomorrow's batch sees today's vectors ([[detectThenAppend]]).
     * Per-day cost tracks the day's batch and the index scan; corpus
     * embeddings are never re-hashed.
     *
@@ -2609,9 +2537,13 @@ object Dedup {
     // parameter: a step run with a different G than the writer would
     // silently lose every pair whose corpus group the batch never
     // replicated into — so read it from the stored _g domain (a
-    // stats-only max over one int column)
-    val groups = s.read.parquet(indexDir)
-      .agg(max(col("_g"))).head.getInt(0) + 1
+    // stats-only max over one int column). A drained index (every
+    // vector forgotten) has no domain left: its next rows take the
+    // writer's default count.
+    val stored = s.read.parquet(indexDir).agg(max(col("_g"))).head
+    val groups =
+      if (stored.isNullAt(0)) defaultSaltGroups(g.tables, g.bits)
+      else stored.getInt(0) + 1
     val bc = s.sparkContext.broadcast(
       Similarity.lshPlanes(g.tables, g.bits))
     // the batch's index rows: coded once, with their own one-group
@@ -2625,40 +2557,19 @@ object Dedup {
       else bCodes.drop("_g")
         .withColumn("_g", explode(sequence(lit(0), lit(groups - 1))))
         .hint("shuffle_hash").as("b")
-    val hits = s.read.parquet(indexDir).as("c")
-      .join(bJoin,
-        col("c.tid") === col("b.tid") && col("c.code") === col("b.code") &&
-        col("c._g") === col("b._g"))
-      .select(col("c.vec_id").as("corpus_id"), col("b.vec_id").as("batch_id"),
-        round(graft.functions.CosineSimilarity.cosineSim(
-          col("c.embedding"), col("b.embedding")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= tau)
-      .distinct()
-      .localCheckpoint() // eager: detect strictly before the append
-    bCodes.write.mode("append").parquet(indexDir)
-    hits.orderBy(col("corpus_id"), col("batch_id"))
+    detectThenAppend(indexDir,
+      s.read.parquet(indexDir).as("c")
+        .join(bJoin,
+          col("c.tid") === col("b.tid") && col("c.code") === col("b.code") &&
+          col("c._g") === col("b._g"))
+        .select(col("c.vec_id").as("corpus_id"), col("b.vec_id").as("batch_id"),
+          round(graft.functions.CosineSimilarity.cosineSim(
+            col("c.embedding"), col("b.embedding")), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= tau)
+        .distinct(),
+      bCodes)
+      .orderBy(col("corpus_id"), col("batch_id"))
   }
-
-  /** Periodic maintenance for the emb code-index artifact — the
-    * file-level re-collapse of [[dedupEmbIncrementalStep]]'s daily
-    * appends (content-identical; the stored `_g` salt domain rides
-    * along untouched, so the step's derived group count is stable). */
-  def compactEmbCodeIndex(s: SparkSession, dir: String,
-                          targetBytes: Long = 128L << 20)
-      : graft.sources.Compact.CompactReport =
-    graft.sources.Compact.compactInPlace(s, dir, targetBytes)
-
-  /** ERASE vectors from the maintained emb-code index — the coded
-    * rows (and the embeddings they carry) of the forgotten vec_ids
-    * rewritten away ([[forgetFromLineIndex]] has the erasure
-    * contract; here the artifact stores the vectors themselves, so
-    * the scrub is also a data deletion, not just a fingerprint
-    * one). */
-  def forgetFromEmbCodeIndex(s: SparkSession, dir: String,
-                             ids: DataFrame): Unit =
-    graft.sources.Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
 
   /** dedup_emb_clusters: embedding near-dup pairs → connected
     * components → (vec_id, cluster_id) — the step that turns the

@@ -3204,8 +3204,8 @@ object Similarity {
     }
 
   /** ERASE vectors from the maintained kNN-graph artifact — the graph
-    * loop's right-to-be-forgotten verb ([[graft.operators.Dedup
-    * .forgetFromClusterIndex]]'s obligation applied to edges: a
+    * loop's right-to-be-forgotten verb (the cluster map's relabel
+    * obligation in [[graft.operators.Dedup.forget]] applied to edges: a
     * stored top-k row IS a reference to a vec id, so erasure must
     * both drop the forgotten nodes' own adjacency AND refill every
     * survivor whose top-k cited one):

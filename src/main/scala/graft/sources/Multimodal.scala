@@ -520,39 +520,23 @@ object Multimodal {
     * arriving batch ONCE, detect its near-dups against the maintained
     * signature index (cross-set banding join — corpus images never
     * re-decoded), then append the batch's signatures so tomorrow's
-    * batch sees today's images. Detection is materialized BEFORE the
-    * append. Loop invariant spec'd in TextSpec: day-N detection ≡
-    * [[phashIncremental]] of (corpus ∪ earlier batches, day-N batch). */
+    * batch sees today's images ([[graft.operators.Dedup
+    * .detectThenAppend]]). The index is maintained as
+    * [[graft.operators.Dedup.PhashIndex]]. Loop invariant spec'd in
+    * TextSpec: day-N detection ≡ [[phashIncremental]] of (corpus ∪
+    * earlier batches, day-N batch). */
   def dedupPhashIncrementalStep(s: SparkSession, indexDir: String,
                                 batch: DataFrame, maxHamming: Int = 3,
                                 numChunks: Int = 6): DataFrame = {
     val bSigs = phashSignatures(batch).localCheckpoint()
-    val hits = graft.operators.Dedup
-      .bandedHammingCandidatesAcross(s.read.parquet(indexDir), bSigs,
-        "phash", maxHamming, numChunks)
-      .filter(col("hamming") <= maxHamming)
-      .localCheckpoint() // eager: detect strictly before the append
-    bSigs.write.mode("append").parquet(indexDir)
-    hits.orderBy(col("corpus_id"), col("batch_id"))
+    graft.operators.Dedup.detectThenAppend(indexDir,
+      graft.operators.Dedup
+        .bandedHammingCandidatesAcross(s.read.parquet(indexDir), bSigs,
+          "phash", maxHamming, numChunks)
+        .filter(col("hamming") <= maxHamming),
+      bSigs)
+      .orderBy(col("corpus_id"), col("batch_id"))
   }
-
-  /** Periodic maintenance for the phash-index artifact — file-level
-    * re-collapse of [[dedupPhashIncrementalStep]]'s daily appends
-    * (content-identical, path stable). */
-  def compactPhashIndex(s: SparkSession, dir: String,
-                        targetBytes: Long = 128L << 20)
-      : Compact.CompactReport =
-    Compact.compactInPlace(s, dir, targetBytes)
-
-  /** ERASE docs from the maintained phash index — the forgotten
-    * docs' signature rows rewritten away (a re-upload of an erased
-    * image re-arrives NOVEL; [[graft.operators.Dedup
-    * .forgetFromLineIndex]] has the erasure contract). */
-  def forgetFromPhashIndex(s: SparkSession, dir: String,
-                           ids: DataFrame): Unit =
-    Compact.compactInPlace(s, dir,
-      transform = _.join(broadcast(ids.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti"))
 
   /** dedup_phash_clusters: the image-dedup CAPSTONE — [[phashDups]]
     * pairs → connected components → (doc_id, cluster_id) keeper map,

@@ -4,7 +4,7 @@ import graft.operators.{Dedup, Search, Similarity}
 import graft.sources.{Compact, Multimodal}
 import org.apache.spark.sql.functions._
 
-/** Compaction composed into the five maintained-index append loops:
+/** Compaction composed into the maintained-index append loops:
   * after N daily appends the artifact's file count has grown by ~N,
   * a [[Compact.compactInPlace]] pass collapses it back to
   * ceil(bytes/target), and detection/serving results are IDENTICAL
@@ -27,22 +27,133 @@ class CompactIndexSpec extends SparkSpec {
     docs.filter(col("doc_id") < 3)
       .withColumn("doc_id", col("doc_id") + i * 1000L))
 
-  test("band index: compaction collapses append files, content identical") {
-    val dir = tmp("bandcompact")
-    Dedup.writeBandIndex(docs, dir)
-    batches.foreach(b => Dedup.dedupIncrementalStep(spark, dir, b))
+  /** One compaction case per append-maintained dedup index: `build`
+    * writes the index and appends three daily batches, `cols` are the
+    * columns compared (all when empty), `dayAfter` runs a
+    * post-compaction day with an exact copy of doc 1 and says whether
+    * it still finds doc 1 through the compacted, path-stable index. */
+  private case class Case(index: Dedup.MaintainedIndex, title: String,
+                          build: String => Unit, dayAfter: String => Boolean,
+                          cols: Seq[String] = Nil)
+
+  private def copyOfDoc1(offset: Long) = docs.filter(col("doc_id") === 1)
+    .withColumn("doc_id", col("doc_id") + offset)
+
+  private def keeper1(day: org.apache.spark.sql.DataFrame) =
+    day.collect().exists(_.getAs[Long]("keeper_id") == 1L)
+
+  private def pair(day: org.apache.spark.sql.DataFrame, corpus: Long,
+                   batch: Long) =
+    day.collect().map(r => (r.getLong(0), r.getLong(1))).contains((corpus, batch))
+
+  private def emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 60)
+
+  private val cases = Seq(
+    Case(Dedup.BandIndex,
+      "band index: compaction collapses append files, content identical",
+      dir => {
+        Dedup.writeBandIndex(docs, dir)
+        batches.foreach(b => Dedup.dedupIncrementalStep(spark, dir, b))
+      },
+      dir => pair(Dedup.dedupIncrementalStep(spark, dir, copyOfDoc1(9000L)),
+        1L, 9001L)),
+    Case(Dedup.SpanIndex,
+      "span index: compaction folds the min-keeper collapse, reader-identical",
+      dir => {
+        Dedup.writeSpanIndex(docs, dir)
+        batches.foreach(b => Dedup.dedupSpansIncrementalStep(spark, dir, b))
+      },
+      dir => keeper1(Dedup.dedupSpansIncrementalStep(spark, dir,
+        copyOfDoc1(9000L)))),
+    Case(Dedup.ChunkIndex,
+      "chunk index: compaction folds the min-keeper collapse, reader-identical",
+      dir => {
+        Dedup.writeChunkIndex(docs, dir)
+        batches.foreach(b => Dedup.dedupChunksIncrementalStep(spark, dir, b))
+      },
+      dir => keeper1(Dedup.dedupChunksIncrementalStep(spark, dir,
+        copyOfDoc1(9000L)))),
+    Case(Dedup.LineIndex,
+      "line index: compaction folds the min-keeper collapse, reader-identical",
+      dir => {
+        Dedup.writeLineIndex(docs, dir)
+        batches.foreach(b => Dedup.dedupLinesIncrementalStep(spark, dir, b))
+      },
+      dir => keeper1(Dedup.dedupLinesIncrementalStep(spark, dir,
+        copyOfDoc1(9000L)))),
+    Case(Dedup.WinnowIndex,
+      "winnow index: compaction folds the min-keeper collapse, reader-identical",
+      dir => {
+        Dedup.writeWinnowIndex(docs, dir)
+        batches.foreach(b => Dedup.dedupWinnowIncrementalStep(spark, dir, b))
+      },
+      dir => keeper1(Dedup.dedupWinnowIncrementalStep(spark, dir,
+        copyOfDoc1(9000L)))),
+    Case(Dedup.EmbCodeIndex,
+      "emb code index: compaction preserves content and the salt domain",
+      dir => {
+        Dedup.writeEmbCodeIndex(emb, dir)
+        (1 to 3).foreach { i =>
+          Dedup.dedupEmbIncrementalStep(spark, dir,
+            emb.filter(col("vec_id") < 2)
+              .withColumn("vec_id", col("vec_id") + i * 1000L))
+        }
+      },
+      dir => pair(Dedup.dedupEmbIncrementalStep(spark, dir,
+        emb.filter(col("vec_id") === 1)
+          .withColumn("vec_id", col("vec_id") + 9000L)), 1L, 9001L),
+      cols = Seq("vec_id", "tid", "code", "_g")),
+    Case(Dedup.PhashIndex,
+      "phash index: compaction preserves content, loop keeps running",
+      dir => {
+        Multimodal.writePhashIndex(docs, dir)
+        batches.foreach(b => Multimodal.dedupPhashIncrementalStep(spark, dir, b))
+      },
+      // image dims derive from doc_id mod 16 and mod 12: an offset of
+      // 9600 keeps the copy's dims, so it is an exact image replica
+      dir => pair(Multimodal.dedupPhashIncrementalStep(spark, dir,
+        copyOfDoc1(9600L)), 1L, 9601L)),
+    Case(Dedup.SimhashIndex,
+      "simhash index: compaction preserves content, loop keeps running",
+      dir => {
+        Dedup.writeSimhashIndex(docs, dir)
+        batches.foreach(b => Dedup.simhashSignatures(b)
+          .write.mode("append").parquet(dir))
+      },
+      dir => Dedup.hammingTopKServeBatch(spark, dir, copyOfDoc1(9000L))
+        .collect().exists(r => r.getAs[Long]("doc_id") == 1L &&
+          r.getAs[Int]("hamming") == 0)))
+
+  test("every maintained index has a compaction case") {
+    // the cluster map is the one index that needs none (its own test
+    // below); every other descriptor must be compacted here
+    assert(cases.map(_.index).toSet + Dedup.ClusterMap ==
+      Dedup.maintainedIndexes.toSet)
+  }
+
+  for (c <- cases) test(c.title) {
+    val dir = tmp(c.index.name)
+    c.build(dir)
     val before = parquetFiles(dir)
     assert(before >= 4, s"appends did not accrete files ($before)")
-    val content = spark.read.parquet(dir).collect().map(_.toSeq).toSet
-    val rep = Dedup.compactBandIndex(spark, dir)
+    // what a reader sees: the descriptor's collapse of the stored rows
+    def readerView() = {
+      val v = c.index.collapse(spark.read.parquet(dir))
+      (if (c.cols.isEmpty) v else v.select(c.cols.map(col): _*))
+        .collect().map(_.toSeq).toSet
+    }
+    val view = readerView()
+    val rawRows = spark.read.parquet(dir).count()
+    val rep = Dedup.compact(spark, c.index, dir)
     assert(rep.filesOut < before && parquetFiles(dir) == rep.filesOut)
-    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == content)
+    // a keeper-hash index's semantic collapse dropped the superseded
+    // generations; a file-level index keeps every row
+    if (c.index.hashKey.nonEmpty) assert(spark.read.parquet(dir).count() < rawRows)
+    else assert(spark.read.parquet(dir).count() == rawRows)
+    // ...but the reader's view is identical
+    assert(readerView() == view)
     // the loop keeps running against the compacted, path-stable artifact
-    val b4 = docs.filter(col("doc_id") === 1)
-      .withColumn("doc_id", col("doc_id") + 9000L)
-    val day4 = Dedup.dedupIncrementalStep(spark, dir, b4).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(day4.contains((1L, 9001L)), "post-compaction step lost detections")
+    assert(c.dayAfter(dir), "post-compaction step lost detections")
   }
 
   test("cluster map needs NO compaction: daily rewrites replace, never accrete") {
@@ -63,113 +174,10 @@ class CompactIndexSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((101 to 110).forall(i => got(i.toLong) == 10L))
     assert(got(11L) == 10L && got(1L) == 1L && got(21L) == 20L)
-  }
-
-  test("span index: compaction folds the min-keeper collapse, reader-identical") {
-    val dir = tmp("spancompact")
-    Dedup.writeSpanIndex(docs, dir)
-    batches.foreach(b => Dedup.dedupSpansIncrementalStep(spark, dir, b))
-    val before = parquetFiles(dir)
-    val readerView = spark.read.parquet(dir)
-      .groupBy(col("span_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet
-    val rawRows = spark.read.parquet(dir).count()
-    val rep = Dedup.compactSpanIndex(spark, dir)
-    assert(rep.filesOut < before)
-    // semantic collapse dropped the superseded generations...
-    assert(spark.read.parquet(dir).count() < rawRows)
-    // ...but the reader's aggregated view is identical
-    assert(spark.read.parquet(dir)
-      .groupBy(col("span_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet == readerView)
-  }
-
-  test("chunk index: compaction folds the min-keeper collapse, reader-identical") {
-    val dir = tmp("chunkcompact")
-    Dedup.writeChunkIndex(docs, dir)
-    batches.foreach(b => Dedup.dedupChunksIncrementalStep(spark, dir, b))
-    val before = parquetFiles(dir)
-    val readerView = spark.read.parquet(dir)
-      .groupBy(col("chunk_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet
-    val rawRows = spark.read.parquet(dir).count()
-    val rep = Dedup.compactChunkIndex(spark, dir)
-    assert(rep.filesOut < before)
-    // semantic collapse dropped the superseded generations...
-    assert(spark.read.parquet(dir).count() < rawRows)
-    // ...but the reader's aggregated view is identical
-    assert(spark.read.parquet(dir)
-      .groupBy(col("chunk_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet == readerView)
-    // the loop keeps running against the compacted, path-stable artifact
-    val b4 = docs.filter(col("doc_id") === 1)
-      .withColumn("doc_id", col("doc_id") + 9000L)
-    val day4 = Dedup.dedupChunksIncrementalStep(spark, dir, b4).collect()
-      .map(r => (r.getAs[Long]("keeper_id"), r.getAs[Long]("n_batch_docs")))
-    assert(day4.exists(_._1 == 1L), "post-compaction step lost detections")
-  }
-
-  test("line index: compaction folds the min-keeper collapse, reader-identical") {
-    val dir = tmp("linecompact")
-    Dedup.writeLineIndex(docs, dir)
-    batches.foreach(b => Dedup.dedupLinesIncrementalStep(spark, dir, b))
-    val before = parquetFiles(dir)
-    val readerView = spark.read.parquet(dir)
-      .groupBy(col("line_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet
-    val rawRows = spark.read.parquet(dir).count()
-    val rep = Dedup.compactLineIndex(spark, dir)
-    assert(rep.filesOut < before)
-    // semantic collapse dropped the superseded generations...
-    assert(spark.read.parquet(dir).count() < rawRows)
-    // ...but the reader's aggregated view is identical
-    assert(spark.read.parquet(dir)
-      .groupBy(col("line_hash")).agg(min(col("keeper_id")).as("keeper_id"))
-      .collect().map(_.toSeq).toSet == readerView)
-    // the loop keeps running against the compacted, path-stable artifact
-    val b4 = docs.filter(col("doc_id") === 1)
-      .withColumn("doc_id", col("doc_id") + 9000L)
-    val day4 = Dedup.dedupLinesIncrementalStep(spark, dir, b4).collect()
-      .map(r => (r.getAs[Long]("keeper_id"), r.getAs[Long]("n_batch_docs")))
-    assert(day4.exists(_._1 == 1L), "post-compaction step lost detections")
-  }
-
-  test("emb code index: compaction preserves content and the salt domain") {
-    val dir = tmp("embcompact")
-    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 60)
-    Dedup.writeEmbCodeIndex(emb, dir)
-    (1 to 3).foreach { i =>
-      Dedup.dedupEmbIncrementalStep(spark, dir,
-        emb.filter(col("vec_id") < 2)
-          .withColumn("vec_id", col("vec_id") + i * 1000L))
-    }
-    val before = parquetFiles(dir)
-    val content = spark.read.parquet(dir)
-      .select(col("vec_id"), col("tid"), col("code"), col("_g"))
-      .collect().map(_.toSeq).toSet
-    val rep = Dedup.compactEmbCodeIndex(spark, dir)
-    assert(rep.filesOut < before)
-    assert(spark.read.parquet(dir)
-      .select(col("vec_id"), col("tid"), col("code"), col("_g"))
-      .collect().map(_.toSeq).toSet == content)
-    // a post-compaction day still detects through the artifact
-    val day4 = Dedup.dedupEmbIncrementalStep(spark, dir,
-        emb.filter(col("vec_id") === 1)
-          .withColumn("vec_id", col("vec_id") + 9000L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(day4.contains((1L, 9001L)))
-  }
-
-  test("phash index: compaction preserves content, loop keeps running") {
-    val dir = tmp("phashcompact")
-    val media = docs
-    Multimodal.writePhashIndex(media, dir)
-    batches.foreach(b => Multimodal.dedupPhashIncrementalStep(spark, dir, b))
-    val before = parquetFiles(dir)
-    val content = spark.read.parquet(dir).collect().map(_.toSeq).toSet
-    val rep = Multimodal.compactPhashIndex(spark, dir)
-    assert(rep.filesOut < before)
-    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet == content)
+    // and the one compaction verb refuses it: a flat rewrite would
+    // drop the bucket directories the daily step relies on
+    intercept[IllegalArgumentException](
+      Dedup.compact(spark, Dedup.ClusterMap, dir))
   }
 
   test("IVF corpus: compaction keeps bucket partitioning and serve results") {

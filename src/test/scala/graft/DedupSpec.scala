@@ -813,7 +813,7 @@ class DedupSpec extends SparkSpec {
     val before = spark.read.parquet(dir).groupBy(col("h"))
       .agg(org.apache.spark.sql.functions.min(col("keeper_id")).as("k"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.compactWinnowIndex(spark, dir)
+    Dedup.compact(spark, Dedup.WinnowIndex, dir)
     val after = spark.read.parquet(dir)
       .collect().map(r => (r.getAs[Long]("h"), r.getAs[Long]("keeper_id"))).toSet
     assert(after == before)

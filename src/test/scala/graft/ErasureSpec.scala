@@ -47,75 +47,66 @@ class ErasureSpec extends SparkSpec {
   // verbs exercised by this suite — the reflection test pins the
   // library's verb set to exactly this list
   private val covered = Seq(
-    "forgetFromBandIndex", "forgetFromSpanIndex", "forgetFromChunkIndex",
-    "forgetFromLineIndex", "forgetFromWinnowIndex",
-    "forgetFromEmbCodeIndex", "forgetFromClusterIndex",
-    "forgetFromKnnGraph", "deleteFromKnnGraph", "forgetFromPhashIndex",
-    "forgetFromSimhashIndex",
+    "forgetFromKnnGraph", "deleteFromKnnGraph",
     "deleteFromLayout", "deleteFromInvertedIndex", "forgetFromNbModel",
     "forgetFromCentroidModel", "forgetFromQualityModel",
     "forgetFromCfModel", "forgetFromMarkovModel", "forgetFromMarkov2Model")
 
+  // cluster 0-2-4 is LABELED by victim 0 (its min member), so forget
+  // must relabel; victim 7 is a plain member of 7-9-11
+  private def clusterPairs = {
+    import spark.implicits._
+    Seq((0L, 2L), (2L, 4L), (7L, 9L), (9L, 11L), (20L, 21L)).toDF("d1", "d2")
+  }
+
+  /** How to write each maintained dedup index; the reflection test
+    * pins this table to Dedup.maintainedIndexes, so a new index cannot
+    * ship without a forget case. */
+  private def writers: Map[Dedup.MaintainedIndex, String => Unit] = Map(
+    Dedup.BandIndex -> (Dedup.writeBandIndex(docs, _)),
+    Dedup.SpanIndex -> (Dedup.writeSpanIndex(docs, _)),
+    Dedup.ChunkIndex -> (Dedup.writeChunkIndex(docs, _)),
+    Dedup.LineIndex -> (Dedup.writeLineIndex(docs, _)),
+    Dedup.WinnowIndex -> (Dedup.writeWinnowIndex(docs, _)),
+    Dedup.EmbCodeIndex -> (Dedup.writeEmbCodeIndex(emb, _)),
+    Dedup.PhashIndex -> (Multimodal.writePhashIndex(docs, _)),
+    Dedup.SimhashIndex -> (Dedup.writeSimhashIndex(docs, _)),
+    Dedup.ClusterMap -> (Dedup.writeClusterIndex(clusterPairs, _)))
+
+  /** Write `index`, forget the victims through the one forget verb,
+    * and check its id column references none of them. */
+  private def forgetCase(index: Dedup.MaintainedIndex): String = {
+    val dir = tmp(s"er-${index.name}")
+    writers(index)(dir)
+    assert(spark.read.parquet(dir)
+      .filter(col(index.idCol).isin(victims: _*)).count() > 0,
+      s"${index.name}: victims hold no rows — test would be vacuous")
+    Dedup.forget(spark, index, dir, victimsDf(index.idCol))
+    assertClean(index.name, dir, Seq(index.idCol))
+    dir
+  }
+
+  // the indexes with checks of their own below
+  private val ownTests = Set(Dedup.EmbCodeIndex, Dedup.PhashIndex,
+    Dedup.SimhashIndex, Dedup.ClusterMap)
+
   test("keeper-attributed fingerprint indexes forget") {
-    locally {
-      val dir = tmp("er-band")
-      Dedup.writeBandIndex(docs, dir)
-      assert(spark.read.parquet(dir)
-        .filter(col("doc_id").isin(victims: _*)).count() > 0)
-      Dedup.forgetFromBandIndex(spark, dir, victimsDf("doc_id"))
-      assertClean("band_index", dir, Seq("doc_id"))
-    }
-    for ((name, write, forget, keeperCol) <- Seq[(String,
-        (org.apache.spark.sql.DataFrame, String) => Unit,
-        (org.apache.spark.sql.SparkSession, String,
-         org.apache.spark.sql.DataFrame) => Unit, String)](
-      ("span_index", Dedup.writeSpanIndex(_, _),
-        Dedup.forgetFromSpanIndex, "keeper_id"),
-      ("chunk_index", Dedup.writeChunkIndex(_, _),
-        Dedup.forgetFromChunkIndex, "keeper_id"),
-      ("line_index", Dedup.writeLineIndex, Dedup.forgetFromLineIndex,
-        "keeper_id"),
-      ("winnow_index", Dedup.writeWinnowIndex(_, _),
-        Dedup.forgetFromWinnowIndex, "keeper_id"))) {
-      val dir = tmp(s"er-$name")
-      write(docs, dir)
-      assert(spark.read.parquet(dir)
-        .filter(col(keeperCol).isin(victims: _*)).count() > 0,
-        s"$name: victims hold no keeper rows — test would be vacuous")
-      forget(spark, dir, victimsDf("doc_id"))
-      assertClean(name, dir, Seq(keeperCol))
-    }
+    // every other descriptor lands here, a new one included
+    Dedup.maintainedIndexes.filterNot(ownTests).foreach(forgetCase)
   }
 
   test("embedding code index and phash index forget") {
     locally {
-      val dir = tmp("er-embcode")
-      Dedup.writeEmbCodeIndex(emb, dir)
-      assert(spark.read.parquet(dir)
-        .filter(col("vec_id").isin(victims: _*)).count() > 0)
-      Dedup.forgetFromEmbCodeIndex(spark, dir, victimsDf("vec_id"))
-      assertClean("emb_code_index", dir, Seq("vec_id"))
+      val dir = forgetCase(Dedup.EmbCodeIndex)
       // the loop keeps running: a new batch detects against survivors
       val day = Dedup.dedupEmbIncrementalStep(spark, dir,
         emb.filter(col("vec_id") === 1)
           .withColumn("vec_id", col("vec_id") + 9000L))
       assert(day.collect().map(_.getLong(0)).contains(1L))
     }
+    forgetCase(Dedup.PhashIndex)
     locally {
-      val dir = tmp("er-phash")
-      Multimodal.writePhashIndex(docs, dir)
-      assert(spark.read.parquet(dir)
-        .filter(col("doc_id").isin(victims: _*)).count() > 0)
-      Multimodal.forgetFromPhashIndex(spark, dir, victimsDf("doc_id"))
-      assertClean("phash_index", dir, Seq("doc_id"))
-    }
-    locally {
-      val dir = tmp("er-simhash")
-      Dedup.writeSimhashIndex(docs, dir)
-      assert(spark.read.parquet(dir)
-        .filter(col("doc_id").isin(victims: _*)).count() > 0)
-      Dedup.forgetFromSimhashIndex(spark, dir, victimsDf("doc_id"))
-      assertClean("simhash_index", dir, Seq("doc_id"))
+      val dir = forgetCase(Dedup.SimhashIndex)
       // the serve keeps running over survivors: a forgotten doc's
       // exact twin (same text, new id) finds NO hamming-0 neighbor
       // at the forgotten id
@@ -126,15 +117,27 @@ class ErasureSpec extends SparkSpec {
     }
   }
 
+  test("emb code index: a day step on a drained index returns nothing, the next day detects the re-arrival") {
+    val dir = tmp("er-emb-drained")
+    val corpus = emb.filter(col("vec_id") < 40)
+    Dedup.writeEmbCodeIndex(corpus, dir)
+    // forget every vector: the stored salt-group domain is empty
+    Dedup.forget(spark, Dedup.EmbCodeIndex, dir, corpus.select(col("vec_id")))
+    assert(spark.read.parquet(dir).count() == 0)
+    val batch = emb.filter(col("vec_id") < 5)
+      .withColumn("vec_id", col("vec_id") + 9000L)
+    assert(Dedup.dedupEmbIncrementalStep(spark, dir, batch).count() == 0)
+    // the drained day appended its batch: tomorrow's re-arrival of
+    // that batch (new ids) is detected against it
+    val day2 = Dedup.dedupEmbIncrementalStep(spark, dir,
+        batch.withColumn("vec_id", col("vec_id") + 1000L))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert((0L until 5L).forall(i => day2.contains((9000L + i, 10000L + i))),
+      s"re-arrival not detected: $day2")
+  }
+
   test("cluster map forgets (nodes AND labels)") {
-    import spark.implicits._
-    val dir = tmp("er-ccmap")
-    // victim 0 is the LABEL of its cluster (min member) — the relabel
-    // path; victim 7 is a plain member
-    Dedup.writeClusterIndex(
-      Seq((0L, 2L), (2L, 4L), (7L, 9L), (9L, 11L), (20L, 21L))
-        .toDF("d1", "d2"), dir)
-    Dedup.forgetFromClusterIndex(spark, dir, victimsDf("doc_id"))
+    val dir = forgetCase(Dedup.ClusterMap)
     val m = Dedup.readClusterIndex(spark, dir)
     assert(m.filter(col("node").isin(victims: _*) ||
       col("cluster_id").isin(victims: _*)).count() == 0)
@@ -420,5 +423,9 @@ class ErasureSpec extends SparkSpec {
     assert(verbs == covered.toSet,
       s"verb set drifted: library has $verbs, suite covers ${covered.toSet}" +
         " — a new maintained artifact's erasure verb must be spec'd here")
+    // the dedup indexes erase through Dedup.forget: every descriptor
+    // has a forget case above
+    assert(writers.keySet == Dedup.maintainedIndexes.toSet,
+      "a maintained dedup index has no forget case in this suite")
   }
 }

@@ -389,6 +389,9 @@ class PipelineSpec extends SparkSpec {
 
     // ---- state maintenance: compaction + recall vacuum ----
     val rep = Pipeline.compactDailyState(spark, state)
+    // the line index (written empty by initDailyState, never appended
+    // without line dedup) is compacted and reported too
+    assert(rep.lineIndex.map(_.rows) == Some(0L))
     // the vacuum folded the recall into storage...
     assert(rep.vacuumedDocs >= 1 && rep.vacuumedDays >= 1)
     assert(!spark.read.json(s"$state/days/d1/train/shards")
@@ -705,6 +708,13 @@ class PipelineSpec extends SparkSpec {
     // carries each planted line
     val footerCarriers = loopText.values.count(_.contains("NEWSLETTER"))
     assert(footerCarriers <= 1, s"footer survived $footerCarriers times")
+    // state maintenance compacts the line index and reports it: the
+    // initial file plus one append per day fold to one row per hash
+    val lineHashes = spark.read.parquet(s"$state/line_index")
+      .select("line_hash").distinct().count()
+    val rep = Pipeline.compactDailyState(spark, state)
+    assert(rep.lineIndex.exists(r => r.filesIn >= 3 && r.rows == lineHashes),
+      s"line index compaction report: ${rep.lineIndex}")
     // and the forget pass scrubs the new artifact too
     val victim = loopIds.min
     Pipeline.forgetDocs(spark, state, Seq(victim).toDF("doc_id"))
