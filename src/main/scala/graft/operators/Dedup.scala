@@ -1731,12 +1731,12 @@ object Dedup {
   /** REMOVE nodes from the maintained cluster map — the
     * `bucketForget` of [[ClusterMap]], run by [[forget]], and the
     * erasure half of the incremental-clustering loop
-    * ([[ccIncrementalStep]] adds edges; this forgets documents). The
-    * `victims` frame holds the forgotten ids as `node`. Rows of
-    * forgotten nodes vanish,
-    * and clusters whose LABEL was a forgotten doc (cluster_id = min
-    * member) relabel their remaining members to the new min — a
-    * label IS a doc id, so erasure must not leave it behind. Same
+    * ([[ccIncrementalStep]] adds edges; this forgets documents).
+    * `victims` holds the forgotten ids as `node`. Rows of forgotten
+    * nodes vanish, and clusters whose LABEL was a forgotten doc
+    * (cluster_id = min member) relabel their remaining members to the
+    * new min — a label IS a doc id, so erasure must not leave it
+    * behind. Same
     * bounded write discipline as the daily step: only the touched
     * clusters' hash buckets are read and rewritten (dynamic
     * partition overwrite), carry-buckets protect untouched rows
