@@ -39,7 +39,7 @@ object Tables {
 
   /** (name, length, mtime) of every leaf file under `path`, or None
     * when it cannot be listed (the plain read then reports why). */
-  private[graft] def version(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+  private def version(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
     scala.util.Try {
       val p = new Path(path)
       val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
@@ -65,6 +65,27 @@ object Tables {
             df
         }
     }
+  }
+
+  private val trained =
+    scala.collection.concurrent.TrieMap.empty[(String, String, Any, Any), Any]
+
+  /** The one memo for artifacts trained from a table (IVF centroids,
+    * PQ codebooks, PCA and whitening bases from `embeddings`; BPE
+    * merges, WordPiece and unigram pieces from `documents`), keyed on
+    * (dir, table, params, file version of `dir/table.parquet`): a
+    * rewritten table retrains instead of reusing stale artifacts.
+    * Training is deterministic, so the memo changes no result; it
+    * keeps one training per (dir, table, params) and drops only
+    * superseded versions of that same key. */
+  private[graft] def memo[T](s: SparkSession, dir: String, table: String,
+                             params: Any)(train: => T): T = {
+    val key = (dir, table, params, version(s, s"$dir/$table.parquet"))
+    trained.getOrElseUpdate(key, {
+      trained.keySet.filter(k => k._1 == dir && k._2 == table && k._3 == params &&
+        k != key).foreach(trained.remove)
+      train
+    }).asInstanceOf[T]
   }
 
   def region(s: SparkSession, d: String): DataFrame   = read(s, d, "region")

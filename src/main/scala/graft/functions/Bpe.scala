@@ -300,40 +300,16 @@ object Bpe {
   private[graft] val SegMerges = 60
   private[graft] val SegTopK = 200
 
-  private val mergesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String), Seq[(String, String)]]
-
-  /** Fingerprint of the documents files backing `d` — keys the merge
-    * cache on the DATA, not just the path (the ivfCentroids recipe:
-    * a rewritten dataset retrains instead of silently reusing stale
-    * merges within the same JVM). */
-  private def docsFingerprint(s: SparkSession, d: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(path)) "absent"
-    else {
-      val statuses =
-        if (fs.getFileStatus(path).isDirectory) fs.listStatus(path)
-        else Array(fs.getFileStatus(path))
-      statuses.map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-    }
-  }
-
   /** Train-once-per-dataset merges shared by [[bpeSegment]] and its
     * oracle renderer, so the query and the SQL replay tokenize with
-    * bit-identical merge lists (the ann_ivf centroid pattern). */
+    * bit-identical merge lists (the ann_ivf centroid pattern);
+    * memoized per file version of `documents` ([[graft.Tables.memo]]),
+    * so a rewritten dataset retrains. */
   private[graft] def trainedMerges(s: SparkSession, d: String,
-                                   numMerges: Int): Seq[(String, String)] = {
-    val key = (d, numMerges, docsFingerprint(s, d))
-    mergesCache.getOrElseUpdate(key, {
-      mergesCache.keySet
-        .filter(k => k._1 == d && k._2 == numMerges && k != key)
-        .foreach(mergesCache.remove)
+                                   numMerges: Int): Seq[(String, String)] =
+    graft.Tables.memo(s, d, "documents", ("bpe", numMerges)) {
       trainMerges(s, d, numMerges)
-    })
-  }
+    }
 
   /** Only words the oracle can replay char-for-char are segmented:
     * ASCII alphanumerics sidestep Java-UTF-16 vs DuckDB-codepoint

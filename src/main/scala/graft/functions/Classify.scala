@@ -1,9 +1,10 @@
 package graft.functions
 
 import graft.{Tables, Util}
+import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StructField}
 
 /** Supervised text classification for training-data curation — the
   * fastText-style filter role (Joulin et al., "Bag of Tricks for
@@ -546,26 +547,14 @@ object Classify {
     * artifact literals. At scale, serve the same vote off the stored
     * IVF layout at pruned nprobe (annIvfServeBatch + the vote). */
   def classifyKnn(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val cents = graft.operators.Similarity.ivfCentroids(s, d)
-    val bc = s.sparkContext.broadcast(cents)
-    val train = emb.filter(col("vec_id") % 5 =!= 0)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .map { case (id, l, v) =>
-        (id, l, graft.operators.Similarity.nearestCentroid(bc.value, v),
-          snapE6(v))
-      }
-      .toDF("neighbor_id", "label", "bucket", "vc")
-    val queries = emb.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val q = snapE6(v)
-        (0 until bc.value.length).iterator.map(b => (id, b, q))
-      }
-      .toDF("query_id", "bucket", "qc")
+    val codec = Similarity.FloatCodec(Similarity.ivfCentroids(s, d))
+    val train = codec.assign(withE6(emb.filter(col("vec_id") % 5 =!= 0)
+        .select(col("vec_id").as("neighbor_id"), col("label"), col("embedding")), "vc"))
+      .drop("embedding")
+    val queries = codec.probe(withE6(emb.filter(col("vec_id") % 5 === 0)
+        .select(col("vec_id").as("query_id"), col("embedding")), "qc"), codec.nlist)
+      .drop("embedding")
     knnVote(scorePairsE6(train.join(broadcast(queries), Seq("bucket"))), k)
   }
 
@@ -595,27 +584,16 @@ object Classify {
     * ([[classifyKnnServeBatch]]'s scan with the rank cut instead of
     * the vote). */
   def mineHardNegatives(s: SparkSession, d: String, k: Int = 5): DataFrame = {
-    import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, d)
-    val cents = graft.operators.Similarity.ivfCentroids(s, d)
-    val bc = s.sparkContext.broadcast(cents)
-    val corpus = emb
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .map { case (id, l, v) =>
-        (id, l, graft.operators.Similarity.nearestCentroid(bc.value, v),
-          snapE6(v))
-      }
-      .toDF("neighbor_id", "label", "bucket", "vc")
-    val queries = emb.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .flatMap { case (id, l, v) =>
-        val q = snapE6(v)
-        (0 until bc.value.length).iterator.map(b => (id, l, b, q))
-      }
-      .toDF("query_id", "qlabel", "bucket", "qc")
+    val codec = Similarity.FloatCodec(Similarity.ivfCentroids(s, d))
+    val corpus = codec.assign(withE6(emb.select(col("vec_id").as("neighbor_id"),
+        col("label"), col("embedding")), "vc"))
+      .drop("embedding")
+    val queries = codec.probe(withE6(emb.filter(col("vec_id") % 10 === 0)
+        .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
+          col("embedding")), "qc"), codec.nlist)
+      .drop("embedding")
     // the probe frame is corpus-linear (10% of rows × nlist buckets),
     // so broadcasting it would grow with the corpus and hit the
     // broadcast ceiling at Scale10 multipliers — shuffle-hash the
@@ -633,6 +611,13 @@ object Classify {
         col("label"), col("cos_e6"))
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** `frame` with its `embedding` snapped to the e6 grid appended as
+    * `to` (one typed pass; every other column kept). */
+  private def withE6(frame: DataFrame, to: String): DataFrame =
+    Similarity.appendFromEmbedding(frame, StructField(to,
+      ArrayType(LongType, containsNull = false), nullable = false))(v =>
+      Iterator.single(Seq(snapE6(v))))
 
   /** The exact-integer pair scorer shared by the in-query
     * [[classifyKnn]] and the stored-layout serve: input columns
@@ -978,30 +963,14 @@ object Classify {
     * ids are an independent id space from corpus vec_ids (the r12
     * serving rule). */
   def classifyKnnServeBatch(s: SparkSession, dir: String,
-                            codec: graft.operators.Similarity.LabeledCodec,
+                            codec: Similarity.LabeledCodec,
                             queries: DataFrame, k: Int = 5,
                             nprobe: Int = ClsNprobe,
                             excludeSelf: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(codec.cents)
-    val probes = queries.select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val q = snapE6(v)
-        graft.operators.Similarity.topCentroids(bc.value, v, nprobe)
-          .iterator.map(b => (id, b, q)) }
-      .toDF("query_id", "bucket", "qc")
-    val corpus = graft.operators.Similarity.probedScan(s, dir,
-        graft.operators.Similarity.probedBucketsOf(probes))
-      .select(col("vec_id").as("neighbor_id"), col("label"),
-        col("bucket"), col("embedding"))
-      .as[(Long, Int, Int, Array[Float])]
-      .map { case (id, l, b, v) => (id, l, b, snapE6(v)) }
-      .toDF("neighbor_id", "label", "bucket", "vc")
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val cand = if (excludeSelf)
-      cand0.filter(col("neighbor_id") =!= col("query_id")) else cand0
-    knnVote(scorePairsE6(cand), k)
+    val (cand, _) = Similarity.probedCandidates(s, dir, codec,
+      withE6(queries.select(col("query_id"), col("embedding")), "qc"), nprobe,
+      excludeSelf, decode = withE6(_, "vc"))
+    knnVote(scorePairsE6(cand.withColumnRenamed("vec_id", "neighbor_id")), k)
   }
 
   /** Serve hard-negative mining off the stored LABELED layout — the
@@ -1015,28 +984,14 @@ object Classify {
     * bit-identical to the in-query miner over the same corpus
     * (spec'd — the classifyKnnServeBatch discipline). */
   def mineHardNegativesServeBatch(s: SparkSession, dir: String,
-                                  codec: graft.operators.Similarity.LabeledCodec,
+                                  codec: Similarity.LabeledCodec,
                                   queries: DataFrame, k: Int = 5,
                                   nprobe: Int = ClsNprobe): DataFrame = {
-    import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val bc = s.sparkContext.broadcast(codec.cents)
-    val probes = queries.select(col("query_id"), col("label"),
-        col("embedding"))
-      .as[(Long, Int, Array[Float])]
-      .flatMap { case (id, l, v) =>
-        val q = snapE6(v)
-        graft.operators.Similarity.topCentroids(bc.value, v, nprobe)
-          .iterator.map(b => (id, l, b, q)) }
-      .toDF("query_id", "qlabel", "bucket", "qc")
-    val corpus = graft.operators.Similarity.probedScan(s, dir,
-        graft.operators.Similarity.probedBucketsOf(probes))
-      .select(col("vec_id").as("neighbor_id"), col("label"),
-        col("bucket"), col("embedding"))
-      .as[(Long, Int, Int, Array[Float])]
-      .map { case (id, l, b, v) => (id, l, b, snapE6(v)) }
-      .toDF("neighbor_id", "label", "bucket", "vc")
-    val cand = corpus.join(broadcast(probes), Seq("bucket"))
+    val (cand0, _) = Similarity.probedCandidates(s, dir, codec,
+      withE6(queries.select(col("query_id"), col("label"), col("embedding")), "qc"),
+      nprobe, excludeSelf = false, decode = withE6(_, "vc"))
+    val cand = cand0.withColumnRenamed("vec_id", "neighbor_id")
       .filter(col("label") =!= col("qlabel"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_e6").desc, col("neighbor_id"))

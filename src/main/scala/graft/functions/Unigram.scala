@@ -242,37 +242,16 @@ object Unigram {
 
   // ---- per-dataset trained artifact (the trainedMerges pattern) ----------
 
-  private val piecesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String), Seq[(String, Long)]]
-
-  private def docsFingerprint(s: SparkSession, d: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(path)) "absent"
-    else {
-      val statuses =
-        if (fs.getFileStatus(path).isDirectory) fs.listStatus(path)
-        else Array(fs.getFileStatus(path))
-      statuses.map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-    }
-  }
-
   /** Train-once-per-dataset pieces shared by the queries and their
     * oracle renderers (the ann_ivf centroid / bpe merges pattern),
-    * keyed on the data fingerprint so a rewritten dataset retrains. */
+    * memoized per file version of `documents` so a rewritten dataset
+    * retrains. */
   private[graft] def trainedPieces(s: SparkSession, d: String,
                                    vocabSize: Int = UniVocabSize)
-      : Seq[(String, Long)] = {
-    val key = (d, vocabSize, docsFingerprint(s, d))
-    piecesCache.getOrElseUpdate(key, {
-      piecesCache.keySet
-        .filter(k => k._1 == d && k._2 == vocabSize && k != key)
-        .foreach(piecesCache.remove)
+      : Seq[(String, Long)] =
+    graft.Tables.memo(s, d, "documents", ("unigram", vocabSize)) {
       trainUnigram(Bpe.wordVocab(graft.Tables.documents(s, d)), vocabSize)
-    })
-  }
+    }
 
   // ---- unigram_segment ---------------------------------------------------
 

@@ -280,33 +280,11 @@ object Wordpiece {
 
   // ---- per-dataset trained artifact (the trainedMerges pattern) ----------
 
-  private val piecesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, String), Seq[String]]
-
-  private def docsFingerprint(s: SparkSession, d: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(path)) "absent"
-    else {
-      val statuses =
-        if (fs.getFileStatus(path).isDirectory) fs.listStatus(path)
-        else Array(fs.getFileStatus(path))
-      statuses.map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(",")
-    }
-  }
-
   private[graft] def trainedPieces(s: SparkSession, d: String,
-                                   numMerges: Int = WpMerges): Seq[String] = {
-    val key = (d, numMerges, docsFingerprint(s, d))
-    piecesCache.getOrElseUpdate(key, {
-      piecesCache.keySet
-        .filter(k => k._1 == d && k._2 == numMerges && k != key)
-        .foreach(piecesCache.remove)
+                                   numMerges: Int = WpMerges): Seq[String] =
+    graft.Tables.memo(s, d, "documents", ("wordpiece", numMerges)) {
       trainWordpiece(Bpe.wordVocab(graft.Tables.documents(s, d)), numMerges)
-    })
-  }
+    }
 
   // ---- wordpiece_segment --------------------------------------------------
 

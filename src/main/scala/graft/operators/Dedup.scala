@@ -1602,22 +1602,25 @@ object Dedup {
     * (cluster_id = component min id, the keeper convention),
     * PARTITIONED by a cluster_id hash bucket so the daily step can
     * rewrite only the buckets it touches (the scd2SinkBatch bound). */
-  /** Bucket count trades initial-write directory churn against the
-    * daily rewrite bound: a day touching C clusters rewrites
-    * ≤min(C, buckets) directories ≈ C/buckets of the map. 1024 holds
-    * a ~70-cluster day to ~6%; raise it with corpus size. Rows are
-    * CLUSTERED by bucket before partitionBy (unclustered, every task
-    * writes a file into every directory it holds). */
-  def writeClusterIndex(pairs: DataFrame, dir: String,
-                        buckets: Int = 1024): Unit =
+  /** Rows are CLUSTERED by bucket before partitionBy (unclustered,
+    * every task writes a file into every directory it holds). */
+  def writeClusterIndex(pairs: DataFrame, dir: String): Unit =
     connectedComponentsSafe(pairs)
       .select(col("node"), col("cluster_id"))
-      .withColumn("_cb", clusterBucket(buckets))
+      .withColumn("_cb", clusterBucket)
       .repartition(col("_cb"))
       .write.mode("overwrite").partitionBy("_cb").parquet(dir)
 
-  private def clusterBucket(buckets: Int) =
-    pmod(xxhash64(col("cluster_id")), lit(buckets)).cast("int")
+  /** The cluster map's hash-bucket count, the same for every map: the
+    * layout does not record it, so the writer, the day step and the
+    * forget must agree on it. It trades initial-write directory churn
+    * against the daily rewrite bound: a day touching C clusters
+    * rewrites ≤min(C, buckets) directories ≈ C/buckets of the map, and
+    * 1024 holds a ~70-cluster day to ~6%. */
+  private[graft] val ClusterBuckets = 1024
+
+  private def clusterBucket =
+    pmod(xxhash64(col("cluster_id")), lit(ClusterBuckets)).cast("int")
 
   /** The map without its internal bucket column. */
   def readClusterIndex(s: SparkSession, dir: String): DataFrame =
@@ -1652,16 +1655,16 @@ object Dedup {
     * Loop invariant (spec'd): N daily steps over an edge stream ≡
     * one-shot [[connectedComponentsSafe]] over all edges; a
     * one-cluster day moves only that cluster's bucket directories. */
-  def ccIncrementalStep(s: SparkSession, dir: String, newPairs: DataFrame,
-                        buckets: Int = 1024): DataFrame = {
+  def ccIncrementalStep(s: SparkSession, dir: String,
+                        newPairs: DataFrame): DataFrame = {
     val map = s.read.parquet(dir)
     val edges = newPairs.select(col("d1"), col("d2")).localCheckpoint()
     val endpoints = edges.select(col("d1").as("node"))
       .unionByName(edges.select(col("d2").as("node"))).distinct()
     val touched = endpoints.join(map, Seq("node"))
       .select(col("cluster_id")).distinct().localCheckpoint()
-    val touchedBuckets = touched.select(clusterBucket(buckets).as("_cb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by `buckets`
+    val touchedBuckets = touched.select(clusterBucket.as("_cb"))
+      .distinct().collect().map(_.getInt(0)).toSeq // bounded by ClusterBuckets
     val slice = map.filter(col("_cb").isin(touchedBuckets: _*))
     val members = slice.join(touched, Seq("cluster_id"), "left_semi")
     val starEdges = members.filter(col("node") =!= col("cluster_id"))
@@ -1671,10 +1674,10 @@ object Dedup {
       .select(col("node"), col("cluster_id"))
     val out = keep
       .unionByName(relabeled.select(col("node"), col("cluster_id")))
-      .withColumn("_cb", clusterBucket(buckets))
+      .withColumn("_cb", clusterBucket)
       .localCheckpoint() // materialize before overwriting read paths
     val outBuckets = out.select(col("_cb")).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by `buckets`
+      .collect().map(_.getInt(0)).toSet // bounded by ClusterBuckets
     // a relabeled/NEW cluster_id can hash into a bucket OUTSIDE the
     // touched set (an all-new-nodes day, or a merge whose component
     // min is a new node) — dynamic overwrite would replace that
@@ -1743,15 +1746,14 @@ object Dedup {
     * where a NEW label hashes outside the touched set, drained
     * buckets are deleted. */
   private def forgetClusterBuckets(s: SparkSession, dir: String,
-                                   victims: DataFrame,
-                                   buckets: Int = 1024): Unit = {
+                                   victims: DataFrame): Unit = {
     val map = s.read.parquet(dir)
     val forget = victims.localCheckpoint()
     val touched = map.join(forget, Seq("node"))
       .select(col("cluster_id")).distinct().localCheckpoint()
     if (touched.limit(1).count() == 0) return
-    val touchedBuckets = touched.select(clusterBucket(buckets).as("_cb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by `buckets`
+    val touchedBuckets = touched.select(clusterBucket.as("_cb"))
+      .distinct().collect().map(_.getInt(0)).toSeq // bounded by ClusterBuckets
     val slice = map.filter(col("_cb").isin(touchedBuckets: _*))
     val members = slice.join(touched, Seq("cluster_id"), "left_semi")
     val survivors = members.join(forget, Seq("node"), "left_anti")
@@ -1762,10 +1764,10 @@ object Dedup {
     val keep = slice.join(touched, Seq("cluster_id"), "left_anti")
       .select(col("node"), col("cluster_id"))
     val out = keep.unionByName(relabeled)
-      .withColumn("_cb", clusterBucket(buckets))
+      .withColumn("_cb", clusterBucket)
       .localCheckpoint() // materialize before overwriting read paths
     val outBuckets = out.select(col("_cb")).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by `buckets`
+      .collect().map(_.getInt(0)).toSet // bounded by ClusterBuckets
     val carryBuckets = (outBuckets -- touchedBuckets).toSeq
     val writeFrame =
       if (carryBuckets.isEmpty) out

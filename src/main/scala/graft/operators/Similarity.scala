@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over the embedding column
@@ -101,7 +102,7 @@ object Similarity {
   def annPrefix(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
                 prefixDims: Int = PrefixDims,
                 cand: Int = PrefixCand): DataFrame =
-    annIvfPrefix(s, d, nQueries, k, nlist = IvfNlist, nprobe = IvfNlist,
+    annIvfPrefix(s, d, nQueries, k, nprobe = IvfNlist,
       prefixDims = prefixDims, cand = cand)
 
   /** The flat broadcast-≠ corpus-scan form of the prefix tier — the
@@ -191,25 +192,6 @@ object Similarity {
   private[graft] val IvfNlist = 32
   private[graft] val IvfNprobe = 16
 
-  /** Every artifact trained from a data dir's embeddings (centroids,
-    * codebooks, PCA basis, whitening) is memoized here under (dir,
-    * params, file version). The version is `Tables`' leaf-file listing
-    * of `embeddings.parquet`, so a rewritten table retrains instead of
-    * reusing stale artifacts. Training is deterministic, so the memo
-    * changes no result; it keeps one training per (dir, params) and
-    * drops only superseded versions of that same (dir, params). */
-  private val trained =
-    scala.collection.concurrent.TrieMap.empty[(String, Any, Any), Any]
-
-  private def memo[T](s: SparkSession, d: String, params: Any)(train: => T): T = {
-    val key = (d, params, Tables.version(s, s"$d/embeddings.parquet"))
-    trained.getOrElseUpdate(key, {
-      trained.keySet.filter(k => k._1 == d && k._2 == params && k != key)
-        .foreach(trained.remove)
-      train
-    }).asInstanceOf[T]
-  }
-
   /** The bounded, deterministic training sample every trainer uses:
     * the first 2048 vectors of `vectors` by id. Its size is
     * independent of corpus size, so the collect is O(1) at any scale. */
@@ -225,7 +207,7 @@ object Similarity {
     * bit-identical centroids; memoized per file version. */
   private[graft] def ivfCentroids(s: SparkSession, d: String,
                                   nlist: Int = IvfNlist): Array[Array[Double]] =
-    memo(s, d, ("ivf", nlist)) {
+    Tables.memo(s, d, "embeddings", ("ivf", nlist)) {
       trainCentroids(trainingSample(Tables.embeddings(s, d)), nlist, iters = 10)
     }
 
@@ -235,30 +217,26 @@ object Similarity {
     * trained on a bounded sample (standard IVF practice — sample size
     * is independent of corpus size, so the collect is O(1) at 100 TB). */
   def annIvf(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-             nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame = {
-    val cand = annIvfCandidatesWithVecs(s, d, nQueries, nlist, nprobe)
+             nprobe: Int = IvfNprobe): DataFrame = {
+    val cand = annIvfCandidatesWithVecs(s, d, col("vec_id") < nQueries, nprobe)
     topKPerQuery(cand.select(col("query_id"), col("neighbor_id"),
       round(cos(col("qv"), col("v")), 6).as("cos_sim")), k)
   }
 
-  private def annIvfCandidatesWithVecs(s: SparkSession, d: String, nQueries: Int,
-                                       nlist: Int, nprobe: Int): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cents = ivfCentroids(s, d, nlist)
-    val bc = s.sparkContext.broadcast(cents)
-    val bucketed = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("neighbor_id", "bucket", "v")
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
-    bucketed.join(broadcast(probes), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+  /** The corpus vectors passing `queries` paired with the corpus rows
+    * of their `nprobe` probed buckets, self pairs dropped when
+    * `excludeSelf`: (neighbor_id, bucket, v, query_id, qv). */
+  private def annIvfCandidatesWithVecs(s: SparkSession, d: String, queries: Column,
+                                       nprobe: Int,
+                                       excludeSelf: Boolean = true): DataFrame = {
+    val codec = FloatCodec(ivfCentroids(s, d))
+    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val probes = codec.probe(emb.filter(queries), nprobe)
+      .select(col("vec_id").as("query_id"), col("bucket"), col("embedding").as("qv"))
+    val cand = codec.assign(emb)
+      .select(col("vec_id").as("neighbor_id"), col("bucket"), col("embedding").as("v"))
+      .join(broadcast(probes), Seq("bucket"))
+    if (excludeSelf) cand.filter(col("neighbor_id") =!= col("query_id")) else cand
   }
 
   /** The full (query × corpus) pair product as a bucket EQUI-join at
@@ -271,24 +249,10 @@ object Similarity {
     * ranks the query document itself). Returns
     * (query_id, neighbor_id, qv, v). */
   private[graft] def exhaustivePairsFor(s: SparkSession, d: String,
-                                        queryIds: Seq[Long]): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val cents = ivfCentroids(s, d)
-    val bc = s.sparkContext.broadcast(cents)
-    val bucketed = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("neighbor_id", "bucket", "v")
-    val probes = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        (0 until bc.value.length).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
-    bucketed.join(broadcast(probes), Seq("bucket"))
+                                        queryIds: Seq[Long]): DataFrame =
+    annIvfCandidatesWithVecs(s, d, col("vec_id").isInCollection(queryIds),
+      nprobe = IvfNlist, excludeSelf = false)
       .select(col("query_id"), col("neighbor_id"), col("qv"), col("v"))
-  }
 
   /** Default LSH geometry: 16 tables × 4 hyperplane bits. Chosen by
     * measuring recall@5 vs brute force on the synthetic corpus, whose
@@ -479,6 +443,13 @@ object Similarity {
     /** Layout rows `(vec_id, bucket, payload)` of a `(vec_id,
       * embedding)` frame (plus `label` for [[LabeledCodec]]). */
     private[graft] def rows(emb: DataFrame): DataFrame
+    /** `frame` with the `bucket` its `embedding` is assigned to
+      * appended, every other column kept. */
+    private[graft] def assign(frame: DataFrame): DataFrame
+    /** One row of `frame` per bucket its `embedding` probes, nearest
+      * first, with that `bucket` appended and every other column kept.
+      * `nprobe = nlist` probes exhaustively. */
+    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame
     /** The drift axis over the live layout rows; `vectors` are the
       * live full-precision `(vec_id, embedding)` rows. */
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double
@@ -486,15 +457,47 @@ object Similarity {
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame): Self
   }
 
+  /** The codecs whose coarse quantizer is the float centroid set
+    * `cents`: assignment is the argmax dot, probing the `nprobe`
+    * largest dots. */
+  sealed trait CentroidCodec extends IvfCodec {
+    def cents: Array[Array[Double]]
+    def nlist: Int = cents.length
+    private[graft] def assign(frame: DataFrame): DataFrame = {
+      val bc = frame.sparkSession.sparkContext.broadcast(cents)
+      appendFromEmbedding(frame, BucketField)(v =>
+        Iterator.single(Seq(nearestCentroid(bc.value, v))))
+    }
+    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame = {
+      val bc = frame.sparkSession.sparkContext.broadcast(cents)
+      appendFromEmbedding(frame, BucketField)(v =>
+        topCentroids(bc.value, v, nprobe).iterator.map(Seq(_)))
+    }
+  }
+
+  private val BucketField = StructField("bucket", IntegerType, nullable = false)
+
+  /** `frame`'s rows, each emitted once per value `f` yields for its
+    * `embedding`, with that value's fields appended as the `added`
+    * columns and every other column kept: the one typed pass bucket
+    * assignment and probe fan-out run through. */
+  private[graft] def appendFromEmbedding(frame: DataFrame, added: StructField*)
+                                        (f: Array[Float] => Iterator[Seq[Any]]): DataFrame = {
+    val i = frame.schema.fieldIndex("embedding")
+    frame.flatMap { r =>
+      f(r.getSeq[Float](i).toArray).map(x => Row.fromSeq(r.toSeq ++ x))
+    }(Encoders.row(StructType(frame.schema.fields ++ added)))
+  }
+
   /** Full-precision layout `(vec_id, bucket, embedding)`. Drift axis:
     * the mean cosine distance of each vector to its assigned centroid
     * (rises as arrivals drift away from the trained geometry). */
-  case class FloatCodec(cents: Array[Array[Double]]) extends IvfCodec {
+  case class FloatCodec(cents: Array[Array[Double]]) extends CentroidCodec {
     type Self = FloatCodec
-    def nlist: Int = cents.length
     def driftTol: Double = 1.2
     private[graft] def storesVectors = true
-    private[graft] def rows(emb: DataFrame): DataFrame = ivfAssign(emb, cents)
+    private[graft] def rows(emb: DataFrame): DataFrame =
+      assign(emb.select(col("vec_id"), col("embedding")))
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       meanAssignDist(live, cents)
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
@@ -508,39 +511,17 @@ object Similarity {
     * corpus-linear label join. Rows are clustered by bucket before the
     * partitioned write (else every task writes into every bucket
     * directory). Same drift axis as [[FloatCodec]]. */
-  case class LabeledCodec(cents: Array[Array[Double]]) extends IvfCodec {
+  case class LabeledCodec(cents: Array[Array[Double]]) extends CentroidCodec {
     type Self = LabeledCodec
-    def nlist: Int = cents.length
     def driftTol: Double = 1.2
     private[graft] def storesVectors = true
     private[graft] def rows(emb: DataFrame): DataFrame =
-      labeledAssign(emb, cents).repartition(col("bucket"))
+      assign(emb.select(col("vec_id"), col("embedding"), col("label")))
+        .repartition(col("bucket"))
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       meanAssignDist(live, cents)
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
       LabeledCodec(trainCentroids(sample, nlist, iters = 10))
-  }
-
-  private def ivfAssign(emb: DataFrame,
-                        cents: Array[Array[Double]]): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "bucket", "embedding")
-  }
-
-  private def labeledAssign(emb: DataFrame,
-                            cents: Array[Array[Double]]): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding"), col("label"))
-      .as[(Long, Array[Float], Int)]
-      .map { case (id, v, lb) => (id, nearestCentroid(bc.value, v), v, lb) }
-      .toDF("vec_id", "bucket", "embedding", "label")
   }
 
   private def meanAssignDist(live: DataFrame, cents: Array[Array[Double]]): Double = {
@@ -665,10 +646,38 @@ object Similarity {
 
   /** A probe frame's distinct buckets, sorted (bounded by nlist —
     * driver-safe). */
-  private[graft] def probedBucketsOf(probes: DataFrame): Seq[Int] = {
+  private def probedBucketsOf(probes: DataFrame): Seq[Int] = {
     val s = probes.sparkSession
     import s.implicits._
     probes.select("bucket").distinct().as[Int].collect().sorted.toSeq
+  }
+
+  /** The candidate join every stored serve scores: `queries` (with
+    * `embedding`) fan out to their `nprobe` buckets under `codec`, the
+    * layout at `dir` is read through [[probedScan]] (with the optional
+    * `extra` predicate) and then `decode`d, and the two meet in a
+    * bucket join against the broadcast probes. Query columns keep
+    * their names except `embedding`, which arrives as `qv`, and any
+    * other name the decoded layout also has, which arrives prefixed
+    * `q` (`label` → `qlabel`). Self pairs (`vec_id` = `query_id`) drop
+    * when `excludeSelf`. Returns the candidates and the decoded
+    * probed layout rows. */
+  private[graft] def probedCandidates(s: SparkSession, dir: String,
+                                      codec: IvfCodec, queries: DataFrame,
+                                      nprobe: Int, excludeSelf: Boolean,
+                                      extra: Option[Column] = None,
+                                      decode: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val probes = codec.probe(queries, nprobe)
+    val corpus = decode(probedScan(s, dir, probedBucketsOf(probes), extra))
+    val q = probes.select(probes.columns.toSeq.map {
+      case "embedding" => col("embedding").as("qv")
+      case c if c != "bucket" && corpus.columns.contains(c) => col(c).as(s"q$c")
+      case c => col(c)
+    }: _*)
+    val cand = corpus.join(broadcast(q), Seq("bucket"))
+    (if (excludeSelf) cand.filter(col("vec_id") =!= col("query_id")) else cand,
+      corpus)
   }
 
   // ---- quantizer-drift monitoring and retrain ------------------------------
@@ -761,18 +770,8 @@ object Similarity {
                        queries: DataFrame, k: Int = 5,
                        nprobe: Int = IvfNprobe,
                        excludeSelf: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val probes = queries
-      .select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
-    val corpus = probedScan(s, dir, probedBucketsOf(probes))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
-               else cand0
+    val (cand, _) = probedCandidates(s, dir, FloatCodec(cents),
+      queries.select(col("query_id"), col("embedding")), nprobe, excludeSelf)
     topKPerQuery(cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
       round(cos(col("qv"), col("embedding")), 6).as("cos_sim")), k)
   }
@@ -805,23 +804,17 @@ object Similarity {
     * (post-filtering returns < k rows and loses recall
     * catastrophically at low selectivity). */
   def annIvfFiltered(s: SparkSession, d: String, nQueries: Int = 10,
-                     k: Int = 5, nlist: Int = IvfNlist,
-                     nprobe: Int = FilteredNprobe): DataFrame = {
-    import s.implicits._
+                     k: Int = 5, nprobe: Int = FilteredNprobe): DataFrame = {
+    val codec = LabeledCodec(ivfCentroids(s, d))
     val emb = Tables.embeddings(s, d)
-    val cents = ivfCentroids(s, d, nlist)
-    val bc = s.sparkContext.broadcast(cents)
-    val bucketed = emb.select(col("vec_id"), col("embedding"), col("label"))
-      .as[(Long, Array[Float], Int)]
-      .map { case (id, v, lb) => (id, nearestCentroid(bc.value, v), v, lb) }
-      .toDF("neighbor_id", "bucket", "v", "label")
-    val probes = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("embedding"), col("label"))
-      .as[(Long, Array[Float], Int)]
-      .flatMap { case (id, v, lb) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v, lb)) }
-      .toDF("query_id", "bucket", "qv", "qlabel")
-    val cand = bucketed.join(broadcast(probes), Seq("bucket"))
+    val probes = codec.probe(emb.filter(col("vec_id") < nQueries), nprobe)
+      .select(col("vec_id").as("query_id"), col("bucket"),
+        col("embedding").as("qv"), col("label").as("qlabel"))
+    val cand = codec.assign(emb)
+      .select(col("vec_id").as("neighbor_id"), col("bucket"),
+        col("embedding").as("v"), col("label"))
+      .join(broadcast(probes), Seq("bucket"))
       .filter(col("label") === col("qlabel") &&
         col("neighbor_id") =!= col("query_id"))
     topKPerQuery(cand.select(col("query_id"), col("neighbor_id"),
@@ -860,47 +853,23 @@ object Similarity {
                                k: Int = 5, nprobe: Int = FilteredNprobe,
                                excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(codec.cents)
-    val probes = queries
-      .select(col("query_id"), col("embedding"), col("label"))
-      .as[(Long, Array[Float], Int)]
-      .flatMap { case (id, v, lb) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v, lb)) }
-      .toDF("query_id", "bucket", "qv", "qlabel")
-    val batchLabels = probes.select("qlabel").distinct()
+    val q = queries.select(col("query_id"), col("embedding"), col("label"))
+    val batchLabels = q.select("label").distinct()
       .as[Int].collect().sorted // bounded by the batch size — driver-safe
-    val corpus = probedScan(s, dir, probedBucketsOf(probes),
+    val (cand, _) = probedCandidates(s, dir, codec, q, nprobe, excludeSelf,
       Some(col("label").isin(batchLabels.map(Integer.valueOf): _*)))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-      .filter(col("label") === col("qlabel"))
-    val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
-               else cand0
-    topKPerQuery(cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      round(cos(col("qv"), col("embedding")), 6).as("cos_sim")), k)
+    topKPerQuery(cand.filter(col("label") === col("qlabel"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        round(cos(col("qv"), col("embedding")), 6).as("cos_sim")), k)
   }
 
   /** DuckDB oracle for ann_ivf_filtered — [[annIvfOracleSql]]'s
     * assign/probe CTEs with the label-equality predicate applied at
     * candidate generation (never post-top-k). */
   def annIvfFilteredOracleSql(s: SparkSession, d: String, nQueries: Int = 10,
-                              k: Int = 5, nlist: Int = IvfNlist,
-                              nprobe: Int = FilteredNprobe): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val centsSql = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n        ")
+                              k: Int = 5, nprobe: Int = FilteredNprobe): String = {
     s"""
-      WITH cents(cid, c) AS (VALUES
-        $centsSql),
-      scored AS (
-        SELECT vec_id, cid,
-          list_inner_product(CAST(embedding AS DOUBLE[]), c) AS dot
-        FROM embeddings CROSS JOIN cents),
-      assign AS (
-        SELECT vec_id, cid AS bucket FROM (
-          SELECT vec_id, cid,
-            row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-          FROM scored) WHERE rn = 1),
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id AS query_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -943,10 +912,10 @@ object Similarity {
     * SimilaritySpec) — so the flat tier is exactly this operator's
     * degenerate point, and production serves the pruned form. */
   def annIvfPrefix(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-                   nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+                   nprobe: Int = IvfNprobe,
                    prefixDims: Int = PrefixDims,
                    cand: Int = PrefixCand): DataFrame = {
-    val c = annIvfCandidatesWithVecs(s, d, nQueries, nlist, nprobe)
+    val c = annIvfCandidatesWithVecs(s, d, col("vec_id") < nQueries, nprobe)
     val pre = c.select(col("query_id"), col("neighbor_id"),
       round(cos(slice(col("qv"), 1, prefixDims),
         slice(col("v"), 1, prefixDims)), 6).as("cos_sim"))
@@ -969,18 +938,8 @@ object Similarity {
                              prefixDims: Int = PrefixDims,
                              cand: Int = PrefixCand,
                              excludeSelf: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(codec.cents)
-    val probes = queries
-      .select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
-    val corpus = probedScan(s, dir, probedBucketsOf(probes))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val candf = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
-                else cand0
+    val (candf, corpus) = probedCandidates(s, dir, codec,
+      queries.select(col("query_id"), col("embedding")), nprobe, excludeSelf)
     val pre = candf.select(col("query_id"), col("vec_id").as("neighbor_id"),
       round(cos(slice(col("qv"), 1, prefixDims),
         slice(col("embedding"), 1, prefixDims)), 6).as("cos_sim"))
@@ -999,26 +958,11 @@ object Similarity {
     * ann_prefix shortlist-then-rerank tail spliced between candidate
     * generation and the final rank. */
   def annIvfPrefixOracleSql(s: SparkSession, d: String, nQueries: Int = 10,
-                            k: Int = 5, nlist: Int = IvfNlist,
-                            nprobe: Int = IvfNprobe,
+                            k: Int = 5, nprobe: Int = IvfNprobe,
                             prefixDims: Int = PrefixDims,
                             cand: Int = PrefixCand): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val centsSql = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n        ")
     s"""
-      WITH cents(cid, c) AS (VALUES
-        $centsSql),
-      scored AS (
-        SELECT vec_id, cid,
-          list_inner_product(CAST(embedding AS DOUBLE[]), c) AS dot
-        FROM embeddings CROSS JOIN cents),
-      assign AS (
-        SELECT vec_id, cid AS bucket FROM (
-          SELECT vec_id, cid,
-            row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-          FROM scored) WHERE rn = 1),
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id AS query_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -1119,7 +1063,7 @@ object Similarity {
     * [m][k][subDim]. */
   private[graft] def pqCodebooks(s: SparkSession, d: String, m: Int = PqM,
                                  kS: Int = PqK): Array[Array[Array[Double]]] =
-    memo(s, d, ("pq", m, kS)) {
+    Tables.memo(s, d, "embeddings", ("pq", m, kS)) {
       val sample = trainingSample(Tables.embeddings(s, d))
       val dim = sample.head.length
       require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
@@ -1262,7 +1206,7 @@ object Similarity {
   private[graft] def pqResidualCodebooks(s: SparkSession, d: String,
                                          nlist: Int = IvfNlist, m: Int = PqM,
                                          kS: Int = PqK): Array[Array[Array[Double]]] =
-    memo(s, d, ("pqres", nlist, m, kS)) {
+    Tables.memo(s, d, "embeddings", ("pqres", nlist, m, kS)) {
       residualBooks(trainingSample(Tables.embeddings(s, d)),
         ivfCentroids(s, d, nlist), m, kS)
     }
@@ -1295,9 +1239,9 @@ object Similarity {
     * vector layout with partition-pruned probes — the standard
     * billion-vector serving index. */
   def annIvfPq(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-               nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+               nprobe: Int = IvfNprobe,
                m: Int = PqM, kS: Int = PqK, cand: Int = PqCand): DataFrame = {
-    val pq = PqCodec(ivfCentroids(s, d, nlist), pqResidualCodebooks(s, d, nlist, m, kS))
+    val pq = PqCodec(ivfCentroids(s, d), pqResidualCodebooks(s, d, m = m, kS = kS))
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < nQueries)
     pqRerank(pqIvfTopC(_ => pq.rows(emb), pq,
@@ -1362,12 +1306,11 @@ object Similarity {
     * arrivals outgrow the codebooks, which degrades ADC ranking long
     * before results go visibly wrong. */
   case class PqCodec(cents: Array[Array[Double]],
-                     books: Array[Array[Array[Double]]]) extends IvfCodec {
+                     books: Array[Array[Array[Double]]]) extends CentroidCodec {
     type Self = PqCodec
-    def nlist: Int = cents.length
     def driftTol: Double = 1.2
     private[graft] def storesVectors = false
-    private[graft] def rows(emb: DataFrame): DataFrame = pqResidualCodes(emb, cents, books)
+    private[graft] def rows(emb: DataFrame): DataFrame = pqResidualCodes(this, emb)
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       meanQuantErr(live, vectors, cents, books)
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) = {
@@ -1379,18 +1322,16 @@ object Similarity {
   /** Rows in [[PqCodec]]'s quantization-error sample. */
   private[graft] val PqSampleN = 2048
 
-  private def pqResidualCodes(emb: DataFrame,
-                              cents: Array[Array[Double]],
-                              books: Array[Array[Array[Double]]]): DataFrame = {
+  private def pqResidualCodes(codec: PqCodec, emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    val bcC = s.sparkContext.broadcast(cents)
-    val bcB = s.sparkContext.broadcast(books)
-    emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) =>
+    val bcC = s.sparkContext.broadcast(codec.cents)
+    val bcB = s.sparkContext.broadcast(codec.books)
+    codec.assign(emb.select(col("vec_id"), col("embedding")))
+      .select(col("vec_id"), col("bucket"), col("embedding"))
+      .as[(Long, Int, Array[Float])]
+      .map { case (id, b, v) =>
         val cs = bcC.value; val bks = bcB.value
-        val b = nearestCentroid(cs, v)
         val sub = v.length / bks.length
         val codes = Array.tabulate(bks.length) { mi =>
           nearestL2(bks(mi), Array.tabulate(sub)(j =>
@@ -1451,11 +1392,10 @@ object Similarity {
     * codebooks as literals; assignment, residual encoding, probing,
     * the exact-BIGINT base+ADC sum, shortlist, and rerank in SQL. */
   def annIvfPqOracleSql(s: SparkSession, d: String, nQueries: Int = 10,
-                        k: Int = 5, nlist: Int = IvfNlist,
-                        nprobe: Int = IvfNprobe, m: Int = PqM, kS: Int = PqK,
-                        cand: Int = PqCand): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val books = pqResidualCodebooks(s, d, nlist, m, kS)
+                        k: Int = 5, nprobe: Int = IvfNprobe, m: Int = PqM,
+                        kS: Int = PqK, cand: Int = PqCand): String = {
+    val cents = ivfCentroids(s, d)
+    val books = pqResidualCodebooks(s, d, m = m, kS = kS)
     val dim = cents(0).length
     val sub = dim / m
     val centsSql = cents.zipWithIndex.map { case (c, i) =>
@@ -1606,23 +1546,9 @@ object Similarity {
     * dependent, so it's emitted by [[graft.SparkEntry.oracleSqlFor]]
     * at Verify time rather than from the static map. */
   def annIvfOracleSql(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-                      nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val centsSql = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n        ")
+                      nprobe: Int = IvfNprobe): String = {
     s"""
-      WITH cents(cid, c) AS (VALUES
-        $centsSql),
-      scored AS (
-        SELECT vec_id, cid,
-          list_inner_product(CAST(embedding AS DOUBLE[]), c) AS dot
-        FROM embeddings CROSS JOIN cents),
-      assign AS (
-        SELECT vec_id, cid AS bucket FROM (
-          SELECT vec_id, cid,
-            row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-          FROM scored) WHERE rn = 1),
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id AS query_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -1767,9 +1693,8 @@ object Similarity {
     * grid retrains in SQL (order-independent min/max — [[annSq8]]'s
     * recipe); emitted by [[annIvfSq8OracleSql]] at Verify time. */
   def annIvfSq8(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-                nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame =
-    annIvfSq8On(Tables.embeddings(s, d), ivfCentroids(s, d, nlist),
-      nQueries, k, nprobe)
+                nprobe: Int = IvfNprobe): DataFrame =
+    annIvfSq8On(Tables.embeddings(s, d), ivfCentroids(s, d), nQueries, k, nprobe)
 
   /** [[annIvfSq8]] over an arbitrary embeddings frame with given
     * centroids (centroids are a property of the DATA geometry, so a
@@ -1777,26 +1702,17 @@ object Similarity {
   def annIvfSq8On(emb: DataFrame, cents: Array[Array[Double]],
                   nQueries: Int = 10, k: Int = 5,
                   nprobe: Int = IvfNprobe): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
     val (mns, mxs) = sq8Grid(emb)
-    val bc = s.sparkContext.broadcast(cents)
+    val codec = Sq8Codec(cents, mns, mxs)
+    val vecs = emb.select(col("vec_id"), col("embedding"))
     // bucket assignment on the FULL-precision vector (write-side work
     // at scale), storage = SQ8 codes; the dequantize is one per-row
     // expression ahead of the join, so each corpus vector
     // reconstructs once, not once per probing query
-    val bucketed = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("neighbor_id", "bucket", "v0")
-      .select(col("neighbor_id"), col("bucket"),
-        sq8Dequant(sq8Codes(col("v0"), mns, mxs), mns, mxs).as("v"))
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
+    val bucketed = codec.assign(vecs).select(col("vec_id").as("neighbor_id"),
+      col("bucket"), sq8Dequant(sq8Codes(col("embedding"), mns, mxs), mns, mxs).as("v"))
+    val probes = codec.probe(vecs.filter(col("vec_id") < nQueries), nprobe)
+      .select(col("vec_id").as("query_id"), col("bucket"), col("embedding").as("qv"))
     val cand = bucketed.join(broadcast(probes), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
     topKPerQuery(cand.select(col("query_id"), col("neighbor_id"),
@@ -1817,12 +1733,11 @@ object Similarity {
     * its coordinates. Retrain re-derives the grid from the live
     * full-precision rows (clipped codes lost their true magnitude). */
   case class Sq8Codec(cents: Array[Array[Double]],
-                      mns: Array[Double], mxs: Array[Double]) extends IvfCodec {
+                      mns: Array[Double], mxs: Array[Double]) extends CentroidCodec {
     type Self = Sq8Codec
-    def nlist: Int = cents.length
     def driftTol: Double = 3.0
     private[graft] def storesVectors = false
-    private[graft] def rows(emb: DataFrame): DataFrame = sq8Rows(emb, cents, mns, mxs)
+    private[graft] def rows(emb: DataFrame): DataFrame = sq8Rows(this, emb)
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       sq8SatFrac(live)
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) = {
@@ -1831,13 +1746,12 @@ object Similarity {
     }
   }
 
-  private def sq8Rows(emb: DataFrame, cents: Array[Array[Double]],
-                      mns: Array[Double], mxs: Array[Double]): DataFrame = {
+  private def sq8Rows(codec: Sq8Codec, emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    ivfAssign(emb, cents)
+    codec.assign(emb.select(col("vec_id"), col("embedding")))
       .select(col("vec_id"), col("bucket"),
-        sq8Codes(col("embedding"), mns, mxs).as("q"))
+        sq8Codes(col("embedding"), codec.mns, codec.mxs).as("q"))
       .as[(Long, Int, Array[Int])]
       .map { case (id, b, q) => (id, b, q.map(x => (x - 128).toByte)) }
       .toDF("vec_id", "bucket", "codes")
@@ -1873,23 +1787,14 @@ object Similarity {
                           nprobe: Int = IvfNprobe,
                           excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(codec.cents)
-    val probes = queries
-      .select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
-    val corpus = probedScan(s, dir, probedBucketsOf(probes))
-      .select(col("vec_id"), col("bucket"), col("codes"))
-      .as[(Long, Int, Array[Byte])] // codes land as parquet BINARY
-      .map { case (id, b, codes) => (id, b, codes.map(x => x.toInt + 128)) }
-      .toDF("vec_id", "bucket", "q")
-      .select(col("vec_id"), col("bucket"),
-        sq8Dequant(col("q"), codec.mns, codec.mxs).as("v"))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val cand = if (excludeSelf) cand0.filter(col("vec_id") =!= col("query_id"))
-               else cand0
+    val (cand, _) = probedCandidates(s, dir, codec,
+      queries.select(col("query_id"), col("embedding")), nprobe, excludeSelf,
+      decode = _.select(col("vec_id"), col("bucket"), col("codes"))
+        .as[(Long, Int, Array[Byte])] // codes land as parquet BINARY
+        .map { case (id, b, codes) => (id, b, codes.map(x => x.toInt + 128)) }
+        .toDF("vec_id", "bucket", "q")
+        .select(col("vec_id"), col("bucket"),
+          sq8Dequant(col("q"), codec.mns, codec.mxs).as("v")))
     topKPerQuery(cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
       round(cos(col("qv"), col("v")), 6).as("cos_sim")), k)
   }
@@ -1898,9 +1803,8 @@ object Similarity {
     * SQ8 grid + asymmetric rerank. Data-dependent (the centroids), so
     * emitted by [[graft.SparkEntry.oracleSqlFor]] at Verify time. */
   def annIvfSq8OracleSql(s: SparkSession, d: String, nQueries: Int = 10,
-                         k: Int = 5, nlist: Int = IvfNlist,
-                         nprobe: Int = IvfNprobe): String = {
-    val cents = ivfCentroids(s, d, nlist)
+                         k: Int = 5, nprobe: Int = IvfNprobe): String = {
+    val cents = ivfCentroids(s, d)
     val centsSql = cents.zipWithIndex.map { case (c, i) =>
       s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
     }.mkString(",\n        ")
@@ -1983,14 +1887,9 @@ object Similarity {
 
   def dedupSemantic(e: DataFrame, cents: Array[Array[Double]],
                     tau: Double = SemTau): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
     def assigned(idCol: String, embCol: String) =
-      e.select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-        .toDF(idCol, "bucket", embCol)
+      FloatCodec(cents).assign(e.select(col("vec_id"), col("embedding")))
+        .select(col("vec_id").as(idCol), col("bucket"), col("embedding").as(embCol))
     assigned("v1", "e1")
       .join(assigned("v2", "e2").hint("shuffle_hash"), Seq("bucket"))
       .where(col("v1") < col("v2"))
@@ -2029,11 +1928,8 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val s = e.sparkSession
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val assigned = e.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("vec_id", "bucket", "v")
+    val assigned = FloatCodec(cents).assign(e.select(col("vec_id"), col("embedding")))
+      .withColumnRenamed("embedding", "v")
     val centsDf = cents.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("bucket", "cent")
     val rankW = Window.partitionBy(col("bucket"))
@@ -2056,24 +1952,9 @@ object Similarity {
     * [[annIvfOracleSql]] recipe), argmax-dot assignment, per-cluster
     * rank over the 6-dp cosine with vec_id tie-break. Data-dependent
     * → emitted by oracleSqlFor. */
-  def selectPrototypesOracleSql(s: SparkSession, d: String,
-                                nlist: Int = SemNlist): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val centsSql = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n        ")
+  def selectPrototypesOracleSql(s: SparkSession, d: String): String = {
     s"""
-      WITH cents(cid, c) AS (VALUES
-        $centsSql),
-      scored AS (
-        SELECT vec_id, cid,
-          list_inner_product(CAST(embedding AS DOUBLE[]), c) AS dot
-        FROM embeddings CROSS JOIN cents),
-      assign AS (
-        SELECT vec_id, cid AS bucket FROM (
-          SELECT vec_id, cid,
-            row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-          FROM scored) WHERE rn = 1),
+      WITH ${centsCteSql(ivfCentroids(s, d, SemNlist))},
       proto AS (
         SELECT a.vec_id, a.bucket,
           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -2391,24 +2272,9 @@ object Similarity {
     * argmax-dot with lowest-cid ties, within-cluster keep-first max
     * cosine. Data-dependent → emitted by oracleSqlFor. */
   def dedupSemanticOracleSql(s: SparkSession, d: String,
-                             nlist: Int = SemNlist,
                              tau: Double = SemTau): String = {
-    val cents = ivfCentroids(s, d, nlist)
-    val centsSql = cents.zipWithIndex.map { case (c, i) =>
-      s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
-    }.mkString(",\n        ")
     s"""
-      WITH cents(cid, c) AS (VALUES
-        $centsSql),
-      scored AS (
-        SELECT vec_id, cid,
-          list_inner_product(CAST(embedding AS DOUBLE[]), c) AS dot
-        FROM embeddings CROSS JOIN cents),
-      assign AS (
-        SELECT vec_id, cid AS bucket FROM (
-          SELECT vec_id, cid,
-            row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-          FROM scored) WHERE rn = 1),
+      WITH ${centsCteSql(ivfCentroids(s, d, SemNlist))},
       pairs AS (
         SELECT a2.vec_id AS v, a1.bucket,
           round(list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]),
@@ -2424,8 +2290,9 @@ object Similarity {
 
   // ---- knn_graph: corpus-wide k-NN graph ---------------------------------
 
-  /** Trained-centroid VALUES CTE text shared by the knn_graph /
-    * kmeans_report oracles (the [[annIvfOracleSql]] literal recipe). */
+  /** The trained centroids as a VALUES CTE (DOUBLE[] literals in
+    * shortest round-trip form) plus the `scored` dots and the argmax
+    * `assign` CTEs every float-centroid IVF oracle starts with. */
   private def centsCteSql(cents: Array[Array[Double]]): String = {
     val rows = cents.zipWithIndex.map { case (c, i) =>
       s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
@@ -2464,10 +2331,8 @@ object Similarity {
     * probe mechanics; recall@5 reported per round in Bench's
     * knn_graph channel, floored at 0.8 by RecallSpec). */
   def knnGraph(s: SparkSession, d: String, k: Int = KnnK,
-               nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
-               ordered: Boolean = true): DataFrame =
-    knnGraphOn(Tables.embeddings(s, d), ivfCentroids(s, d, nlist), k, nprobe,
-      ordered)
+               nprobe: Int = IvfNprobe, ordered: Boolean = true): DataFrame =
+    knnGraphOn(Tables.embeddings(s, d), ivfCentroids(s, d), k, nprobe, ordered)
 
   /** [[knnGraph]] over an explicit embedding frame + trained
     * centroids. `ordered=false` for
@@ -2476,18 +2341,11 @@ object Similarity {
   def knnGraphOn(emb: DataFrame, cents: Array[Array[Double]],
                  k: Int = KnnK, nprobe: Int = IvfNprobe,
                  ordered: Boolean = true): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val bucketed = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("neighbor_id", "bucket", "v")
-    val probes = emb.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("vec_id", "bucket", "qv")
+    val codec = FloatCodec(cents)
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val bucketed = codec.assign(vecs).select(col("vec_id").as("neighbor_id"),
+      col("bucket"), col("embedding").as("v"))
+    val probes = codec.probe(vecs, nprobe).withColumnRenamed("embedding", "qv")
     val scoredPairs = bucketed.hint("shuffle_hash")
       .join(probes, Seq("bucket"))
       .filter(col("neighbor_id") =!= col("vec_id"))
@@ -2502,10 +2360,9 @@ object Similarity {
     * probe set widened to the whole corpus. Data-dependent → emitted
     * by oracleSqlFor. */
   def knnGraphOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                        nlist: Int = IvfNlist,
                         nprobe: Int = IvfNprobe): String = {
     s"""
-      WITH ${centsCteSql(ivfCentroids(s, d, nlist))},
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -2541,16 +2398,16 @@ object Similarity {
     * dead/starved centroid that wastes a probe). One assignment pass
     * (broadcast nlist·dim centroid map) + a 32-row broadcast join for
     * the centroid vectors + one partial-agg shuffle of nlist groups. */
-  def kmeansReport(s: SparkSession, d: String,
-                   nlist: Int = IvfNlist): DataFrame = {
+  def kmeansReport(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cents = ivfCentroids(s, d, nlist)
+    val cents = ivfCentroids(s, d)
     val centsDf = {
       import s.implicits._
       cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
         .toDF("bucket", "cent")
     }
-    val assigned = ivfAssign(Tables.embeddings(s, d), cents)
+    val assigned = FloatCodec(cents)
+      .assign(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
     assigned.join(broadcast(centsDf), Seq("bucket"))
       .select(col("bucket"),
         round(cos(col("embedding"), col("cent")), 6).as("c6"))
@@ -2564,10 +2421,9 @@ object Similarity {
 
   /** DuckDB oracle for [[kmeansReport]]: centroid literals, argmax-dot
     * assignment, the same 6-dp/DECIMAL/one-division mean. */
-  def kmeansReportOracleSql(s: SparkSession, d: String,
-                            nlist: Int = IvfNlist): String = {
+  def kmeansReportOracleSql(s: SparkSession, d: String): String = {
     s"""
-      WITH ${centsCteSql(ivfCentroids(s, d, nlist))},
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       mem AS (
         SELECT a.bucket,
           round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
@@ -2608,10 +2464,8 @@ object Similarity {
   private[graft] val MineTau = 1.05
 
   def mineBitext(s: SparkSession, d: String, k: Int = MineK,
-                 nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
-                 tau: Double = MineTau): DataFrame =
-    mineBitextOn(Tables.embeddings(s, d), ivfCentroids(s, d, nlist),
-      k, nprobe, tau)
+                 nprobe: Int = IvfNprobe, tau: Double = MineTau): DataFrame =
+    mineBitextOn(Tables.embeddings(s, d), ivfCentroids(s, d), k, nprobe, tau)
 
   /** One direction of the cross-pool kNN: sources probe their nprobe
     * buckets, targets sit in their own bucket, candidates meet in the
@@ -2620,18 +2474,11 @@ object Similarity {
   private def crossPoolKnn(src: DataFrame, tgt: DataFrame,
                            cents: Array[Array[Double]],
                            k: Int, nprobe: Int): DataFrame = {
-    val s = src.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val bucketed = tgt.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, nearestCentroid(bc.value, v), v) }
-      .toDF("neighbor_id", "bucket", "v")
-    val probes = src.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("query_id", "bucket", "qv")
+    val codec = FloatCodec(cents)
+    val bucketed = codec.assign(tgt.select(col("vec_id"), col("embedding")))
+      .select(col("vec_id").as("neighbor_id"), col("bucket"), col("embedding").as("v"))
+    val probes = codec.probe(src.select(col("vec_id"), col("embedding")), nprobe)
+      .select(col("vec_id").as("query_id"), col("bucket"), col("embedding").as("qv"))
     val scoredPairs = bucketed.hint("shuffle_hash")
       .join(probes, Seq("bucket"))
       .select(col("query_id"), col("neighbor_id"),
@@ -2682,10 +2529,9 @@ object Similarity {
     * per-source argmax on the rounded margin. Data-dependent →
     * emitted by oracleSqlFor. */
   def mineBitextOracleSql(s: SparkSession, d: String, k: Int = MineK,
-                          nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
-                          tau: Double = MineTau): String = {
+                          nprobe: Int = IvfNprobe, tau: Double = MineTau): String = {
     s"""
-      WITH ${centsCteSql(ivfCentroids(s, d, nlist))},
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -2752,9 +2598,9 @@ object Similarity {
     * the knnGraph invariant (constant per-vector candidates when
     * nlist ∝ corpus), so each iteration is O(k·n). */
   def graphPagerank(s: SparkSession, d: String, k: Int = KnnK,
-                    nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+                    nprobe: Int = IvfNprobe,
                     iters: Int = PrIters): DataFrame = {
-    val edges = knnGraph(s, d, k, nlist, nprobe, ordered = false)
+    val edges = knnGraph(s, d, k, nprobe, ordered = false)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val nodes = Tables.embeddings(s, d).select(col("vec_id"))
     pagerankOn(edges, nodes, iters)
@@ -2833,10 +2679,10 @@ object Similarity {
     * lineage discipline). Rounds are few and fixed; everything
     * shuffles on vec_id. */
   def graphLabelProp(s: SparkSession, d: String, k: Int = KnnK,
-                     nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+                     nprobe: Int = IvfNprobe,
                      rounds: Int = LpRounds): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val edges = knnGraph(s, d, k, nlist, nprobe, ordered = false)
+    val edges = knnGraph(s, d, k, nprobe, ordered = false)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     labelPropOn(edges,
       emb.filter(col("vec_id") % 5 =!= 0).select(col("vec_id"), col("label")),
@@ -2883,7 +2729,6 @@ object Similarity {
     * reference). Data-dependent (trained centroid literals) →
     * emitted by oracleSqlFor. */
   def graphLabelPropOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                              nlist: Int = IvfNlist,
                               nprobe: Int = IvfNprobe,
                               rounds: Int = LpRounds): String = {
     val roundCtes = (1 to rounds).map { t =>
@@ -2902,7 +2747,7 @@ object Similarity {
         UNION ALL SELECT vec_id, label FROM a$t)"""
     }.mkString(",\n      ")
     s"""
-      WITH ${centsCteSql(ivfCentroids(s, d, nlist))},
+      WITH ${centsCteSql(ivfCentroids(s, d))},
       probes AS (
         SELECT vec_id, cid AS bucket FROM (
           SELECT vec_id, cid,
@@ -2997,19 +2842,17 @@ object Similarity {
   def writeKnnGraph(emb: DataFrame, cents: Array[Array[Double]], dir: String,
                     k: Int = KnnK, nprobe: Int = IvfNprobe): Unit = {
     val s = emb.sparkSession
-    import s.implicits._
-    val assigned = ivfAssign(emb, cents)
+    val codec = FloatCodec(cents)
+    val vecs = emb.select(col("vec_id"), col("embedding"))
+    val assigned = codec.assign(vecs)
     // cluster by the partition key BEFORE partitionBy or every task
     // writes a file into every directory it holds (the r10 lesson)
     assigned.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/nodes")
     writeEntries(s, dir, entriesOf(assigned))
-    val bc = s.sparkContext.broadcast(cents)
-    emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b)) }
-      .toDF("vec_id", "probed").repartition(col("probed"))
+    codec.probe(vecs, nprobe)
+      .select(col("vec_id"), col("bucket").as("probed")).repartition(col("probed"))
       .write.mode("overwrite").partitionBy("probed").parquet(s"$dir/probes")
     knnGraphOn(emb, cents, k, nprobe, ordered = false)
       .join(assigned.select(col("vec_id").as("neighbor_id"),
@@ -3078,13 +2921,11 @@ object Similarity {
                          cents: Array[Array[Double]], k: Int = KnnK,
                          nprobe: Int = IvfNprobe): Unit = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(cents)
-    val batchNodes = ivfAssign(batch, cents).localCheckpoint()
-    val batchProbes = batch.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        topCentroids(bc.value, v, nprobe).iterator.map(b => (id, b, v)) }
-      .toDF("vec_id", "bucket", "qv").localCheckpoint()
+    val codec = FloatCodec(cents)
+    val vecs = batch.select(col("vec_id"), col("embedding"))
+    val batchNodes = codec.assign(vecs).localCheckpoint()
+    val batchProbes = codec.probe(vecs, nprobe)
+      .withColumnRenamed("embedding", "qv").localCheckpoint()
     val probedBuckets = batchProbes.select(col("bucket")).distinct()
       .as[Int].collect().toSeq
     val assignedBuckets = batchNodes.select(col("bucket")).distinct()
@@ -3317,8 +3158,8 @@ object Similarity {
     * (label propagation falling back to O(log²n) star-contraction —
     * connectedComponentsSafe, the dedup_clusters path). */
   def knnComponents(s: SparkSession, d: String, k: Int = KnnK,
-                    nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame = {
-    val e = knnGraph(s, d, k, nlist, nprobe, ordered = false)
+                    nprobe: Int = IvfNprobe): DataFrame = {
+    val e = knnGraph(s, d, k, nprobe, ordered = false)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .localCheckpoint()
     val mutual = e.as("a").join(e.hint("shuffle_hash").as("b"),
@@ -3339,9 +3180,8 @@ object Similarity {
     * discipline), singletons coalesced. Data-dependent → emitted by
     * oracleSqlFor. */
   def knnComponentsOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                             nlist: Int = IvfNlist,
                              nprobe: Int = IvfNprobe): String = {
-    val knnSql = knnGraphOracleSql(s, d, k, nlist, nprobe)
+    val knnSql = knnGraphOracleSql(s, d, k, nprobe)
     s"""
       WITH RECURSIVE eall AS (
         SELECT vec_id AS src, neighbor_id AS dst FROM ($knnSql)),
@@ -3368,8 +3208,8 @@ object Similarity {
     * integer arithmetic on top of [[knnComponents]] — two partial-agg
     * shuffles of longs. */
   def graphProfile(s: SparkSession, d: String, k: Int = KnnK,
-                   nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame =
-    knnComponents(s, d, k, nlist, nprobe)
+                   nprobe: Int = IvfNprobe): DataFrame =
+    knnComponents(s, d, k, nprobe)
       .groupBy(col("component_id")).agg(count(lit(1)).as("component_size"))
       .groupBy(col("component_size"))
       .agg(count(lit(1)).as("n_components"))
@@ -3381,9 +3221,8 @@ object Similarity {
   /** DuckDB oracle for [[graphProfile]]: the knnComponents chain +
     * the same two-level histogram. Data-dependent → oracleSqlFor. */
   def graphProfileOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                            nlist: Int = IvfNlist,
                             nprobe: Int = IvfNprobe): String = {
-    val compSql = knnComponentsOracleSql(s, d, k, nlist, nprobe)
+    val compSql = knnComponentsOracleSql(s, d, k, nprobe)
     s"""
       WITH sizes AS (
         SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
@@ -3408,8 +3247,8 @@ object Similarity {
     * 100 TB shape: the knnGraph edge pass + one dst-keyed partial-agg
     * shuffle + one histogram agg over node-sized frames. */
   def knnHubness(s: SparkSession, d: String, k: Int = KnnK,
-                 nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame = {
-    val edges = knnGraph(s, d, k, nlist, nprobe, ordered = false)
+                 nprobe: Int = IvfNprobe): DataFrame = {
+    val edges = knnGraph(s, d, k, nprobe, ordered = false)
       .select(col("neighbor_id"))
     val indeg = edges.groupBy(col("neighbor_id")).agg(count(lit(1)).as("deg"))
     Tables.embeddings(s, d).select(col("vec_id"))
@@ -3424,9 +3263,8 @@ object Similarity {
     * subquery + the same left-join histogram. Data-dependent →
     * emitted by oracleSqlFor. */
   def knnHubnessOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                          nlist: Int = IvfNlist,
                           nprobe: Int = IvfNprobe): String = {
-    val knnSql = knnGraphOracleSql(s, d, k, nlist, nprobe)
+    val knnSql = knnGraphOracleSql(s, d, k, nprobe)
     s"""
       WITH edges AS (SELECT neighbor_id FROM ($knnSql)),
       indeg AS (
@@ -3449,7 +3287,9 @@ object Similarity {
     * ⟨sample mean, e_c⟩ so a projection is one dot minus a scalar. */
   private[graft] def pcaBasis(s: SparkSession, d: String)
       : (Array[Array[Double]], Array[Double]) =
-    memo(s, d, "pca")(pcaBasisOfSample(trainingSample(Tables.embeddings(s, d))))
+    Tables.memo(s, d, "embeddings", "pca") {
+      pcaBasisOfSample(trainingSample(Tables.embeddings(s, d)))
+    }
 
   /** The PCA basis computation on a given bounded sample — the pure
     * core of [[pcaBasis]], reused by the whitened tier's retrain
@@ -3670,7 +3510,7 @@ object Similarity {
   private[graft] def whitenParams(s: SparkSession, d: String,
                                   eps: Double = 1e-6)
       : (Array[Array[Double]], Array[Long], Array[Double]) =
-    memo(s, d, ("whiten", eps)) {
+    Tables.memo(s, d, "embeddings", ("whiten", eps)) {
       whitenParamsOfSample(trainingSample(Tables.embeddings(s, d)), eps)
     }
 
@@ -3728,7 +3568,7 @@ object Similarity {
   private[graft] def whiteCentroidsE9(s: SparkSession, d: String,
                                       nlist: Int = IvfNlist)
       : Array[Array[Long]] =
-    memo(s, d, ("whitecent", nlist)) {
+    Tables.memo(s, d, "embeddings", ("whitecent", nlist)) {
       val (comps, offE9, scales) = whitenParams(s, d)
       whiteCentroidsOfSample(trainingSample(Tables.embeddings(s, d)),
         comps, offE9, scales, nlist)
@@ -3775,11 +3615,11 @@ object Similarity {
 
   /** Exact-integer nearest whitened centroid (argmax dot, first-wins
     * tie-break = smallest cid — the oracle's ORDER BY dot DESC, wc). */
-  private def nearestWhiteCentroid(cents: Array[Array[Long]],
+  private def nearestWhiteCentroid(wcents: Array[Array[Long]],
                                    w: Array[Long]): Int = {
     var best = 0; var bestDot = Long.MinValue; var i = 0
-    while (i < cents.length) {
-      val dd = whiteDot(cents(i), w)
+    while (i < wcents.length) {
+      val dd = whiteDot(wcents(i), w)
       if (dd > bestDot) { bestDot = dd; best = i }
       i += 1
     }
@@ -3788,11 +3628,10 @@ object Similarity {
 
   /** Probe order in whitened space: exact integer dot, descending,
     * cid tie-break — mirrors the oracle's ORDER BY dot DESC, cid. */
-  private def topWhiteCentroids(cents: Array[Array[Long]], w: Array[Long],
+  private def topWhiteCentroids(wcents: Array[Array[Long]], w: Array[Long],
                                 nprobe: Int): Seq[Int] =
-    cents.indices.map(i => (i, whiteDot(cents(i), w)))
+    wcents.indices.map(i => (i, whiteDot(wcents(i), w)))
       .sortBy(t => (-t._2, t._1)).take(nprobe).map(_._1)
-
 
   /** Score whitened candidate pairs and cut the top-k: the exact
     * integer dot over (qw, w) codes, cos_e6 = floor(S/(√Q·√X)·1e6+½)
@@ -3865,29 +3704,14 @@ object Similarity {
     * bounded TopK. The stored-layout form is the same
     * writeIvfPartitioned discipline over the coded frame. */
   def annIvfWhite(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-                  nlist: Int = IvfNlist, nprobe: Int = WhiteNprobe): DataFrame = {
-    import s.implicits._
-    val (comps, offE9, scales) = whitenParams(s, d)
-    val cents = whiteCentroidsE9(s, d, nlist)
-    val bc = s.sparkContext.broadcast((comps, offE9, scales, cents))
-    val emb = Tables.embeddings(s, d)
-    // dim² per-row coding fans out (the r10 single-row-group rule)
-    val coded = graft.Util.fanOutIfAtLeast(
-        emb.select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])])
-      .map { case (id, v) =>
-        val (cs, os, sc, ce) = bc.value
-        val (w, n2) = whiteCodeNorm(v, cs, os, sc)
-        (id, nearestWhiteCentroid(ce, w), w, n2)
-      }.toDF("neighbor_id", "bucket", "w", "xn2")
-    val probes = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val (cs, os, sc, ce) = bc.value
-        val (w, n2) = whiteCodeNorm(v, cs, os, sc)
-        topWhiteCentroids(ce, w, nprobe).iterator.map(b => (id, b, w, n2))
-      }.toDF("query_id", "bucket", "qw", "qn2")
+                  nprobe: Int = WhiteNprobe): DataFrame = {
+    val m = whitenModel(s, d)
+    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val coded = m.assign(emb).select(col("vec_id").as("neighbor_id"),
+      col("bucket"), col("w"), col("n2").as("xn2"))
+    val probes = m.probe(emb.filter(col("vec_id") < nQueries), nprobe)
+      .select(col("vec_id").as("query_id"), col("bucket"), col("w").as("qw"),
+        col("n2").as("qn2"))
     whiteTopK(coded.join(broadcast(probes), Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id")), k)
   }
@@ -3912,32 +3736,44 @@ object Similarity {
     def nlist: Int = centsE9.length
     def driftTol: Double = 1.5
     private[graft] def storesVectors = false
-    private[graft] def rows(emb: DataFrame): DataFrame = whiteRows(emb, this)
+    private[graft] def rows(emb: DataFrame): DataFrame =
+      assign(emb.select(col("vec_id"), col("embedding"))).drop("embedding")
+        .repartition(col("bucket"))
+    /** Appends the whitened code `w` and its squared norm `n2` before
+      * the bucket. The dim² coding pass fans out first (single-row-group
+      * inputs otherwise code the whole corpus in one task — the r10
+      * rule). */
+    private[graft] def assign(frame: DataFrame): DataFrame = {
+      val bc = frame.sparkSession.sparkContext.broadcast(this)
+      appendFromEmbedding(graft.Util.fanOutIfAtLeast(frame), WhiteFields: _*) { v =>
+        val mm = bc.value
+        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
+        Iterator.single(Seq(w, n2, nearestWhiteCentroid(mm.centsE9, w)))
+      }
+    }
+    /** Appends `w` and `n2` as [[assign]] does, then the probed bucket. */
+    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame = {
+      val bc = frame.sparkSession.sparkContext.broadcast(this)
+      appendFromEmbedding(frame, WhiteFields: _*) { v =>
+        val mm = bc.value
+        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
+        topWhiteCentroids(mm.centsE9, w, nprobe).iterator.map(b => Seq(w, n2, b))
+      }
+    }
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       maxWhiteCompVar(live)
     private[graft] def retrained(sample: Array[Array[Float]], live: DataFrame) =
       whitenModelOfSample(sample, nlist)
   }
 
+  private val WhiteFields = Seq(
+    StructField("w", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("n2", LongType, nullable = false), BucketField)
+
   def whitenModel(s: SparkSession, d: String,
                   nlist: Int = IvfNlist): WhitenModel = {
     val (c, o, sc) = whitenParams(s, d)
     WhitenModel(c, o, sc, whiteCentroidsE9(s, d, nlist))
-  }
-
-  private def whiteRows(emb: DataFrame, m: WhitenModel): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(m)
-    graft.Util.fanOutIfAtLeast(
-        emb.select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])])
-      .map { case (id, v) =>
-        val mm = bc.value
-        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
-        (id, w, n2, nearestWhiteCentroid(mm.centsE9, w))
-      }.toDF("vec_id", "w", "n2", "bucket")
-      .repartition(col("bucket"))
   }
 
   private def maxWhiteCompVar(live: DataFrame): Double = {
@@ -3983,23 +3819,10 @@ object Similarity {
                             queries: DataFrame, k: Int = 5,
                             nprobe: Int = WhiteNprobe,
                             excludeSelf: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(m)
-    val probes = queries.select(col("query_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val mm = bc.value
-        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
-        topWhiteCentroids(mm.centsE9, w, nprobe).iterator
-          .map(b => (id, b, w, n2))
-      }.toDF("query_id", "bucket", "qw", "qn2")
-    val corpus = probedScan(s, dir, probedBucketsOf(probes))
-      .select(col("vec_id").as("neighbor_id"), col("w"),
-        col("n2").as("xn2"), col("bucket"))
-    val cand0 = corpus.join(broadcast(probes), Seq("bucket"))
-    val cand = if (excludeSelf) cand0.filter(col("neighbor_id") =!= col("query_id"))
-               else cand0
-    whiteTopK(cand, k)
+    val (cand, _) = probedCandidates(s, dir, m,
+      queries.select(col("query_id"), col("embedding")), nprobe, excludeSelf)
+    whiteTopK(cand.withColumnRenamed("vec_id", "neighbor_id")
+      .withColumnRenamed("n2", "xn2"), k)
   }
 
   /** Whitened brute force — the ground truth [[annIvfWhite]]'s recall
@@ -4039,15 +3862,14 @@ object Similarity {
     * floor(S/(√Q·√X)·1e6 + ½) score. Data-dependent → emitted by
     * oracleSqlFor. */
   def annIvfWhiteOracleSql(s: SparkSession, d: String, nQueries: Int = 10,
-                           k: Int = 5, nlist: Int = IvfNlist,
-                           nprobe: Int = WhiteNprobe): String = {
+                           k: Int = 5, nprobe: Int = WhiteNprobe): String = {
     val (comps, offE9, scales) = whitenParams(s, d)
     val dim = comps.head.length
     val compRows = comps.indices.map { c =>
       s"($c, [${comps(c).map(_.toString).mkString(", ")}]::DOUBLE[], " +
         s"${offE9(c)}, ${scales(c).toString})"
     }.mkString(",\n        ")
-    val centRows = whiteCentroidsE9(s, d, nlist).zipWithIndex.map {
+    val centRows = whiteCentroidsE9(s, d).zipWithIndex.map {
       case (ce9, i) => s"($i, [${ce9.mkString(", ")}]::BIGINT[])"
     }.mkString(",\n        ")
     s"""
@@ -4161,8 +3983,8 @@ object Similarity {
   def annGraphWalk(s: SparkSession, d: String, nQueries: Int = 10,
                    k: Int = 5, deg: Int = GraphWalkDeg,
                    beam: Int = GraphWalkBeam, depth: Int = GraphWalkDepth,
-                   nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame = {
-    annGraphWalkFrom(Tables.embeddings(s, d), ivfCentroids(s, d, nlist),
+                   nprobe: Int = IvfNprobe): DataFrame = {
+    annGraphWalkFrom(Tables.embeddings(s, d), ivfCentroids(s, d),
       nQueries, k, deg, beam, depth, nprobe)
   }
 
@@ -4362,14 +4184,13 @@ object Similarity {
                             k: Int = 5, deg: Int = GraphWalkDeg,
                             beam: Int = GraphWalkBeam,
                             depth: Int = GraphWalkDepth,
-                            nlist: Int = IvfNlist,
                             nprobe: Int = IvfNprobe): String = {
-    val cents = ivfCentroids(s, d, nlist)
+    val cents = ivfCentroids(s, d)
     val dim = cents.head.length
     val centsSql = cents.zipWithIndex.map { case (c, i) =>
       s"($i, [${c.map(_.toString).mkString(", ")}]::DOUBLE[])"
     }.mkString(",\n        ")
-    val knnSql = knnGraphOracleSql(s, d, deg, nlist, nprobe)
+    val knnSql = knnGraphOracleSql(s, d, deg, nprobe)
     def snapSum(a: String, b: String) =
       s"""CAST(list_sum(list_transform(range(1, $dim + 1),
           i -> CAST(floor($a[i] * $b[i] * 1e9 + 0.5) AS BIGINT))) AS BIGINT)"""
@@ -4488,9 +4309,9 @@ object Similarity {
     * is bit-identical cross-engine; nodes unreachable from the seeds
     * hold rank EXACTLY 0 (spec'd). Seeds: vec_id < PprSeeds. */
   def graphPpr(s: SparkSession, d: String, k: Int = KnnK,
-               nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+               nprobe: Int = IvfNprobe,
                iters: Int = PrIters): DataFrame = {
-    val edges = knnGraph(s, d, k, nlist, nprobe, ordered = false)
+    val edges = knnGraph(s, d, k, nprobe, ordered = false)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val nodes = Tables.embeddings(s, d).select(col("vec_id"))
     personalizedPagerankOn(edges, nodes,
@@ -4538,13 +4359,13 @@ object Similarity {
     * teleport CASE restricted to the seed predicate. Data-dependent →
     * emitted by oracleSqlFor. */
   def graphPprOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                        nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+                        nprobe: Int = IvfNprobe,
                         iters: Int = PrIters): String = {
     val nS = Tables.embeddings(s, d)
       .filter(col("vec_id") < PprSeeds).count()
     val base = (3L * PrScale) / (20L * nS)
     val r0 = PrScale / nS
-    val knnSql = knnGraphOracleSql(s, d, k, nlist, nprobe)
+    val knnSql = knnGraphOracleSql(s, d, k, nprobe)
     val iterCtes = (1 to iters).map { i =>
       s"""r$i AS (
         SELECT nd.vec_id,
@@ -4583,12 +4404,12 @@ object Similarity {
     * back per step. Data-dependent (centroid literals + corpus count)
     * → emitted by oracleSqlFor. */
   def graphPagerankOracleSql(s: SparkSession, d: String, k: Int = KnnK,
-                             nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
+                             nprobe: Int = IvfNprobe,
                              iters: Int = PrIters): String = {
     val n = Tables.embeddings(s, d).count()
     val base = (3L * PrScale) / (20L * n)
     val r0 = PrScale / n
-    val knnSql = knnGraphOracleSql(s, d, k, nlist, nprobe)
+    val knnSql = knnGraphOracleSql(s, d, k, nprobe)
     val iterCtes = (1 to iters).map { i =>
       s"""r$i AS (
         SELECT nd.vec_id,

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 /** The one stored-IVF-layout lifecycle, checked over all five codecs:
   * write + append, delete, compact and retrain each keep serving (or
   * the stored rows) equal to a one-shot layout of the same vectors;
-  * drift stats see live rows only; and trained artifacts are memoized
-  * per file version of the embeddings table. */
+  * drift stats see live rows only; each codec's in-query tier answers
+  * like its stored serve; and trained artifacts are memoized per file
+  * version of the table they are trained from. */
 class IvfLayoutSpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.01"
   private lazy val emb = Tables.embeddings(spark, sf01)
@@ -43,6 +44,15 @@ class IvfLayoutSpec extends SparkSpec {
     out.collect().map(_.toSeq).toSeq
   }
 
+  /** Each codec's in-query tier over the same 10 queries. */
+  private def tier(codec: IvfCodec): Seq[Seq[Any]] = (codec match {
+    case _: FloatCodec => annIvf(spark, sf01)
+    case _: LabeledCodec => annIvfFiltered(spark, sf01)
+    case _: Sq8Codec => annIvfSq8(spark, sf01)
+    case _: PqCodec => annIvfPq(spark, sf01)
+    case _: WhitenModel => annIvfWhite(spark, sf01)
+  }).collect().map(_.toSeq).toSeq
+
   /** The stored rows, binary codes compared by value. */
   private def storedRows(dir: String): Set[Seq[Any]] =
     spark.read.parquet(dir).collect().map(_.toSeq.map {
@@ -65,8 +75,12 @@ class IvfLayoutSpec extends SparkSpec {
       writeLayout(codec, emb.filter(col("vec_id") % 3 =!= 0), dir)
       appendLayout(codec, emb.filter(col("vec_id") % 3 === 0), dir)
       val appended = serve(dir, codec)
-      assert(appended.nonEmpty && appended == serve(fresh(emb), codec),
+      val oneShot = serve(fresh(emb), codec)
+      assert(appended.nonEmpty && appended == oneShot,
         "append-then-serve differs from a one-shot layout of the union")
+      // the in-query tier and the stored serve share the codec's
+      // assignment and probe fan-out, so they answer alike
+      assert(tier(codec) == oneShot, "in-query tier differs from the stored serve")
       // 2. delete a third == fresh layout of the survivors
       val survivors = emb.filter(col("vec_id") % 3 =!= 1)
       deleteFromLayout(spark, dir, emb.filter(col("vec_id") % 3 === 1).select("vec_id"))
@@ -107,7 +121,7 @@ class IvfLayoutSpec extends SparkSpec {
     }
   }
 
-  test("trained artifacts are memoized per file version of the embeddings table") {
+  test("trained artifacts are memoized per file version of their table") {
     val d = java.nio.file.Files.createTempDirectory("ivfmemo").toString
     def writeEmb(f: org.apache.spark.sql.Column): Unit =
       Tables.embeddings(spark, sf01).filter(f)
@@ -130,5 +144,28 @@ class IvfLayoutSpec extends SparkSpec {
       IvfNlist, iters = 10)
     assert(c2.map(_.toSeq).toSeq == want.map(_.toSeq).toSeq)
     assert(ivfCentroids(spark, d) eq c2)
+    // the tokenizers' merges and pieces, trained from `documents`, go
+    // through the same memo
+    import graft.functions.{Bpe, Unigram, Wordpiece}
+    def writeDocs(dir: String, f: org.apache.spark.sql.Column): Unit =
+      Tables.documents(spark, sf).filter(f)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def trained(dir: String): Seq[AnyRef] = Seq(
+      Bpe.trainedMerges(spark, dir, Bpe.SegMerges),
+      Wordpiece.trainedPieces(spark, dir), Unigram.trainedPieces(spark, dir))
+    writeDocs(d, col("doc_id") % 2 === 0)
+    val t1 = trained(d)
+    assert(ivfCentroids(spark, d) eq c2, "a documents write retrained the centroids")
+    assert(trained(d).zip(t1).forall { case (x, y) => x eq y }, "unchanged table retrained")
+    // a rewrite at the same path retrains, on the new rows: the result
+    // equals a training on a fresh copy of those rows
+    writeDocs(d, col("doc_id") % 2 === 1)
+    val t2 = trained(d)
+    assert(t2.zip(t1).forall { case (x, y) => !(x eq y) }, "rewritten table served stale artifacts")
+    val ref = java.nio.file.Files.createTempDirectory("tokmemo-ref").toString
+    writeDocs(ref, col("doc_id") % 2 === 1)
+    assert(t2 == trained(ref))
+    assert(t2 != t1, "both halves trained alike; the retrain check shows nothing")
+    assert(trained(d).zip(t2).forall { case (x, y) => x eq y })
   }
 }

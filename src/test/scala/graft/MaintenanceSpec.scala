@@ -125,32 +125,46 @@ class MaintenanceSpec extends SparkSpec {
   test("incremental CC: a new cluster landing in an untouched bucket preserves it") {
     import spark.implicits._
     import graft.operators.Dedup
-    // buckets=1 forces EVERY cluster into one directory, so an
-    // all-new day (touched set EMPTY) writes into the bucket holding
-    // the whole standing map — dynamic partition overwrite replaces
-    // that directory wholesale, and without the carry union the
-    // untouched clusters' rows were silently deleted (the r10 ADVICE
-    // finding; 1024 buckets only hid the collision)
+    // four cluster labels that share ONE of the map's hash buckets
+    // (pmod(xxhash64(cluster_id), ClusterBuckets), the writer's rule),
+    // so an all-new day (touched set EMPTY) writes into the bucket
+    // holding every standing cluster — dynamic partition overwrite
+    // replaces that directory wholesale, and without the carry union
+    // the untouched clusters' rows were silently deleted (the r10
+    // ADVICE finding; a bucket per cluster only hid the collision)
+    val shared = (1L to 5000L).toDF("cluster_id")
+      .select(col("cluster_id"),
+        pmod(xxhash64(col("cluster_id")), lit(Dedup.ClusterBuckets)).cast("int").as("cb"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1))
+      .groupBy(_._2).values.map(_.map(_._1).sorted).find(_.length >= 4)
+      .getOrElse(fail("no four ids share a bucket"))
+    // e < a: e joins cluster a and becomes its label
+    val Array(e, a, b, c) = shared.take(4)
+    val (a2, b2, c2) = (a + 100000L, b + 100000L, c + 100000L)
     val dir = java.nio.file.Files.createTempDirectory("ccidx5").toString + "/map"
-    Dedup.writeClusterIndex(
-      Seq((1L, 2L), (10L, 11L)).toDF("d1", "d2"), dir, buckets = 1)
-    Dedup.ccIncrementalStep(spark, dir,
-      Seq((50L, 51L)).toDF("d1", "d2"), buckets = 1)
+    Dedup.writeClusterIndex(Seq((a, a2), (b, b2)).toDF("d1", "d2"), dir)
+    assert(new java.io.File(dir).listFiles.count(_.getName.startsWith("_cb=")) == 1,
+      "the standing clusters do not share one bucket")
+    Dedup.ccIncrementalStep(spark, dir, Seq((c, c2)).toDF("d1", "d2"))
     assert(toIndexMap(spark, dir) ==
-      Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L, 50L -> 50L, 51L -> 50L))
-    // a merge whose component min is the NEW node (5 joins cluster 10):
+      Map(a -> a, a2 -> a, b -> b, b2 -> b, c -> c, c2 -> c))
+    // a merge whose component min is the NEW node (e joins cluster a):
     // the relabeled cluster_id is a day node, exercising the other
     // trigger of the same overwrite path
-    Dedup.ccIncrementalStep(spark, dir,
-      Seq((5L, 10L)).toDF("d1", "d2"), buckets = 1)
+    Dedup.ccIncrementalStep(spark, dir, Seq((e, a)).toDF("d1", "d2"))
     assert(toIndexMap(spark, dir) ==
-      Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 10L -> 5L, 11L -> 5L,
-        50L -> 50L, 51L -> 50L))
+      Map(e -> e, a -> e, a2 -> e, b -> b, b2 -> b, c -> c, c2 -> c))
     // equivalence with one-shot CC over the full edge stream holds too
     val oneShot = Dedup.connectedComponentsSafe(
-      Seq((1L, 2L), (10L, 11L), (50L, 51L), (5L, 10L)).toDF("d1", "d2"))
+      Seq((a, a2), (b, b2), (c, c2), (e, a)).toDF("d1", "d2"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(toIndexMap(spark, dir) == oneShot)
+    // forgetting the day node that labels its cluster leaves no trace
+    // of it, as a node or as a label; the cluster relabels to its new min
+    Dedup.forget(spark, Dedup.ClusterMap, dir, Seq(e).toDF("node"))
+    val after = toIndexMap(spark, dir)
+    assert(!after.contains(e) && !after.values.exists(_ == e), s"$e survived: $after")
+    assert(after == Map(a -> a, a2 -> a, b -> b, b2 -> b, c -> c, c2 -> c))
   }
 
   test("incremental CC: replaying a day's pairs is idempotent") {
