@@ -3740,9 +3740,7 @@ object Similarity {
       assign(emb.select(col("vec_id"), col("embedding"))).drop("embedding")
         .repartition(col("bucket"))
     /** Appends the whitened code `w` and its squared norm `n2` before
-      * the bucket. The dim² coding pass fans out first (single-row-group
-      * inputs otherwise code the whole corpus in one task — the r10
-      * rule). */
+      * the bucket, fanning the coding pass out first. */
     private[graft] def assign(frame: DataFrame): DataFrame = {
       val bc = frame.sparkSession.sparkContext.broadcast(this)
       appendFromEmbedding(graft.Util.fanOutIfAtLeast(frame), WhiteFields: _*) { v =>
