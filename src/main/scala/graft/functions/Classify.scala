@@ -676,25 +676,6 @@ object Classify {
     nbClasses(train, labelCol).write.mode("overwrite").parquet(s"$dir/classes")
   }
 
-  /** The model-rewrite swap shared by append and forget: both tables
-    * rebuild at `dir + ".merging"` (Spark refuses a lazy
-    * overwrite-while-reading plan, and a bare overwrite would race
-    * concurrent readers), then the live generation stages aside as
-    * `.old` (one pinned-reader grace generation) and the rebuilt one
-    * renames in — the library-wide compactInPlace discipline. */
-  private[graft] def swapRewrite(s: SparkSession, dir: String)
-                                (write: String => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    if (fs.exists(p(dir + ".old"))) fs.delete(p(dir + ".old"), true)
-    if (fs.exists(p(dir + ".merging"))) fs.delete(p(dir + ".merging"), true)
-    write(dir + ".merging")
-    require(fs.rename(p(dir), p(dir + ".old")), s"could not stage $dir aside")
-    require(fs.rename(p(dir + ".merging"), p(dir)),
-      s"could not swap merged $dir in")
-  }
-
   /** Incremental training: add a labeled batch's counts into the
     * stored model. EXACT — the merged artifact equals a fresh
     * [[writeNbModel]] of the concatenated corpus (count algebra;
@@ -702,13 +683,13 @@ object Classify {
   def appendToNbModel(batch: DataFrame, dir: String,
                       labelCol: String = "lang"): Unit = {
     val s = batch.sparkSession
-    val model = s.read.parquet(s"$dir/model")
-      .unionByName(nbCounts(batch, labelCol))
-      .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
-    val classes = s.read.parquet(s"$dir/classes")
-      .unionByName(nbClasses(batch, labelCol))
-      .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
-    swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val model = s.read.parquet(s"$dir/model")
+        .unionByName(nbCounts(batch, labelCol))
+        .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
+      val classes = s.read.parquet(s"$dir/classes")
+        .unionByName(nbClasses(batch, labelCol))
+        .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
       model.write.parquet(s"$tmp/model")
       classes.write.parquet(s"$tmp/classes")
     }
@@ -727,17 +708,17 @@ object Classify {
   def forgetFromNbModel(victims: DataFrame, dir: String,
                         labelCol: String = "lang"): Unit = {
     val s = victims.sparkSession
-    val model = s.read.parquet(s"$dir/model")
-      .unionByName(nbCounts(victims, labelCol)
-        .withColumn("cnt", -col("cnt")))
-      .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") > 0)
-    val classes = s.read.parquet(s"$dir/classes")
-      .unionByName(nbClasses(victims, labelCol)
-        .withColumn("n_docs", -col("n_docs")))
-      .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
-      .filter(col("n_docs") > 0)
-    swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val model = s.read.parquet(s"$dir/model")
+        .unionByName(nbCounts(victims, labelCol)
+          .withColumn("cnt", -col("cnt")))
+        .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") > 0)
+      val classes = s.read.parquet(s"$dir/classes")
+        .unionByName(nbClasses(victims, labelCol)
+          .withColumn("n_docs", -col("n_docs")))
+        .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
+        .filter(col("n_docs") > 0)
       model.write.parquet(s"$tmp/model")
       classes.write.parquet(s"$tmp/classes")
     }
@@ -841,22 +822,22 @@ object Classify {
     * nothing; labels/ drops the victims either way. */
   def forgetFromQualityModel(victimDocs: DataFrame, dir: String): Unit = {
     val s = victimDocs.sparkSession
-    val labels = s.read.parquet(s"$dir/labels")
-    val victims = victimDocs.select(col("doc_id"), col("text"))
-      .join(labels, "doc_id")
-    val model = s.read.parquet(s"$dir/model")
-      .unionByName(nbCounts(victims, "bucket")
-        .withColumn("cnt", -col("cnt")))
-      .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") > 0)
-    val classes = s.read.parquet(s"$dir/classes")
-      .unionByName(nbClasses(victims, "bucket")
-        .withColumn("n_docs", -col("n_docs")))
-      .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
-      .filter(col("n_docs") > 0)
-    val survivors = labels.join(victimDocs.select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val labels = s.read.parquet(s"$dir/labels")
+      val victims = victimDocs.select(col("doc_id"), col("text"))
+        .join(labels, "doc_id")
+      val model = s.read.parquet(s"$dir/model")
+        .unionByName(nbCounts(victims, "bucket")
+          .withColumn("cnt", -col("cnt")))
+        .groupBy(col("label"), col("token")).agg(sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") > 0)
+      val classes = s.read.parquet(s"$dir/classes")
+        .unionByName(nbClasses(victims, "bucket")
+          .withColumn("n_docs", -col("n_docs")))
+        .groupBy(col("label")).agg(sum(col("n_docs")).as("n_docs"))
+        .filter(col("n_docs") > 0)
+      val survivors = labels.join(victimDocs.select(col("doc_id")),
+        Seq("doc_id"), "left_anti")
       model.write.parquet(s"$tmp/model")
       classes.write.parquet(s"$tmp/classes")
       survivors.write.parquet(s"$tmp/labels")
@@ -884,13 +865,13 @@ object Classify {
     * appears with its batch sums, like fresh training would write. */
   def appendToCentroidModel(batch: DataFrame, dir: String): Unit = {
     val s = batch.sparkSession
-    val sums = s.read.parquet(s"$dir/sums")
-      .unionByName(centroidSums(batch))
-      .groupBy(col("label"), col("j")).agg(sum(col("s")).as("s"))
-    val classes = s.read.parquet(s"$dir/classes")
-      .unionByName(centroidClasses(batch))
-      .groupBy(col("label")).agg(sum(col("n_vecs")).as("n_vecs"))
-    swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val sums = s.read.parquet(s"$dir/sums")
+        .unionByName(centroidSums(batch))
+        .groupBy(col("label"), col("j")).agg(sum(col("s")).as("s"))
+      val classes = s.read.parquet(s"$dir/classes")
+        .unionByName(centroidClasses(batch))
+        .groupBy(col("label")).agg(sum(col("n_vecs")).as("n_vecs"))
       sums.write.parquet(s"$tmp/sums")
       classes.write.parquet(s"$tmp/classes")
     }
@@ -908,16 +889,16 @@ object Classify {
     * by id alone). */
   def forgetFromCentroidModel(victims: DataFrame, dir: String): Unit = {
     val s = victims.sparkSession
-    val classes = s.read.parquet(s"$dir/classes")
-      .unionByName(centroidClasses(victims)
-        .withColumn("n_vecs", -col("n_vecs")))
-      .groupBy(col("label")).agg(sum(col("n_vecs")).as("n_vecs"))
-      .filter(col("n_vecs") > 0)
-    val sums = s.read.parquet(s"$dir/sums")
-      .unionByName(centroidSums(victims).withColumn("s", -col("s")))
-      .groupBy(col("label"), col("j")).agg(sum(col("s")).as("s"))
-      .join(classes.select(col("label")), Seq("label"), "left_semi")
-    swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val classes = s.read.parquet(s"$dir/classes")
+        .unionByName(centroidClasses(victims)
+          .withColumn("n_vecs", -col("n_vecs")))
+        .groupBy(col("label")).agg(sum(col("n_vecs")).as("n_vecs"))
+        .filter(col("n_vecs") > 0)
+      val sums = s.read.parquet(s"$dir/sums")
+        .unionByName(centroidSums(victims).withColumn("s", -col("s")))
+        .groupBy(col("label"), col("j")).agg(sum(col("s")).as("s"))
+        .join(classes.select(col("label")), Seq("label"), "left_semi")
       sums.write.parquet(s"$tmp/sums")
       classes.write.parquet(s"$tmp/classes")
     }

@@ -1628,8 +1628,8 @@ object Dedup {
 
   /** Unlike the APPEND-maintained artifacts (band/span/emb/phash/
     * postings), the cluster map needs no periodic compaction: a daily
-    * step REPLACES each touched bucket's directory (dynamic partition
-    * overwrite of bucket-clustered rows), so file count stays bounded
+    * step REPLACES each touched bucket's directory with one file
+    * ([[graft.sources.Compact.rewriteBuckets]]), so file count stays bounded
     * by the bucket count however many days run — spec'd in
     * CompactIndexSpec alongside the compaction loops; [[compact]]
     * refuses [[ClusterMap]]. */
@@ -1642,13 +1642,10 @@ object Dedup {
     * untouched cluster shares no node with the subgraph, so labels
     * stay globally consistent (the merged component's min is a
     * subgraph node). The WRITE is bounded too: only the touched
-    * clusters' hash buckets are read (partition-pruned slice) and
-    * rewritten (dynamic partition overwrite, conf-scoped); buckets a
-    * relabel drained entirely are deleted explicitly — dynamic
-    * overwrite only replaces partitions present in the output — and a
-    * bucket a NEW cluster_id hashes into from OUTSIDE the touched set
-    * carries its existing (untouched, node-disjoint) rows through the
-    * rewrite, since the overwrite replaces that directory too. Day
+    * clusters' hash buckets are read and rewritten
+    * ([[graft.sources.Compact.rewriteBuckets]]), which deletes a
+    * bucket a relabel drained and keeps the rows of a bucket a NEW
+    * cluster_id hashes into from outside the touched set. Day
     * cost tracks |day's edges| + |touched clusters' members| +
     * |touched buckets|, never the corpus.
     *
@@ -1663,47 +1660,27 @@ object Dedup {
       .unionByName(edges.select(col("d2").as("node"))).distinct()
     val touched = endpoints.join(map, Seq("node"))
       .select(col("cluster_id")).distinct().localCheckpoint()
-    val touchedBuckets = touched.select(clusterBucket.as("_cb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by ClusterBuckets
-    val slice = map.filter(col("_cb").isin(touchedBuckets: _*))
-    val members = slice.join(touched, Seq("cluster_id"), "left_semi")
-    val starEdges = members.filter(col("node") =!= col("cluster_id"))
-      .select(col("node").as("d1"), col("cluster_id").as("d2"))
-    val relabeled = connectedComponentsSafe(starEdges.unionByName(edges))
-    val keep = slice.join(touched, Seq("cluster_id"), "left_anti")
-      .select(col("node"), col("cluster_id"))
-    val out = keep
-      .unionByName(relabeled.select(col("node"), col("cluster_id")))
-      .withColumn("_cb", clusterBucket)
-      .localCheckpoint() // materialize before overwriting read paths
-    val outBuckets = out.select(col("_cb")).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by ClusterBuckets
     // a relabeled/NEW cluster_id can hash into a bucket OUTSIDE the
     // touched set (an all-new-nodes day, or a merge whose component
-    // min is a new node) — dynamic overwrite would replace that
-    // directory wholesale, deleting every untouched cluster stored in
-    // it. Carry those buckets' existing rows through the write: they
-    // are disjoint from the relabeled nodes (whose OLD rows live in
-    // touched buckets), so the plain union is exact.
-    val carryBuckets = (outBuckets -- touchedBuckets).toSeq
-    val writeFrame =
-      if (carryBuckets.isEmpty) out
-      else out.unionByName(
-        map.filter(col("_cb").isin(carryBuckets: _*))
-          .select(col("node"), col("cluster_id"), col("_cb"))
-          .localCheckpoint()) // materialize before overwriting read paths
-    writeFrame.repartition(col("_cb"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_cb").parquet(dir)
-    // a touched bucket whose every row relabeled into other buckets is
-    // absent from `out` — dynamic overwrite leaves its stale directory
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    touchedBuckets.filterNot(outBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_cb=$b"), true)
-    }
-    out.drop("_cb")
+    // min is a new node); its rows are disjoint from the relabeled
+    // nodes, whose OLD rows live in touched buckets
+    graft.sources.Compact.rewriteBuckets(s, dir, "_cb", touchedBuckets(touched)) { slice =>
+      val members = slice.join(touched, Seq("cluster_id"), "left_semi")
+      val starEdges = members.filter(col("node") =!= col("cluster_id"))
+        .select(col("node").as("d1"), col("cluster_id").as("d2"))
+      val relabeled = connectedComponentsSafe(starEdges.unionByName(edges))
+      slice.join(touched, Seq("cluster_id"), "left_anti")
+        .select(col("node"), col("cluster_id"))
+        .unionByName(relabeled.select(col("node"), col("cluster_id")))
+        .withColumn("_cb", clusterBucket)
+        .localCheckpoint() // returned after the rewrite moves its input
+    }.drop("_cb")
   }
+
+  /** The cluster-map buckets holding the `touched` cluster ids (bounded
+    * by [[ClusterBuckets]]). */
+  private def touchedBuckets(touched: DataFrame): Seq[Int] =
+    touched.select(clusterBucket).distinct().collect().map(_.getInt(0)).toSeq
 
   /** dedup_profile: the corpus DUPLICATION statistics — the first
     * report a dedup run publishes (what fraction of the corpus is
@@ -1739,12 +1716,9 @@ object Dedup {
     * nodes vanish, and clusters whose LABEL was a forgotten doc
     * (cluster_id = min member) relabel their remaining members to the
     * new min — a label IS a doc id, so erasure must not leave it
-    * behind. Same
-    * bounded write discipline as the daily step: only the touched
-    * clusters' hash buckets are read and rewritten (dynamic
-    * partition overwrite), carry-buckets protect untouched rows
-    * where a NEW label hashes outside the touched set, drained
-    * buckets are deleted. */
+    * behind. Same bounded write as the daily step: only the touched
+    * clusters' hash buckets are read and rewritten
+    * ([[graft.sources.Compact.rewriteBuckets]]). */
   private def forgetClusterBuckets(s: SparkSession, dir: String,
                                    victims: DataFrame): Unit = {
     val map = s.read.parquet(dir)
@@ -1752,37 +1726,18 @@ object Dedup {
     val touched = map.join(forget, Seq("node"))
       .select(col("cluster_id")).distinct().localCheckpoint()
     if (touched.limit(1).count() == 0) return
-    val touchedBuckets = touched.select(clusterBucket.as("_cb"))
-      .distinct().collect().map(_.getInt(0)).toSeq // bounded by ClusterBuckets
-    val slice = map.filter(col("_cb").isin(touchedBuckets: _*))
-    val members = slice.join(touched, Seq("cluster_id"), "left_semi")
-    val survivors = members.join(forget, Seq("node"), "left_anti")
-    val newLabels = survivors.groupBy(col("cluster_id"))
-      .agg(min(col("node")).as("new_id"))
-    val relabeled = survivors.join(newLabels, "cluster_id")
-      .select(col("node"), col("new_id").as("cluster_id"))
-    val keep = slice.join(touched, Seq("cluster_id"), "left_anti")
-      .select(col("node"), col("cluster_id"))
-    val out = keep.unionByName(relabeled)
-      .withColumn("_cb", clusterBucket)
-      .localCheckpoint() // materialize before overwriting read paths
-    val outBuckets = out.select(col("_cb")).distinct()
-      .collect().map(_.getInt(0)).toSet // bounded by ClusterBuckets
-    val carryBuckets = (outBuckets -- touchedBuckets).toSeq
-    val writeFrame =
-      if (carryBuckets.isEmpty) out
-      else out.unionByName(
-        map.filter(col("_cb").isin(carryBuckets: _*))
-          .select(col("node"), col("cluster_id"), col("_cb"))
-          .localCheckpoint())
-    writeFrame.repartition(col("_cb"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_cb").parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    touchedBuckets.filterNot(outBuckets).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_cb=$b"), true)
+    graft.sources.Compact.rewriteBuckets(s, dir, "_cb", touchedBuckets(touched)) { slice =>
+      val survivors = slice.join(touched, Seq("cluster_id"), "left_semi")
+        .join(forget, Seq("node"), "left_anti")
+      val newLabels = survivors.groupBy(col("cluster_id"))
+        .agg(min(col("node")).as("new_id"))
+      slice.join(touched, Seq("cluster_id"), "left_anti")
+        .select(col("node"), col("cluster_id"))
+        .unionByName(survivors.join(newLabels, "cluster_id")
+          .select(col("node"), col("new_id").as("cluster_id")))
+        .withColumn("_cb", clusterBucket)
     }
+    ()
   }
 
   // ---- SimHash ----------------------------------------------------------

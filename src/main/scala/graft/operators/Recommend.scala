@@ -636,10 +636,10 @@ object Recommend {
   def appendToMarkovModel(batchEvents: DataFrame, dir: String,
                           gapMinutes: Option[Int] = None): Unit = {
     val s = batchEvents.sparkSession
-    val trans = s.read.parquet(s"$dir/trans")
-      .unionByName(modelTransitions(batchEvents, gapMinutes))
-      .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val trans = s.read.parquet(s"$dir/trans")
+        .unionByName(modelTransitions(batchEvents, gapMinutes))
+        .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
       trans.write.parquet(s"$tmp/trans")
     }
   }
@@ -651,12 +651,12 @@ object Recommend {
   def forgetFromMarkovModel(victimEvents: DataFrame, dir: String,
                             gapMinutes: Option[Int] = None): Unit = {
     val s = victimEvents.sparkSession
-    val trans = s.read.parquet(s"$dir/trans")
-      .unionByName(modelTransitions(victimEvents, gapMinutes)
-        .withColumn("c", -col("c")))
-      .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val trans = s.read.parquet(s"$dir/trans")
+        .unionByName(modelTransitions(victimEvents, gapMinutes)
+          .withColumn("c", -col("c")))
+        .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0)
       trans.write.parquet(s"$tmp/trans")
     }
   }
@@ -915,16 +915,16 @@ object Recommend {
   def appendToMarkov2Model(batchEvents: DataFrame, dir: String,
                            gapMinutes: Option[Int] = None): Unit = {
     val s = batchEvents.sparkSession
-    val seqEv = engagementSeq(batchEvents).localCheckpoint()
-    val (b2, b1) = model2Transitions(seqEv, gapMinutes)
-    val t2 = s.read.parquet(s"$dir/trans2")
-      .unionByName(b2)
-      .groupBy(col("prev2_item"), col("prev1_item"), col("next_item"))
-      .agg(sum(col("c")).as("c"))
-    val t1 = s.read.parquet(s"$dir/trans")
-      .unionByName(b1)
-      .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val seqEv = engagementSeq(batchEvents).localCheckpoint()
+      val (b2, b1) = model2Transitions(seqEv, gapMinutes)
+      val t2 = s.read.parquet(s"$dir/trans2")
+        .unionByName(b2)
+        .groupBy(col("prev2_item"), col("prev1_item"), col("next_item"))
+        .agg(sum(col("c")).as("c"))
+      val t1 = s.read.parquet(s"$dir/trans")
+        .unionByName(b1)
+        .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
       t2.write.parquet(s"$tmp/trans2")
       t1.write.parquet(s"$tmp/trans")
     }
@@ -936,18 +936,18 @@ object Recommend {
   def forgetFromMarkov2Model(victimEvents: DataFrame, dir: String,
                              gapMinutes: Option[Int] = None): Unit = {
     val s = victimEvents.sparkSession
-    val seqEv = engagementSeq(victimEvents).localCheckpoint()
-    val (v2, v1) = model2Transitions(seqEv, gapMinutes)
-    val t2 = s.read.parquet(s"$dir/trans2")
-      .unionByName(v2.withColumn("c", -col("c")))
-      .groupBy(col("prev2_item"), col("prev1_item"), col("next_item"))
-      .agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
-    val t1 = s.read.parquet(s"$dir/trans")
-      .unionByName(v1.withColumn("c", -col("c")))
-      .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val seqEv = engagementSeq(victimEvents).localCheckpoint()
+      val (v2, v1) = model2Transitions(seqEv, gapMinutes)
+      val t2 = s.read.parquet(s"$dir/trans2")
+        .unionByName(v2.withColumn("c", -col("c")))
+        .groupBy(col("prev2_item"), col("prev1_item"), col("next_item"))
+        .agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0)
+      val t1 = s.read.parquet(s"$dir/trans")
+        .unionByName(v1.withColumn("c", -col("c")))
+        .groupBy(col("item"), col("next_item")).agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0)
       t2.write.parquet(s"$tmp/trans2")
       t1.write.parquet(s"$tmp/trans")
     }
@@ -1168,13 +1168,13 @@ object Recommend {
     * object doc). */
   def appendToCfModel(batchInter: DataFrame, dir: String): Unit = {
     val s = batchInter.sparkSession
-    val pairs = s.read.parquet(s"$dir/pairs")
-      .unionByName(pairCounts(batchInter))
-      .groupBy(col("i"), col("j")).agg(sum(col("c")).as("c"))
-    val items = s.read.parquet(s"$dir/items")
-      .unionByName(itemCounts(batchInter))
-      .groupBy(col("item")).agg(sum(col("n")).as("n"))
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val pairs = s.read.parquet(s"$dir/pairs")
+        .unionByName(pairCounts(batchInter))
+        .groupBy(col("i"), col("j")).agg(sum(col("c")).as("c"))
+      val items = s.read.parquet(s"$dir/items")
+        .unionByName(itemCounts(batchInter))
+        .groupBy(col("item")).agg(sum(col("n")).as("n"))
       pairs.write.parquet(s"$tmp/pairs")
       items.write.parquet(s"$tmp/items")
     }
@@ -1187,15 +1187,15 @@ object Recommend {
     * surviving users (spec'd in ErasureSpec). */
   def forgetFromCfModel(victimInter: DataFrame, dir: String): Unit = {
     val s = victimInter.sparkSession
-    val pairs = s.read.parquet(s"$dir/pairs")
-      .unionByName(pairCounts(victimInter).withColumn("c", -col("c")))
-      .groupBy(col("i"), col("j")).agg(sum(col("c")).as("c"))
-      .filter(col("c") > 0)
-    val items = s.read.parquet(s"$dir/items")
-      .unionByName(itemCounts(victimInter).withColumn("n", -col("n")))
-      .groupBy(col("item")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
-    graft.functions.Classify.swapRewrite(s, dir) { tmp =>
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val pairs = s.read.parquet(s"$dir/pairs")
+        .unionByName(pairCounts(victimInter).withColumn("c", -col("c")))
+        .groupBy(col("i"), col("j")).agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0)
+      val items = s.read.parquet(s"$dir/items")
+        .unionByName(itemCounts(victimInter).withColumn("n", -col("n")))
+        .groupBy(col("item")).agg(sum(col("n")).as("n"))
+        .filter(col("n") > 0)
       pairs.write.parquet(s"$tmp/pairs")
       items.write.parquet(s"$tmp/items")
     }

@@ -228,9 +228,10 @@ object Search {
     * standing index — postings append INSIDE the existing bucket
     * directories (pruned probes see the new docs with no index
     * rewrite, the [[Similarity.appendIvfPartitioned]] shape), and the
-    * df/stats tables merge the batch's exact deltas (both are
-    * materialized via localCheckpoint BEFORE their overwrite — Spark
-    * refuses a lazy overwrite-while-reading plan). Docs must be new
+    * df/stats tables merge the batch's exact deltas: df through
+    * [[graft.sources.Compact.rewriteBuckets]] (only the buckets the
+    * batch's tokens hash into), stats through
+    * [[graft.sources.Compact.swap]]. Docs must be new
     * (append-only corpus, the dedup_incremental posture): re-appended
     * doc_ids would double-count df. Spec'd: append-then-serve ≡
     * one-shot index of the union. */
@@ -242,28 +243,19 @@ object Search {
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     postingRows(tf, dl, nBuckets)
       .write.mode("append").partitionBy("tb").parquet(s"$dir/postings")
-    // df merge touches only the buckets the batch's tokens hash into —
-    // read those partitions, fold the deltas, dynamic-overwrite them
-    // (the scd2SinkBatch discipline); untouched df buckets keep their
-    // files byte-identical
     val deltas = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
       .withColumn("tb", tokenBucket(nBuckets))
     val affected = deltas.select(col("tb")).distinct()
       .as[Int].collect().toSeq // bounded by nBuckets
-    s.read.parquet(s"$dir/df")
-      .filter(col("tb").isin(affected: _*))
-      .unionByName(deltas)
-      .groupBy(col("token"), col("tb")).agg(sum(col("df")).as("df"))
-      .select(col("token"), col("df"), col("tb"))
-      .localCheckpoint() // materialize before overwriting read partitions
-      .repartition(col("tb"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tb").parquet(s"$dir/df")
-    val mergedStats = s.read.parquet(s"$dir/stats")
-      .unionByName(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok")))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_tok")).as("s_tok"))
-      .localCheckpoint()
-    mergedStats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    graft.sources.Compact.rewriteBuckets(s, s"$dir/df", "tb", affected)(
+      _.unionByName(deltas)
+        .groupBy(col("token"), col("tb")).agg(sum(col("df")).as("df"))
+        .select(col("token"), col("df"), col("tb")))
+    graft.sources.Compact.swap(s, s"$dir/stats")(
+      s.read.parquet(s"$dir/stats")
+        .unionByName(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok")))
+        .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_tok")).as("s_tok"))
+        .coalesce(1).write.parquet(_))
   }
 
   /** Serve ONE batch of term queries against the stored index: the
@@ -288,7 +280,7 @@ object Search {
     // every term OOV: empty result, ranked schema (postings and df
     // buckets are written together)
     if (postDirs.isEmpty || dfDirs.isEmpty) return empty
-    val post = minusDocTombstones(s, dir,
+    val post = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(
         s.read.option("basePath", s"$dir/postings")
           .parquet(postDirs: _*)
           .filter(col("token").isin(terms: _*)))
@@ -310,14 +302,12 @@ object Search {
     * no maintenance. A pending tombstone log FOLDS here (see
     * [[deleteFromInvertedIndex]]). Serve-identical (spec'd). */
   def compactInvertedIndexBucketed(s: SparkSession, dir: String): Unit = {
-    val hadTombstones = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(docTombstonePath(dir)))
+    val hadTombstones = graft.sources.Compact.hasTombstones(s, dir)
     graft.sources.Compact.compactInPlace(s, s"$dir/postings",
       CompactTargetBytes,
       partitionCols = Seq("tb"),
       sortCols = Seq("tb", "token", "doc_id"),
-      transform = df => minusDocTombstones(s, dir, df))
+      transform = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(_))
     if (hadTombstones) foldIndexTombstones(s, dir)
     else {
       graft.sources.Compact.compactInPlace(s, s"$dir/df", CompactTargetBytes,
@@ -330,9 +320,9 @@ object Search {
 
   /** DELETE documents from a stored inverted or positional index —
     * the lexical twin of [[Similarity.deleteFromLayout]]: doc_ids
-    * append to a `_tombstones` log under the index (underscore =
-    * invisible to every table scan; posting files stay immutable
-    * between compactions). Serving subtracts the log from the probed
+    * go to the index's tombstone log
+    * ([[graft.sources.Compact.addTombstones]]; posting files stay
+    * immutable between compactions). Serving subtracts the log from the probed
     * postings — a deleted doc can never be returned — while df/stats
     * keep counting it until compaction (the Lucene deleted-docs
     * discipline: survivor scores use the stale corpus stats, and the
@@ -341,39 +331,24 @@ object Search {
     * from the surviving postings, log cleared. */
   def deleteFromInvertedIndex(s: SparkSession, dir: String,
                               docIds: DataFrame): Unit =
-    docIds.select(col("doc_id")).distinct()
-      .write.mode("append").parquet(s"$dir/_tombstones")
-
-  private def docTombstonePath(dir: String) = s"$dir/_tombstones"
-
-  private def minusDocTombstones(s: SparkSession, dir: String,
-                                 rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) rows
-    else rows.join(broadcast(s.read.parquet(docTombstonePath(dir))
-        .select(col("doc_id")).distinct()),
-      Seq("doc_id"), "left_anti")
-  }
+    graft.sources.Compact.addTombstones(dir, docIds, "doc_id")
 
   /** Recompute df + stats from the (already tombstone-folded)
     * postings and clear the log — the tail of the compaction fold.
     * df/stats derive exactly: df = postings per token, stats from the
     * per-doc (doc_id, dl) distinct view. */
   private def foldIndexTombstones(s: SparkSession, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val post = s.read.parquet(s"$dir/postings")
-    post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .withColumn("tb", tokenBucket(storedBuckets(s, dir)))
-      .repartition(col("tb"))
-      .localCheckpoint() // materialize before overwriting the df path
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$dir/df")
-    post.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok"))
-      .localCheckpoint()
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    fs.delete(new org.apache.hadoop.fs.Path(docTombstonePath(dir)), true)
+    graft.sources.Compact.swap(s, s"$dir/df")(
+      post.groupBy(col("token")).agg(count(lit(1)).as("df"))
+        .withColumn("tb", tokenBucket(storedBuckets(s, dir)))
+        .repartition(col("tb"))
+        .write.partitionBy("tb").parquet(_))
+    graft.sources.Compact.swap(s, s"$dir/stats")(
+      post.select(col("doc_id"), col("dl")).distinct()
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok"))
+        .coalesce(1).write.parquet(_))
+    graft.sources.Compact.clearTombstones(s, dir)
   }
 
   // ---- hybrid retrieval: reciprocal-rank fusion ------------------------
@@ -764,16 +739,12 @@ object Search {
     * [[compactInvertedIndexBucketed]] discipline, minus the df/stats
     * recompute this layout does not carry). */
   def compactPositionalIndex(s: SparkSession, dir: String): Unit = {
-    val tp = new org.apache.hadoop.fs.Path(docTombstonePath(dir))
-    val fs = tp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val had = fs.exists(tp)
     graft.sources.Compact.compactInPlace(s, s"$dir/postings",
       CompactTargetBytes,
       partitionCols = Seq("tb"),
       sortCols = Seq("tb", "token", "doc_id", "pos"),
-      transform = df => minusDocTombstones(s, dir, df))
-    if (had) fs.delete(tp, true)
-    ()
+      transform = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(_))
+    graft.sources.Compact.clearTombstones(s, dir)
   }
 
   /** Serve a phrase batch against the positional layout — result-
@@ -794,7 +765,7 @@ object Search {
     if (terms.isEmpty) return empty
     val Seq(bucketDirs) = probedBucketDirs(s, dir, terms, "postings")
     if (bucketDirs.isEmpty) return empty
-    val post = minusDocTombstones(s, dir,
+    val post = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(
       s.read.option("basePath", s"$dir/postings").parquet(bucketDirs: _*)
         .filter(col("token").isin(terms: _*)))
     val qterms = phrases.flatMap { case (qid, ts) =>

@@ -583,41 +583,22 @@ object Similarity {
       : graft.sources.Compact.CompactReport =
     graft.sources.Compact.compactInPlace(s, dir, targetBytes,
       partitionCols = Seq("bucket"),
-      transform = df => minusTombstones(s, dir, df))
+      transform = graft.sources.Compact.minusTombstones(s, dir, "vec_id")(_))
 
   // ---- deletion support (tombstones over the stored layouts) -------------
 
-  private def tombstonePath(dir: String) = s"$dir/_tombstones"
-
   /** DELETE vectors from a stored layout: a delete never rewrites
-    * bucket files (they are immutable between compactions); it appends
-    * the ids to a TOMBSTONE log stored UNDER the layout (`_tombstones`
-    * — the underscore keeps it invisible to every parquet scan of the
-    * layout itself). Serving, stats and retrain subtract the log (a
-    * broadcast anti-join: the log is bounded by deletions since the
-    * last compaction), and [[compactIvfPartitioned]] FOLDS it into the
-    * periodic rewrite (the LSM tombstone discipline applied to a
-    * vector index). Ids are NEVER reused in this engine, so a
-    * tombstone cannot shadow a later insert. */
+    * bucket files (they are immutable between compactions); the ids
+    * go to the layout's tombstone log ([[graft.sources.Compact.addTombstones]]).
+    * Serving, stats and retrain subtract the log, and
+    * [[compactIvfPartitioned]] FOLDS it into the periodic rewrite
+    * (the swapped-in layout carries no log). */
   def deleteFromLayout(s: SparkSession, dir: String, ids: DataFrame): Unit =
-    ids.select(col("vec_id")).distinct()
-      .write.mode("append").parquet(tombstonePath(dir))
-
-  /** Subtract `dir`'s tombstone log from a frame of layout rows —
-    * a no-op (and no extra plan nodes) when no deletes exist. */
-  private[graft] def minusTombstones(s: SparkSession, dir: String,
-                                     rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(tombstonePath(dir))
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) rows
-    else rows.join(broadcast(s.read.parquet(tombstonePath(dir))
-        .select(col("vec_id")).distinct()),
-      Seq("vec_id"), "left_anti")
-  }
+    graft.sources.Compact.addTombstones(dir, ids, "vec_id")
 
   /** The live rows of a layout: every stored row minus the tombstones. */
   private def liveRows(s: SparkSession, dir: String): DataFrame =
-    minusTombstones(s, dir, s.read.parquet(dir))
+    graft.sources.Compact.minusTombstones(s, dir, "vec_id")(s.read.parquet(dir))
 
   /** The live full-precision vectors of a layout: from the layout
     * itself when its rows keep embeddings, else `emb` (the corpus
@@ -640,7 +621,7 @@ object Similarity {
                                 probedBuckets: Seq[Int],
                                 extra: Option[Column] = None): DataFrame = {
     val inProbed = col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)
-    minusTombstones(s, dir,
+    graft.sources.Compact.minusTombstones(s, dir, "vec_id")(
       s.read.parquet(dir).filter(extra.fold(inProbed)(inProbed && _)))
   }
 
@@ -719,23 +700,6 @@ object Similarity {
     current.occSkew > baseline.occSkew * SkewTol ||
       current.drift > baseline.drift * codec.driftTol
 
-  /** The two-rename generation swap: clear stale generations, `write`
-    * the rebuilt layout at `dir + ".retraining"`, stage the live one
-    * aside as `.old` (one pinned-reader grace generation), swap the
-    * rebuilt one in. */
-  private def swapInRetrained(s: SparkSession, dir: String)
-                             (write: String => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    if (fs.exists(p(dir + ".old"))) fs.delete(p(dir + ".old"), true)
-    if (fs.exists(p(dir + ".retraining"))) fs.delete(p(dir + ".retraining"), true)
-    write(dir + ".retraining")
-    require(fs.rename(p(dir), p(dir + ".old")), s"could not stage $dir aside")
-    require(fs.rename(p(dir + ".retraining"), p(dir)),
-      s"could not swap retrained $dir in")
-  }
-
   /** Retrain-and-migrate any layout: retrain the codec on
     * [[trainingSample]] of the layout's LIVE vectors, re-encode every
     * live vector through the one writer, and swap the rewritten
@@ -747,12 +711,13 @@ object Similarity {
     * the corpus beside a code layout ([[Sq8Codec]], [[PqCodec]],
     * [[WhitenModel]]): codes alone cannot retrain. */
   def retrainLayout(s: SparkSession, dir: String, codec: IvfCodec,
-                    emb: Option[DataFrame] = None): codec.Self = {
-    val live = liveVectors(s, dir, codec, emb)
-    val next = codec.retrained(trainingSample(live), live)
-    swapInRetrained(s, dir)(writeRows(next, live, _, "overwrite"))
-    next
-  }
+                    emb: Option[DataFrame] = None): codec.Self =
+    graft.sources.Compact.swap(s, dir) { tmp =>
+      val live = liveVectors(s, dir, codec, emb)
+      val next = codec.retrained(trainingSample(live), live)
+      writeRows(next, live, tmp, "overwrite")
+      next
+    }
 
   /** Serve ONE batch of queries against the stored float layout
     * ([[writeIvfPartitioned]]): fan each query out to its `nprobe`
@@ -2781,7 +2746,7 @@ object Similarity {
   // ---- maintained kNN-graph artifact --------------------------------------
 
   /** Rewrite granularity of the edges artifact: vec_id % GraphEb
-    * hash-bucket directories, dynamically overwritten per append. */
+    * hash-bucket directories, rewritten per append. */
   private[graft] val GraphEb = 64
 
   /** One (bucket, node, embedding) entry-medoid row per bucket —
@@ -2792,28 +2757,6 @@ object Similarity {
       .join(assigned.groupBy(col("bucket")).agg(min(col("vec_id"))
         .as("vec_id")), Seq("bucket", "vec_id"), "left_semi")
       .select(col("bucket"), col("vec_id").as("node"), col("embedding"))
-
-  /** Swap the (≤ nlist-row) `entries/` file in under the rename
-    * discipline every other layout rewrite here uses — a bare
-    * overwrite has a window where a concurrent serve lists a
-    * half-deleted directory. The previous `.old` generation deletes
-    * at the START of the next swap (pinned-reader grace). */
-  private def writeEntries(s: SparkSession, dir: String,
-                           df: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def p(x: String) = new org.apache.hadoop.fs.Path(x)
-    if (fs.exists(p(s"$dir/entries.old")))
-      fs.delete(p(s"$dir/entries.old"), true)
-    if (fs.exists(p(s"$dir/entries.tmp")))
-      fs.delete(p(s"$dir/entries.tmp"), true)
-    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/entries.tmp")
-    if (fs.exists(p(s"$dir/entries")))
-      require(fs.rename(p(s"$dir/entries"), p(s"$dir/entries.old")),
-        s"could not stage $dir/entries aside")
-    require(fs.rename(p(s"$dir/entries.tmp"), p(s"$dir/entries")),
-      s"could not swap $dir/entries in")
-  }
 
   /** One-time build of the MAINTAINED kNN-graph artifact at `dir` —
     * the graph family's daily-increment loop (the twelfth maintained
@@ -2827,7 +2770,7 @@ object Similarity {
     *     arrival landing in bucket b can change;
     *   - `edges/`  (vec_id, neighbor_id, cos_sim, rank, n_bucket)
     *     partitioned by `_eb` = vec_id % GraphEb — the
-    *     dynamic-overwrite rewrite granularity for affected nodes.
+    *     rewrite granularity for affected nodes.
     *     n_bucket = the NEIGHBOR's assigned IVF bucket, carried so
     *     graph-walk serving can prune its vector fetch to the
     *     frontier's bucket partition VALUES (the `_eb` discipline
@@ -2850,7 +2793,8 @@ object Similarity {
     assigned.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/nodes")
-    writeEntries(s, dir, entriesOf(assigned))
+    graft.sources.Compact.swap(s, s"$dir/entries")(
+      entriesOf(assigned).coalesce(1).write.parquet(_))
     codec.probe(vecs, nprobe)
       .select(col("vec_id"), col("bucket").as("probed")).repartition(col("probed"))
       .write.mode("overwrite").partitionBy("probed").parquet(s"$dir/probes")
@@ -2865,7 +2809,7 @@ object Similarity {
   def readKnnGraph(s: SparkSession, dir: String): DataFrame = {
     val edges = s.read.parquet(s"$dir/edges")
       .select(col("vec_id"), col("neighbor_id"), col("cos_sim"), col("rank"))
-    knnGraphTombstones(s, dir).fold(edges)(t => edges
+    graft.sources.Compact.tombstones(s, dir, "vec_id").fold(edges)(t => edges
         .join(broadcast(t), Seq("vec_id"), "left_anti")
         .join(broadcast(t.withColumnRenamed("vec_id", "neighbor_id")),
           Seq("neighbor_id"), "left_anti")
@@ -2877,7 +2821,7 @@ object Similarity {
   /** BATCHED erasure for the graph artifact — the tombstone-
     * accumulate form of [[forgetFromKnnGraph]] (which pays three
     * compact-swap layout rewrites PER CALL — 8.1/32.2/59.4s at
-    * 1×/10×/20×, §6): ids append to `$dir/_tombstones` (the
+    * 1×/10×/20×, §6): ids append to the artifact's tombstone log (the
     * [[deleteFromLayout]] discipline), every serve/read SUBTRACTS
     * them (readKnnGraph drops rows citing a tombstoned endpoint —
     * survivors' top-k stay stale-short until the fold, the Lucene
@@ -2888,18 +2832,7 @@ object Similarity {
     * cycle. Spec'd: fold-at-compact ≡ sequential forgetFromKnnGraph
     * ≡ one-shot graph of the survivors (ErasureSpec). */
   def deleteFromKnnGraph(s: SparkSession, dir: String, ids: DataFrame): Unit =
-    ids.select(col("vec_id")).distinct()
-      .write.mode("append").parquet(s"$dir/_tombstones")
-
-  /** The graph artifact's pending-erasure log, if any deletes are
-    * outstanding — None means no extra plan nodes on any serve. */
-  private[graft] def knnGraphTombstones(s: SparkSession,
-                                        dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else Some(s.read.parquet(p.toString).select(col("vec_id")).distinct())
-  }
+    graft.sources.Compact.addTombstones(dir, ids, "vec_id")
 
   /** Daily append to the maintained kNN graph — spec'd ≡ the one-shot
     * [[knnGraphOn]] of the union under the same centroids:
@@ -2909,10 +2842,9 @@ object Similarity {
     *      partitions of the batch's ASSIGNED buckets) merge the new
     *      batch candidates into their stored top-k — exact, because
     *      topk(topk(A) ∪ B) = topk(A ∪ B);
-    *   3. only the touched `_eb` edge partitions rewrite (dynamic
-    *      overwrite, untouched rows of those partitions CARRIED — the
-    *      ccIncrementalStep bucket-loss discipline; no partition can
-    *      drain, since appends never shrink a node's top-k).
+    *   3. only the touched `_eb` edge partitions rewrite
+    *      ([[graft.sources.Compact.rewriteBuckets]], unaffected rows of
+    *      those partitions kept by the fold).
     * Per-day cost: pruned bucket/probe reads + batch-sized joins +
     * ONE column-pruned `nodes/` scan for the affected embeddings
     * (the strictly-flat alternative — carrying embeddings in
@@ -2972,47 +2904,43 @@ object Similarity {
       .unionByName(batchNodes
         .select((col("vec_id") % GraphEb).cast("int").as("eb")))
       .distinct().as[Int].collect().toSeq
-    val oldPart = s.read.parquet(s"$dir/edges")
-      .filter(col("_eb").isin(touchedEb: _*))
-    val merged = topKPerQuery(
-      oldPart.join(affIds, Seq("vec_id"), "left_semi")
-        .select(col("vec_id").as("query_id"), col("neighbor_id"),
-          col("cos_sim"))
-        .unionByName(newCand.withColumnRenamed("vec_id", "query_id")), k,
-      ordered = false)
-      .withColumnRenamed("query_id", "vec_id")
-    // merged neighbors are old neighbors (bucket on the stored edge
-    // rows) or batch nodes — both mappings pruned, no nodes/ scan
-    val nbMerge = oldPart.select(col("neighbor_id"), col("n_bucket"))
-      .unionByName(batchNodes.select(col("vec_id").as("neighbor_id"),
-        col("bucket").as("n_bucket")))
-      .distinct()
-    val cols = Seq("vec_id", "neighbor_id", "cos_sim", "rank",
-      "n_bucket").map(col)
-    val out = oldPart.join(affIds, Seq("vec_id"), "left_anti")
-      .select(cols: _*)
-      .unionByName(merged.join(nbMerge, Seq("neighbor_id"))
-        .select(cols: _*))
-      .unionByName(batchEdges.select(cols: _*))
-      .withColumn("_eb", (col("vec_id") % GraphEb).cast("int"))
-      .localCheckpoint() // materialize BEFORE overwriting partitions we read
-    out.repartition(col("_eb"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_eb").parquet(s"$dir/edges")
+    graft.sources.Compact.rewriteBuckets(s, s"$dir/edges", "_eb", touchedEb) { oldPart =>
+      val merged = topKPerQuery(
+        oldPart.join(affIds, Seq("vec_id"), "left_semi")
+          .select(col("vec_id").as("query_id"), col("neighbor_id"),
+            col("cos_sim"))
+          .unionByName(newCand.withColumnRenamed("vec_id", "query_id")), k,
+        ordered = false)
+        .withColumnRenamed("query_id", "vec_id")
+      // merged neighbors are old neighbors (bucket on the stored edge
+      // rows) or batch nodes — both mappings pruned, no nodes/ scan
+      val nbMerge = oldPart.select(col("neighbor_id"), col("n_bucket"))
+        .unionByName(batchNodes.select(col("vec_id").as("neighbor_id"),
+          col("bucket").as("n_bucket")))
+        .distinct()
+      val cols = Seq("vec_id", "neighbor_id", "cos_sim", "rank",
+        "n_bucket").map(col)
+      oldPart.join(affIds, Seq("vec_id"), "left_anti")
+        .select(cols: _*)
+        .unionByName(merged.join(nbMerge, Seq("neighbor_id"))
+          .select(cols: _*))
+        .unionByName(batchEdges.select(cols: _*))
+        .withColumn("_eb", (col("vec_id") % GraphEb).cast("int"))
+    }
     // 3. the batch joins the standing layouts
     batchNodes.write.mode("append").partitionBy("bucket")
       .parquet(s"$dir/nodes")
     batchProbes.select(col("vec_id"), col("bucket").as("probed"))
       .write.mode("append").partitionBy("probed").parquet(s"$dir/probes")
     // 4. entry medoids: min(stored, batch min) per bucket — bounded
-    // ≤ nlist rows both sides, materialized before the swap
+    // ≤ nlist rows both sides
     val entryW = Window.partitionBy(col("bucket")).orderBy(col("node"))
-    val newEntries = s.read.parquet(s"$dir/entries")
-      .unionByName(entriesOf(batchNodes))
-      .withColumn("_rn", row_number().over(entryW))
-      .filter(col("_rn") === 1).drop("_rn")
-      .localCheckpoint()
-    writeEntries(s, dir, newEntries)
+    graft.sources.Compact.swap(s, s"$dir/entries")(
+      s.read.parquet(s"$dir/entries")
+        .unionByName(entriesOf(batchNodes))
+        .withColumn("_rn", row_number().over(entryW))
+        .filter(col("_rn") === 1).drop("_rn")
+        .coalesce(1).write.parquet(_))
   }
 
   /** Small-file fold for the graph artifact's append-accumulating
@@ -3028,14 +2956,13 @@ object Similarity {
                       targetBytes: Long = 128L << 20)
       : (graft.sources.Compact.CompactReport,
          graft.sources.Compact.CompactReport) =
-    knnGraphTombstones(s, dir) match {
+    graft.sources.Compact.tombstones(s, dir, "vec_id") match {
       case Some(ts) =>
         // the fold's own compact-swaps already collapse nodes/ and
         // probes/ — a second identity rewrite would double the very
         // cost the batched-erasure form amortizes
         val reports = forgetFromKnnGraph(s, dir, ts.localCheckpoint())
-        val p = new org.apache.hadoop.fs.Path(s"$dir/_tombstones")
-        p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+        graft.sources.Compact.clearTombstones(s, dir)
         reports
       case None =>
         (graft.sources.Compact.compactInPlace(s, s"$dir/nodes", targetBytes,
@@ -3138,7 +3065,8 @@ object Similarity {
     // recompute from the swapped (survivor-only) nodes/ layout. The
     // full forget already rewrites every layout, so one more pass
     // over nodes/ costs nothing extra in kind.
-    writeEntries(s, dir, entriesOf(s.read.parquet(s"$dir/nodes")))
+    graft.sources.Compact.swap(s, s"$dir/entries")(
+      entriesOf(s.read.parquet(s"$dir/nodes")).coalesce(1).write.parquet(_))
     (rn, rp)
   }
 
@@ -4043,7 +3971,7 @@ object Similarity {
                              depth: Int = GraphWalkDepth,
                              excludeSelf: Boolean = false): DataFrame = {
     import s.implicits._
-    val ts = knnGraphTombstones(s, dir)
+    val ts = graft.sources.Compact.tombstones(s, dir, "vec_id")
     val entryVecs0 = s.read.parquet(s"$dir/entries")
       .select(col("node"), col("embedding"))
     val entryVecs = ts.fold(entryVecs0)(t =>

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Small-file compaction — the table-maintenance op every long-lived
   * 100 TB lake needs: streaming sinks and fine-grained partitions
@@ -67,17 +68,10 @@ object Compact {
     * index postings) after N daily appends have accreted N small
     * files per directory. Where [[compact]] writes to a caller-chosen
     * new path, this keeps the index's PATH stable (every serve/detect
-    * entry point addresses the index by its directory):
-    *
-    *   1. rewrite into `dir.compacting` (size-targeted; partitioned
-    *      layouts keep their partition columns via `partitionCols`, so
-    *      pruned probes keep pruning),
-    *   2. swap: current dir renames to `dir.old`, the rewrite renames
-    *      in — two metadata ops, no data copy,
-    *   3. the PREVIOUS `.old` is deleted at the START of the next
-    *      compaction, not at the end of this one — the one-cycle grace
-    *      the compacting sink also keeps, so a reader pinned to the
-    *      pre-swap listing finishes its scan.
+    * entry point addresses the index by its directory): the
+    * size-targeted rewrite goes through [[swap]] (partitioned layouts
+    * keep their partition columns via `partitionCols`, so pruned
+    * probes keep pruning).
     *
     * `transform` lets log-structured indexes fold their semantic
     * collapse into the same pass (the span index re-aggregates
@@ -91,38 +85,166 @@ object Compact {
                      transform: DataFrame => DataFrame = identity,
                      sortCols: Seq[String] = Nil)
       : CompactReport = {
-    import org.apache.spark.sql.functions.col
-    val fs = fsOf(s, dir)
-    val old = new Path(dir + ".old")
-    if (fs.exists(old)) fs.delete(old, true) // last cycle's grace copy
-    val in = dataFiles(s, dir)
-    val bytesIn = in.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(bytesIn.toDouble / targetBytes).toInt)
-    val tmp = new Path(dir + ".compacting")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // torn previous attempt
-    val df = transform(s.read.parquet(dir))
-    val clustered =
-      if (partitionCols.isEmpty) df.repartition(nOut)
-      // hash-cluster by the partition keys so each output partition
-      // directory lands ~one file instead of one per task
-      else df.repartition(nOut, partitionCols.map(col): _*)
-    // layouts that rely on row-group statistics (token-sorted bucketed
-    // postings) re-establish their within-file order AFTER the cluster
-    val ordered =
-      if (sortCols.isEmpty) clustered
-      else clustered.sortWithinPartitions(sortCols.map(col): _*)
-    if (partitionCols.isEmpty)
-      ordered.write.mode("overwrite").parquet(tmp.toString)
-    else
+    val in = swap(s, dir) { tmp =>
+      val in = dataFiles(s, dir)
+      val nOut = math.max(1,
+        math.ceil(in.map(_.getLen).sum.toDouble / targetBytes).toInt)
+      val df = transform(s.read.parquet(dir))
+      val clustered =
+        if (partitionCols.isEmpty) df.repartition(nOut)
+        // hash-cluster by the partition keys so each output partition
+        // directory lands ~one file instead of one per task
+        else df.repartition(nOut, partitionCols.map(col): _*)
+      // layouts that rely on row-group statistics (token-sorted bucketed
+      // postings) re-establish their within-file order AFTER the cluster
+      val ordered =
+        if (sortCols.isEmpty) clustered
+        else clustered.sortWithinPartitions(sortCols.map(col): _*)
       ordered.write.mode("overwrite").partitionBy(partitionCols: _*)
-        .parquet(tmp.toString)
-    require(fs.exists(new Path(tmp, "_SUCCESS")),
-      s"compaction rewrite of $dir did not commit")
-    val cur = new Path(dir)
-    require(fs.rename(cur, old), s"could not stage $dir aside")
-    require(fs.rename(tmp, cur), s"could not swap compacted $dir in")
-    CompactReport(in.length, bytesIn, dataFiles(s, dir).length,
+        .parquet(tmp)
+      require(fsOf(s, dir).exists(new Path(tmp, "_SUCCESS")),
+        s"compaction rewrite of $dir did not commit")
+      in
+    }
+    CompactReport(in.length, in.map(_.getLen).sum, dataFiles(s, dir).length,
       s.read.parquet(dir).count())
+  }
+
+  // ---- the one owner of stored-artifact rewrites -------------------------
+
+  /** The scratch path beside `dir` that [[swap]] writes the next
+    * generation to and [[rewriteBuckets]] stages its buckets in. */
+  private def tmpOf(dir: String) = new Path(dir + ".tmp")
+
+  /** Heal a torn [[swap]] of `dir` before anything reads it: a crash
+    * between the two renames leaves no `dir` and the last committed
+    * generation at `dir.old`, which renames back; a leftover temp (a
+    * crash mid-write or between the renames) is discarded. */
+  private def heal(fs: FileSystem, dir: String): Unit = {
+    val (cur, old) = (new Path(dir), new Path(dir + ".old"))
+    if (!fs.exists(cur) && fs.exists(old))
+      require(fs.rename(old, cur), s"could not restore $dir from $old")
+    if (fs.exists(tmpOf(dir))) fs.delete(tmpOf(dir), true)
+  }
+
+  /** The one generation swap every maintained artifact replaces its
+    * files through (compactions, retrains, model merges, whole-table
+    * stats rewrites): `write` builds the next generation at the temp
+    * path it is handed, then the live `dir` renames aside as
+    * `dir.old` and the temp renames in — two metadata ops, no data
+    * copy. Returns what `write` returns.
+    *
+    *   - A torn swap heals FIRST ([[heal]]).
+    *   - The previous `.old` is deleted at the START of the next swap,
+    *     not at the end of this one — the one-cycle grace that lets a
+    *     reader pinned to the pre-swap listing finish its scan.
+    *   - `dir` need not exist yet (a first write).
+    *
+    * `write` reads the live generation itself, after the heal, and
+    * never targets a path it reads — so a rewrite of `dir` from `dir`
+    * needs no materialize-first checkpoint. */
+  def swap[A](s: SparkSession, dir: String)(write: String => A): A = {
+    val fs = fsOf(s, dir)
+    val (cur, old, tmp) = (new Path(dir), new Path(dir + ".old"), tmpOf(dir))
+    heal(fs, dir)
+    if (fs.exists(old)) fs.delete(old, true)
+    val written = write(tmp.toString)
+    require(fs.exists(tmp), s"the rewrite of $dir wrote nothing")
+    if (fs.exists(cur)) require(fs.rename(cur, old), s"could not stage $dir aside")
+    require(fs.rename(tmp, cur), s"could not swap the rewritten $dir in")
+    written
+  }
+
+  /** The one touched-bucket rewrite of a table hash-partitioned on
+    * `bucketCol` (`dir/bucketCol=b/`): `fold` receives the rows of the
+    * `touched` buckets (a partition-pruned read) and returns the rows
+    * that replace them, `bucketCol` included. The output stages at
+    * `dir.tmp`, clustered one file per bucket, and then:
+    *
+    *   - every touched bucket is replaced by its staged files;
+    *   - an output bucket outside `touched` KEEPS its rows: a fold
+    *     whose bucket key is derived (a relabeled cluster id) can land
+    *     rows there, disjoint from the kept ones — the staged files
+    *     join the bucket, which then re-collapses to one file;
+    *   - a touched bucket the fold drained is deleted;
+    *   - every other bucket's files stay byte-identical.
+    *
+    * The written buckets come from the staging LISTING, so where the
+    * bucket key is the row key the helper adds no Spark job beyond the
+    * write, and the write never targets the path the fold reads (no
+    * materialize-first checkpoint). A torn swap of `dir` heals first;
+    * a crash before the moves leaves `dir` as it was, and the next
+    * rewrite discards the stale staging.
+    * Returns the fold's rows, lazily: a caller that uses them after
+    * the rewrite materializes them inside `fold`, since the buckets
+    * they read have moved by then. */
+  def rewriteBuckets(s: SparkSession, dir: String, bucketCol: String,
+                     touched: Seq[Int])(fold: DataFrame => DataFrame): DataFrame = {
+    val fs = fsOf(s, dir)
+    val stage = tmpOf(dir)
+    heal(fs, dir)
+    val out = fold(s.read.parquet(dir).filter(col(bucketCol).isin(touched: _*)))
+    out.repartition(col(bucketCol))
+      .write.mode("overwrite").partitionBy(bucketCol).parquet(stage.toString)
+    val prefix = bucketCol + "="
+    def bucketDir(root: Path, b: Int) = new Path(root, prefix + b)
+    def move(from: Path, to: Path) =
+      require(fs.rename(from, to), s"could not move $from to $to")
+    val written = fs.listStatus(stage).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toInt)
+    val isTouched = touched.toSet
+    val carried = written.filter { b =>
+      val (from, to) = (bucketDir(stage, b), bucketDir(new Path(dir), b))
+      if (isTouched(b) && fs.exists(to)) fs.delete(to, true)
+      val keeps = fs.exists(to)
+      if (keeps) fs.listStatus(from).foreach(f => move(f.getPath, new Path(to, f.getPath.getName)))
+      else move(from, to)
+      keeps
+    }
+    touched.filterNot(written.toSet).foreach(b => fs.delete(bucketDir(new Path(dir), b), true))
+    fs.delete(stage, true)
+    if (carried.nonEmpty) rewriteBuckets(s, dir, bucketCol, carried)(identity)
+    out
+  }
+
+  // ---- the tombstone log -------------------------------------------------
+
+  /** The pending-delete log of a stored artifact, `dir/_tombstones`
+    * (the underscore keeps it invisible to every parquet scan of the
+    * artifact): a delete appends ids here instead of rewriting data
+    * files, every read subtracts them, and the next rewrite folds
+    * them (the LSM tombstone discipline). Ids are never reused in
+    * this engine, so a tombstone cannot shadow a later insert. */
+  private def tombstoneLog(dir: String) = new Path(dir, "_tombstones")
+
+  /** Log the distinct `key` values of `ids` as deleted from `dir`. */
+  def addTombstones(dir: String, ids: DataFrame, key: String): Unit =
+    ids.select(col(key)).distinct()
+      .write.mode("append").parquet(tombstoneLog(dir).toString)
+
+  /** Whether any delete against `dir` is pending (a listing probe). */
+  def hasTombstones(s: SparkSession, dir: String): Boolean =
+    fsOf(s, dir).exists(tombstoneLog(dir))
+
+  /** `dir`'s pending deletes as distinct `key` values, or None when no
+    * delete is pending — so a read without deletes gains no plan
+    * node. */
+  def tombstones(s: SparkSession, dir: String, key: String): Option[DataFrame] =
+    if (!hasTombstones(s, dir)) None
+    else Some(s.read.parquet(tombstoneLog(dir).toString).select(col(key)).distinct())
+
+  /** `rows` minus `dir`'s pending deletes, matched on `key` (a
+    * broadcast anti-join: the log is bounded by the deletes since the
+    * last fold); `rows` itself when none are pending. */
+  def minusTombstones(s: SparkSession, dir: String, key: String)
+                     (rows: DataFrame): DataFrame =
+    tombstones(s, dir, key).fold(rows)(t =>
+      rows.join(broadcast(t), Seq(key), "left_anti"))
+
+  /** Drop `dir`'s tombstone log once a rewrite has folded it. */
+  def clearTombstones(s: SparkSession, dir: String): Unit = {
+    fsOf(s, dir).delete(tombstoneLog(dir), true)
+    ()
   }
 
   // ---- compacting streaming sink (log-structured generations) -----------

@@ -1193,58 +1193,61 @@ object EventStream {
     * replay their stored change points + the batch; untouched
     * history passes through.
     *
-    * The history is PARTITIONED by a key-hash bucket (`_kb`, an
-    * internal column — read back through [[readScd2History]]), and
-    * each batch rewrites ONLY the buckets its keys hash into, via
-    * dynamic partition overwrite (the backfillDays pattern): per-batch
-    * write cost tracks the batch's key spread, not the full history —
-    * the bound that keeps a year-lived dimension sink viable at
-    * 100 TB. The affected slice is read partition-pruned and the
-    * merged frame is materialized (localCheckpoint) BEFORE the
-    * overwrite — Spark refuses a lazy plan that reads the path it is
-    * writing. At-least-once replays are IDEMPOTENT by construction: a
+    * The history is PARTITIONED by a key-hash bucket (`_kb`, one of
+    * [[SinkBuckets]], an internal column — read back through
+    * [[readScd2History]]), and each batch rewrites ONLY the buckets
+    * its keys hash into ([[graft.sources.Compact.rewriteBuckets]]):
+    * per-batch write cost tracks the batch's key spread, not the full
+    * history — the bound that keeps a year-lived dimension sink
+    * viable at 100 TB. At-least-once replays are IDEMPOTENT by construction: a
     * change event already present as a change point collapses against
     * itself in the run-collapse (spec'd). In-order batches per key,
     * like the batch operator. */
   def streamingScd2Sink(events: DataFrame, dir: String, key: String,
-                        attr: String, ts: String, tie: String,
-                        buckets: Int = 64)
+                        attr: String, ts: String, tie: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        scd2SinkBatch(batch, dir, key, attr, ts, tie, buckets)
+        scd2SinkBatch(batch, dir, key, attr, ts, tie)
       }
       .start()
+
+  /** The key-hash bucket count of the SCD-2 and CDC sinks, the same
+    * for every sink: the layout does not record it, so the snapshot
+    * writer and every later batch must agree on it. */
+  private[graft] val SinkBuckets = 64
+
+  private def sinkBucket(keys: Seq[String]) =
+    pmod(xxhash64(keys.map(col): _*), lit(SinkBuckets)).cast("int")
 
   /** One micro-batch of the SCD-2 sink, exposed so batch callers can
     * drive the same bounded-write path the streaming sink runs. */
   def scd2SinkBatch(batch: DataFrame, dir: String, key: String,
-                    attr: String, ts: String, tie: String,
-                    buckets: Int = 64): Unit = {
+                    attr: String, ts: String, tie: String): Unit = {
     val s = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
-    val kb = pmod(xxhash64(col(key)), lit(buckets)).cast("int").as("_kb")
-    if (!committed) {
+    if (!committed(s, dir)) {
       graft.operators.Upsert.scd2Build(batch, key, attr, ts, tie)
-        .withColumn("_kb", kb)
+        .withColumn("_kb", sinkBucket(Seq(key)))
         .write.mode("overwrite").partitionBy("_kb").parquet(dir)
     } else {
-      val affected = batch.select(kb).distinct()
-        .collect().map(_.getInt(0)).toSeq // bounded by `buckets`
-      val slice = s.read.parquet(dir)
-        .filter(col("_kb").isin(affected: _*)).drop("_kb")
-      val out = graft.operators.Upsert
-        .scd2Apply(slice, batch, key, attr, ts, tie)
-        .withColumn("_kb", kb)
-        .localCheckpoint() // materialize before overwriting read paths
-      out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_kb").parquet(dir)
+      graft.sources.Compact.rewriteBuckets(s, dir, "_kb", sinkBuckets(batch, Seq(key)))(
+        slice => graft.operators.Upsert
+          .scd2Apply(slice.drop("_kb"), batch, key, attr, ts, tie)
+          .withColumn("_kb", sinkBucket(Seq(key))))
     }
     ()
   }
+
+  /** Whether a sink's snapshot at `dir` has been written. */
+  private def committed(s: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** The sink buckets a batch's `keys` hash into (bounded by
+    * [[SinkBuckets]]). */
+  private def sinkBuckets(batch: DataFrame, keys: Seq[String]): Seq[Int] =
+    batch.select(sinkBucket(keys)).distinct().collect().map(_.getInt(0)).toSeq
 
   /** Read back the [[streamingScd2Sink]] history without its internal
     * bucket column. */
@@ -1257,14 +1260,10 @@ object EventStream {
     * the old snapshot written key-hash-bucketed (`_kb`), so every
     * later micro-batch rewrites only the buckets its diff keys hash
     * into. Read back through [[readCdcSnapshot]]. */
-  def writeCdcSnapshot(df: DataFrame, dir: String, keys: Seq[String],
-                       buckets: Int = 64): Unit =
-    df.withColumn("_kb", cdcBucket(keys, buckets))
+  def writeCdcSnapshot(df: DataFrame, dir: String, keys: Seq[String]): Unit =
+    df.withColumn("_kb", sinkBucket(keys))
       .repartition(col("_kb"))
       .write.mode("overwrite").partitionBy("_kb").parquet(dir)
-
-  private def cdcBucket(keys: Seq[String], buckets: Int) =
-    pmod(xxhash64(keys.map(col): _*), lit(buckets)).cast("int")
 
   /** The [[graft.operators.Cdc.applyCdc]] stream half: maintain a
     * keyed parquet snapshot folded from a stream of snapshotDiff-
@@ -1276,66 +1275,44 @@ object EventStream {
     * Per micro-batch ([[cdcSinkBatch]], the scd2SinkBatch write
     * discipline): the batch's affected key-hash buckets are read
     * partition-pruned, the diff folds in, and ONLY those buckets are
-    * rewritten via dynamic partition overwrite — write cost tracks
-    * the batch's key spread, never the snapshot. The fold is
+    * rewritten ([[graft.sources.Compact.rewriteBuckets]]) — write
+    * cost tracks the batch's key spread, never the snapshot. The fold is
     * UPSERT-flavored (ALL diff keys drop out of the kept slice, then
     * insert/update rows come back in), which makes at-least-once
     * replays idempotent: a replayed insert re-lands on its own key
     * instead of duplicating, a replayed delete anti-joins nothing
     * (spec'd) — on a true diff it equals applyCdc exactly. A bucket a
-    * delete-only batch drains entirely is removed explicitly (dynamic
-    * overwrite only replaces partitions present in the output), and
-    * the merged frame is materialized before overwriting the path it
-    * read. In-order batches per key, like the batch operator. */
+    * delete-only batch drains entirely is removed. In-order batches
+    * per key, like the batch operator. */
   def streamingCdcApply(diffs: DataFrame, dir: String, keys: Seq[String],
-                        compareCols: Seq[String], buckets: Int = 64)
+                        compareCols: Seq[String])
       : org.apache.spark.sql.streaming.StreamingQuery =
     diffs.writeStream.outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        cdcSinkBatch(batch, dir, keys, compareCols, buckets)
+        cdcSinkBatch(batch, dir, keys, compareCols)
       }
       .start()
 
   /** One micro-batch of the CDC sink, exposed so batch callers drive
     * the same bounded-write path. */
   def cdcSinkBatch(batch: DataFrame, dir: String, keys: Seq[String],
-                   compareCols: Seq[String], buckets: Int = 64): Unit = {
+                   compareCols: Seq[String]): Unit = {
     val s = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS"))
     val incoming = batch
       .filter(col("change_type").isin("insert", "update"))
       .select(keys.map(col) ++
         compareCols.map(c => col("new_" + c).as(c)): _*)
-    if (!committed) {
+    if (!committed(s, dir)) {
       // bootstrap from empty: inserts/updates land, deletes no-op
-      incoming.withColumn("_kb", cdcBucket(keys, buckets))
-        .repartition(col("_kb"))
-        .write.mode("overwrite").partitionBy("_kb").parquet(dir)
+      writeCdcSnapshot(incoming, dir, keys)
     } else {
-      val affected = batch.select(cdcBucket(keys, buckets).as("_kb"))
-        .distinct().collect().map(_.getInt(0)).toSeq // bounded by `buckets`
-      val slice = s.read.parquet(dir)
-        .filter(col("_kb").isin(affected: _*)).drop("_kb")
       // upsert fold: ALL diff keys leave the kept slice (idempotent
       // replay), insert/update rows come back with their new values
       val touched = batch.select(keys.map(col): _*).distinct()
-      val out = slice.join(touched, keys, "left_anti")
-        .unionByName(incoming)
-        .withColumn("_kb", cdcBucket(keys, buckets))
-        .localCheckpoint() // materialize before overwriting read paths
-      out.repartition(col("_kb"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_kb").parquet(dir)
-      // a bucket whose every row a delete-only batch removed is absent
-      // from `out` — dynamic overwrite leaves its stale directory
-      val written = out.select(col("_kb")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      affected.filterNot(written).foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_kb=$b"), true)
-      }
+      graft.sources.Compact.rewriteBuckets(s, dir, "_kb", sinkBuckets(batch, keys))(
+        _.drop("_kb").join(touched, keys, "left_anti")
+          .unionByName(incoming)
+          .withColumn("_kb", sinkBucket(keys)))
     }
     ()
   }

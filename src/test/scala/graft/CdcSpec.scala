@@ -170,18 +170,24 @@ class CdcSpec extends SparkSpec {
   test("CDC sink: a delete-only batch drains its bucket directory") {
     import graft.streaming.EventStream
     val dir = java.nio.file.Files.createTempDirectory("cdcdrain").toString + "/snap"
-    val base = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0)).toDF("id", "v")
-    EventStream.writeCdcSnapshot(base, dir, Seq("id"), buckets = 2)
-    val bucketOf = base.select(col("id"),
-        pmod(xxhash64(col("id")), lit(2)).cast("int").as("b"))
+    def bucketsOf(ids: Seq[Long]): Map[Long, Int] = ids.toDF("id")
+      .select(col("id"),
+        pmod(xxhash64(col("id")), lit(EventStream.SinkBuckets)).cast("int"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // two ids in each of two sink buckets, picked under the sink's
+    // bucket count
+    val ids = bucketsOf(1L to 500L).groupBy(_._2).values
+      .filter(_.size >= 2).take(2).flatMap(_.keys.toSeq.sorted.take(2)).toSeq
+    val base = ids.map(id => (id, id * 10.0)).toDF("id", "v")
+    EventStream.writeCdcSnapshot(base, dir, Seq("id"))
+    val bucketOf = bucketsOf(ids)
     assume(bucketOf.values.toSet.size == 2, "ids collapsed into one bucket")
-    val target = bucketOf(1L)
+    val target = bucketOf(ids.head)
     val doomed = bucketOf.filter(_._2 == target).keys.toSeq
     val diff = doomed.map(id => (id, "delete", Option(id * 10.0),
         Option.empty[Double]))
       .toDF("id", "change_type", "old_v", "new_v")
-    EventStream.cdcSinkBatch(diff, dir, Seq("id"), Seq("v"), buckets = 2)
+    EventStream.cdcSinkBatch(diff, dir, Seq("id"), Seq("v"))
     val left = EventStream.readCdcSnapshot(spark, dir).collect()
       .map(r => r.getLong(0)).toSet
     assert(left == bucketOf.filterNot(_._2 == target).keys.toSet)

@@ -160,6 +160,23 @@ class ClassifySpec extends SparkSpec {
     }
   }
 
+  test("a model swap torn between its two renames heals at the next append") {
+    val docs = Tables.documents(spark, sf)
+    val a = docs.filter(col("doc_id") < 30)
+    val b = docs.filter(col("doc_id") >= 30 && col("doc_id") < 45)
+    val test_ = docs.filter(col("doc_id") >= 45)
+    val dir = java.nio.file.Files.createTempDirectory("nb-torn").toString + "/nb"
+    Classify.writeNbModel(a, dir)
+    CompactSpec.tearSwap(dir)
+    Classify.appendToNbModel(b, dir)
+    assert(CompactSpec.healed(dir))
+    val fresh = java.nio.file.Files.createTempDirectory("nb-torn-fresh").toString + "/nb"
+    Classify.writeNbModel(a.unionByName(b), fresh)
+    def serve(d: String) = Classify.classifyNbServeBatch(spark, d, test_).collect().toSeq
+    val got = serve(dir)
+    assert(got.nonEmpty && got == serve(fresh))
+  }
+
   test("serving the stored model == the in-query classifier, bit-exactly") {
     val docs = Tables.documents(spark, sf)
     val train = docs.filter(col("doc_id") % 5 =!= 0)

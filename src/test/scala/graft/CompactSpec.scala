@@ -205,4 +205,91 @@ class CompactSpec extends SparkSpec {
     assert(flat.select("day").distinct().count() ==
       spark.read.parquet(s"$tmp/p").select("day").distinct().count())
   }
+
+  /** A bucket directory's data files as (name, bytes). */
+  private def bucketFiles(dir: java.io.File): Seq[(String, Seq[Byte])] =
+    dir.listFiles.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+      .toSeq
+
+  test("rewriteBuckets: touched buckets replaced, carried rows kept, drained buckets deleted, the rest byte-identical") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // 12 rows over buckets 0..3 (b = id % 4)
+    val init = (0L until 12L).map(i => (i, "x", (i % 4).toInt))
+    def rows(r: (Long, String, Int)*): DataFrame = r.toDF("id", "v", "b")
+    case class Case(name: String, touched: Seq[Int],
+                    fold: DataFrame => DataFrame,
+                    want: Set[(Long, String, Int)], identical: Set[Int])
+    val cases = Seq(
+      Case("carried bucket: the fold lands a row outside `touched`",
+        Seq(0), _.withColumn("v", lit("y")).unionByName(rows((100L, "new", 2))),
+        init.map(r => if (r._3 == 0) r.copy(_2 = "y") else r).toSet +
+          ((100L, "new", 2)), identical = Set(1, 3)),
+      Case("drained bucket", Seq(1), _.filter(lit(false)),
+        init.filterNot(_._3 == 1).toSet, identical = Set(0, 2, 3)),
+      Case("empty touched: a new bucket and a carried one", Nil,
+        _ => rows((200L, "new", 4), (201L, "new", 3)),
+        init.toSet + ((200L, "new", 4)) + ((201L, "new", 3)),
+        identical = Set(0, 1, 2)))
+    for (c <- cases) {
+      val dir = java.nio.file.Files.createTempDirectory("rewrite").toString + "/t"
+      rows(init: _*).repartition(col("b")).write.partitionBy("b").parquet(dir)
+      def bucket(b: Int) = new java.io.File(s"$dir/b=$b")
+      val before = c.identical.map(b => b -> bucketFiles(bucket(b))).toMap
+      Compact.rewriteBuckets(spark, dir, "b", c.touched)(c.fold)
+      val got = spark.read.parquet(dir).as[(Long, String, Int)].collect().toSet
+      assert(got == c.want, s"${c.name}: rows")
+      c.identical.foreach(b =>
+        assert(bucketFiles(bucket(b)) == before(b), s"${c.name}: bucket $b was rewritten"))
+      // every bucket the rewrite wrote holds one file; drained ones are gone
+      val outBuckets = c.want.map(_._3) -- c.identical
+      outBuckets.foreach(b =>
+        assert(bucketFiles(bucket(b)).size == 1, s"${c.name}: bucket $b files"))
+      (0 to 4).filterNot(c.want.map(_._3)).foreach(b =>
+        assert(!bucket(b).exists, s"${c.name}: drained bucket $b left behind"))
+      assert(!new java.io.File(dir + ".tmp").exists, s"${c.name}: staging left behind")
+    }
+  }
+
+  test("swap: the previous generation is kept as .old, the temp is cleared") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("swap").toString + "/t"
+    def gen(g: Int): String => Int = { tmp =>
+      Seq(g).toDF("g").write.parquet(tmp); g }
+    def read(d: String) = spark.read.parquet(d).as[Int].collect().toSeq
+    val old = new java.io.File(dir + ".old")
+    val tmp = new java.io.File(dir + ".tmp")
+    assert(Compact.swap(spark, dir)(gen(1)) == 1) // a first write
+    assert(read(dir) == Seq(1) && !old.exists && !tmp.exists)
+    Compact.swap(spark, dir)(gen(2))
+    assert(read(dir) == Seq(2) && read(old.getPath) == Seq(1) && !tmp.exists)
+    // the grace copy is one generation deep
+    Compact.swap(spark, dir)(gen(3))
+    assert(read(dir) == Seq(3) && read(old.getPath) == Seq(2) && !tmp.exists)
+    // a write that fails leaves the live generation in place, and the
+    // next swap discards the torn temp it left
+    intercept[RuntimeException](Compact.swap(spark, dir) { t =>
+      Seq(9).toDF("g").write.parquet(t); sys.error("crash mid-rewrite") })
+    assert(read(dir) == Seq(3) && tmp.exists)
+    Compact.swap(spark, dir)(gen(4))
+    assert(read(dir) == Seq(4) && read(old.getPath) == Seq(3) && !tmp.exists)
+  }
+}
+
+object CompactSpec {
+  /** Rename `dir` aside as `dir.old` and leave a torn temp beside it
+    * (one junk data file, no commit marker): the on-disk state a crash
+    * between the two renames of `Compact.swap` leaves. */
+  def tearSwap(dir: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    Files.move(Paths.get(dir), Paths.get(dir + ".old"))
+    val torn = Files.createDirectories(Paths.get(dir + ".tmp", "part"))
+    Files.write(torn.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    assert(!Files.exists(Paths.get(dir)))
+  }
+
+  /** `dir` is back and its torn temp is gone. */
+  def healed(dir: String): Boolean =
+    new java.io.File(dir).isDirectory && !new java.io.File(dir + ".tmp").exists
 }

@@ -121,6 +121,20 @@ class IvfLayoutSpec extends SparkSpec {
     }
   }
 
+  test("a swap torn between its two renames heals at the next compaction, tombstones included") {
+    val dir = tmp("ivf-torn")
+    val cents = writeIvfPartitioned(spark, sf01, dir)
+    deleteFromLayout(spark, dir, emb.filter(col("vec_id") % 3 === 1).select("vec_id"))
+    CompactSpec.tearSwap(dir)
+    compactIvfPartitioned(spark, dir)
+    assert(CompactSpec.healed(dir))
+    val fresh = tmp("ivf-torn-fresh")
+    writeLayout(FloatCodec(cents), emb.filter(col("vec_id") % 3 =!= 1), fresh)
+    val got = serve(dir, FloatCodec(cents))
+    assert(got.nonEmpty && got == serve(fresh, FloatCodec(cents)),
+      "a healed layout serves unlike a fresh write of the survivors")
+  }
+
   test("trained artifacts are memoized per file version of their table") {
     val d = java.nio.file.Files.createTempDirectory("ivfmemo").toString
     def writeEmb(f: org.apache.spark.sql.Column): Unit =

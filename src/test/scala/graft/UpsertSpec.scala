@@ -133,9 +133,9 @@ class UpsertSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("scd2part").toString + "/h"
     val input = MemoryStream[(Long, String, java.sql.Timestamp, Long)]
     val q = EventStream.streamingScd2Sink(
-      input.toDS().toDF(k, a, ts, tie), dir, k, a, ts, tie, buckets = 16)
+      input.toDS().toDF(k, a, ts, tie), dir, k, a, ts, tie)
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // batch 1: many keys spread across buckets
+    // batch 1: many keys spread across the EventStream.SinkBuckets buckets
     input.addData((1L to 200L).map(i =>
       (i, s"A$i", t("2024-01-01 00:00:00"), i)): _*)
     q.processAllAvailable()
