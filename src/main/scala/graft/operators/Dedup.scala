@@ -265,14 +265,22 @@ object Dedup {
 
   // ---- content-defined chunking (CDC) ------------------------------------
 
+  /** The CDC chunk size: a cut after every `ChunkW`-char window whose
+    * hash ≡ 0 (mod `ChunkDivisor`). One pair for every writer, day step
+    * and stream consumer: the chunk index does not record the size it
+    * was written with, so a reader chunking differently would silently
+    * match nothing. The dedup_chunks oracle SQL spells out 16 and 64. */
+  val ChunkW = 16
+  val ChunkDivisor = 64
+
   /** Content-defined chunk decomposition of each doc (the rolling-
     * hash boundary scheme of storage dedup — Rabin/LBFS, FastCDC
-    * family): a cut falls after every `w`-char window whose 60-bit
-    * md5 hash ≡ 0 (mod `divisor`), so boundaries are decided by
+    * family): a cut falls after every `ChunkW`-char window whose 60-bit
+    * md5 hash ≡ 0 (mod `ChunkDivisor`), so boundaries are decided by
     * CONTENT, not position — an insertion shifts only the chunks up
     * to the first cut after it, and the decomposition resynchronizes
     * (spec'd), where fixed-offset windows would shift every chunk.
-    * Expected chunk length ≈ divisor chars; docs shorter than `w`
+    * Expected chunk length ≈ `ChunkDivisor` chars; docs shorter than `ChunkW`
     * are one chunk; the final remainder closes the last chunk. Pure
     * boundary rule (no min/max clamps) so the DuckDB oracle can
     * replay it exactly. One typed scan, ~len(text) hashes per doc
@@ -292,12 +300,11 @@ object Dedup {
     * real scale this constant factor is the chunking stage's CPU
     * bill; an engine free of the oracle contract would swap in a
     * Rabin fingerprint with identical boundary semantics. */
-  private[graft] def cdcChunksOf(t: String, w: Int = 16,
-                                 divisor: Int = 64): Seq[(Int, Int, Int, Long)] = {
+  private[graft] def cdcChunksOf(t: String): Seq[(Int, Int, Int, Long)] = {
     val ends = scala.collection.mutable.ArrayBuffer.empty[Int]
     var i = 0
-    while (i + w <= t.length) {
-      if (md5Hash60(t.substring(i, i + w)) % divisor == 0) ends += (i + w)
+    while (i + ChunkW <= t.length) {
+      if (md5Hash60(t.substring(i, i + ChunkW)) % ChunkDivisor == 0) ends += (i + ChunkW)
       i += 1
     }
     if (ends.isEmpty || ends.last != t.length) ends += t.length
@@ -309,12 +316,12 @@ object Dedup {
     }.toSeq
   }
 
-  def chunkCdc(docs: DataFrame, w: Int = 16, divisor: Int = 64): DataFrame = {
+  def chunkCdc(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.Util.fanOut(docs.select(col("doc_id"), col("text")).as[(Long, String)])
       .flatMap { case (id, t) =>
-        cdcChunksOf(t, w, divisor).iterator.map {
+        cdcChunksOf(t).iterator.map {
           case (idx, st, len, h) => (id, idx, st, len, h) }
       }
       .toDF("doc_id", "chunk_idx", "chunk_start", "chunk_len", "chunk_hash")
@@ -359,12 +366,11 @@ object Dedup {
   def dedupChunksExcise(s: SparkSession, d: String): DataFrame =
     dedupChunksExcise(withPlants(Tables.documents(s, d)))
 
-  def dedupChunksExcise(docs: DataFrame, w: Int = 16, divisor: Int = 64,
-                        marker: String = "~"): DataFrame = {
+  def dedupChunksExcise(docs: DataFrame, marker: String = "~"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
-    val chunks = chunkCdc(docs, w, divisor).localCheckpoint()
+    val chunks = chunkCdc(docs).localCheckpoint()
     val rankW = Window.partitionBy(col("chunk_hash"))
       .orderBy(col("doc_id"), col("chunk_idx"))
     val marked = chunks
@@ -730,23 +736,20 @@ object Dedup {
     * batch docs/occurrences carry it. Cost tracks the batch — the
     * corpus side is one distinct-hash aggregate, at scale a maintained
     * artifact ([[writeChunkIndex]]). */
-  def dedupChunksIncremental(corpus: DataFrame, batch: DataFrame,
-                             w: Int = 16, divisor: Int = 64): DataFrame =
-    keeperHits(ChunkIndex, chunkCdc(batch, w, divisor),
-      keeperRows(ChunkIndex, chunkCdc(corpus, w, divisor)))
+  def dedupChunksIncremental(corpus: DataFrame, batch: DataFrame): DataFrame =
+    keeperHits(ChunkIndex, chunkCdc(batch), keeperRows(ChunkIndex, chunkCdc(corpus)))
       .orderBy(col("chunk_hash"))
 
   /** Persist the corpus's chunk index — (chunk_hash, keeper_id), one
-    * row per DISTINCT CDC chunk hash (≈ text_bytes/divisor rows,
+    * row per DISTINCT CDC chunk hash (≈ text_bytes/ChunkDivisor rows,
     * orders of magnitude smaller than the window stream): the
     * write-once artifact of the chunk-store dedup loop, mirroring
     * [[writeSpanIndex]]. Appends from [[dedupChunksIncrementalStep]]
     * may repeat a hash across generations; readers collapse through
     * [[ChunkIndex]] and [[compact]] folds the collapse into the
     * periodic rewrite. */
-  def writeChunkIndex(docs: DataFrame, dir: String, w: Int = 16,
-                      divisor: Int = 64): Unit =
-    keeperRows(ChunkIndex, chunkCdc(docs, w, divisor))
+  def writeChunkIndex(docs: DataFrame, dir: String): Unit =
+    keeperRows(ChunkIndex, chunkCdc(docs))
       .write.mode("overwrite").parquet(dir)
 
   /** One day of the chunk-dedup production loop ([[keeperHashStep]],
@@ -754,10 +757,8 @@ object Dedup {
     * detection ≡ [[dedupChunksIncremental]] of (corpus ∪ earlier
     * batches, day-N batch). */
   def dedupChunksIncrementalStep(s: SparkSession, indexDir: String,
-                                 batch: DataFrame, w: Int = 16,
-                                 divisor: Int = 64): DataFrame =
-    keeperHashStep(s, ChunkIndex, indexDir,
-      chunkCdc(batch, w, divisor).localCheckpoint())
+                                 batch: DataFrame): DataFrame =
+    keeperHashStep(s, ChunkIndex, indexDir, chunkCdc(batch).localCheckpoint())
 
   /** The excise form of the daily chunk loop — what an incremental
     * curation pipeline actually runs per day: cut from each batch doc
@@ -772,12 +773,11 @@ object Dedup {
     * comes back all-marker; running the same batch twice excises
     * everything the second time. */
   def dedupChunksExciseIncrementalStep(s: SparkSession, indexDir: String,
-                                       batch: DataFrame, w: Int = 16,
-                                       divisor: Int = 64,
+                                       batch: DataFrame,
                                        marker: String = "~"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val bChunks = chunkCdc(batch, w, divisor).localCheckpoint()
+    val bChunks = chunkCdc(batch).localCheckpoint()
     val idx = s.read.parquet(indexDir)
       .select(col("chunk_hash"), lit(1).as("_corpus_hit")).distinct()
     val rankW = Window.partitionBy(col("chunk_hash"))

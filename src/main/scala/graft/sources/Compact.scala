@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
@@ -21,21 +21,24 @@ object Compact {
   case class CompactReport(filesIn: Int, bytesIn: Long, filesOut: Int,
                            rows: Long)
 
-  /** All parquet data files under `dir`, RECURSIVELY — a partitioned
-    * layout keeps its files in subdirectories, and a non-recursive
-    * listing would report 0 input bytes and size the rewrite to one
-    * file. */
-  private def dataFiles(s: SparkSession, dir: String) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, /* recursive = */ true)
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.LocatedFileStatus]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) buf += st
-    }
-    buf.toArray
+  /** The parquet data files a read of `dir` sees, RECURSIVELY — a
+    * partitioned layout keeps its files in subdirectories, and a
+    * non-recursive listing would report 0 input bytes and size the
+    * rewrite to one file. A path component that starts with `_` or
+    * `.` is skipped, the rule Spark's own file listing applies (a
+    * `_name=value` partition directory is read), so a layout's
+    * `_tombstones` log is not counted as its input. */
+  private def dataFiles(s: SparkSession, dir: String): Seq[FileStatus] = {
+    val fs = fsOf(s, dir)
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    walk(new Path(dir))
   }
 
   /** Rewrite `dir` into `out` with ~`targetBytes` per output file.

@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured Streaming jobs — the streaming form of the reference's
   * daily micro-batch cadence (ref main.py:432-482 batch loop;
@@ -157,191 +160,252 @@ object EventStream {
     }
   }
 
-  case class DocIn(doc_id: Long, content_hash: String)
+  // ---- the two stateful folds behind the streaming detectors -------------
 
-  /** Streaming exact dedup: first-seen filter keyed by content hash
-    * via flatMapGroupsWithState — the streaming form of
-    * Dedup.dedupExact. Emits (content_hash, keeper_id) once per novel
-    * hash; later arrivals of the same content are silently dropped
-    * (streams can't retract, so the keeper is the FIRST arrival —
-    * min doc_id within its micro-batch group for determinism). State
-    * is one long per distinct hash, partitioned by hash — scales
-    * horizontally; production streams bound it with
-    * [[streamingDedupTtl]] (event-time TTL eviction, dedup-within-
-    * horizon) under the RocksDB state store provider. */
-  def streamingDedup(docs: Dataset[DocIn]): Dataset[(String, Long)] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.content_hash)
-      .flatMapGroupsWithState[Long, (String, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (hash: String, rows: Iterator[DocIn], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keeper = rows.map(_.doc_id).min
-            state.update(keeper)
-            Iterator.single((hash, keeper))
+  /** Event-time lateness every TTL'd detector tolerates: its watermark
+    * trails the newest event time seen by this much. */
+  val WatermarkDelay = "10 minutes"
+
+  /** The event time of an unbounded form's arrivals. Without a horizon
+    * the folds read event time only to order a micro-batch, so every
+    * arrival at one instant leaves (event time, id) order = id order. */
+  private val NoTime = new Timestamp(0L)
+
+  /** A fold's input, watermarked on `tsCol` when it has a horizon. */
+  private def timed[T](rows: Dataset[T], tsCol: String,
+                       horizonMs: Option[Long]): Dataset[T] =
+    if (horizonMs.isEmpty) rows else rows.withWatermark(tsCol, WatermarkDelay)
+
+  private def timeoutOf(horizonMs: Option[Long]): GroupStateTimeout =
+    if (horizonMs.isEmpty) GroupStateTimeout.NoTimeout
+    else GroupStateTimeout.EventTimeTimeout
+
+  /** Whether an arrival at `t` lies past the horizon of state last seen
+    * at `lastSeen` — never, without a horizon. */
+  private def expired(lastSeen: Long, t: Long, horizonMs: Option[Long]): Boolean =
+    horizonMs.exists(t > lastSeen + _)
+
+  /** Remove a group's state once the watermark passes `lastSeen` + the
+    * horizon. The timeout tracks the UPDATED lastSeen (a fully-late
+    * batch must not shrink the TTL) and stays ahead of the watermark,
+    * or setting it throws. */
+  private def expireAfter(state: GroupState[_], lastSeen: Long,
+                          horizonMs: Option[Long]): Unit =
+    horizonMs.foreach(h => state.setTimeoutTimestamp(
+      math.max(lastSeen, state.getCurrentWatermarkMs()) + h))
+
+  /** The first-seen keeper fold behind every streaming exact dedup.
+    * Arrivals are (key, id, event time); each micro-batch folds a key's
+    * rows in (event time, id) order, and a key emits (key, id) for its
+    * first arrival and drops the rest. State is one long per key: its
+    * newest event time (lastSeen).
+    *
+    * `horizonMs = None` is the unbounded form: no watermark, no
+    * timeout, and a key once seen is dropped for the stream's lifetime
+    * (arrivals carry [[NoTime]], so the keeper is the batch's min id).
+    * `Some(h)` is dedup-within-horizon: an arrival more than `h` past
+    * its key's lastSeen opens a new window and emits again. That is
+    * checked against the arrival's own event time, so it holds inside
+    * one batch and on a quiet stream whose watermark has not moved
+    * (watermark timeouts fire only when other traffic moves the
+    * clock). Late rows never move lastSeen back, and the key's state
+    * is removed when the watermark passes lastSeen + h, so state is
+    * bounded by the distinct-key arrival rate × horizon. */
+  private def firstSeen[K: TypeTag](arrivals: Dataset[(K, Long, Timestamp)],
+                                    horizonMs: Option[Long]): Dataset[(K, Long)] = {
+    import arrivals.sparkSession.implicits._
+    implicit val keyEnc: Encoder[K] = ExpressionEncoder[K]()
+    timed(arrivals, "_3", horizonMs).groupByKey(_._1)
+      .flatMapGroupsWithState[Long, (K, Long)](OutputMode.Append, timeoutOf(horizonMs)) {
+        (key: K, rows: Iterator[(K, Long, Timestamp)], state: GroupState[Long]) =>
+          if (state.hasTimedOut) {
+            state.remove()
+            Iterator.empty
+          } else {
+            val out = scala.collection.mutable.ArrayBuffer.empty[(K, Long)]
+            val stored = state.getOption
+            var lastSeen = stored
+            rows.toSeq.sortBy(r => (r._3.getTime, r._2)).foreach { case (_, id, ts) =>
+              val t = ts.getTime
+              if (lastSeen.forall(expired(_, t, horizonMs))) out += ((key, id))
+              lastSeen = Some(lastSeen.fold(t)(math.max(_, t)))
+            }
+            // a key re-arriving unchanged costs no state-store write
+            if (lastSeen != stored) state.update(lastSeen.get)
+            expireAfter(state, lastSeen.get, horizonMs)
+            out.iterator
           }
       }
+  }
+
+  /** The bucket-pair fold behind every streaming near-dup detector.
+    * Members are (bucket key, id, payload, event time); a bucket's
+    * state is its members' (id, payload, lastSeen). Each micro-batch
+    * folds a bucket's rows in (event time, id) order: an id already in
+    * the bucket only refreshes its lastSeen, and a new one is checked
+    * against every member before it — `verify(smaller id, larger id,
+    * member payload, arrival payload)` — and emits what `verify`
+    * returns. So no id pairs with itself and no pair repeats within a
+    * bucket; pairs may repeat ACROSS buckets, exactly like the batch
+    * join before its distinct (consumers dedupe). Candidates never
+    * leave the state operator: only verified pairs are emitted.
+    *
+    * `horizonMs = None` is the unbounded form: no watermark, no
+    * timeout, and state bounded by bucket occupancy (what LSH banding
+    * bounds by construction) for the stream's lifetime. `Some(h)` also
+    * bounds it in TIME: an arrival pairs only with members seen within
+    * `h` of its own event time (stale members are evicted inline), and
+    * the bucket's state is removed once the watermark passes its
+    * newest member + h, so state is bounded by the bucket arrival rate
+    * × horizon. A member re-arriving within the horizon refreshes
+    * without re-pairing; one returning after eviction pairs anew.
+    * Lateness is bounded by [[WatermarkDelay]], so a late arrival
+    * pairs with members at most that much newer than itself. With all
+    * arrivals inside one horizon the two forms emit the same rows
+    * (spec'd). */
+  private def bucketPairs[K: TypeTag, P: TypeTag, U <: Product : TypeTag](
+      members: Dataset[(K, Long, P, Timestamp)], horizonMs: Option[Long])(
+      verify: (Long, Long, P, P) => Option[U]): Dataset[U] = {
+    import members.sparkSession.implicits._
+    implicit val keyEnc: Encoder[K] = ExpressionEncoder[K]()
+    implicit val stateEnc: Encoder[Seq[(Long, P, Long)]] =
+      ExpressionEncoder[Seq[(Long, P, Long)]]()
+    timed(members, "_4", horizonMs).groupByKey(_._1)
+      .flatMapGroupsWithState[Seq[(Long, P, Long)], U](OutputMode.Append, timeoutOf(horizonMs)) {
+        (_: K, rows: Iterator[(K, Long, P, Timestamp)],
+         state: GroupState[Seq[(Long, P, Long)]]) =>
+          if (state.hasTimedOut) {
+            // the timeout fires a horizon past the newest member, so
+            // every member is stale by construction
+            state.remove()
+            Iterator.empty
+          } else {
+            val out = scala.collection.mutable.ArrayBuffer.empty[U]
+            var bucket = state.getOption.getOrElse(Seq.empty)
+            rows.toSeq.sortBy(r => (r._4.getTime, r._2)).foreach { case (_, id, p, ts) =>
+              val t = ts.getTime
+              bucket = bucket.filterNot(m => expired(m._3, t, horizonMs))
+              val i = bucket.indexWhere(_._1 == id)
+              if (i >= 0)
+                bucket = bucket.updated(i, bucket(i).copy(_3 = math.max(bucket(i)._3, t)))
+              else {
+                bucket.foreach { case (m, mp, _) =>
+                  out ++= (if (m < id) verify(m, id, mp, p) else verify(id, m, mp, p))
+                }
+                bucket = bucket :+ ((id, p, t))
+              }
+            }
+            state.update(bucket)
+            expireAfter(state, bucket.map(_._3).max, horizonMs)
+            out.iterator
+          }
+      }
+  }
+
+  /** The arrivals whose `key` the static `corpus` does not hold in
+    * `corpusKey`: a stream-static left_outer + IS NULL (anti is not a
+    * supported stream-static join shape). The join is stateless, so
+    * corpus membership costs no streaming state and only corpus-novel
+    * arrivals reach a fold. */
+  private def corpusNovel[T](arrivals: Dataset[T], key: String,
+                             corpus: DataFrame, corpusKey: String): Dataset[T] =
+    arrivals.join(corpus.select(col(corpusKey).as(key), lit(1).as("_corpus_hit")),
+        Seq(key), "left_outer")
+      .filter(col("_corpus_hit").isNull)
+      .select(arrivals.columns.toSeq.map(col): _*)
+      .as(arrivals.encoder)
+
+  // ---- streaming exact dedup: first-seen keepers -------------------------
+
+  case class DocIn(doc_id: Long, content_hash: String)
+
+  /** Streaming exact dedup: the first-seen fold keyed by content hash —
+    * the streaming form of Dedup.dedupExact. Emits (content_hash,
+    * keeper_id) once per novel hash; later arrivals of the same content
+    * are dropped (streams can't retract, so the keeper is the FIRST
+    * arrival — min doc_id within its micro-batch group for
+    * determinism). State is one long per distinct hash, partitioned by
+    * hash, for the stream's lifetime; production streams bound it with
+    * [[streamingDedupTtl]] under the RocksDB state store provider. */
+  def streamingDedup(docs: Dataset[DocIn]): Dataset[(String, Long)] = {
+    import docs.sparkSession.implicits._
+    firstSeen(docs.map(d => (d.content_hash, d.doc_id, NoTime)), None)
   }
 
   case class DocText(doc_id: Long, text: String)
 
-  /** Streaming CHUNK-granular dedup: each arriving doc decomposes
-    * into its content-defined chunks
-    * ([[graft.operators.Dedup.cdcChunksOf]] — the SAME per-doc
-    * decomposition the batch operator uses, so the two cannot
-    * drift), and novelty is tracked PER CHUNK hash: a chunk any
-    * earlier doc already carried is dropped, a novel one emits
-    * (chunk_hash, keeper_doc) — the streaming half of sub-doc
-    * storage-granular dedup, where a chunk-store ingest ships only
-    * novel chunks. State is one long per distinct chunk hash
-    * (the [[streamingDedup]] bound — a TTL variant composes the
-    * same way); the decompose is a stateless flatMap ahead of the
-    * keyed state, so the shuffle moves (hash, doc) longs, never
-    * text. Spec'd: a two-batch split equals the batch keeper view. */
-  def streamingChunkDedup(docs: Dataset[DocText], w: Int = 16,
-                          divisor: Int = 64): Dataset[(Long, Long)] = {
+  /** (chunk_hash, doc_id) arrivals of a doc stream, through
+    * [[graft.operators.Dedup.cdcChunksOf]] — the SAME per-doc
+    * decomposition the batch operator uses, so the two cannot drift.
+    * The decompose is a stateless flatMap ahead of the keyed state, so
+    * the shuffle moves (hash, doc) longs, never text. */
+  private def chunkArrivals(docs: Dataset[DocText]): Dataset[(Long, Long, Timestamp)] = {
     import docs.sparkSession.implicits._
-    docs
-      .flatMap(d => graft.operators.Dedup.cdcChunksOf(d.text, w, divisor)
-        .map(c => (c._4, d.doc_id)))
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (hash: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keeper = rows.map(_._2).min
-            state.update(keeper)
-            Iterator.single((hash, keeper))
-          }
-      }
+    docs.flatMap(d => graft.operators.Dedup.cdcChunksOf(d.text)
+      .map(c => (c._4, d.doc_id, NoTime)))
   }
+
+  /** (line_hash, doc_id) arrivals of a doc stream, through
+    * [[graft.operators.Dedup.linesOf]] — the batch operator's lining. */
+  private def lineArrivals(docs: Dataset[DocText]): Dataset[(Long, Long, Timestamp)] = {
+    import docs.sparkSession.implicits._
+    docs.flatMap(d => graft.operators.Dedup.linesOf(d.doc_id, d.text)
+      .map(l => (l._4, d.doc_id, NoTime)))
+  }
+
+  /** Streaming CHUNK-granular dedup: novelty is tracked per
+    * content-defined chunk hash ([[chunkArrivals]]) — a chunk any
+    * earlier doc already carried is dropped, a novel one emits
+    * (chunk_hash, keeper_doc): the streaming half of sub-doc
+    * storage-granular dedup, where a chunk-store ingest ships only
+    * novel chunks. State is one long per distinct chunk hash. Spec'd:
+    * a two-batch split equals the batch keeper view. */
+  def streamingChunkDedup(docs: Dataset[DocText]): Dataset[(Long, Long)] =
+    firstSeen(chunkArrivals(docs), None)
 
   /** Streaming INCREMENTAL chunk dedup: the maintained chunk-index
     * artifact ([[graft.operators.Dedup.writeChunkIndex]]) consumed
     * the way [[streamingIncrementalDedup]] consumes the band index —
-    * an arriving doc's chunks are first filtered against the STATIC
-    * standing-corpus chunk hashes (stream-static left_outer + IS
-    * NULL; stateless, so corpus membership costs ZERO streaming
-    * state), and only corpus-novel chunks pay the keyed first-seen
-    * state. Emits (chunk_hash, keeper_doc) once per chunk novel to
-    * corpus AND stream. Parity spec'd in StreamingSpec: equals the
-    * batch [[streamingChunkDedup]] view minus index-known hashes. */
+    * arriving chunks are first filtered against the STATIC
+    * standing-corpus chunk hashes ([[corpusNovel]]), and only
+    * corpus-novel chunks pay the keyed first-seen state. Emits
+    * (chunk_hash, keeper_doc) once per chunk novel to corpus AND
+    * stream. Parity spec'd in StreamingSpec: equals the batch
+    * [[streamingChunkDedup]] view minus index-known hashes. */
   def streamingIncrementalChunkDedup(docs: Dataset[DocText],
-                                     chunkIndex: DataFrame, w: Int = 16,
-                                     divisor: Int = 64): Dataset[(Long, Long)] = {
-    import docs.sparkSession.implicits._
-    val novel = docs
-      .flatMap(d => graft.operators.Dedup.cdcChunksOf(d.text, w, divisor)
-        .map(c => (c._4, d.doc_id)))
-      .toDF("chunk_hash", "doc_id")
-      .join(chunkIndex.select(col("chunk_hash"),
-          lit(1).as("_corpus_hit")).distinct(),
-        Seq("chunk_hash"), "left_outer")
-      .filter(col("_corpus_hit").isNull)
-      .select(col("chunk_hash"), col("doc_id"))
-      .as[(Long, Long)]
-    novel.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (hash: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keeper = rows.map(_._2).min
-            state.update(keeper)
-            Iterator.single((hash, keeper))
-          }
-      }
-  }
+                                     chunkIndex: DataFrame): Dataset[(Long, Long)] =
+    firstSeen(corpusNovel(chunkArrivals(docs), "_1", chunkIndex, "chunk_hash"), None)
 
-  /** Streaming LINE dedup: each arriving doc decomposes into its
-    * lines ([[graft.operators.Dedup.linesOf]] — the SAME per-doc
-    * lining the batch operator uses, so the two cannot drift), and
-    * novelty is tracked PER LINE hash: a line any earlier doc already
-    * carried is dropped, a novel one emits (line_hash, keeper_doc) —
-    * the streaming half of C4-style boilerplate stripping, where the
-    * ingest ships only corpus-novel lines. State is one long per
-    * distinct line hash; the decompose is a stateless flatMap ahead
-    * of the keyed state, so the shuffle moves (hash, doc) longs plus
-    * nothing else. Spec'd: a two-batch split equals the batch
-    * min-doc keeper view. */
-  def streamingLineDedup(docs: Dataset[DocText]): Dataset[(Long, Long)] = {
-    import docs.sparkSession.implicits._
-    docs
-      .flatMap(d => graft.operators.Dedup.linesOf(d.doc_id, d.text)
-        .map(l => (l._4, d.doc_id)))
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (hash: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keeper = rows.map(_._2).min
-            state.update(keeper)
-            Iterator.single((hash, keeper))
-          }
-      }
-  }
+  /** Streaming LINE dedup: novelty is tracked per line hash
+    * ([[lineArrivals]]) — a line any earlier doc already carried is
+    * dropped, a novel one emits (line_hash, keeper_doc): the streaming
+    * half of C4-style boilerplate stripping, where the ingest ships
+    * only corpus-novel lines. State is one long per distinct line
+    * hash. Spec'd: a two-batch split equals the batch min-doc keeper
+    * view. */
+  def streamingLineDedup(docs: Dataset[DocText]): Dataset[(Long, Long)] =
+    firstSeen(lineArrivals(docs), None)
 
   /** Streaming INCREMENTAL line dedup: the maintained line-index
     * artifact ([[graft.operators.Dedup.writeLineIndex]]) consumed the
-    * way [[streamingIncrementalChunkDedup]] consumes the chunk index —
-    * an arriving doc's lines are first filtered against the STATIC
-    * standing-corpus line hashes (stream-static left_outer + IS NULL;
-    * stateless, zero streaming state for corpus membership), and only
-    * corpus-novel lines pay the keyed first-seen state. Emits
-    * (line_hash, keeper_doc) once per line novel to corpus AND
+    * way [[streamingIncrementalChunkDedup]] consumes the chunk index.
+    * Emits (line_hash, keeper_doc) once per line novel to corpus AND
     * stream. Parity spec'd in StreamingSpec. */
   def streamingIncrementalLineDedup(docs: Dataset[DocText],
-                                    lineIndex: DataFrame): Dataset[(Long, Long)] = {
-    import docs.sparkSession.implicits._
-    val novel = docs
-      .flatMap(d => graft.operators.Dedup.linesOf(d.doc_id, d.text)
-        .map(l => (l._4, d.doc_id)))
-      .toDF("line_hash", "doc_id")
-      .join(lineIndex.select(col("line_hash"),
-          lit(1).as("_corpus_hit")).distinct(),
-        Seq("line_hash"), "left_outer")
-      .filter(col("_corpus_hit").isNull)
-      .select(col("line_hash"), col("doc_id"))
-      .as[(Long, Long)]
-    novel.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (hash: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          if (state.exists) Iterator.empty
-          else {
-            val keeper = rows.map(_._2).min
-            state.update(keeper)
-            Iterator.single((hash, keeper))
-          }
-      }
-  }
+                                    lineIndex: DataFrame): Dataset[(Long, Long)] =
+    firstSeen(corpusNovel(lineArrivals(docs), "_1", lineIndex, "line_hash"), None)
 
   /** Streaming INCREMENTAL dedup: arrivals are dropped when their
     * content hash already exists in a STATIC standing-corpus index
-    * (stream-static join — stateless, re-read per micro-batch, so at
-    * scale the index lives bucketed/broadcastable by hash), then
-    * first-seen-deduped within the stream itself. The streaming form
-    * of [[graft.operators.Dedup.dedupIncremental]]'s exact tier:
-    * corpus membership costs NO streaming state — only intra-stream
-    * novelty pays the flatMapGroupsWithState state, which production
-    * bounds with the TTL variant. The anti-join is expressed as
-    * stream-static left_outer + IS NULL (the supported stream-static
-    * join shapes; anti is not in the list). */
+    * ([[corpusNovel]]; re-read per micro-batch, so at scale the index
+    * lives bucketed/broadcastable by hash), then first-seen-deduped
+    * within the stream itself. The streaming form of
+    * [[graft.operators.Dedup.dedupIncremental]]'s exact tier: only
+    * intra-stream novelty pays state, which production bounds with
+    * the TTL variant. */
   def streamingIncrementalDedup(docs: Dataset[DocIn],
-                                corpusHashes: DataFrame): Dataset[(String, Long)] = {
-    import docs.sparkSession.implicits._
-    val novel = docs.toDF()
-      .join(corpusHashes.select(col("content_hash"),
-          lit(1).as("_corpus_hit")),
-        Seq("content_hash"), "left_outer")
-      .filter(col("_corpus_hit").isNull)
-      .select(col("doc_id"), col("content_hash"))
-      .as[DocIn]
-    streamingDedup(novel)
-  }
+                                corpusHashes: DataFrame): Dataset[(String, Long)] =
+    streamingDedup(corpusNovel(docs, "content_hash", corpusHashes, "content_hash"))
 
   /** Streaming n-gram NOVELTY scoring: every arriving doc scored
     * against a STORED train shingle set (distinct `shingle` rows —
@@ -408,163 +472,95 @@ object EventStream {
 
   case class DocInTs(doc_id: Long, content_hash: String, ts: java.sql.Timestamp)
 
-  /** [[streamingDedup]] with BOUNDED state: dedup-within-horizon. Each
-    * hash's state carries an event-time TTL `horizonMs` past its
-    * newest arrival (sliding); when the watermark passes it, the state
-    * is REMOVED, and total state is bounded by the distinct-hash
+  /** [[streamingDedup]] with BOUNDED state: dedup-within-horizon — the
+    * first-seen fold with an event-time TTL `horizonMs` past each
+    * hash's newest arrival (sliding). A hash re-appearing after the
+    * horizon is emitted again, even on a quiet stream whose watermark
+    * has not advanced, and total state is bounded by the distinct-hash
     * ARRIVAL RATE × horizon instead of the stream's lifetime
-    * cardinality. A hash re-appearing after the horizon is emitted
-    * again — the expiry is checked against the ARRIVAL's own event
-    * time as well as the timeout, so the guarantee holds even on a
-    * quiet stream whose watermark has not advanced past the TTL yet
-    * (watermark timeouts only fire when other traffic moves the
-    * clock). This is the semantics production dedup runs at 100
+    * cardinality. This is the semantics production dedup runs at 100
     * TB/day: state cannot grow without bound, and the horizon is the
     * declared dedup guarantee. StreamingSpec runs this under the
     * RocksDB state store provider and asserts eviction from the query
-    * progress state-operator metrics. */
-  def streamingDedupTtl(docs: Dataset[DocInTs], horizonMs: Long,
-                        watermarkDelay: String = "10 minutes"): Dataset[(String, Long)] = {
+    * progress state-operator metrics.
+    *
+    * UPGRADE NOTE: the state row is one long (lastSeen) since this
+    * operator moved onto the shared first-seen fold; it was a
+    * (keeper, lastSeen) pair. Spark does not evolve state schemas, so
+    * a query restored from a checkpoint written before the change
+    * fails to deserialize its state. Restart from a FRESH checkpoint
+    * path on upgrade. */
+  def streamingDedupTtl(docs: Dataset[DocInTs], horizonMs: Long): Dataset[(String, Long)] = {
     import docs.sparkSession.implicits._
-    docs.withWatermark("ts", watermarkDelay)
-      .as[DocInTs]
-      .groupByKey(_.content_hash)
-      // state = (keeper, lastSeenMs): lastSeen defines the sliding
-      // expiry independently of the watermark-driven cleanup timeout
-      .flatMapGroupsWithState[(Long, Long), (String, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (hash: String, rows: Iterator[DocInTs], state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // fold the batch in EVENT-TIME order so horizon
-            // transitions INSIDE one micro-batch are honored: a row
-            // landing past lastSeen+horizon starts a new window and
-            // re-emits, even when in-horizon rows share the batch.
-            // Window keeper = its first arrival ((ts, doc_id) order —
-            // deterministic; equals min-doc_id for same-ts batches).
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-            var st = state.getOption.orNull
-            sorted.foreach { r =>
-              val t = r.ts.getTime
-              if (st == null || t > st._2 + horizonMs) {
-                out += ((hash, r.doc_id))
-                st = (r.doc_id, t)
-              } else {
-                st = (st._1, math.max(st._2, t)) // late rows never rewind
-              }
-            }
-            state.update(st)
-            // cleanup timeout tracks the UPDATED lastSeen (never the
-            // batch's own max — a fully-late batch must not shrink the
-            // TTL); must also stay ahead of the watermark or the
-            // update throws
-            state.setTimeoutTimestamp(
-              math.max(st._2, state.getCurrentWatermarkMs()) + horizonMs)
-            out.iterator
-          }
-      }
+    firstSeen(docs.map(d => (d.content_hash, d.doc_id, d.ts)), Some(horizonMs))
+  }
+
+  // ---- streaming near-dup pairs: one bucket fold, three verifies ---------
+
+  /** A minhash band bucket holds no payload: every co-member is a
+    * candidate pair. */
+  private def minhashPair(lo: Long, hi: Long, a: Boolean, b: Boolean): Option[(Long, Long)] =
+    Some((lo, hi))
+
+  /** An image pair within `maxHamming` bits of its dHash signatures. */
+  private def phashPair(maxHamming: Int)(lo: Long, hi: Long, a: Long, b: Long)
+      : Option[(Long, Long, Int)] = {
+    val hm = java.lang.Long.bitCount(a ^ b)
+    if (hm <= maxHamming) Some((lo, hi, hm)) else None
+  }
+
+  /** An embedding pair whose cosine on the batch path's 6-dp HALF_UP
+    * grid clears `tau`. NaN (zero-norm or length-mismatched vector)
+    * drops the pair exactly like the batch path's round+filter does —
+    * BigDecimal(NaN) would kill the whole query. */
+  private def embPair(tau: Double)(lo: Long, hi: Long, a: Array[Float], b: Array[Float])
+      : Option[(Long, Long, Double)] = {
+    val raw = graft.functions.CosineSimilarity.cosineScalar(a, b)
+    if (raw.isNaN) None
+    else {
+      val cos = BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if (cos >= tau) Some((lo, hi, cos)) else None
+    }
   }
 
   case class BandRow(doc_id: Long, band: Int, sig: String)
 
   /** Streaming NEAR-dup candidate detection: the incremental form of
-    * the batch minhash-LSH band join. Keyed by (band, sig) bucket,
-    * the state holds the bucket's member doc ids; each arriving doc
-    * emits a candidate pair against every earlier member, exactly
-    * once (new members are paired with existing ones and with earlier
-    * same-batch arrivals). Pairs may repeat ACROSS bands — exactly
-    * like the batch join before its distinct — so downstream
-    * consumers dedupe, and the spec compares distinct sets. State per
-    * bucket is bounded by bucket occupancy, which is what LSH banding
-    * bounds by construction — but it lives for the stream's lifetime;
-    * production streams run [[streamingMinhashPairsTtl]], which also
-    * bounds it in TIME (event-time horizon + watermark eviction). */
+    * the batch minhash-LSH band join — the bucket-pair fold keyed by
+    * (band, sig), each arriving doc paired with every earlier member of
+    * its bucket exactly once. Pairs may repeat ACROSS bands, so
+    * downstream consumers dedupe, and the spec compares distinct sets.
+    * State per bucket is bounded by bucket occupancy but lives for the
+    * stream's lifetime; production streams run
+    * [[streamingMinhashPairsTtl]], which also bounds it in TIME.
+    *
+    * UPGRADE NOTE: a bucket's state row is (doc_id, true, lastSeen)
+    * per member since this operator moved onto the shared bucket-pair
+    * fold; it was a bare doc_id. Spark does not evolve state schemas:
+    * restart from a FRESH checkpoint path on upgrade. */
   def streamingMinhashPairs(bands: Dataset[BandRow]): Dataset[(Long, Long)] = {
     import bands.sparkSession.implicits._
-    bands.groupByKey(b => (b.band, b.sig))
-      .flatMapGroupsWithState[Seq[Long], (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, String), rows: Iterator[BandRow], state: GroupState[Seq[Long]]) =>
-          val existing = state.getOption.getOrElse(Seq.empty)
-          val seen = existing.toSet
-          val incoming = rows.map(_.doc_id).toSeq.distinct.sorted
-            .filterNot(seen.contains)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var members = existing
-          incoming.foreach { id =>
-            members.foreach { m =>
-              out += (if (m < id) (m, id) else (id, m))
-            }
-            members = members :+ id
-          }
-          state.update(members)
-          out.iterator
-      }
+    bucketPairs(bands.map(b => ((b.band, b.sig), b.doc_id, true, NoTime)), None)(minhashPair)
   }
 
   case class BandRowTs(doc_id: Long, band: Int, sig: String,
                        ts: java.sql.Timestamp)
 
   /** [[streamingMinhashPairs]] with BOUNDED state: near-dup detection
-    * within an event-time horizon. Each bucket's member list carries a
-    * per-member lastSeen; an arriving doc pairs only against members
-    * seen within `horizonMs` of its own event time (stale members are
-    * evicted inline as the batch folds in event-time order), and the
-    * whole bucket's state is REMOVED once the watermark passes its
-    * newest member + horizon — so total state is bounded by the bucket
-    * ARRIVAL RATE × horizon, not the stream's lifetime membership. A
-    * doc re-arriving within the horizon refreshes its lastSeen without
-    * re-pairing; one returning after eviction pairs anew (that IS the
-    * horizon semantics — the same contract as [[streamingDedupTtl]]).
-    * Lateness is bounded by the watermark delay, so a late arrival
-    * pairs against members at most watermark-lag newer than itself.
-    * With all arrivals inside one horizon this reduces exactly to the
-    * unbounded form (parity spec'd); eviction is spec'd under RocksDB
-    * via the state-operator metrics. */
-  def streamingMinhashPairsTtl(bands: Dataset[BandRowTs], horizonMs: Long,
-                               watermarkDelay: String = "10 minutes"): Dataset[(Long, Long)] = {
+    * within an event-time horizon (the bucket-pair fold's TTL form —
+    * the same contract as [[streamingDedupTtl]]). With all arrivals
+    * inside one horizon this reduces exactly to the unbounded form
+    * (parity spec'd); eviction is spec'd under RocksDB via the
+    * state-operator metrics.
+    *
+    * UPGRADE NOTE: a member's state row is (doc_id, true, lastSeen)
+    * since this operator moved onto the shared bucket-pair fold; it
+    * was (doc_id, lastSeen). Restart from a FRESH checkpoint path on
+    * upgrade. */
+  def streamingMinhashPairsTtl(bands: Dataset[BandRowTs], horizonMs: Long): Dataset[(Long, Long)] = {
     import bands.sparkSession.implicits._
-    bands.withWatermark("ts", watermarkDelay)
-      .as[BandRowTs]
-      .groupByKey(b => (b.band, b.sig))
-      .flatMapGroupsWithState[Seq[(Long, Long)], (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, String), rows: Iterator[BandRowTs], state: GroupState[Seq[(Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            // timeout fires horizon past the newest member — every
-            // member is stale by construction
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            var members = state.getOption.getOrElse(Seq.empty)
-            sorted.foreach { r =>
-              val t = r.ts.getTime
-              members = members.filter(_._2 >= t - horizonMs)
-              val idx = members.indexWhere(_._1 == r.doc_id)
-              if (idx >= 0) {
-                val (id, seen) = members(idx)
-                members = members.updated(idx, (id, math.max(seen, t)))
-              } else {
-                members.foreach { case (m, _) =>
-                  out += (if (m < r.doc_id) (m, r.doc_id) else (r.doc_id, m))
-                }
-                members = members :+ ((r.doc_id, t))
-              }
-            }
-            state.update(members)
-            val newest = members.map(_._2).max
-            // cleanup tracks the newest member and must stay ahead of
-            // the watermark or the update throws
-            state.setTimeoutTimestamp(
-              math.max(newest, state.getCurrentWatermarkMs()) + horizonMs)
-            out.iterator
-          }
-      }
+    bucketPairs(bands.map(b => ((b.band, b.sig), b.doc_id, true, b.ts)),
+      Some(horizonMs))(minhashPair)
   }
 
   case class EmbCodeRow(vec_id: Long, tid: Int, code: Int,
@@ -584,51 +580,25 @@ object EventStream {
   }
 
   /** Streaming embedding near-dup pairs: the incremental form of the
-    * batch `Dedup.embLshDups`. Keyed by (tid, code) bucket; the state
-    * holds the bucket's member (id, vector)s; each arriving vector is
-    * cosine-verified against every earlier member AT THE BUCKET —
-    * candidates never leave the state operator — and a pair is
-    * emitted once per bucket when it clears `tau` (pairs may repeat
-    * ACROSS tables, exactly like the batch join before its distinct;
-    * consumers dedupe, the parity spec compares distinct sets). State
-    * per bucket is member count × vector bytes, bounded by bucket
-    * occupancy — the same quantity the (bits, τ) geometry choice
-    * bounds in batch; production streams run
-    * [[streamingEmbLshPairsTtl]], which also bounds it in TIME
-    * (event-time horizon + watermark eviction). */
+    * batch `Dedup.embLshDups` — the bucket-pair fold keyed by (tid,
+    * code), each arriving vector cosine-verified against every earlier
+    * member AT THE BUCKET and emitted when it clears `tau` (pairs may
+    * repeat ACROSS tables, like the batch join before its distinct;
+    * the parity spec compares distinct sets). State per bucket is
+    * member count × vector bytes, bounded by bucket occupancy — the
+    * quantity the (bits, τ) geometry choice bounds in batch;
+    * production streams run [[streamingEmbLshPairsTtl]], which also
+    * bounds it in TIME.
+    *
+    * UPGRADE NOTE: a member's state row is (vec_id, embedding,
+    * lastSeen) since this operator moved onto the shared bucket-pair
+    * fold; it was (vec_id, embedding). Restart from a FRESH checkpoint
+    * path on upgrade. */
   def streamingEmbLshPairs(codes: Dataset[EmbCodeRow],
                            tau: Double = 0.35): Dataset[(Long, Long, Double)] = {
     import codes.sparkSession.implicits._
-    codes.groupByKey(c => (c.tid, c.code))
-      .flatMapGroupsWithState[Seq[(Long, Array[Float])], (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Int), rows: Iterator[EmbCodeRow], state: GroupState[Seq[(Long, Array[Float])]]) =>
-          val existing = state.getOption.getOrElse(Seq.empty)
-          val seen = existing.map(_._1).toSet
-          val incoming = rows.toSeq.filterNot(r => seen(r.vec_id))
-            .groupBy(_.vec_id).map(_._2.head).toSeq.sortBy(_.vec_id)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var members = existing
-          incoming.foreach { r =>
-            members.foreach { case (mid, mv) =>
-              val raw = graft.functions.CosineSimilarity
-                .cosineScalar(mv, r.embedding)
-              // NaN (zero-norm or length-mismatched vector) must drop
-              // the pair exactly like the batch path's round+filter
-              // does — BigDecimal(NaN) would kill the whole query
-              if (!raw.isNaN) {
-                val cos = BigDecimal(raw)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-                if (cos >= tau)
-                  out += (if (mid < r.vec_id) (mid, r.vec_id, cos)
-                          else (r.vec_id, mid, cos))
-              }
-            }
-            members = members :+ (r.vec_id -> r.embedding)
-          }
-          state.update(members)
-          out.iterator
-      }
+    bucketPairs(codes.map(c => ((c.tid, c.code), c.vec_id, c.embedding, NoTime)),
+      None)(embPair(tau))
   }
 
   case class HashKeyRow(doc_id: Long, sig: Long, ci: Int, cv: Long)
@@ -652,159 +622,54 @@ object EventStream {
 
   /** Streaming image near-dup pairs: the incremental form of the
     * batch `Multimodal.phashDups`, completing the streaming near-dup
-    * triple (minhash ✓ embedding ✓ image ✓). Keyed by (ci, cv)
-    * compound chunk bucket; the state holds the bucket's member
-    * (doc_id, signature)s; each arriving image is hamming-verified
-    * against every earlier member AT THE BUCKET — the banding is
-    * exact (a pair within the budget shares ≥1 bucket), so emitted
-    * pairs may repeat across buckets exactly like the batch join
-    * before its distinct (consumers dedupe; the parity spec compares
-    * distinct sets). State per bucket is member count × 16 bytes —
-    * bounded by bucket occupancy, the quantity the 2^30 key space
-    * bounds by construction. */
+    * triple (minhash ✓ embedding ✓ image ✓) — the bucket-pair fold
+    * keyed by (ci, cv) compound chunk bucket, each arriving image
+    * hamming-verified against every earlier member AT THE BUCKET. The
+    * banding is exact (a pair within the budget shares ≥1 bucket), so
+    * emitted pairs may repeat across buckets exactly like the batch
+    * join before its distinct (the parity spec compares distinct
+    * sets). State per bucket is member count × 24 bytes — bounded by
+    * bucket occupancy, the quantity the 2^30 key space bounds by
+    * construction.
+    *
+    * UPGRADE NOTE: a member's state row is (doc_id, sig, lastSeen)
+    * since this operator moved onto the shared bucket-pair fold; it
+    * was (doc_id, sig). Restart from a FRESH checkpoint path on
+    * upgrade. */
   def streamingPhashPairs(keys: Dataset[HashKeyRow],
                           maxHamming: Int = 3): Dataset[(Long, Long, Int)] = {
     import keys.sparkSession.implicits._
-    keys.groupByKey(k => (k.ci, k.cv))
-      .flatMapGroupsWithState[Seq[(Long, Long)], (Long, Long, Int)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), rows: Iterator[HashKeyRow], state: GroupState[Seq[(Long, Long)]]) =>
-          val existing = state.getOption.getOrElse(Seq.empty)
-          val seen = existing.map(_._1).toSet
-          val incoming = rows.toSeq.filterNot(r => seen(r.doc_id))
-            .groupBy(_.doc_id).map(_._2.head).toSeq.sortBy(_.doc_id)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-          var members = existing
-          incoming.foreach { r =>
-            members.foreach { case (mid, msig) =>
-              val hm = java.lang.Long.bitCount(msig ^ r.sig)
-              if (hm <= maxHamming)
-                out += (if (mid < r.doc_id) (mid, r.doc_id, hm)
-                        else (r.doc_id, mid, hm))
-            }
-            members = members :+ ((r.doc_id, r.sig))
-          }
-          state.update(members)
-          out.iterator
-      }
+    bucketPairs(keys.map(k => ((k.ci, k.cv), k.doc_id, k.sig, NoTime)),
+      None)(phashPair(maxHamming))
   }
 
   case class HashKeyRowTs(doc_id: Long, sig: Long, ci: Int, cv: Long,
                           ts: java.sql.Timestamp)
 
   /** [[streamingPhashPairs]] with BOUNDED state — the image analog of
-    * [[streamingMinhashPairsTtl]]: per-bucket members carry
-    * (signature, lastSeen), arrivals hamming-verify only against
-    * members within the event-time horizon (stale members evicted
-    * inline), and the bucket's state is removed when the watermark
-    * passes its newest member + horizon. State is bounded by bucket
-    * arrival rate × horizon × 24 bytes instead of the stream's
-    * lifetime bucket membership; with all arrivals inside one horizon
-    * this reduces exactly to the unbounded form (parity spec'd). */
+    * [[streamingMinhashPairsTtl]]. State is bounded by bucket arrival
+    * rate × horizon × 24 bytes instead of the stream's lifetime bucket
+    * membership; with all arrivals inside one horizon this reduces
+    * exactly to the unbounded form (parity spec'd). */
   def streamingPhashPairsTtl(keys: Dataset[HashKeyRowTs], horizonMs: Long,
-                             maxHamming: Int = 3,
-                             watermarkDelay: String = "10 minutes"): Dataset[(Long, Long, Int)] = {
+                             maxHamming: Int = 3): Dataset[(Long, Long, Int)] = {
     import keys.sparkSession.implicits._
-    keys.withWatermark("ts", watermarkDelay)
-      .as[HashKeyRowTs]
-      .groupByKey(k => (k.ci, k.cv))
-      .flatMapGroupsWithState[Seq[(Long, Long, Long)], (Long, Long, Int)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), rows: Iterator[HashKeyRowTs],
-         state: GroupState[Seq[(Long, Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-            var members = state.getOption.getOrElse(Seq.empty)
-            sorted.foreach { r =>
-              val t = r.ts.getTime
-              members = members.filter(_._3 >= t - horizonMs)
-              val idx = members.indexWhere(_._1 == r.doc_id)
-              if (idx >= 0) {
-                val (id, sig, seen) = members(idx)
-                members = members.updated(idx, (id, sig, math.max(seen, t)))
-              } else {
-                members.foreach { case (mid, msig, _) =>
-                  val hm = java.lang.Long.bitCount(msig ^ r.sig)
-                  if (hm <= maxHamming)
-                    out += (if (mid < r.doc_id) (mid, r.doc_id, hm)
-                            else (r.doc_id, mid, hm))
-                }
-                members = members :+ ((r.doc_id, r.sig, t))
-              }
-            }
-            state.update(members)
-            val newest = members.map(_._3).max
-            state.setTimeoutTimestamp(
-              math.max(newest, state.getCurrentWatermarkMs()) + horizonMs)
-            out.iterator
-          }
-      }
+    bucketPairs(keys.map(k => ((k.ci, k.cv), k.doc_id, k.sig, k.ts)),
+      Some(horizonMs))(phashPair(maxHamming))
   }
 
   case class EmbCodeRowTs(vec_id: Long, tid: Int, code: Int,
                           embedding: Array[Float], ts: java.sql.Timestamp)
 
   /** [[streamingEmbLshPairs]] with BOUNDED state — the embedding
-    * analog of [[streamingMinhashPairsTtl]]: per-bucket members carry
-    * (vector, lastSeen), arrivals are cosine-verified only against
-    * members within the event-time horizon (stale members evicted
-    * inline), and the bucket's state is removed when the watermark
-    * passes its newest member + horizon. State is bounded by bucket
+    * analog of [[streamingMinhashPairsTtl]]. State is bounded by bucket
     * arrival rate × horizon × vector bytes instead of the stream's
     * lifetime bucket membership. */
   def streamingEmbLshPairsTtl(codes: Dataset[EmbCodeRowTs], horizonMs: Long,
-                              tau: Double = 0.35,
-                              watermarkDelay: String = "10 minutes"): Dataset[(Long, Long, Double)] = {
+                              tau: Double = 0.35): Dataset[(Long, Long, Double)] = {
     import codes.sparkSession.implicits._
-    codes.withWatermark("ts", watermarkDelay)
-      .as[EmbCodeRowTs]
-      .groupByKey(c => (c.tid, c.code))
-      .flatMapGroupsWithState[Seq[(Long, Array[Float], Long)], (Long, Long, Double)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Int), rows: Iterator[EmbCodeRowTs],
-         state: GroupState[Seq[(Long, Array[Float], Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.vec_id))
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            var members = state.getOption.getOrElse(Seq.empty)
-            sorted.foreach { r =>
-              val t = r.ts.getTime
-              members = members.filter(_._3 >= t - horizonMs)
-              val idx = members.indexWhere(_._1 == r.vec_id)
-              if (idx >= 0) {
-                val (id, v, seen) = members(idx)
-                members = members.updated(idx, (id, v, math.max(seen, t)))
-              } else {
-                members.foreach { case (mid, mv, _) =>
-                  val raw = graft.functions.CosineSimilarity
-                    .cosineScalar(mv, r.embedding)
-                  // NaN (zero-norm / length-mismatch) drops the pair,
-                  // matching the batch path's round+filter
-                  if (!raw.isNaN) {
-                    val cos = BigDecimal(raw)
-                      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-                    if (cos >= tau)
-                      out += (if (mid < r.vec_id) (mid, r.vec_id, cos)
-                              else (r.vec_id, mid, cos))
-                  }
-                }
-                members = members :+ ((r.vec_id, r.embedding, t))
-              }
-            }
-            state.update(members)
-            val newest = members.map(_._3).max
-            state.setTimeoutTimestamp(
-              math.max(newest, state.getCurrentWatermarkMs()) + horizonMs)
-            out.iterator
-          }
-      }
+    bucketPairs(codes.map(c => ((c.tid, c.code), c.vec_id, c.embedding, c.ts)),
+      Some(horizonMs))(embPair(tau))
   }
 
   /** Streaming HyperLogLog: per-group register state updated
@@ -914,17 +779,10 @@ object EventStream {
     * against the counter table. */
   def streamingCmsCounters(toks: Dataset[String]): Dataset[(Int, Long, Long)] = {
     import toks.sparkSession.implicits._
-    toks
-      .flatMap(t => (0 until graft.operators.Sketches.CmsD)
-        .map(j => (j, graft.operators.Sketches.cmsBucketLocal(j, t))))
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, (Int, Long, Long)](
-        GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long), it: Iterator[(Int, Long)], state: GroupState[Long]) =>
-          val c = state.getOption.getOrElse(0L) + it.size
-          state.update(c)
-          (key._1, key._2, c)
-      }
+    runningCounts(toks.flatMap(t => (0 until graft.operators.Sketches.CmsD)
+        .map(j => (j, graft.operators.Sketches.cmsBucketLocal(j, t))))) {
+      case ((j, b), c) => (j, b, c)
+    }
   }
 
   /** Streaming histogram-quantile counters: the
@@ -942,20 +800,26 @@ object EventStream {
                                ): Dataset[(String, Int, Long)] = {
     import rows.sparkSession.implicits._
     val b = graft.operators.Sketches.QsB
-    rows
-      .flatMap { case (g, v) =>
-        grid.get(g).map { case (mn, mx) =>
-          val raw = if (mx > mn) math.floor((v - mn) * b / (mx - mn)) else 0.0
-          (g, math.max(0, math.min(b - 1, raw.toInt)))
-        }
+    val cells = rows.flatMap { case (g, v) =>
+      grid.get(g).map { case (mn, mx) =>
+        val raw = if (mx > mn) math.floor((v - mn) * b / (mx - mn)) else 0.0
+        (g, math.max(0, math.min(b - 1, raw.toInt)))
       }
-      .groupByKey(identity)
-      .mapGroupsWithState[Long, (String, Int, Long)](
-        GroupStateTimeout.NoTimeout) {
-        (key: (String, Int), it: Iterator[(String, Int)], state: GroupState[Long]) =>
+    }
+    runningCounts(cells) { case ((g, bin), c) => (g, bin, c) }
+  }
+
+  /** A running count per key for the streaming counters: each
+    * micro-batch adds its arrivals to the key's count (state = one
+    * Long) and emits `out(key, count)` in Update mode. */
+  private def runningCounts[K, U: Encoder](keys: Dataset[K])(out: (K, Long) => U): Dataset[U] = {
+    implicit val countEnc: Encoder[Long] = Encoders.scalaLong
+    keys.groupByKey(identity)(keys.encoder)
+      .mapGroupsWithState[Long, U](GroupStateTimeout.NoTimeout) {
+        (key: K, it: Iterator[K], state: GroupState[Long]) =>
           val c = state.getOption.getOrElse(0L) + it.size
           state.update(c)
-          (key._1, key._2, c)
+          out(key, c)
       }
   }
 

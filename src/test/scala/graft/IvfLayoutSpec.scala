@@ -3,6 +3,7 @@ package graft
 import graft.operators.Similarity._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The one stored-IVF-layout lifecycle, checked over all five codecs:
   * write + append, delete, compact and retrain each keep serving (or
@@ -60,6 +61,14 @@ class IvfLayoutSpec extends SparkSpec {
       case x => x
     }).toSet
 
+  /** (path, bytes) of every parquet file under `dir`, recursively. */
+  private def parquetFiles(dir: String): Seq[(String, Long)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet"))
+      .map(f => f -> new java.io.File(f).length).toSeq
+    finally walk.close()
+  }
+
   private def hasBucketDirs(dir: String): Boolean =
     new java.io.File(dir).listFiles.exists(f =>
       f.isDirectory && f.getName.startsWith("bucket="))
@@ -87,8 +96,13 @@ class IvfLayoutSpec extends SparkSpec {
       val deleted = serve(dir, codec)
       assert(deleted.nonEmpty && deleted == serve(fresh(survivors), codec),
         "delete-then-serve differs from a layout of the survivors")
-      // 3. compaction: serving unchanged, log folded, partitioning kept
-      compactIvfPartitioned(spark, dir)
+      // 3. compaction: serving unchanged, log folded, partitioning kept;
+      // its report counts the layout's files, never the log's
+      val (logFiles, layoutFiles) = parquetFiles(dir).partition(_._1.contains("/_tombstones/"))
+      assert(logFiles.nonEmpty, "no pending deletes to fold")
+      val report = compactIvfPartitioned(spark, dir)
+      assert((report.filesIn, report.bytesIn) == (layoutFiles.size, layoutFiles.map(_._2).sum),
+        s"compaction input $report vs the layout's ${layoutFiles.size} files")
       assert(serve(dir, codec) == deleted)
       assert(!new java.io.File(s"$dir/_tombstones").exists, "tombstone log survived compaction")
       assert(hasBucketDirs(dir), "compaction dropped the bucket partitioning")

@@ -1295,6 +1295,75 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The rows `op` emits when fed `batches`, one micro-batch each, as a
+    * sorted multiset. */
+  private def emitted[T: org.apache.spark.sql.Encoder](name: String, batches: Seq[Seq[T]])(
+      op: org.apache.spark.sql.Dataset[T] => org.apache.spark.sql.Dataset[_]): Seq[Seq[Any]] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[T]
+    val q = op(input.toDS()).toDF().writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName(name).start()
+    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+  }
+
+  test("unbounded and TTL detectors emit the same rows when two batches share a horizon") {
+    import spark.implicits._
+    import EventStream._
+    val h = 3600 * 1000L
+    val (t0, t1) = (ts("2024-01-01 00:00:00"), ts("2024-01-01 00:30:00"))
+    // each case: (name, unbounded rows, TTL rows, expected rows); batch
+    // 1 repeats an id inside itself, batch 2 re-sends it
+    val dedup = Seq(
+      Seq(DocIn(2, "a"), DocIn(1, "a"), DocIn(3, "b"), DocIn(3, "b")),
+      Seq(DocIn(3, "b"), DocIn(4, "c"), DocIn(5, "a")))
+    val bands = Seq( // bucket (0, A) holds 1, 2, 4; bucket (1, B) holds 1, 3, 5
+      Seq(BandRow(1, 0, "A"), BandRow(2, 0, "A"), BandRow(2, 0, "A"),
+        BandRow(3, 1, "B"), BandRow(1, 1, "B")),
+      Seq(BandRow(2, 0, "A"), BandRow(4, 0, "A"), BandRow(3, 1, "B"), BandRow(5, 1, "B")))
+    val hashes = Seq( // hamming: 1↔2 = 1, 2↔4 = 3, 1↔4 = 4 (over budget), 5↔6 = 2
+      Seq(HashKeyRow(1, 0L, 0, 7L), HashKeyRow(2, 1L, 0, 7L), HashKeyRow(2, 1L, 0, 7L),
+        HashKeyRow(5, 0L, 1, 9L)),
+      Seq(HashKeyRow(2, 1L, 0, 7L), HashKeyRow(4, 15L, 0, 7L), HashKeyRow(6, 3L, 1, 9L)))
+    def v(x: Float, y: Float) = Array(x, y)
+    val codes = Seq( // 3 is orthogonal to 1 and far from 6; 5 is zero-norm (NaN)
+      Seq(EmbCodeRow(1, 0, 1, v(1f, 0f)), EmbCodeRow(2, 0, 1, v(1f, 0.1f)),
+        EmbCodeRow(2, 0, 1, v(1f, 0.1f))),
+      Seq(EmbCodeRow(2, 0, 1, v(1f, 0.1f)), EmbCodeRow(3, 0, 1, v(0f, 1f)),
+        EmbCodeRow(5, 0, 1, v(0f, 0f)), EmbCodeRow(6, 0, 1, v(1f, 0.2f))))
+    def timed[A, B](batches: Seq[Seq[A]])(f: (A, java.sql.Timestamp) => B): Seq[Seq[B]] =
+      batches.zip(Seq(t0, t1)).map { case (b, t) => b.map(f(_, t)) }
+    val cases: Seq[(String, Seq[Seq[Any]], Seq[Seq[Any]], Set[Seq[Any]])] = Seq(
+      ("first-seen dedup",
+        emitted("parity_dedup", dedup)(streamingDedup),
+        emitted("parity_dedup_ttl", timed(dedup)((d, t) => DocInTs(d.doc_id, d.content_hash, t)))(
+          streamingDedupTtl(_, h)),
+        Set(Seq("a", 1L), Seq("b", 3L), Seq("c", 4L))),
+      ("minhash pairs",
+        emitted("parity_mh", bands)(streamingMinhashPairs),
+        emitted("parity_mh_ttl", timed(bands)((b, t) => BandRowTs(b.doc_id, b.band, b.sig, t)))(
+          streamingMinhashPairsTtl(_, h)),
+        Set(Seq(1L, 2L), Seq(1L, 4L), Seq(2L, 4L), Seq(1L, 3L), Seq(1L, 5L), Seq(3L, 5L))),
+      ("phash pairs",
+        emitted("parity_phash", hashes)(streamingPhashPairs(_)),
+        emitted("parity_phash_ttl", timed(hashes)((k, t) =>
+          HashKeyRowTs(k.doc_id, k.sig, k.ci, k.cv, t)))(streamingPhashPairsTtl(_, h)),
+        Set(Seq(1L, 2L, 1), Seq(2L, 4L, 3), Seq(5L, 6L, 2))),
+      ("embedding LSH pairs",
+        emitted("parity_emb", codes)(streamingEmbLshPairs(_)),
+        emitted("parity_emb_ttl", timed(codes)((c, t) =>
+          EmbCodeRowTs(c.vec_id, c.tid, c.code, c.embedding, t)))(streamingEmbLshPairsTtl(_, h)),
+        Set(Seq(1L, 2L, 0.995037), Seq(1L, 6L, 0.980581), Seq(2L, 6L, 0.995229))))
+    for ((name, unbounded, ttl, want) <- cases) {
+      assert(unbounded == ttl, s"$name: unbounded $unbounded vs TTL $ttl")
+      assert(unbounded.toSet == want, s"$name: emitted $unbounded")
+      assert(unbounded.distinct.size == unbounded.size, s"$name: a row repeats: $unbounded")
+      if (name != "first-seen dedup")
+        assert(unbounded.forall(r => r(0) != r(1)), s"$name: a self-pair: $unbounded")
+    }
+  }
+
   test("TTL'd streaming dedup bounds state under RocksDB: rows evict past the horizon") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
