@@ -14,7 +14,9 @@ import scala.collection.mutable
   * discipline), then once timed with a listener recording every job's
   * duration and task count. Construction time (internal collects /
   * eager checkpoints fire there) is reported separately from the
-  * final count() action.
+  * final count() action, and `compiles` counts the whole-stage and
+  * expression classes Janino compiled during the timed run (a warm
+  * query that recompiles per request shows a nonzero count).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -53,6 +55,8 @@ object JobProfile {
       fn(spark, sfDir).count() // warmup
       Thread.sleep(300)
       lines.synchronized(lines.clear())
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tc = System.nanoTime()
@@ -62,7 +66,7 @@ object JobProfile {
       lines.synchronized {
         println(f"== $name rows=$n total=${(t1 - t0) / 1e9}%.3fs " +
           f"construct=${(tc - t0) / 1e9}%.3fs action=${(t1 - tc) / 1e9}%.3fs " +
-          f"jobs=${lines.size}")
+          f"jobs=${lines.size} compiles=${compiles.getCount - c0}")
         lines.foreach(println)
       }
     }

@@ -71,33 +71,48 @@ object Search {
 
   /** The two rounded DECIMAL(13,9) factors of a term's BM25
     * contribution (see object doc for the integer-rational
-    * derivation). `nDocs`/`sTok` are corpus scalars. */
-  private def idfCol(df: Column, nDocs: Long): Column =
-    round(log(lit(2L * nDocs + 2).cast("double") /
+    * derivation). `nDocs`/`sTok` are the corpus scalars as COLUMNS:
+    * a literal would compile them into the scoring stage's generated
+    * code, which every index append would then recompile. */
+  private def idfCol(df: Column, nDocs: Column): Column =
+    round(log((lit(2L) * nDocs + lit(2L)).cast("double") /
       (lit(2L) * df + lit(1L)).cast("double")), 9).cast(DecimalType(13, 9))
 
-  private def wCol(tf: Column, dl: Column, nDocs: Long, sTok: Long): Column =
-    round((lit(22L) * tf * lit(sTok)).cast("double") /
-      (lit(10L) * tf * lit(sTok) + lit(3L * sTok) + lit(9L) * dl * lit(nDocs))
+  private def wCol(tf: Column, dl: Column, nDocs: Column, sTok: Column): Column =
+    round((lit(22L) * tf * sTok).cast("double") /
+      (lit(10L) * tf * sTok + lit(3L) * sTok + lit(9L) * dl * nDocs)
         .cast("double"), 9).cast(DecimalType(13, 9))
 
-  /** Score a (query_id, term) set against per-doc stats and emit the
-    * per-query top-k: (query_id, doc_id, bm25, rank). Shared core of
-    * the inline query and the index-served path — identical results
-    * by construction. `tfd` must carry (doc_id, token, tf, dl, df). */
-  private def scoreAndRank(queries: DataFrame, tfd: DataFrame,
-                           nDocs: Long, sTok: Long, k: Int): DataFrame = {
+  /** The broadcast query side of [[scoreAndRank]]: the batch's
+    * (query_id, term) rows, collected once, each carrying the corpus
+    * scalars as data — (query_id, token, n_docs, s_tok), a local
+    * relation. */
+  private def queryRows(s: SparkSession, batch: Seq[(Long, String)],
+                        stats: (Long, Long)): DataFrame = {
+    import s.implicits._
+    batch.map { case (q, t) => (q, t, stats._1, stats._2) }
+      .toDF("query_id", "token", "n_docs", "s_tok")
+  }
+
+  /** Score a query side ([[queryRows]]) against per-doc stats and emit
+    * the per-query top-k: (query_id, doc_id, bm25, rank), ordered
+    * unless an interior consumer (a fusion) reorders anyway. Shared
+    * core of the inline query and the index-served path — identical
+    * results by construction. `tfd` must carry (doc_id, token, tf, dl,
+    * df). */
+  private def scoreAndRank(queries: DataFrame, tfd: DataFrame, k: Int,
+                           ordered: Boolean): DataFrame = {
     val s = tfd.sparkSession
     import s.implicits._
     val contrib = tfd
-      .join(broadcast(queries.withColumnRenamed("term", "token")), Seq("token"))
+      .join(broadcast(queries), Seq("token"))
       .select(col("query_id"), col("doc_id"),
-        (idfCol(col("df"), nDocs) * wCol(col("tf"), col("dl"), nDocs, sTok))
-          .as("contrib"))
+        (idfCol(col("df"), col("n_docs")) *
+          wCol(col("tf"), col("dl"), col("n_docs"), col("s_tok"))).as("contrib"))
     val scored = contrib
       .groupBy(col("query_id"), col("doc_id"))
       .agg(round(sum(col("contrib")).cast("double"), 6).as("bm25"))
-    scored.select(col("query_id"), col("doc_id"), col("bm25"))
+    val top = scored.select(col("query_id"), col("doc_id"), col("bm25"))
       .as[(Long, Long, Double)]
       .groupByKey(_._1)
       .mapValues(t => graft.functions.TopK.Scored(t._2, t._3))
@@ -105,7 +120,7 @@ object Search {
       .flatMap { case (qid, arr) =>
         arr.iterator.zipWithIndex.map { case (sc, i) => (qid, sc.id, sc.score, i + 1) } }
       .toDF("query_id", "doc_id", "bm25", "rank")
-      .orderBy(col("query_id"), col("rank"))
+    if (ordered) Similarity.inRankOrder(top) else top
   }
 
   /** bm25_topk — the oracle-gated inline query: stats are derived
@@ -114,8 +129,12 @@ object Search {
     * [[writeInvertedIndexBucketed]] + [[bm25ServeBatch]], the artifact split,
     * exactly like ngram_lm's model split). The two corpus scalars
     * (N, S) are a bounded driver artifact (one 2-value collect, the
-    * centroid precedent). */
-  def bm25TopK(s: SparkSession, d: String, k: Int = DefaultK): DataFrame = {
+    * centroid precedent), carried as data on the query side. */
+  def bm25TopK(s: SparkSession, d: String, k: Int = DefaultK): DataFrame =
+    bm25Ranked(s, d, k, ordered = true)
+
+  private def bm25Ranked(s: SparkSession, d: String, k: Int,
+                         ordered: Boolean): DataFrame = {
     import s.implicits._
     // the stats collect below forces evaluation anyway, so the
     // checkpoint is EAGER here (not the lazy-cache trap — CLAUDE.md):
@@ -127,9 +146,8 @@ object Search {
     val Array(nDocs, sTok) = dl.agg(count(lit(1)), sum(col("dl")))
       .as[(Long, Long)].collect().flatMap(t => Array(t._1, t._2))
     val tfd = tf.join(dl, "doc_id").join(broadcast(df), "token")
-    val queries = BmQueries.flatMap { case (q, ts) => ts.map(q -> _) }
-      .toDF("query_id", "term")
-    scoreAndRank(queries, tfd, nDocs, sTok, k)
+    val batch = BmQueries.flatMap { case (q, ts) => ts.map(q -> _) }
+    scoreAndRank(queryRows(s, batch, (nDocs, sTok)), tfd, k, ordered)
   }
 
   // ---- inverted-index artifact + pruned serving ------------------------
@@ -147,29 +165,56 @@ object Search {
   private def tokenBucket(nBuckets: Int): Column =
     pmod(xxhash64(col("token")), lit(nBuckets)).cast("int")
 
-  /** The layout's stored bucket count — the one-row `meta` contract
-    * that keeps writer, append and serve on the same `n_buckets`. */
-  private def storedBuckets(s: SparkSession, dir: String): Int = {
-    import s.implicits._
-    s.read.parquet(s"$dir/meta").as[Int].head()
+  /** A stored inverted or positional index as of ONE listing of `dir`
+    * ([[Tables.Version]]): every table is read through it, and the
+    * per-generation values — the `meta` bucket count, the `stats`
+    * scalars, the tombstone log's ids, the schemas — are computed at
+    * most once per file version ([[Tables.memo]], [[Tables.read]]). An
+    * append, delete, compaction or rewrite makes new files, so a value
+    * of an older generation never serves. */
+  private final case class Index(s: SparkSession, v: Tables.Version) {
+    def table(name: String): Tables.Version = v.sub(name)
+
+    /** The one-row `meta` contract that keeps writer, append and serve
+      * on the same `n_buckets`. */
+    lazy val nBuckets: Int = Tables.memo(s, table("meta"), "n_buckets") {
+      Tables.read(s, table("meta")).head().getInt(0)
+    }
+
+    /** The corpus scalars (n_docs, s_tok) of the one-row `stats`. */
+    lazy val stats: (Long, Long) = Tables.memo(s, table("stats"), "stats") {
+      val r = Tables.read(s, table("stats")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+
+    /** The distinct buckets `terms` hash into, through the stored hash
+      * (a projection of a local relation: evaluated on the driver). */
+    def bucketsOf(terms: Seq[String]): Seq[Int] = {
+      import s.implicits._
+      terms.toDF("token").select(tokenBucket(nBuckets)).as[Int]
+        .collect().distinct.sorted.toSeq
+    }
+
+    /** Whether any of `buckets` holds files of `name` (the listing
+      * answers; a missing bucket holds no probed term). */
+    def holdsAny(name: String, buckets: Seq[Int]): Boolean = {
+      val held = table(name).partitions("tb").toSet
+      buckets.exists(b => held(b.toString))
+    }
+
+    /** `name`'s rows of the probed `terms`: partition pruning to their
+      * `buckets` over the listing, and the `token IN` filter pushed into
+      * the token-sorted scan (row-group skipping). */
+    def probed(name: String, terms: Seq[String], buckets: Seq[Int]): DataFrame =
+      Tables.read(s, table(name))
+        .filter(col("tb").isin(buckets: _*) && col("token").isin(terms: _*))
+
+    /** `rows` minus the index's pending doc deletes. */
+    def live(rows: DataFrame): DataFrame =
+      graft.sources.Compact.minusTombstones(s, table("_tombstones"), "doc_id")(rows)
   }
 
-  /** For each of `tables` under `dir`, the `tb=` directories the probed
-    * `terms` hash into that EXIST — pruning at the LISTING level, not
-    * just the scan (a root read lists every bucket before the filter
-    * prunes any). A missing directory holds no probed term. */
-  private def probedBucketDirs(s: SparkSession, dir: String,
-                               terms: Seq[String],
-                               tables: String*): Seq[Seq[String]] = {
-    import s.implicits._
-    val nBuckets = storedBuckets(s, dir)
-    val buckets = terms.toDF("token").select(tokenBucket(nBuckets))
-      .as[Int].collect().distinct.sorted
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    tables.map(t => buckets.toSeq.map(b => s"$dir/$t/tb=$b")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p))))
-  }
+  private def open(s: SparkSession, dir: String): Index = Index(s, Tables.version(s, dir))
 
   /** (token, doc_id, tf, dl, tb) posting rows, clustered by bucket and
     * token-sorted within each file so parquet row-group statistics
@@ -238,59 +283,65 @@ object Search {
   def appendInvertedIndexBucketed(batch: DataFrame, dir: String): Unit = {
     val s = batch.sparkSession
     import s.implicits._
-    val nBuckets = storedBuckets(s, dir)
+    val ix = open(s, dir)
     val tf = termFreqs(batch).localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    postingRows(tf, dl, nBuckets)
+    postingRows(tf, dl, ix.nBuckets)
       .write.mode("append").partitionBy("tb").parquet(s"$dir/postings")
     val deltas = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      .withColumn("tb", tokenBucket(nBuckets))
-    val affected = deltas.select(col("tb")).distinct()
-      .as[Int].collect().toSeq // bounded by nBuckets
+      .withColumn("tb", tokenBucket(ix.nBuckets))
+    // bounded by the batch's vocabulary
+    val affected = ix.bucketsOf(tf.select(col("token")).as[String].collect().distinct.toSeq)
     graft.sources.Compact.rewriteBuckets(s, s"$dir/df", "tb", affected)(
       _.unionByName(deltas)
         .groupBy(col("token"), col("tb")).agg(sum(col("df")).as("df"))
         .select(col("token"), col("df"), col("tb")))
+    val (nDocs, sTok) = ix.stats
+    val (dn, ds) = dl.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L)))
+      .as[(Long, Long)].head()
+    val next = (nDocs + dn, sTok + ds)
     graft.sources.Compact.swap(s, s"$dir/stats")(
-      s.read.parquet(s"$dir/stats")
-        .unionByName(dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("s_tok")))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("s_tok")).as("s_tok"))
-        .coalesce(1).write.parquet(_))
+      Seq(next).toDF("n_docs", "s_tok").coalesce(1).write.parquet(_))
+    // the scalars of the generation just written, under its own listing
+    Tables.memo(s, Tables.version(s, s"$dir/stats"), "stats")(next)
   }
 
   /** Serve ONE batch of term queries against the stored index: the
     * batch's distinct terms (bounded by the batch) map to their
     * buckets through the stored hash, only those bucket directories
-    * are LISTED and read — for the postings AND the df lookup — and
+    * are read (partition pruning over the index's one listing) — for
+    * the postings AND the df lookup — and
     * the `token IN` filter pushes into the scan, where the within-file
     * token sort lets row-group stats skip non-probed terms. Per-batch
     * cost tracks the probed posting lists, never the corpus or the
     * vocabulary. Result-identical to [[bm25TopK]] over the same corpus
-    * and queries (spec'd). */
+    * and queries (spec'd).
+    *
+    * The batch is collected once (it is bounded); its distinct terms,
+    * their buckets and the broadcast query side come from that collect,
+    * and the index opens once per file version ([[Index]]), so a warm
+    * serve launches no driver-probe job. */
   def bm25ServeBatch(s: SparkSession, dir: String, queries: DataFrame,
-                     k: Int = DefaultK): DataFrame = {
+                     k: Int = DefaultK): DataFrame =
+    bm25Serve(s, dir, queries, k, ordered = true)
+
+  private def bm25Serve(s: SparkSession, dir: String, queries: DataFrame,
+                        k: Int, ordered: Boolean): DataFrame = {
     import s.implicits._
     def empty = Seq.empty[(Long, Long, Double, Int)]
       .toDF("query_id", "doc_id", "bm25", "rank")
-    val terms = queries.select(col("term")).distinct()
-      .as[String].collect().sorted // bounded by the query batch
+    val batch = queries.select(col("query_id"), col("term")).as[(Long, String)]
+      .collect().toSeq
+    val terms = batch.map(_._2).distinct.sorted
     if (terms.isEmpty) return empty
-    val Seq(postDirs, dfDirs) =
-      probedBucketDirs(s, dir, terms.toSeq, "postings", "df")
+    val ix = open(s, dir)
+    val buckets = ix.bucketsOf(terms)
     // every term OOV: empty result, ranked schema (postings and df
     // buckets are written together)
-    if (postDirs.isEmpty || dfDirs.isEmpty) return empty
-    val post = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(
-        s.read.option("basePath", s"$dir/postings")
-          .parquet(postDirs: _*)
-          .filter(col("token").isin(terms: _*)))
-      .join(broadcast(s.read.option("basePath", s"$dir/df")
-        .parquet(dfDirs: _*)
-        .filter(col("token").isin(terms: _*))
-        .drop("tb")), "token")
-    val Array(nDocs, sTok) = s.read.parquet(s"$dir/stats")
-      .as[(Long, Long)].collect().flatMap(t => Array(t._1, t._2))
-    scoreAndRank(queries, post, nDocs, sTok, k)
+    if (!ix.holdsAny("postings", buckets) || !ix.holdsAny("df", buckets)) return empty
+    val post = ix.live(ix.probed("postings", terms, buckets))
+      .join(broadcast(ix.probed("df", terms, buckets).drop("tb")), "token")
+    scoreAndRank(queryRows(s, batch, ix.stats), post, k, ordered)
   }
 
   /** Periodic maintenance for the inverted index: daily
@@ -339,9 +390,10 @@ object Search {
     * per-doc (doc_id, dl) distinct view. */
   private def foldIndexTombstones(s: SparkSession, dir: String): Unit = {
     val post = s.read.parquet(s"$dir/postings")
+    val nBuckets = open(s, dir).nBuckets
     graft.sources.Compact.swap(s, s"$dir/df")(
       post.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .withColumn("tb", tokenBucket(storedBuckets(s, dir)))
+        .withColumn("tb", tokenBucket(nBuckets))
         .repartition(col("tb"))
         .write.partitionBy("tb").parquet(_))
     graft.sources.Compact.swap(s, s"$dir/stats")(
@@ -380,7 +432,8 @@ object Search {
     * knob for biasing lexical vs semantic evidence. Determinism holds
     * unchanged: w/(60+rank) is ONE IEEE division of a literal by an
     * exact small integer, snapped to the 1e-9 grid before the exact
-    * decimal sum. */
+    * decimal sum. The fused top-k of a bounded batch sorts in one
+    * partition ([[Similarity.inRankOrder]]). */
   def rrfFuse(lists: Seq[DataFrame], k: Int = DefaultK,
               weights: Seq[Double] = Nil): DataFrame = {
     require(lists.nonEmpty, "rrfFuse needs at least one ranked list")
@@ -404,7 +457,7 @@ object Search {
       .flatMap { case (qid, arr) =>
         arr.iterator.zipWithIndex.map { case (sc, i) => (qid, sc.id, sc.score, i + 1) } }
       .toDF("query_id", "doc_id", "rrf", "rank")
-      .orderBy(col("query_id"), col("rank"))
+      .transform(Similarity.inRankOrder)
   }
 
   def hybridRrf(s: SparkSession, d: String, k: Int = DefaultK,
@@ -423,7 +476,7 @@ object Search {
                         weights: Seq[Double] = Seq(WrrfLexWeight, 1.0))
       : DataFrame = {
     val cosSim = graft.functions.CosineSimilarity.cosineSim _
-    val lex = bm25TopK(s, d, depth)
+    val lex = bm25Ranked(s, d, depth, ordered = false)
       .select(col("query_id"), col("doc_id"), col("rank"))
     val qids = BmQueries.map(_._1)
     // semantic side: the exhaustive bucket EQUI-join pair product
@@ -446,17 +499,19 @@ object Search {
     * both pruning stories. With `nprobe` = nlist the semantic list is
     * exhaustive and this is result-identical to [[hybridRrf]]
     * (spec'd); at serving nprobe it trades that for the probe cost,
-    * exactly the IVF recall trade documented in [[Similarity]]. */
+    * exactly the IVF recall trade documented in [[Similarity]]. Both
+    * lists feed the fusion UNORDERED: an inner `orderBy` would cost a
+    * range-sampling job and a shuffle the fusion's groupBy discards. */
   def hybridServeBatch(s: SparkSession, invDir: String, ivfDir: String,
                        cents: Array[Array[Double]],
                        termQueries: DataFrame, vecQueries: DataFrame,
                        k: Int = DefaultK, depth: Int = 20,
                        nprobe: Int = Similarity.IvfNprobe,
                        weights: Seq[Double] = Nil): DataFrame = {
-    val lex = bm25ServeBatch(s, invDir, termQueries, depth)
+    val lex = bm25Serve(s, invDir, termQueries, depth, ordered = false)
       .select(col("query_id"), col("doc_id"), col("rank"))
-    val sem = Similarity.annIvfServeBatch(s, ivfDir, cents, vecQueries,
-        depth, nprobe)
+    val sem = Similarity.ivfServe(s, ivfDir, cents, vecQueries, depth, nprobe,
+        excludeSelf = false, ordered = false)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
     rrfFuse(Seq(lex, sem), k, weights)
   }
@@ -727,7 +782,7 @@ object Search {
     * NEW (the append-only corpus contract). Spec'd: append-then-serve
     * ≡ one-shot index of the union. */
   def appendPositionalIndex(batch: DataFrame, dir: String): Unit =
-    positionRows(batch, storedBuckets(batch.sparkSession, dir))
+    positionRows(batch, open(batch.sparkSession, dir).nBuckets)
       .write.mode("append").partitionBy("tb")
       .parquet(s"$dir/postings")
 
@@ -749,8 +804,8 @@ object Search {
 
   /** Serve a phrase batch against the positional layout — result-
     * identical to the inline scan (spec'd). Probed terms → probed
-    * bucket directories (listed directly, `token IN` pushed into the
-    * sorted scan); the phrase join is ONE broadcast join + ONE
+    * buckets (pruned over the index's one listing, [[Index]]; `token
+    * IN` pushed into the sorted scan); the phrase join is ONE broadcast join + ONE
     * aggregation, not a per-term join chain: each posting row joins
     * the tiny (query, i, term) set, every row votes for the anchor
     * position pos − i, and an anchor with all |phrase| DISTINCT i
@@ -763,11 +818,10 @@ object Search {
       .toDF("query_id", "doc_id", "n_matches", "first_pos")
     val terms = phrases.flatMap(_._2).distinct.sorted
     if (terms.isEmpty) return empty
-    val Seq(bucketDirs) = probedBucketDirs(s, dir, terms, "postings")
-    if (bucketDirs.isEmpty) return empty
-    val post = graft.sources.Compact.minusTombstones(s, dir, "doc_id")(
-      s.read.option("basePath", s"$dir/postings").parquet(bucketDirs: _*)
-        .filter(col("token").isin(terms: _*)))
+    val ix = open(s, dir)
+    val buckets = ix.bucketsOf(terms)
+    if (!ix.holdsAny("postings", buckets)) return empty
+    val post = ix.live(ix.probed("postings", terms, buckets))
     val qterms = phrases.flatMap { case (qid, ts) =>
       ts.zipWithIndex.map { case (t, i) => (qid, i, t, ts.length) } }
       .toDF("query_id", "i", "token", "plen")

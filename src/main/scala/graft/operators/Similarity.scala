@@ -58,6 +58,13 @@ object Similarity {
     if (ordered) top.orderBy(col("query_id"), col("rank")) else top
   }
 
+  /** A serve batch's ranked result — at most k rows per query of a
+    * bounded batch — in (query_id, rank) order, sorted in ONE
+    * partition: a range `orderBy` would spend a sampling job and a
+    * shuffle on a few hundred rows. */
+  private[graft] def inRankOrder(top: DataFrame): DataFrame =
+    top.coalesce(1).sortWithinPartitions(col("query_id"), col("rank"))
+
   /** Brute-force top-k: broadcast the (small) query set, one pass
     * over the corpus, per-query top-k via bounded aggregation. */
   def annBruteforce(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
@@ -446,10 +453,28 @@ object Similarity {
     /** `frame` with the `bucket` its `embedding` is assigned to
       * appended, every other column kept. */
     private[graft] def assign(frame: DataFrame): DataFrame
+    /** The fields [[probe]] appends, `bucket` last. */
+    private[graft] def probeFields: Seq[StructField]
+    /** The values [[probe]] appends for one query vector: one Seq of
+      * [[probeFields]] per probed bucket, nearest first. */
+    private[graft] def probed(v: Array[Float], nprobe: Int): Iterator[Seq[Any]]
     /** One row of `frame` per bucket its `embedding` probes, nearest
-      * first, with that `bucket` appended and every other column kept.
-      * `nprobe = nlist` probes exhaustively. */
-    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame
+      * first, with the [[probeFields]] appended and every other column
+      * kept. `nprobe = nlist` probes exhaustively. */
+    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame = {
+      val bc = frame.sparkSession.sparkContext.broadcast(this)
+      appendFromEmbedding(frame, probeFields: _*)(v => bc.value.probed(v, nprobe))
+    }
+    /** [[probe]] of a bounded serve batch, fanned out on the driver from
+      * one collect: a local relation, so the probed buckets cost no
+      * Spark job. */
+    private[graft] def probeBatch(frame: DataFrame, nprobe: Int): DataFrame = {
+      val i = frame.schema.fieldIndex("embedding")
+      val rows = frame.collect().flatMap(r =>
+        probed(r.getSeq[Float](i).toArray, nprobe).map(x => Row.fromSeq(r.toSeq ++ x)))
+      frame.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(frame.schema.fields ++ probeFields))
+    }
     /** The drift axis over the live layout rows; `vectors` are the
       * live full-precision `(vec_id, embedding)` rows. */
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double
@@ -468,11 +493,9 @@ object Similarity {
       appendFromEmbedding(frame, BucketField)(v =>
         Iterator.single(Seq(nearestCentroid(bc.value, v))))
     }
-    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame = {
-      val bc = frame.sparkSession.sparkContext.broadcast(cents)
-      appendFromEmbedding(frame, BucketField)(v =>
-        topCentroids(bc.value, v, nprobe).iterator.map(Seq(_)))
-    }
+    private[graft] def probeFields: Seq[StructField] = Seq(BucketField)
+    private[graft] def probed(v: Array[Float], nprobe: Int): Iterator[Seq[Any]] =
+      topCentroids(cents, v, nprobe).iterator.map(Seq(_))
   }
 
   private val BucketField = StructField("bucket", IntegerType, nullable = false)
@@ -596,9 +619,15 @@ object Similarity {
   def deleteFromLayout(s: SparkSession, dir: String, ids: DataFrame): Unit =
     graft.sources.Compact.addTombstones(dir, ids, "vec_id")
 
-  /** The live rows of a layout: every stored row minus the tombstones. */
-  private def liveRows(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Compact.minusTombstones(s, dir, "vec_id")(s.read.parquet(dir))
+  /** The live rows of a layout passing `filters` at the scan: every
+    * stored row minus the tombstones, both read through one listing of
+    * `dir` ([[Tables.read]]: the schema and the log's ids are kept per
+    * file version, so a warm read launches no inference job). */
+  private def liveRows(s: SparkSession, dir: String, filters: Column*): DataFrame = {
+    val v = Tables.version(s, dir)
+    graft.sources.Compact.minusTombstones(s, v.sub("_tombstones"), "vec_id")(
+      filters.foldLeft(Tables.read(s, v))(_ filter _))
+  }
 
   /** The live full-precision vectors of a layout: from the layout
     * itself when its rows keep embeddings, else `emb` (the corpus
@@ -614,23 +643,14 @@ object Similarity {
     }
 
   /** The probed-bucket scan every serve reads its layout through:
-    * `dir` with `bucket IN (probedBuckets)` pushed down (partition
-    * pruning — per-batch cost tracks probes, not corpus size) and an
-    * optional `extra` scan predicate, minus the tombstone log. */
+    * [[liveRows]] with `bucket IN (probedBuckets)` (partition pruning
+    * over the listing — per-batch cost tracks probes, not corpus size)
+    * and an optional `extra` scan predicate. */
   private[graft] def probedScan(s: SparkSession, dir: String,
                                 probedBuckets: Seq[Int],
                                 extra: Option[Column] = None): DataFrame = {
     val inProbed = col("bucket").isin(probedBuckets.map(Integer.valueOf): _*)
-    graft.sources.Compact.minusTombstones(s, dir, "vec_id")(
-      s.read.parquet(dir).filter(extra.fold(inProbed)(inProbed && _)))
-  }
-
-  /** A probe frame's distinct buckets, sorted (bounded by nlist —
-    * driver-safe). */
-  private def probedBucketsOf(probes: DataFrame): Seq[Int] = {
-    val s = probes.sparkSession
-    import s.implicits._
-    probes.select("bucket").distinct().as[Int].collect().sorted.toSeq
+    liveRows(s, dir, extra.fold(inProbed)(inProbed && _))
   }
 
   /** The candidate join every stored serve scores: `queries` (with
@@ -640,7 +660,9 @@ object Similarity {
     * bucket join against the broadcast probes. Query columns keep
     * their names except `embedding`, which arrives as `qv`, and any
     * other name the decoded layout also has, which arrives prefixed
-    * `q` (`label` → `qlabel`). Self pairs (`vec_id` = `query_id`) drop
+    * `q` (`label` → `qlabel`). The batch is probed on the driver
+    * ([[IvfCodec.probeBatch]]), so its probed buckets and the broadcast
+    * probe side come from one collect. Self pairs (`vec_id` = `query_id`) drop
     * when `excludeSelf`. Returns the candidates and the decoded
     * probed layout rows. */
   private[graft] def probedCandidates(s: SparkSession, dir: String,
@@ -649,8 +671,10 @@ object Similarity {
                                       extra: Option[Column] = None,
                                       decode: DataFrame => DataFrame = identity)
       : (DataFrame, DataFrame) = {
-    val probes = codec.probe(queries, nprobe)
-    val corpus = decode(probedScan(s, dir, probedBucketsOf(probes), extra))
+    import s.implicits._
+    val probes = codec.probeBatch(queries, nprobe)
+    val buckets = probes.select("bucket").as[Int].collect().distinct.sorted.toSeq
+    val corpus = decode(probedScan(s, dir, buckets, extra))
     val q = probes.select(probes.columns.toSeq.map {
       case "embedding" => col("embedding").as("qv")
       case c if c != "bucket" && corpus.columns.contains(c) => col(c).as(s"q$c")
@@ -734,11 +758,19 @@ object Similarity {
   def annIvfServeBatch(s: SparkSession, dir: String, cents: Array[Array[Double]],
                        queries: DataFrame, k: Int = 5,
                        nprobe: Int = IvfNprobe,
-                       excludeSelf: Boolean = false): DataFrame = {
+                       excludeSelf: Boolean = false): DataFrame =
+    ivfServe(s, dir, cents, queries, k, nprobe, excludeSelf, ordered = true)
+
+  /** [[annIvfServeBatch]]'s ranking; `ordered = false` for an interior
+    * consumer (a fusion), see [[topKPerQuery]]. */
+  private[graft] def ivfServe(s: SparkSession, dir: String, cents: Array[Array[Double]],
+                              queries: DataFrame, k: Int, nprobe: Int,
+                              excludeSelf: Boolean, ordered: Boolean): DataFrame = {
     val (cand, _) = probedCandidates(s, dir, FloatCodec(cents),
       queries.select(col("query_id"), col("embedding")), nprobe, excludeSelf)
-    topKPerQuery(cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
-      round(cos(col("qv"), col("embedding")), 6).as("cos_sim")), k)
+    val top = topKPerQuery(cand.select(col("query_id"), col("vec_id").as("neighbor_id"),
+      round(cos(col("qv"), col("embedding")), 6).as("cos_sim")), k, ordered = false)
+    if (ordered) inRankOrder(top) else top
   }
 
   // ---- Filtered ANN (attribute predicate + IVF in one serve) ------------
@@ -3678,13 +3710,10 @@ object Similarity {
       }
     }
     /** Appends `w` and `n2` as [[assign]] does, then the probed bucket. */
-    private[graft] def probe(frame: DataFrame, nprobe: Int): DataFrame = {
-      val bc = frame.sparkSession.sparkContext.broadcast(this)
-      appendFromEmbedding(frame, WhiteFields: _*) { v =>
-        val mm = bc.value
-        val (w, n2) = whiteCodeNorm(v, mm.comps, mm.offE9, mm.scales)
-        topWhiteCentroids(mm.centsE9, w, nprobe).iterator.map(b => Seq(w, n2, b))
-      }
+    private[graft] def probeFields: Seq[StructField] = WhiteFields
+    private[graft] def probed(v: Array[Float], nprobe: Int): Iterator[Seq[Any]] = {
+      val (w, n2) = whiteCodeNorm(v, comps, offE9, scales)
+      topWhiteCentroids(centsE9, w, nprobe).iterator.map(b => Seq(w, n2, b))
     }
     private[graft] def axis(live: DataFrame, vectors: => DataFrame): Double =
       maxWhiteCompVar(live)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import graft.Tables
 
 /** Small-file compaction — the table-maintenance op every long-lived
   * 100 TB lake needs: streaming sinks and fine-grained partitions
@@ -24,22 +25,11 @@ object Compact {
   /** The parquet data files a read of `dir` sees, RECURSIVELY — a
     * partitioned layout keeps its files in subdirectories, and a
     * non-recursive listing would report 0 input bytes and size the
-    * rewrite to one file. A path component that starts with `_` or
-    * `.` is skipped, the rule Spark's own file listing applies (a
-    * `_name=value` partition directory is read), so a layout's
-    * `_tombstones` log is not counted as its input. */
-  private def dataFiles(s: SparkSession, dir: String): Seq[FileStatus] = {
-    val fs = fsOf(s, dir)
-    def hidden(name: String) =
-      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
-    def walk(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName)).flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Nil
-      }
-    walk(new Path(dir))
-  }
+    * rewrite to one file. Spark's listing rule applies
+    * ([[Tables.Version.data]]), so a layout's `_tombstones` log is not
+    * counted as its input. */
+  private def dataFiles(s: SparkSession, dir: String): Seq[FileStatus] =
+    Tables.version(s, dir).data.filter(_.getPath.getName.endsWith(".parquet"))
 
   /** Rewrite `dir` into `out` with ~`targetBytes` per output file.
     * Returns (input files, input bytes, output files, rows). Note the
@@ -186,7 +176,7 @@ object Compact {
     val fs = fsOf(s, dir)
     val stage = tmpOf(dir)
     heal(fs, dir)
-    val out = fold(s.read.parquet(dir).filter(col(bucketCol).isin(touched: _*)))
+    val out = fold(Tables.read(s, Tables.version(s, dir)).filter(col(bucketCol).isin(touched: _*)))
     out.repartition(col(bucketCol))
       .write.mode("overwrite").partitionBy(bucketCol).parquet(stage.toString)
     val prefix = bucketCol + "="
@@ -229,20 +219,43 @@ object Compact {
   def hasTombstones(s: SparkSession, dir: String): Boolean =
     fsOf(s, dir).exists(tombstoneLog(dir))
 
-  /** `dir`'s pending deletes as distinct `key` values, or None when no
-    * delete is pending — so a read without deletes gains no plan
-    * node. */
-  def tombstones(s: SparkSession, dir: String, key: String): Option[DataFrame] =
-    if (!hasTombstones(s, dir)) None
-    else Some(s.read.parquet(tombstoneLog(dir).toString).select(col(key)).distinct())
+  /** The version of `dir`'s tombstone log, for a caller without a
+    * listing of `dir`. */
+  private def logOf(s: SparkSession, dir: String): Tables.Version =
+    Tables.version(s, tombstoneLog(dir).toString)
 
-  /** `rows` minus `dir`'s pending deletes, matched on `key` (a
-    * broadcast anti-join: the log is bounded by the deletes since the
-    * last fold); `rows` itself when none are pending. */
+  /** The pending deletes of the log version `log` (`dir/_tombstones`,
+    * cut from a listing of `dir` or listed alone) as distinct `key`
+    * values, or None when no delete is pending — so a read without
+    * deletes gains no plan node. The ids are collected once per log
+    * version ([[Tables.memo]]; the log is bounded by the deletes since
+    * the last fold) and return as a local relation. */
+  private[graft] def tombstones(s: SparkSession, log: Tables.Version,
+                                key: String): Option[DataFrame] =
+    if (log.data.isEmpty) None
+    else {
+      val (schema, ids) = Tables.memo(s, log, ("ids", key)) {
+        val df = Tables.read(s, log).select(col(key))
+        (df.schema, df.collect().distinct)
+      }
+      Some(s.createDataFrame(java.util.Arrays.asList(ids: _*), schema))
+    }
+
+  def tombstones(s: SparkSession, dir: String, key: String): Option[DataFrame] =
+    tombstones(s, logOf(s, dir), key)
+
+  /** `rows` minus the pending deletes of the log version `log`, matched
+    * on `key` (a broadcast anti-join); `rows` itself when none are
+    * pending. */
+  private[graft] def minusTombstones(s: SparkSession, log: Tables.Version, key: String)
+                                    (rows: DataFrame): DataFrame =
+    tombstones(s, log, key).fold(rows)(t =>
+      rows.join(broadcast(t), Seq(key), "left_anti"))
+
+  /** `rows` minus `dir`'s pending deletes. */
   def minusTombstones(s: SparkSession, dir: String, key: String)
                      (rows: DataFrame): DataFrame =
-    tombstones(s, dir, key).fold(rows)(t =>
-      rows.join(broadcast(t), Seq(key), "left_anti"))
+    minusTombstones(s, logOf(s, dir), key)(rows)
 
   /** Drop `dir`'s tombstone log once a rewrite has folded it. */
   def clearTombstones(s: SparkSession, dir: String): Unit = {

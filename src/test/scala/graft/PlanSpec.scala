@@ -102,4 +102,42 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("PushedFilters"))
     assert(plan.contains("o_orderdate"), "date filter not at the scan")
   }
+
+  test("no BM25 scoring plan carries a corpus scalar as a literal") {
+    import graft.operators.Search
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf)
+    val dir = java.nio.file.Files.createTempDirectory("plan-scalars").toString
+    Search.writeInvertedIndexBucketed(docs, dir, nBuckets = 64)
+    val stats = spark.read.parquet(s"$dir/stats").head()
+    val (n, st) = (stats.getLong(0), stats.getLong(1))
+    // the scalars, and the products the scoring derives from them or
+    // the optimizer folds a literal recipe into
+    val scalars = Set(n, st, 2 * n + 2, 3 * st, 22 * st, 10 * st, 9 * n).map(_.toDouble)
+    // a cast of a literal folds, so a scalar may survive as a double
+    def flagged(df: DataFrame): Set[Double] =
+      df.queryExecution.optimizedPlan.collectWithSubqueries { case p =>
+        p.expressions.flatMap(_.collect {
+          case Literal(v: Long, _) if scalars(v.toDouble) => v.toDouble
+          case Literal(v: Double, _) if scalars(v) => v
+        })
+      }.flatten.toSet
+    // the detector sees the literal recipe (the scalars inlined into
+    // the idf and tf factors, over stand-in count columns)
+    val (tf, dl) = (col("doc_id"), col("doc_id") + 1)
+    val litRecipe = docs.select(
+      (lit(2L * n + 2).cast("double") / (lit(2L) * tf + lit(1L)).cast("double")).as("idf"),
+      ((lit(22L) * tf * lit(st)).cast("double") /
+        (lit(10L) * tf * lit(st) + lit(3L * st) + lit(9L) * dl * lit(n)).cast("double")).as("w"))
+    assert(Set(2 * n + 2, 3 * st).map(_.toDouble).subsetOf(flagged(litRecipe)),
+      flagged(litRecipe))
+    val served = Search.bm25ServeBatch(spark, dir,
+      Search.BmQueries.flatMap { case (q, ts) => ts.map(q -> _) }.toDF("query_id", "term"))
+    assert(flagged(served).isEmpty, s"bm25ServeBatch inlines ${flagged(served)}")
+    val gate = SparkEntry.queries("bm25_topk")(spark, sf)
+    assert(flagged(gate).isEmpty, s"bm25_topk inlines ${flagged(gate)}")
+  }
 }
